@@ -1,14 +1,15 @@
-"""Reference-corpus parity query: WordCount over the reference's OWN
-input data, oracle-verified.
+"""Reference-corpus parity query: WordCount over a corpus in the
+reference's own input layout, oracle-verified.
 
-This is the reference's exact production workload
-(/root/reference/run_client_times.py:8 hardwires ``wordcount/<volume>``;
-tokenization semantics /root/reference/datanode.py:598-603, fold
-app.py:13-14) run through the engine's DataFrame path AND
-hash-matched against DuckDB reading the same raw text files — the
-strongest possible statement that the engine reproduces the reference's
-results on the reference's data. The sf_dir parameter is ignored: the
-corpus is fixed (and tiny — 5.2 MiB).
+This is the reference's production workload (run_client_times.py
+hardwires ``wordcount/<volume>``; tokenization semantics
+datanode.py:598-603, fold app.py:13-14) run through the engine's
+DataFrame path AND hash-matched against DuckDB reading the same raw
+text files. The corpus is the committed, seed-generated
+``myhadoop_spark/data/wordcount/combined_*`` (scripts/
+gen_wordcount_corpus.py): pre-lowercased, whitespace-tokenised text
+files like the reference's inputs. The sf_dir parameter is ignored:
+the corpus is fixed (and tiny — 64 KiB).
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from myhadoop_spark.queries.wordcount import wordcount_text_dir
 from myhadoop_spark.registry import register
 
-REF_CORPUS_512 = "/root/reference/fs/input/wordcount/512"
+REF_CORPUS = str(Path(__file__).resolve().parent.parent
+                 / "data" / "wordcount")
 
 
 @register(
@@ -28,15 +30,13 @@ REF_CORPUS_512 = "/root/reference/fs/input/wordcount/512"
     oracle=rf"""
     SELECT word, COUNT(*) AS cnt
     FROM (SELECT unnest(string_split_regex(content, '\s+')) AS word
-          FROM read_text('{REF_CORPUS_512}/combined_*')) t
+          FROM read_text('{REF_CORPUS}/combined_*')) t
     WHERE word <> ''
     GROUP BY word
     """,
     tags=("wordcount", "reference-parity"),
 )
 def wc_reference_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordCount over the reference's 512 corpus volume (ignores sf_dir —
-    the reference's input is a fixed directory of text files)."""
-    if not Path(REF_CORPUS_512).exists():  # pragma: no cover
-        raise FileNotFoundError(f"reference corpus missing: {REF_CORPUS_512}")
-    return wordcount_text_dir(spark, REF_CORPUS_512)
+    """WordCount over the committed parity corpus (ignores sf_dir — the
+    reference's input is a fixed directory of text files)."""
+    return wordcount_text_dir(spark, REF_CORPUS)

@@ -58,6 +58,10 @@ def get_spark(app_name: str = "myhadoop-spark", cpus: int | None = None,
         # events.parquet carries TIMESTAMP(NANOS) which Spark's parquet
         # reader rejects; read ns as long and convert in catalog.load()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # reliable checkpoints (materialize.py under
+        # SPARK_GRAFT_RELIABLE_CHECKPOINT=1) are deleted once their RDD
+        # is unreferenced; local checkpoints are unaffected
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # UI off for tests; bench turns it on to scrape shuffle metrics
         # from the REST API

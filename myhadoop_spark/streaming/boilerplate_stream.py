@@ -9,8 +9,8 @@ has seen it in ``min_df`` distinct documents — batches from then on
 are stripped of it, earlier batches are NOT retroactively rewritten
 (the one-shot batch operator is the re-curation tool for that).
 
-State machine (the url_cap_stream/bm25_index versioned-state
-discipline):
+State (the streaming/versioned_state.py protocol — replay, lineage,
+one-deep sweep):
 
     <path>/df_v{batch_id}/      (g, df) — one row per shingle seen so
                                 far; df = #distinct docs containing g
@@ -22,13 +22,9 @@ discipline):
     df_N      = df_{N-1} ⊎ per-distinct-doc shingle counts of batch_N
     clean_N   = strip_against(batch_N, {g : df_N(g) ≥ min_df})
 
-Crash/replay correctness: df_N and clean_N are pure functions of
-(df_{N-1}, batch_N), so a replayed last batch overwrites both with
-identical content (idempotent skip on matching batch id); a batch id
-BELOW the watermark is a recreated checkpoint lineage and fails
-loudly; (n, min_df) ride in the meta so a restart cannot silently
-change the shingle width or threshold. The previous df version is
-retained one-deep; older versions are swept.
+clean_N depends on df_N, so the stripped documents are written after
+the version. (n, min_df) ride in the meta so a restart cannot
+silently change the shingle width or threshold.
 
 Single-batch equivalence: a stream fed the whole corpus as ONE batch
 produces exactly the batch operator's output (df_0 is the corpus df
@@ -44,26 +40,19 @@ the driver.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.boilerplate import (
     _shingles,
     _toks,
     strip_against,
 )
+from myhadoop_spark.streaming.versioned_state import VersionedState
 
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
+_state = partial(VersionedState, prefix="df_v", name="boilerplate state")
 
 
 def _batch_df_counts(batch: DataFrame, *, n: int, text_col: str,
@@ -95,82 +84,42 @@ def start_boilerplate_stream(doc_stream: DataFrame, *, path: str,
     if min_df < 1 or n < 1:
         raise ValueError("min_df and n must be >= 1")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and (meta["n"] != n
-                                 or meta["min_df"] != min_df):
-            raise ValueError(
-                f"boilerplate state at {path} was built with "
-                f"n={meta['n']}, min_df={meta['min_df']}; restarting "
-                f"with n={n}, min_df={min_df} would change what already "
-                "counts as boilerplate — start a fresh state path")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            raise RuntimeError(
-                f"boilerplate state at {path} was maintained up to "
-                f"batch {meta['last_batch']} under a different "
-                f"checkpoint lineage (got batch {batch_id}); restore "
-                "the original checkpoint or start a fresh state path")
-        if meta is not None and batch.isEmpty():
-            return
+    state = _state(path, params={"n": n, "min_df": min_df},
+                   reason="change what already counts as boilerplate")
+
+    def _step(batch: DataFrame, v):
         batch_counts = _batch_df_counts(batch, n=n, text_col=text_col,
                                         id_col=id_col)
-        if meta is not None:
-            prev = spark.read.parquet(f"{path}/df_v{meta['last_batch']}")
-            new_df = (prev.unionByName(batch_counts)
-                      .groupBy("g")
-                      .agg(F.sum("df").cast("long").alias("df")))
-        else:
-            new_df = batch_counts
-        new_df.write.mode("overwrite").parquet(f"{path}/df_v{batch_id}")
-        table = spark.read.parquet(f"{path}/df_v{batch_id}")
+        v.write(v.prev.unionByName(batch_counts)
+                .groupBy("g")
+                .agg(F.sum("df").cast("long").alias("df"))
+                if v.prev is not None else batch_counts)
+        table = v.reread()
         bp = table.filter(F.col("df") >= min_df).select("g")
         clean = strip_against(batch, bp, n=n, text_col=text_col,
                               id_col=id_col)
-        (clean.write.mode("overwrite")
-         .parquet(f"{path}/clean/batch_id={batch_id}"))
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id, "n": n,
-                                     "min_df": min_df}))
-        keep = {f"df_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"df_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("df_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+        clean_path = f"{path}/clean/batch_id={v.batch_id}"
+        clean.write.mode("overwrite").parquet(clean_path)
+        yield {}
         if stats is not None:
             agg = table.agg(
                 F.count(F.lit(1)).alias("v"),
                 F.sum((F.col("df") >= min_df).cast("long")).alias("b")
             ).collect()[0]
-            docs_n = spark.read.parquet(
-                f"{path}/clean/batch_id={batch_id}").count()
-            stats.append({"batch": batch_id, "docs": int(docs_n),
+            docs_n = v.spark.read.parquet(clean_path).count()
+            stats.append({"batch": v.batch_id, "docs": int(docs_n),
                           "vocab": int(agg["v"] or 0),
                           "boiler": int(agg["b"] or 0)})
 
-    return (doc_stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(doc_stream, checkpoint, _step)
 
 
 def read_clean(spark: SparkSession, path: str) -> DataFrame:
     """Everything the stripping ingest has emitted so far."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no boilerplate stream state at {path}")
+    _state(path).meta(spark)
     return spark.read.parquet(f"{path}/clean")
 
 
 def read_df_table(spark: SparkSession, path: str) -> DataFrame:
     """The maintained (g, df) table as of the last absorbed batch."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no boilerplate stream state at {path}")
-    return spark.read.parquet(f"{path}/df_v{meta['last_batch']}")
+    return _state(path).read(spark)

@@ -13,7 +13,8 @@ best-of-corpus selection is wanted; the stream face is the "admit the
 best of what's here while budget lasts" semantics of an ingestion
 quota.
 
-State machine (versioned, crash-safe):
+State (the streaming/versioned_state.py protocol — replay, lineage,
+one-deep sweep):
 
     <path>/state_v{batch_id}/  one row: (budget_left)
     <path>/kept/batch_id=N/    the batch's admitted documents
@@ -22,10 +23,8 @@ State machine (versioned, crash-safe):
     kept_N        = budget_select(batch_N, budget_left_{N-1})
     budget_left_N = budget_left_{N-1} − Σ kept_N.n_tokens
 
-Replay of the last batch is an idempotent skip; a batch id below the
-watermark fails loudly; the banding knob rides in the meta. A
-single-batch stream equals the one-shot operator bitwise (pinned in
-tests/test_budget_stream.py).
+The banding knob rides in the meta. A single-batch stream equals the
+one-shot operator bitwise (pinned in tests/test_budget_stream.py).
 
 Scale shape: per-batch work is the banded batch-local selection (only
 the straddling band sorts) plus a 1-row state read/write. Nothing
@@ -34,22 +33,15 @@ data-sized reaches the driver.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.budget_select import budget_select
+from myhadoop_spark.streaming.versioned_state import VersionedState
 
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
+_state = partial(VersionedState, prefix="state_v", name="budget stream")
 
 
 def start_budget_stream(doc_stream: DataFrame, *, path: str,
@@ -66,43 +58,24 @@ def start_budget_stream(doc_stream: DataFrame, *, path: str,
     if int(bands) < 1:
         raise ValueError(f"bands must be >= 1, got {bands}")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and meta["bands"] != int(bands):
-            raise ValueError(
-                f"budget stream at {path} was built with bands="
-                f"{meta['bands']}; restarting with bands={bands} would "
-                "change the banded tie layout — start a fresh state "
-                "path")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            raise RuntimeError(
-                f"budget stream at {path} was maintained up to batch "
-                f"{meta['last_batch']} under a different checkpoint "
-                f"lineage (got batch {batch_id}); restore the original "
-                "checkpoint or start a fresh state path")
-        if meta is not None and batch.isEmpty():
-            return
-        if meta is not None:
-            left_df = spark.read.parquet(
-                f"{path}/state_v{meta['last_batch']}")
-        else:
-            left_df = spark.createDataFrame(
-                [(int(budget),)], "budget_left long")
+    state = _state(path, params={"bands": int(bands)},
+                   reason="change the banded tie layout")
+
+    def _step(batch: DataFrame, v):
+        left_df = (v.prev if v.prev is not None
+                   else v.spark.createDataFrame([(int(budget),)],
+                                                "budget_left long"))
         kept = budget_select(
             batch,
             left_df.select(F.col("budget_left").alias("budget")),
             bands=bands, id_col=id_col)
-        (kept.write.mode("overwrite")
-         .parquet(f"{path}/kept/batch_id={batch_id}"))
-        kept_back = spark.read.parquet(
-            f"{path}/kept/batch_id={batch_id}")
+        kept_path = f"{path}/kept/batch_id={v.batch_id}"
+        kept.write.mode("overwrite").parquet(kept_path)
+        kept_back = v.spark.read.parquet(kept_path)
         # the straddling document may overshoot the remaining budget
         # by up to one document's tokens — clamp the persisted state
         # at 0 so budget_left()/stats never report a negative budget
-        new_left = (left_df.crossJoin(
+        v.write(left_df.crossJoin(
             F.broadcast(kept_back.agg(
                 F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long")
                 .alias("_spent"))))
@@ -110,48 +83,25 @@ def start_budget_stream(doc_stream: DataFrame, *, path: str,
                 F.col("budget_left") - F.col("_spent"),
                 F.lit(0).cast("long"))
                 .cast("long").alias("budget_left")))
-        new_left.write.mode("overwrite").parquet(
-            f"{path}/state_v{batch_id}")
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id,
-                                     "bands": int(bands)}))
-        keep = {f"state_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"state_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("state_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+        yield {}
         if stats is not None:
             row = kept_back.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t")
             ).collect()[0]
-            left = spark.read.parquet(
-                f"{path}/state_v{batch_id}").collect()[0]["budget_left"]
-            stats.append({"batch": batch_id, "admitted": int(row["n"]),
+            left = v.reread().collect()[0]["budget_left"]
+            stats.append({"batch": v.batch_id, "admitted": int(row["n"]),
                           "tokens": int(row["t"]),
                           "budget_left": int(left)})
 
-    return (doc_stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(doc_stream, checkpoint, _step)
 
 
 def read_kept(spark: SparkSession, path: str) -> DataFrame:
     """Everything the budgeted ingest has admitted so far."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no budget stream state at {path}")
+    _state(path).meta(spark)
     return spark.read.parquet(f"{path}/kept")
 
 
 def budget_left(spark: SparkSession, path: str) -> int:
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no budget stream state at {path}")
-    return spark.read.parquet(
-        f"{path}/state_v{meta['last_batch']}").collect()[0]["budget_left"]
+    return _state(path).read(spark).collect()[0]["budget_left"]

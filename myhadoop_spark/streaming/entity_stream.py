@@ -23,9 +23,9 @@ Per-batch semantics (deterministic):
 
 Emitted per batch: ``{path}/assign/batch_id=N`` with one
 (id, nm, entity, canon_nm, is_new) row per input record. State =
-``{path}/canon_v{batch}`` (entity, canon_nm) under the versioned
-discipline (idempotent replay skip, loud lineage/param guards,
-one-deep retention).
+``{path}/canon_v{batch}`` (entity, canon_nm) under the
+streaming/versioned_state.py protocol; meta.json carries
+{last_batch, max_dist, q, index, n_buckets}.
 
 Scale note: by default the cross probe runs the gram-prefix
 candidate stage over batch-reps ∪ catalog — dedupe-first and prefix
@@ -44,26 +44,19 @@ exact verify) — pinned in tests/test_entity_stream.py.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.connected_components import (
     connected_components,
 )
 from myhadoop_spark.operators.edjoin import edit_distance_pairs
 from myhadoop_spark.materialize import materialize
+from myhadoop_spark.streaming.versioned_state import VersionedState
 
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
+_state = partial(VersionedState, prefix="canon_v", name="entity catalog")
 
 
 def _cluster_canonicals(batch: DataFrame, *, max_dist: int,
@@ -104,18 +97,8 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
     if int(n_buckets) < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and (meta["max_dist"] != int(max_dist)
-                                 or meta["q"] != int(q)):
-            raise ValueError(
-                f"entity catalog at {path} was built with max_dist="
-                f"{meta['max_dist']}, q={meta['q']}; restarting with "
-                f"max_dist={max_dist}, q={q} would change what counts "
-                "as the same entity — start a fresh state path")
-        if meta is not None and (
-                meta.get("index", False) != bool(pruned_index)
+    def _probe_mode(meta: dict) -> None:
+        if (meta.get("index", False) != bool(pruned_index)
                 or (pruned_index
                     and meta.get("n_buckets") != int(n_buckets))):
             raise ValueError(
@@ -124,16 +107,14 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
                 f"{meta.get('n_buckets')}; the prefix index only "
                 "covers entities accepted while it was on — start a "
                 "fresh state path to switch probe modes")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            raise RuntimeError(
-                f"entity catalog at {path} was maintained up to batch "
-                f"{meta['last_batch']} under a different checkpoint "
-                f"lineage (got batch {batch_id}); restore the original "
-                "checkpoint or start a fresh state path")
-        if meta is not None and batch.isEmpty():
-            return
+
+    state = _state(path, params={"max_dist": int(max_dist), "q": int(q)},
+                   reason="change what counts as the same entity",
+                   check=_probe_mode)
+
+    def _step(batch: DataFrame, v):
+        spark, batch_id, meta, catalog = (v.spark, v.batch_id, v.meta,
+                                          v.prev)
         lab = _cluster_canonicals(batch, max_dist=max_dist,
                                   q=q).transform(materialize)
         # the tag-union probe NEGATES catalog ids; record ids must be
@@ -154,8 +135,6 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
                 read_pruned,
             )
 
-            state = spark.read.parquet(
-                f"{path}/canon_v{meta['last_batch']}")
             order = spark.read.parquet(f"{path}/gram_df")
             b_names = reps.select(F.col("id").alias("entity"), "nm")
             # bucket set of THIS batch's prefix grams — ≤ n_buckets
@@ -181,13 +160,11 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
                      .select(F.col("probe_id").alias("_rid"),
                              F.col("_m.entity").alias("_match")))
         elif meta is not None:
-            state = spark.read.parquet(
-                f"{path}/canon_v{meta['last_batch']}")
             # cross probe through the tag-union: catalog ids ride
             # NEGATED (-entity - 1, always < 0) so id ranges cannot
             # collide and every cross pair is catalog-vs-rep
             tagged = (reps.unionByName(
-                state.select((-F.col("entity") - 1).alias("id"),
+                catalog.select((-F.col("entity") - 1).alias("id"),
                              F.col("canon_nm").alias("nm"))))
             cross = (edit_distance_pairs(tagged, "id", "nm",
                                          max_dist=max_dist, q=q)
@@ -202,7 +179,6 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
                      .select(F.col("_rid"),
                              F.col("_m._ent0").alias("_match")))
         else:
-            state = None
             match = None
         assigned = lab
         if match is not None:
@@ -211,9 +187,9 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
         else:
             assigned = lab.withColumn("_match",
                                       F.lit(None).cast("long"))
-        ent_nm = (state.select(F.col("entity").alias("_match"),
+        ent_nm = (catalog.select(F.col("entity").alias("_match"),
                                F.col("canon_nm").alias("_mnm"))
-                  if state is not None else None)
+                  if catalog is not None else None)
         out = assigned.withColumn("is_new", F.col("_match").isNull())
         if ent_nm is not None:
             out = out.join(F.broadcast(ent_nm), "_match", "left")
@@ -229,10 +205,8 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
         back = spark.read.parquet(f"{path}/assign/batch_id={batch_id}")
         new_canon = (back.filter("is_new")
                      .select("entity", "canon_nm").distinct())
-        new_state = (state.unionByName(new_canon)
-                     if state is not None else new_canon)
-        new_state.write.mode("overwrite").parquet(
-            f"{path}/canon_v{batch_id}")
+        v.write(catalog.unionByName(new_canon)
+                if catalog is not None else new_canon)
         if pruned_index:
             from myhadoop_spark.operators.edjoin_index import (
                 freeze_order,
@@ -255,47 +229,24 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
                 order, max_dist=max_dist, q=q, n_buckets=n_buckets)
              .write.mode("overwrite").partitionBy("tier", "bucket")
              .parquet(f"{path}/prefix/batch_id={batch_id}"))
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id,
-                                     "max_dist": int(max_dist),
-                                     "q": int(q),
-                                     "index": bool(pruned_index),
-                                     "n_buckets": int(n_buckets)}))
-        keep = {f"canon_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"canon_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("canon_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+        yield {"index": bool(pruned_index), "n_buckets": int(n_buckets)}
         if stats is not None:
             stats.append({
                 "batch": batch_id,
                 "records": back.count(),
                 "matched": back.filter(~F.col("is_new")).count(),
                 "new_entities": new_canon.count(),
-                "catalog": spark.read.parquet(
-                    f"{path}/canon_v{batch_id}").count(),
+                "catalog": v.reread().count(),
                 **probe_stats,
             })
 
-    return (rec_stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(rec_stream, checkpoint, _step)
 
 
 def read_assignments(spark: SparkSession, path: str) -> DataFrame:
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no entity catalog at {path}")
+    _state(path).meta(spark)
     return spark.read.parquet(f"{path}/assign")
 
 
 def read_catalog(spark: SparkSession, path: str) -> DataFrame:
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no entity catalog at {path}")
-    return spark.read.parquet(f"{path}/canon_v{meta['last_batch']}")
+    return _state(path).read(spark)

@@ -2,11 +2,12 @@
 micro-batches, the sketch the batch operator
 (operators/heavy_hitters.py) promised was mergeable, cashed in.
 
-State machine (the continuous-aggregate discipline applied to a
-sketch): the persisted state is a VERSIONED summary table
+State (the streaming/versioned_state.py protocol — replay, lineage,
+one-deep sweep — applied to a sketch): the persisted state is a
+versioned summary table
 
     <path>/summary_v{batch_id}/   ≤ capacity (term, est) rows
-    <path>/meta.json              {last_batch, total_items}
+    <path>/meta.json              {last_batch, capacity, total_items}
 
 and each micro-batch advances it deterministically:
 
@@ -16,18 +17,8 @@ where mg_merge is the Agarwal et al. (2012) mergeable-summaries rule —
 sum counters, subtract the (capacity+1)-th largest, drop ≤ 0 — whose
 theorem gives the GLOBAL bound est(t) ≤ true(t) ≤ est(t) +
 total_items/(capacity+1) after any merge sequence (asserted against
-exact counts in tests).
-
-Crash/replay correctness with two unsynchronized writes: v_N is a pure
-function of (v_{N-1}, batch_N), so a replayed batch OVERWRITES
-summary_v_N with identical content; meta is a crash-safe pointer
-(fsutil.write_small_file); the crash-replay of the LAST batch is
-skipped idempotently, while a batch id BELOW the watermark (a
-recreated/rewound checkpoint — a different lineage whose batch 0 may
-bundle absorbed and new rows) fails loudly rather than silently
-under- or double-counting. The previous version directory is retained
-(one-deep) so the recovery recompute always finds its input; older
-versions are swept.
+exact counts in tests). A batch with no items (after the first)
+commits nothing; the check rides on the summaries, no extra scan.
 
 Merge cost: the merge runs driver-side over ≤ capacity +
 partitions×capacity rows — bounded by CONFIGURATION, not data (the
@@ -37,17 +28,16 @@ each batch's summaries are computed distributed by mapInPandas.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.heavy_hitters import mg_summaries
+from myhadoop_spark.streaming.versioned_state import VersionedState
+
+_state = partial(VersionedState, prefix="summary_v", name="MG state",
+                 coalesce=True)
 
 
 def _mg_merge(counters: dict[str, int], capacity: int) -> dict[str, int]:
@@ -59,51 +49,23 @@ def _mg_merge(counters: dict[str, int], capacity: int) -> dict[str, int]:
     return {t: c - s for t, c in counters.items() if c - s > 0}
 
 
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
-
-
 def start_mg_stream(stream_df: DataFrame, *, path: str, checkpoint: str,
                     term_col: str = "term", capacity: int = 256):
     """Maintain the summary per micro-batch (availableNow-friendly).
     ``stream_df`` streams rows with ``term_col``; state lives at
     ``path``; query it any time with ``stream_topk``."""
+    state = _state(path, params={"capacity": capacity},
+                   reason="merge incomparable summaries",
+                   skip_empty=False)
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and meta["capacity"] != capacity:
-            raise ValueError(
-                f"MG state at {path} was built with capacity="
-                f"{meta['capacity']}; restarting with capacity="
-                f"{capacity} would merge incomparable summaries")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            # batch ids are a valid replay watermark only WITHIN one
-            # checkpoint lineage; a smaller id means the checkpoint was
-            # recreated/rewound, and batch 0 of the new lineage may
-            # bundle already-absorbed rows WITH genuinely new ones —
-            # silently skipping would undercount forever, silently
-            # merging would double-count. Fail loudly instead.
-            raise RuntimeError(
-                f"MG state at {path} was maintained up to batch "
-                f"{meta['last_batch']} under a different checkpoint "
-                f"lineage (got batch {batch_id}); restore the original "
-                "checkpoint or start a fresh state path")
-        prev_rows: list = []
-        prev_total = 0
-        if meta is not None:
-            prev_rows = (spark.read
-                         .parquet(f"{path}/summary_v{meta['last_batch']}")
-                         .collect())
-            prev_total = meta["total_items"]
+    def _step(batch: DataFrame, v):
+        prev_rows = v.prev.collect() if v.prev is not None else []
+        prev_total = v.meta["total_items"] if v.meta is not None else 0
         # distributed per-partition summaries; bounded collect
         batch_sum = mg_summaries(batch, term_col, capacity).collect()
         batch_total = sum({r.part_id: r.part_total
                            for r in batch_sum}.values())
-        if batch_total == 0 and meta is not None:
+        if batch_total == 0 and v.meta is not None:
             return
         combined: dict[str, int] = {}
         for r in prev_rows:
@@ -112,31 +74,12 @@ def start_mg_stream(stream_df: DataFrame, *, path: str, checkpoint: str,
             if r.term is not None:
                 combined[r.term] = combined.get(r.term, 0) + int(r.est)
         merged = _mg_merge(combined, capacity)
-        out = spark.createDataFrame(
+        v.write(v.spark.createDataFrame(
             [(t, c) for t, c in sorted(merged.items())] or [(None, 0)],
-            "term string, est long")
-        (out.coalesce(1).write.mode("overwrite")
-         .parquet(f"{path}/summary_v{batch_id}"))
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id,
-                                     "capacity": capacity,
-                                     "total_items": prev_total
-                                     + batch_total}))
-        # sweep versions older than the previous one (recovery depth 1)
-        keep = {f"summary_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"summary_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("summary_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+            "term string, est long"))
+        yield {"total_items": prev_total + batch_total}
 
-    return (stream_df.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(stream_df, checkpoint, _step)
 
 
 def stream_topk(spark: SparkSession, path: str,
@@ -148,11 +91,10 @@ def stream_topk(spark: SparkSession, path: str,
     ``capacity`` comes from the persisted meta (the index-face
     discipline: bound parameters live WITH the state, so a caller
     can't silently compute a wrong bound)."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no MG stream state at {path}")
+    state = _state(path)
+    meta = state.meta(spark)
     err = meta["total_items"] // (meta["capacity"] + 1)
-    return (spark.read.parquet(f"{path}/summary_v{meta['last_batch']}")
+    return (state.read(spark, meta)
             .filter(F.col("term").isNotNull())
             .withColumn("err_bound", F.lit(err))
             .orderBy(F.col("est").desc(), F.col("term").asc())

@@ -6,22 +6,19 @@ is never rescanned), so the running distinct-count of any key group,
 or any coarser rollup of them, is answerable at every point in the
 stream from a keys-sized table.
 
-State machine (the versioned-state discipline shared by
-url_cap_stream / boilerplate_stream / line_dedup_stream):
+State (the streaming/versioned_state.py protocol — replay, lineage,
+one-deep sweep):
 
     <path>/sk_v{batch_id}/   (keys..., sketch, n_rows)
     <path>/meta.json         {last_batch, keys, value_col, lgk}
 
     sk_N = merge_sketch_tables(sk_{N-1}, group_sketches(batch_N))
 
-Replay of the last batch is an idempotent skip; a batch id below the
-watermark is a recreated checkpoint lineage and fails loudly; (keys,
-value_col, lgk) ride in the meta so a restart cannot silently change
-what is being counted. HLL unions are order- and
+(keys, value_col, lgk) ride in the meta so a restart cannot silently
+change what is being counted. HLL unions are order- and
 batching-insensitive over the item SET, so the final estimates equal
 the one-shot index built from the whole corpus (pinned in
-tests/test_hll_stream.py). The previous version is retained
-one-deep; older versions are swept.
+tests/test_hll_stream.py).
 
 Scale shape: per-batch work is one batch-sized sketch aggregation +
 one keys-sized merge groupBy. Nothing reaches the driver.
@@ -29,26 +26,19 @@ one keys-sized merge groupBy. Nothing reaches the driver.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.hll_index import (
     DEFAULT_LGK,
     estimate,
     group_sketches,
     merge_sketch_tables,
 )
+from myhadoop_spark.streaming.versioned_state import VersionedState
 
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
+_state = partial(VersionedState, prefix="sk_v", name="HLL index")
 
 
 def start_hll_stream(stream: DataFrame, *, path: str, checkpoint: str,
@@ -61,69 +51,29 @@ def start_hll_stream(stream: DataFrame, *, path: str, checkpoint: str,
     if not keys:
         raise ValueError("keys must name at least one group column")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and (meta["keys"] != list(keys)
-                                 or meta["value_col"] != value_col
-                                 or meta["lgk"] != int(lgk)):
-            raise ValueError(
-                f"HLL index at {path} was built with keys="
-                f"{meta['keys']}, value_col={meta['value_col']!r}, "
-                f"lgk={meta['lgk']}; restarting with keys={list(keys)}, "
-                f"value_col={value_col!r}, lgk={lgk} would change what "
-                "is being counted — start a fresh state path")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            raise RuntimeError(
-                f"HLL index at {path} was maintained up to batch "
-                f"{meta['last_batch']} under a different checkpoint "
-                f"lineage (got batch {batch_id}); restore the original "
-                "checkpoint or start a fresh state path")
-        if meta is not None and batch.isEmpty():
-            return
+    state = _state(path, params={"keys": list(keys),
+                                 "value_col": value_col, "lgk": int(lgk)},
+                   reason="change what is being counted")
+
+    def _step(batch: DataFrame, v):
         bsk = group_sketches(batch, list(keys), value_col, lgk=lgk)
-        if meta is not None:
-            prev = spark.read.parquet(f"{path}/sk_v{meta['last_batch']}")
-            new = merge_sketch_tables(prev, bsk, list(keys))
-        else:
-            new = bsk
-        new.write.mode("overwrite").parquet(f"{path}/sk_v{batch_id}")
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id,
-                                     "keys": list(keys),
-                                     "value_col": value_col,
-                                     "lgk": int(lgk)}))
-        keep = {f"sk_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"sk_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("sk_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+        v.write(merge_sketch_tables(v.prev, bsk, list(keys))
+                if v.prev is not None else bsk)
+        yield {}
         if stats is not None:
-            tbl = spark.read.parquet(f"{path}/sk_v{batch_id}")
+            tbl = v.reread()
             tot = estimate(tbl, []).collect()[0]
             # a first batch that is empty yields an empty sketch table
             # whose total estimate is NULL — report 0, don't TypeError
             est = tot["estimate"]
-            stats.append({"batch": batch_id,
+            stats.append({"batch": v.batch_id,
                           "groups": tbl.count(),
                           "total_estimate":
                               int(est) if est is not None else 0})
 
-    return (stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(stream, checkpoint, _step)
 
 
 def read_index(spark: SparkSession, path: str) -> DataFrame:
     """The maintained sketch table as of the last absorbed batch."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no HLL index state at {path}")
-    return spark.read.parquet(f"{path}/sk_v{meta['last_batch']}")
+    return _state(path).read(spark)

@@ -11,7 +11,8 @@ later batches lose their copies, the batch that introduced it keeps
 exactly one (its first occurrence). Earlier batches are never
 rewritten; the one-shot batch operator is the re-curation tool.
 
-State machine (versioned, crash-safe):
+State (the streaming/versioned_state.py protocol — replay, lineage,
+one-deep sweep):
 
     <path>/seen_v{batch_id}/   (key) — one row per distinct line key
                                ingested so far
@@ -21,12 +22,8 @@ State machine (versioned, crash-safe):
     seen_N  = seen_{N-1} ∪ distinct keys of batch_N
     clean_N = dedup_against(batch_N, seen_{N-1})
 
-Replay of the last batch overwrites both with identical content
-(idempotent skip on a matching batch id); a batch id below the
-watermark is a recreated checkpoint lineage and fails loudly;
-(normalize, min_kept_lines) ride in the meta so a restart cannot
-silently change the dedup key. The previous seen version is retained
-one-deep; older versions are swept.
+(normalize, min_kept_lines) ride in the meta: a restart cannot
+silently change the dedup key.
 
 Single-batch equivalence: a stream fed the whole corpus as ONE batch
 produces exactly line_dedup's output (seen_{-1} = ∅), pinned bitwise
@@ -41,25 +38,18 @@ one distinct-union state merge. Nothing reaches the driver.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.line_dedup import (
     dedup_against,
     line_occurrences,
 )
+from myhadoop_spark.streaming.versioned_state import VersionedState
 
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
+_state = partial(VersionedState, prefix="seen_v", name="line-dedup state")
 
 
 def start_line_dedup_stream(doc_stream: DataFrame, *, path: str,
@@ -81,87 +71,41 @@ def start_line_dedup_stream(doc_stream: DataFrame, *, path: str,
     if int(min_kept_lines) < 1:
         raise ValueError(
             f"min_kept_lines must be >= 1, got {min_kept_lines}")
+    state = _state(path, params={"normalize": bool(normalize),
+                                 "min_kept_lines": min_kept_lines},
+                   reason="change the dedup key")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and (
-                bool(meta["normalize"]) != bool(normalize)
-                or meta["min_kept_lines"] != min_kept_lines):
-            raise ValueError(
-                f"line-dedup state at {path} was built with "
-                f"normalize={meta['normalize']}, min_kept_lines="
-                f"{meta['min_kept_lines']}; restarting with "
-                f"normalize={normalize}, min_kept_lines="
-                f"{min_kept_lines} would change the dedup key — "
-                "start a fresh state path")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            raise RuntimeError(
-                f"line-dedup state at {path} was maintained up to "
-                f"batch {meta['last_batch']} under a different "
-                f"checkpoint lineage (got batch {batch_id}); restore "
-                "the original checkpoint or start a fresh state path")
-        if meta is not None and batch.isEmpty():
-            return
-        seen_prev = (spark.read.parquet(
-            f"{path}/seen_v{meta['last_batch']}")
-            if meta is not None else None)
-        clean = dedup_against(batch, seen_prev,
+    def _step(batch: DataFrame, v):
+        clean = dedup_against(batch, v.prev,
                               lines_col=lines_col_name, id_col=id_col,
                               normalize=normalize,
                               min_kept_lines=min_kept_lines)
-        (clean.write.mode("overwrite")
-         .parquet(f"{path}/clean/batch_id={batch_id}"))
+        clean_path = f"{path}/clean/batch_id={v.batch_id}"
+        clean.write.mode("overwrite").parquet(clean_path)
         batch_keys = (line_occurrences(
             batch.withColumn("_lines", F.col(lines_col_name)),
             id_col=id_col, normalize=normalize)
             .select(F.col("_key").alias("key")).distinct())
-        new_seen = (seen_prev.unionByName(batch_keys).distinct()
-                    if seen_prev is not None else batch_keys)
-        new_seen.write.mode("overwrite").parquet(
-            f"{path}/seen_v{batch_id}")
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id,
-                                     "normalize": bool(normalize),
-                                     "min_kept_lines": min_kept_lines}))
-        keep = {f"seen_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"seen_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("seen_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+        v.write(v.prev.unionByName(batch_keys).distinct()
+                if v.prev is not None else batch_keys)
+        yield {}
         if stats is not None:
             stats.append({
-                "batch": batch_id,
+                "batch": v.batch_id,
                 "docs_in": batch.count(),
-                "docs_kept": spark.read.parquet(
-                    f"{path}/clean/batch_id={batch_id}").count(),
-                "seen": spark.read.parquet(
-                    f"{path}/seen_v{batch_id}").count(),
+                "docs_kept": v.spark.read.parquet(clean_path).count(),
+                "seen": v.reread().count(),
             })
 
-    return (doc_stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(doc_stream, checkpoint, _step)
 
 
 def read_clean(spark: SparkSession, path: str) -> DataFrame:
     """Everything the dedup ingest has emitted so far."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no line-dedup stream state at {path}")
+    _state(path).meta(spark)
     return spark.read.parquet(f"{path}/clean")
 
 
 def read_seen(spark: SparkSession, path: str) -> DataFrame:
     """The maintained (key) set as of the last absorbed batch."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no line-dedup stream state at {path}")
-    return spark.read.parquet(f"{path}/seen_v{meta['last_batch']}")
+    return _state(path).read(spark)

@@ -19,9 +19,10 @@ Per-batch semantics (deterministic):
        fingerprints join the seen state.
 
 Arrival-order contract (the house rule): earlier batches win;
-accepted documents are never revoked. State machine = the versioned
-discipline (seen_v{batch}, meta with the radius/bits riding along,
-idempotent replay skip, loud lineage guard, one-deep retention).
+accepted documents are never revoked. State = seen_v{batch} (id,
+simhash) of every accepted document under the
+streaming/versioned_state.py protocol, with (bits, max_hamming)
+riding in the meta.
 
 Scale shape: per batch, the within-batch join is batch-sized; the
 cross probe joins batch blocks against the data-sized seen blocks
@@ -31,16 +32,11 @@ it). The CC rounds are batch-bounded.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.connected_components import (
     connected_components,
 )
@@ -48,11 +44,10 @@ from myhadoop_spark.operators.simhash_join import (
     hamming_pairs,
     hamming_probe,
 )
+from myhadoop_spark.streaming.versioned_state import VersionedState
 
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
+_state = partial(VersionedState, prefix="seen_v",
+                 name="simhash-dedup state")
 
 
 def start_simhash_dedup_stream(doc_stream: DataFrame, *, path: str,
@@ -69,28 +64,11 @@ def start_simhash_dedup_stream(doc_stream: DataFrame, *, path: str,
         raise ValueError(f"max_hamming must be in [1, bits), got "
                          f"{max_hamming}")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and (meta["bits"] != int(bits)
-                                 or meta["max_hamming"]
-                                 != int(max_hamming)):
-            raise ValueError(
-                f"simhash-dedup state at {path} was built with bits="
-                f"{meta['bits']}, max_hamming={meta['max_hamming']}; "
-                f"restarting with bits={bits}, max_hamming="
-                f"{max_hamming} would change what counts as a "
-                "near-duplicate — start a fresh state path")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            raise RuntimeError(
-                f"simhash-dedup state at {path} was maintained up to "
-                f"batch {meta['last_batch']} under a different "
-                f"checkpoint lineage (got batch {batch_id}); restore "
-                "the original checkpoint or start a fresh state path")
-        if meta is not None and batch.isEmpty():
-            return
+    state = _state(path, params={"bits": int(bits),
+                                 "max_hamming": int(max_hamming)},
+                   reason="change what counts as a near-duplicate")
+
+    def _step(batch: DataFrame, v):
         # 1. within-batch: cluster and keep each cluster's min id
         pairs = hamming_pairs(batch, bits=bits,
                               max_hamming=max_hamming, id_col=id_col,
@@ -108,54 +86,34 @@ def start_simhash_dedup_stream(doc_stream: DataFrame, *, path: str,
                       .select(F.col("id").alias(id_col)))
             reps = batch.join(losers, id_col, "left_anti")
         # 2. cross-corpus probe against accepted fingerprints
-        if meta is not None:
-            seen = spark.read.parquet(
-                f"{path}/seen_v{meta['last_batch']}")
+        seen = v.prev
+        if seen is not None:
             hits = hamming_probe(reps, seen, bits=bits,
                                  max_hamming=max_hamming,
                                  id_col=id_col, sim_col=sim_col)
             survivors = reps.join(hits, id_col, "left_anti")
         else:
             survivors = reps
-        (survivors.write.mode("overwrite")
-         .parquet(f"{path}/clean/batch_id={batch_id}"))
-        kept = spark.read.parquet(f"{path}/clean/batch_id={batch_id}")
+        clean_path = f"{path}/clean/batch_id={v.batch_id}"
+        survivors.write.mode("overwrite").parquet(clean_path)
+        kept = v.spark.read.parquet(clean_path)
         new_seen = kept.select(id_col, sim_col)
-        if meta is not None:
+        if seen is not None:
             new_seen = seen.select(id_col, sim_col).unionByName(new_seen)
-        new_seen.write.mode("overwrite").parquet(
-            f"{path}/seen_v{batch_id}")
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id,
-                                     "bits": int(bits),
-                                     "max_hamming": int(max_hamming)}))
-        keep = {f"seen_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"seen_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("seen_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+        v.write(new_seen)
+        yield {}
         if stats is not None:
             stats.append({
-                "batch": batch_id,
+                "batch": v.batch_id,
                 "docs_in": batch.count(),
                 "docs_kept": kept.count(),
-                "seen": spark.read.parquet(
-                    f"{path}/seen_v{batch_id}").count(),
+                "seen": v.reread().count(),
             })
 
-    return (doc_stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(doc_stream, checkpoint, _step)
 
 
 def read_clean(spark: SparkSession, path: str) -> DataFrame:
     """Everything the suppressing ingest has emitted so far."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no simhash-dedup state at {path}")
+    _state(path).meta(spark)
     return spark.read.parquet(f"{path}/clean")

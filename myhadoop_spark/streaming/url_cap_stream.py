@@ -8,7 +8,8 @@ later ones), which deliberately differs from the batch operator's
 global (md5-rank, id) prefix — WITHIN a batch the deterministic rank
 still decides who gets the remaining budget.
 
-State machine (the cms_stream/heavy_hitters discipline):
+State (the streaming/versioned_state.py protocol — replay, lineage,
+one-deep sweep):
 
     <path>/counts_v{batch_id}/  (domain, kept) — one row per domain
                                 seen so far (bounded by live domains,
@@ -20,14 +21,8 @@ State machine (the cms_stream/heavy_hitters discipline):
     kept_N     = domain_cap(batch_N, caps = cap − counts_{N-1})
     counts_N   = counts_{N-1} + per-domain counts of kept_N
 
-Crash/replay correctness: kept_N and counts_N are pure functions of
-(counts_{N-1}, batch_N), so a replayed last batch overwrites both
-with identical content (idempotent skip on matching batch id,
-batch_id=N directories overwritten never appended); a batch id BELOW
-the watermark is a recreated checkpoint lineage and fails loudly;
 ``cap`` rides in the meta so a restart cannot silently change the
-budget. The previous counts version is retained one-deep; older
-versions are swept.
+budget.
 
 Scale shape: the per-batch work is the banded domain_cap (whole
 bands keep/drop, boundary band sorts) plus one (domain)-sized count
@@ -37,22 +32,16 @@ corpus-sized, and nothing is collected to the driver.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.fsutil import (
-    hadoop_fs,
-    read_small_file,
-    write_small_file,
-)
 from myhadoop_spark.operators.url_dedup import domain_cap
+from myhadoop_spark.streaming.versioned_state import VersionedState
 
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    raw = read_small_file(spark, f"{path}/meta.json")
-    return json.loads(raw) if raw is not None else None
+_state = partial(VersionedState, prefix="counts_v",
+                 name="domain-cap state", coalesce=True)
 
 
 def start_domain_cap_stream(doc_stream: DataFrame, *, path: str,
@@ -65,28 +54,12 @@ def start_domain_cap_stream(doc_stream: DataFrame, *, path: str,
     (availableNow-friendly); kept documents land under
     ``{path}/kept/batch_id=N``. Pass ``stats`` (a list) to receive
     one {batch, kept, domains} dict per absorbed batch."""
+    state = _state(path, params={"cap": cap},
+                   reason="change already-spent budgets")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = _read_meta(spark, path)
-        if meta is not None and meta["cap"] != cap:
-            raise ValueError(
-                f"domain-cap state at {path} was built with cap="
-                f"{meta['cap']}; restarting with cap={cap} would change "
-                "already-spent budgets — start a fresh state path")
-        if meta is not None and batch_id == meta["last_batch"]:
-            return  # crash-replay of the last batch — idempotent skip
-        if meta is not None and batch_id < meta["last_batch"]:
-            raise RuntimeError(
-                f"domain-cap state at {path} was maintained up to batch "
-                f"{meta['last_batch']} under a different checkpoint "
-                f"lineage (got batch {batch_id}); restore the original "
-                "checkpoint or start a fresh state path")
-        if meta is not None and batch.isEmpty():
-            return
-        if meta is not None:
-            prev = spark.read.parquet(
-                f"{path}/counts_v{meta['last_batch']}")
+    def _step(batch: DataFrame, v):
+        prev = v.prev
+        if prev is not None:
             remaining = prev.select(
                 domain_col,
                 F.greatest(F.lit(cap).cast("long") - F.col("kept"),
@@ -94,48 +67,29 @@ def start_domain_cap_stream(doc_stream: DataFrame, *, path: str,
             kept = domain_cap(batch, domain_col=domain_col, cap=cap,
                               id_col=id_col, bands=bands, caps=remaining)
         else:
-            prev = None
             kept = domain_cap(batch, domain_col=domain_col, cap=cap,
                               id_col=id_col, bands=bands)
-        (kept.write.mode("overwrite")
-         .parquet(f"{path}/kept/batch_id={batch_id}"))
-        batch_counts = (spark.read
-                        .parquet(f"{path}/kept/batch_id={batch_id}")
+        kept_path = f"{path}/kept/batch_id={v.batch_id}"
+        kept.write.mode("overwrite").parquet(kept_path)
+        batch_counts = (v.spark.read.parquet(kept_path)
                         .groupBy(domain_col)
                         .agg(F.count(F.lit(1)).alias("kept")))
-        new_counts = (batch_counts if prev is None
-                      else prev.unionByName(batch_counts)
-                      .groupBy(domain_col)
-                      .agg(F.sum("kept").cast("long").alias("kept")))
-        (new_counts.coalesce(1).write.mode("overwrite")
-         .parquet(f"{path}/counts_v{batch_id}"))
-        write_small_file(spark, f"{path}/meta.json",
-                         json.dumps({"last_batch": batch_id, "cap": cap}))
-        keep = {f"counts_v{batch_id}"}
-        if meta is not None:
-            keep.add(f"counts_v{meta['last_batch']}")
-        fs, root = hadoop_fs(spark, path)
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith("counts_v") and name not in keep:
-                fs.delete(status.getPath(), True)
+        v.write(batch_counts if prev is None
+                else prev.unionByName(batch_counts)
+                .groupBy(domain_col)
+                .agg(F.sum("kept").cast("long").alias("kept")))
+        yield {}
         if stats is not None:
-            agg = spark.read.parquet(f"{path}/counts_v{batch_id}").agg(
+            agg = v.reread().agg(
                 F.sum("kept").alias("k"),
                 F.count(F.lit(1)).alias("d")).collect()[0]
-            stats.append({"batch": batch_id, "kept": int(agg["k"] or 0),
+            stats.append({"batch": v.batch_id, "kept": int(agg["k"] or 0),
                           "domains": int(agg["d"])})
 
-    return (doc_stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return state.start(doc_stream, checkpoint, _step)
 
 
 def read_kept(spark: SparkSession, path: str) -> DataFrame:
     """Everything the capped ingest has kept so far (all batches)."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(f"no domain-cap stream state at {path}")
+    _state(path).meta(spark)
     return spark.read.parquet(f"{path}/kept")

@@ -124,15 +124,15 @@ def test_replay_idempotent_and_guards(spark, tmp_path):
     before = sorted(map(tuple, read_clean(spark, path).collect()))
     tbl_before = sorted(map(tuple, read_df_table(spark, path).collect()))
 
-    from myhadoop_spark.streaming import boilerplate_stream as bs
-    last = bs._read_meta(spark, path)["last_batch"]
+    from myhadoop_spark.streaming.versioned_state import read_meta
+    last = read_meta(spark, path)["last_batch"]
     # re-run over the same source with the same checkpoint: no new
     # files → no-op; state and outputs unchanged
     _run(spark, src, path, str(tmp_path / "ck"), min_df=3)
     assert sorted(map(tuple, read_clean(spark, path).collect())) == before
     assert sorted(map(tuple,
                       read_df_table(spark, path).collect())) == tbl_before
-    assert bs._read_meta(spark, path)["last_batch"] == last
+    assert read_meta(spark, path)["last_batch"] == last
 
     # param change fails loudly on the same state path
     with pytest.raises(Exception, match="min_df"):

@@ -7,10 +7,15 @@ from __future__ import annotations
 
 import contextlib
 import io
+from types import SimpleNamespace
 
 import pytest
 
-from myhadoop_spark.materialize import materialize, materialize_lazy
+from myhadoop_spark.materialize import (
+    _ensure_checkpoint_dir,
+    materialize,
+    materialize_lazy,
+)
 
 
 def _plan(df) -> str:
@@ -36,13 +41,27 @@ def test_lazy_form_truncates_on_first_use(spark):
     assert "ExistingRDD" in _plan(out)
 
 
-def test_reliable_flag_requires_checkpoint_dir(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+def _stub_df(checkpoint_dir=None):
+    """A frame stand-in whose context starts with ``checkpoint_dir``:
+    the shared session's dir, once set, cannot be unset."""
+    sc = SimpleNamespace(dir=checkpoint_dir)
+    sc.getCheckpointDir = lambda: sc.dir
+    sc.setCheckpointDir = lambda d: setattr(sc, "dir", d)
+    return SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=sc))
+
+
+def test_reliable_flag_requires_checkpoint_dir(monkeypatch, tmp_path):
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("session already has a checkpoint dir")
     with pytest.raises(RuntimeError, match="SPARK_GRAFT_CHECKPOINT_DIR"):
-        spark.range(10).transform(materialize)
+        _ensure_checkpoint_dir(_stub_df())
+    # an existing dir is kept; the env var fills a missing one
+    df = _stub_df("/existing")
+    _ensure_checkpoint_dir(df)
+    assert df.sparkSession.sparkContext.dir == "/existing"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
+    df = _stub_df()
+    _ensure_checkpoint_dir(df)
+    assert df.sparkSession.sparkContext.dir == str(tmp_path)
 
 
 def test_reliable_checkpoint_same_rows(spark, monkeypatch, tmp_path):
@@ -58,3 +77,11 @@ def test_reliable_checkpoint_same_rows(spark, monkeypatch, tmp_path):
     assert ckdirs, "reliable checkpoint wrote no blocks"
     lazy = df.transform(materialize_lazy)
     assert lazy.count() == 100
+
+
+def test_reliable_checkpoints_are_cleaned_up(spark):
+    # the ContextCleaner deletes a reliable checkpoint's files once its
+    # RDD is unreferenced; without this nothing ever deletes them
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") \
+        == "true"

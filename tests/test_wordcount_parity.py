@@ -5,14 +5,16 @@ utilities.py:170-185 fold, app.py:6-14 WordCount)."""
 
 from __future__ import annotations
 
+import importlib.util
 from collections import Counter
 from pathlib import Path
 
 import pytest
 
 from myhadoop_spark.mapreduce import run_wordcount_fast, wordcount_job
+from myhadoop_spark.queries import reference_parity
 
-REF_CORPUS = Path("/root/reference/fs/input/wordcount/512")
+REF_CORPUS = Path(reference_parity.REF_CORPUS)
 
 
 def python_reference_wordcount(files: list[Path]) -> dict[str, int]:
@@ -29,10 +31,8 @@ def python_reference_wordcount(files: list[Path]) -> dict[str, int]:
 
 @pytest.fixture(scope="module")
 def corpus_slice(tmp_path_factory):
-    """Two files (~0.5 MiB) of the reference corpus, copied so the test
-    input dir contains only the slice."""
-    if not REF_CORPUS.exists():
-        pytest.skip("reference corpus not available")
+    """Two files of the parity corpus, copied so the test input dir
+    contains only the slice."""
     dst = tmp_path_factory.mktemp("wc_corpus")
     picked = sorted(REF_CORPUS.iterdir())[:2]
     for p in picked:
@@ -55,3 +55,20 @@ def test_mapreduce_job_api_matches_reference(spark, corpus_slice):
     got = {r["key"]: r["value"]
            for r in job.run_on_text_dir(spark, str(dst)).collect()}
     assert got == expected
+
+
+def test_committed_corpus_is_the_seeded_generator_output():
+    spec = importlib.util.spec_from_file_location(
+        "gen_wordcount_corpus",
+        Path(__file__).resolve().parent.parent / "scripts"
+        / "gen_wordcount_corpus.py")
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    want = gen.corpus_files()
+    got = {p.name: p.read_text(encoding="utf-8")
+           for p in sorted(REF_CORPUS.iterdir())}
+    assert got == want
+    # pre-lowercased and whitespace-tokenised, as the reference inputs
+    text = "".join(want.values())
+    assert text == text.lower() and all(
+        w.isalpha() for w in text.split())
