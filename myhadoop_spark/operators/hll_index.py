@@ -41,7 +41,7 @@ beside operators/cms.py and the approx_distinct HLL++ gate query).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_LGK = 12
@@ -71,11 +71,16 @@ def estimate(sketches: DataFrame, keys: list[str]) -> DataFrame:
     index's key columns — [] for the grand total) and estimate: the
     raw data is never touched. Returns (keys..., n_rows, estimate)."""
     gb = sketches.groupBy(*keys) if keys else sketches.groupBy()
-    return (gb.agg(F.hll_sketch_estimate(
-                       F.hll_union_agg(F.col("sketch")))
-                   .cast("long").alias("estimate"),
+    return (gb.agg(union_estimate().alias("estimate"),
                    F.sum("n_rows").cast("long").alias("n_rows"))
             .select(*keys, "n_rows", "estimate"))
+
+
+def union_estimate() -> Column:
+    """The aggregate estimating the distinct count of the union of a
+    sketch table's ``sketch`` rows."""
+    return (F.hll_sketch_estimate(F.hll_union_agg(F.col("sketch")))
+            .cast("long"))
 
 
 def build_index(df: DataFrame, keys: list[str], value_col: str,

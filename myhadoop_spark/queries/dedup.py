@@ -18,7 +18,7 @@ what makes a SQL oracle possible at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
@@ -216,27 +216,27 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, verification touches candidates only.
 
     The hashed token sets are built WIDE (see _token_sets) and
-    materialized once (localCheckpoint) because both the signature
+    materialized once (inside minhash_pairs) because both the signature
     branch and the verify branch need them — Catalyst has no common
     subtree sharing across joins, so without the checkpoint the
     tokenize+md5 work runs twice — and on ONE core (single-split
     fixture file). Measured r2 at sf0.1: 12.5 s → 3.8 s warm."""
-    sets = _hashed_token_sets(spark, sf_dir, wide=True).transform(materialize)
-    return minhash_pairs(spark, sets)
+    return minhash_pairs(spark, _hashed_token_sets(spark, sf_dir, wide=True))
 
 
 def minhash_pairs(spark: SparkSession, sets: DataFrame) -> DataFrame:
     """The band-join + Jaccard-verify core over prepared hashed token
     sets — shared by the fixture gate query above and the synthetic
-    scale rehearsal (scripts/dedup_scaling.py). `sets` should already be
-    wide and materialized (both branches consume it).
+    scale rehearsal (scripts/dedup_scaling.py). `sets` should be wide;
+    it is materialized here, once, because both branches consume it,
+    and that checkpoint job also observes its row count.
 
     r14 (optimization, guide §2.4/§3.1 — the r13 edjoin/ppjoin shape
     applied to the band self-join, VERDICT r13 #4): a candidate pair is
     emitted once per agreeing band (≤ n_bands× duplication), so the
     trailing global ``distinct`` shuffled the candidate MULTISET. Under
-    a 48 MB budget (estimated from one cheap count over the
-    materialized ``sets``) the band table is materialized once, its
+    a 48 MB budget (estimated from the row count observed on the
+    ``sets`` checkpoint) the band table is materialized once, its
     build side broadcast, and the stream side hash-partitioned by doc1:
     every duplicate of a pair originates from the stream doc's own band
     rows, so ``HashPartitioning(doc1)`` satisfies the dedup aggregate's
@@ -245,11 +245,14 @@ def minhash_pairs(spark: SparkSession, sets: DataFrame) -> DataFrame:
     tests/test_dedup_invariants.py). Past
     the budget — the 100 TB corpus — the audited hash-partitioned join
     + global distinct stands unchanged; both paths dedup identically."""
+    n_sets = Observation()
+    sets = sets.observe(n_sets, F.count(F.lit(1)).alias("n")).transform(
+        materialize)
     bands = minhash_signatures(spark, "", sets=sets)
     n_bands = len(MINHASH_FAM) // MINHASH_BAND_ROWS
     # ≤ 11 chars per minhash (int32-ish decimal) + commas, 8-byte id,
     # ~46 bytes hashed-relation overhead per row (the edjoin estimate)
-    est_bytes = (sets.count() * n_bands
+    est_bytes = (n_sets.get["n"] * n_bands
                  * (8 + 12 * MINHASH_BAND_ROWS + 46))
     if est_bytes < (48 << 20):
         bands = bands.transform(materialize)

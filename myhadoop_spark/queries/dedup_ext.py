@@ -384,8 +384,9 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_pairs,
     )
 
-    sets = _hashed_token_sets(spark, sf_dir, wide=True).transform(materialize)
-    pairs = minhash_pairs(spark, sets).select("doc1", "doc2")
+    pairs = (minhash_pairs(spark,
+                           _hashed_token_sets(spark, sf_dir, wide=True))
+             .select("doc1", "doc2"))
     edges = (pairs.select(F.col("doc1").alias("src"),
                           F.col("doc2").alias("dst"))
              .union(pairs.select(F.col("doc2").alias("src"),

@@ -19,16 +19,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """16g, capped at half the host's physical RAM: in local mode the
+    executors run inside the driver JVM, beside everything else the
+    host runs."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    return f"{max(1, min(16, ram // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "myhadoop-spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build the engine's SparkSession.
 
-    Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
-    master/memory settings come from spark-submit and everything here except
-    the master remains the right default.
+    Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: every core
+    of the host) with a ``$SPARK_GRAFT_DRIVER_MEM`` driver (default: 16g,
+    capped at half the host's RAM); on a real cluster the master/memory
+    settings come from spark-submit and everything here except the master
+    remains the right default.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     if shuffle_partitions is None:
         # local: ~cores; cluster: submit-time override (AQE coalesces anyway)
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)))
@@ -62,7 +75,8 @@ def get_spark(app_name: str = "myhadoop-spark", cpus: int | None = None,
         # SPARK_GRAFT_RELIABLE_CHECKPOINT=1) are deleted once their RDD
         # is unreferenced; local checkpoints are unaffected
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         # UI off for tests; bench turns it on to scrape shuffle metrics
         # from the REST API
         .config("spark.ui.enabled",

@@ -50,6 +50,7 @@ from myhadoop_spark.operators.boilerplate import (
     _toks,
     strip_against,
 )
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.streaming.versioned_state import VersionedState
 
 _state = partial(VersionedState, prefix="df_v", name="boilerplate state")
@@ -76,7 +77,8 @@ def start_boilerplate_stream(doc_stream: DataFrame, *, path: str,
     """Maintain the shingle-df table per micro-batch and strip each
     batch on ingest (availableNow-friendly); stripped documents land
     under ``{path}/clean/batch_id=N``. Pass ``stats`` (a list) to
-    receive one {batch, docs, vocab, boiler} dict per absorbed batch.
+    receive one {batch, docs, vocab, boiler} dict per absorbed batch,
+    observed on the batch's own df_v and clean/ writes (no extra job).
 
     Assumes each document arrives in exactly ONE batch (the ingest
     contract everywhere in this package) — df stays the exact
@@ -88,28 +90,26 @@ def start_boilerplate_stream(doc_stream: DataFrame, *, path: str,
                    reason="change what already counts as boilerplate")
 
     def _step(batch: DataFrame, v):
+        obs = Observed(stats is not None)
         batch_counts = _batch_df_counts(batch, n=n, text_col=text_col,
                                         id_col=id_col)
-        v.write(v.prev.unionByName(batch_counts)
-                .groupBy("g")
-                .agg(F.sum("df").cast("long").alias("df"))
-                if v.prev is not None else batch_counts)
+        v.write(obs(v.prev.unionByName(batch_counts)
+                    .groupBy("g")
+                    .agg(F.sum("df").cast("long").alias("df"))
+                    if v.prev is not None else batch_counts,
+                    vocab=F.count(F.lit(1)),
+                    boiler=F.count_if(F.col("df") >= min_df)))
         table = v.reread()
         bp = table.filter(F.col("df") >= min_df).select("g")
         clean = strip_against(batch, bp, n=n, text_col=text_col,
                               id_col=id_col)
         clean_path = f"{path}/clean/batch_id={v.batch_id}"
-        clean.write.mode("overwrite").parquet(clean_path)
+        obs.rows(clean, "docs").write.mode("overwrite").parquet(clean_path)
         yield {}
         if stats is not None:
-            agg = table.agg(
-                F.count(F.lit(1)).alias("v"),
-                F.sum((F.col("df") >= min_df).cast("long")).alias("b")
-            ).collect()[0]
-            docs_n = v.spark.read.parquet(clean_path).count()
-            stats.append({"batch": v.batch_id, "docs": int(docs_n),
-                          "vocab": int(agg["v"] or 0),
-                          "boiler": int(agg["b"] or 0)})
+            m = obs.get()
+            stats.append({"batch": v.batch_id, "docs": m["docs"],
+                          "vocab": m["vocab"], "boiler": m["boiler"]})
 
     return state.start(doc_stream, checkpoint, _step)
 

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.operators.budget_select import budget_select
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.streaming.versioned_state import VersionedState
 
 _state = partial(VersionedState, prefix="state_v", name="budget stream")
@@ -52,7 +53,8 @@ def start_budget_stream(doc_stream: DataFrame, *, path: str,
     persistent token ``budget`` is spent (availableNow-friendly).
     The stream carries (id, score BIGINT, n_tokens BIGINT). Pass
     ``stats`` (a list) to receive one {batch, admitted, tokens,
-    budget_left} dict per absorbed batch."""
+    budget_left} dict per absorbed batch, observed on the batch's own
+    kept/ and state_v writes (no extra job)."""
     if int(budget) < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
     if int(bands) < 1:
@@ -62,6 +64,7 @@ def start_budget_stream(doc_stream: DataFrame, *, path: str,
                    reason="change the banded tie layout")
 
     def _step(batch: DataFrame, v):
+        obs = Observed(stats is not None)
         left_df = (v.prev if v.prev is not None
                    else v.spark.createDataFrame([(int(budget),)],
                                                 "budget_left long"))
@@ -70,29 +73,25 @@ def start_budget_stream(doc_stream: DataFrame, *, path: str,
             left_df.select(F.col("budget_left").alias("budget")),
             bands=bands, id_col=id_col)
         kept_path = f"{path}/kept/batch_id={v.batch_id}"
-        kept.write.mode("overwrite").parquet(kept_path)
+        obs(kept, admitted=F.count(F.lit(1)),
+            tokens=F.coalesce(F.sum("n_tokens"), F.lit(0))).write.mode(
+                "overwrite").parquet(kept_path)
         kept_back = v.spark.read.parquet(kept_path)
         # the straddling document may overshoot the remaining budget
         # by up to one document's tokens — clamp the persisted state
         # at 0 so budget_left()/stats never report a negative budget
-        v.write(left_df.crossJoin(
+        v.write(obs(left_df.crossJoin(
             F.broadcast(kept_back.agg(
                 F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long")
                 .alias("_spent"))))
             .select(F.greatest(
                 F.col("budget_left") - F.col("_spent"),
                 F.lit(0).cast("long"))
-                .cast("long").alias("budget_left")))
+                .cast("long").alias("budget_left")),
+            budget_left=F.max("budget_left")))
         yield {}
         if stats is not None:
-            row = kept_back.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t")
-            ).collect()[0]
-            left = v.reread().collect()[0]["budget_left"]
-            stats.append({"batch": v.batch_id, "admitted": int(row["n"]),
-                          "tokens": int(row["t"]),
-                          "budget_left": int(left)})
+            stats.append({"batch": v.batch_id, **obs.get()})
 
     return state.start(doc_stream, checkpoint, _step)
 
@@ -104,4 +103,5 @@ def read_kept(spark: SparkSession, path: str) -> DataFrame:
 
 
 def budget_left(spark: SparkSession, path: str) -> int:
+    # the answer itself: one row, read once per call
     return _state(path).read(spark).collect()[0]["budget_left"]

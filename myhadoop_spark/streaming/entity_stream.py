@@ -54,6 +54,7 @@ from myhadoop_spark.operators.connected_components import (
 )
 from myhadoop_spark.operators.edjoin import edit_distance_pairs
 from myhadoop_spark.materialize import materialize
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.streaming.versioned_state import VersionedState
 
 _state = partial(VersionedState, prefix="canon_v", name="entity catalog")
@@ -90,8 +91,9 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
     """Resolve each micro-batch of (id, nm) records against the
     incrementally-built canonical catalog (availableNow-friendly).
     Pass ``stats`` (a list) to receive one {batch, records, matched,
-    new_entities, catalog} dict per batch (plus buckets_read /
-    index_rows_read when ``pruned_index``)."""
+    new_entities, catalog} dict per batch, observed on the batch's own
+    assign/ and canon_v writes (plus buckets_read / index_rows_read
+    when ``pruned_index``)."""
     if int(max_dist) < 1 or int(q) < 1:
         raise ValueError("max_dist and q must be >= 1")
     if int(n_buckets) < 1:
@@ -115,6 +117,7 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
     def _step(batch: DataFrame, v):
         spark, batch_id, meta, catalog = (v.spark, v.batch_id, v.meta,
                                           v.prev)
+        obs = Observed(stats is not None)
         lab = _cluster_canonicals(batch, max_dist=max_dist,
                                   q=q).transform(materialize)
         # the tag-union probe NEGATES catalog ids; record ids must be
@@ -137,13 +140,13 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
 
             order = spark.read.parquet(f"{path}/gram_df")
             b_names = reps.select(F.col("id").alias("entity"), "nm")
+            bucket_set = (prefix_rows(b_names, order, max_dist=max_dist,
+                                      q=q, n_buckets=n_buckets)
+                          .filter(F.col("tier") != "short")
+                          .select("bucket").distinct())
             # bucket set of THIS batch's prefix grams — ≤ n_buckets
             # values, the collect is bounded by construction
-            buckets = [r["bucket"] for r in
-                       prefix_rows(b_names, order, max_dist=max_dist,
-                                   q=q, n_buckets=n_buckets)
-                       .filter(F.col("tier") != "short")
-                       .select("bucket").distinct().collect()]
+            buckets = [r["bucket"] for r in bucket_set.collect()]
             # committed batches only (<= last_batch): a crash after
             # the batch-N prefix write but before the meta commit
             # must not let the replay probe its own orphan rows
@@ -151,6 +154,8 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
                               max_batch=meta["last_batch"])
             if stats is not None:
                 probe_stats["buckets_read"] = len(buckets)
+                # stats-only action: the probe reads idx in three
+                # tier-filtered branches, none of them whole
                 probe_stats["index_rows_read"] = idx.count()
             cross = probe(b_names, idx, order, max_dist=max_dist,
                           q=q, n_buckets=n_buckets)
@@ -200,13 +205,15 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
             F.coalesce("_match", "_cid").alias("entity"),
             F.coalesce("_mnm", "_cnm").alias("canon_nm"),
             "is_new")
-        out.write.mode("overwrite").parquet(
-            f"{path}/assign/batch_id={batch_id}")
+        obs(out, records=F.count(F.lit(1)),
+            matched=F.count_if(~F.col("is_new"))).write.mode(
+                "overwrite").parquet(f"{path}/assign/batch_id={batch_id}")
         back = spark.read.parquet(f"{path}/assign/batch_id={batch_id}")
         new_canon = (back.filter("is_new")
                      .select("entity", "canon_nm").distinct())
-        v.write(catalog.unionByName(new_canon)
-                if catalog is not None else new_canon)
+        added = obs.rows(new_canon, "new_entities")
+        v.write(obs.rows(catalog.unionByName(added)
+                         if catalog is not None else added, "catalog"))
         if pruned_index:
             from myhadoop_spark.operators.edjoin_index import (
                 freeze_order,
@@ -231,14 +238,7 @@ def start_entity_stream(rec_stream: DataFrame, *, path: str,
              .parquet(f"{path}/prefix/batch_id={batch_id}"))
         yield {"index": bool(pruned_index), "n_buckets": int(n_buckets)}
         if stats is not None:
-            stats.append({
-                "batch": batch_id,
-                "records": back.count(),
-                "matched": back.filter(~F.col("is_new")).count(),
-                "new_entities": new_canon.count(),
-                "catalog": v.reread().count(),
-                **probe_stats,
-            })
+            stats.append({"batch": batch_id, **obs.get(), **probe_stats})
 
     return state.start(rec_stream, checkpoint, _step)
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from myhadoop_spark.queries.dedup import JACCARD_THRESHOLD, _hashed_token_sets
 from myhadoop_spark.queries.fuzzy_decontam import fuzzy_contaminated
 from myhadoop_spark.materialize import materialize
+from myhadoop_spark.streaming.observed import Observed
 
 
 def start_fuzzy_decontam_stream(doc_stream: DataFrame,
@@ -38,13 +39,14 @@ def start_fuzzy_decontam_stream(doc_stream: DataFrame,
     (availableNow-friendly); both sides carry (doc_id, text).
     Survivors land under ``{path}/clean/batch_id=N``. Pass ``stats``
     (a list) to receive one {batch, docs_in, docs_kept} dict per
-    batch."""
+    batch, observed on the batch's own clean/ write (no extra job)."""
     cache: dict = {}  # bench token sets hashed ONCE, on first batch
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch.sparkSession
         if batch.isEmpty():
             return
+        obs = Observed(stats is not None)
         if "bs" not in cache:
             cache["bs"] = _hashed_token_sets(
                 spark, "", docs=bench_docs).transform(materialize)
@@ -52,16 +54,13 @@ def start_fuzzy_decontam_stream(doc_stream: DataFrame,
         hits = (fuzzy_contaminated(spark, cs, cache["bs"],
                                    threshold=threshold)
                 .select("doc_id").distinct())
-        clean = batch.join(hits, "doc_id", "left_anti")
-        (clean.write.mode("overwrite")
+        # the anti join's left side is the one read of the batch that
+        # the probe (cs) does not share
+        clean = obs.rows(batch, "docs_in").join(hits, "doc_id", "left_anti")
+        (obs.rows(clean, "docs_kept").write.mode("overwrite")
          .parquet(f"{path}/clean/batch_id={batch_id}"))
         if stats is not None:
-            stats.append({
-                "batch": batch_id,
-                "docs_in": batch.count(),
-                "docs_kept": spark.read.parquet(
-                    f"{path}/clean/batch_id={batch_id}").count(),
-            })
+            stats.append({"batch": batch_id, **obs.get()})
 
     return (doc_stream.writeStream
             .foreachBatch(_process)

@@ -59,6 +59,7 @@ def start_mg_stream(stream_df: DataFrame, *, path: str, checkpoint: str,
                    skip_empty=False)
 
     def _step(batch: DataFrame, v):
+        # the stored summary is ≤ capacity rows, merged on the driver
         prev_rows = v.prev.collect() if v.prev is not None else []
         prev_total = v.meta["total_items"] if v.meta is not None else 0
         # distributed per-partition summaries; bounded collect

@@ -29,13 +29,15 @@ from __future__ import annotations
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from myhadoop_spark.operators.hll_index import (
     DEFAULT_LGK,
-    estimate,
     group_sketches,
     merge_sketch_tables,
+    union_estimate,
 )
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.streaming.versioned_state import VersionedState
 
 _state = partial(VersionedState, prefix="sk_v", name="HLL index")
@@ -47,7 +49,8 @@ def start_hll_stream(stream: DataFrame, *, path: str, checkpoint: str,
                      stats: list | None = None):
     """Maintain the per-key sketch index per micro-batch
     (availableNow-friendly). Pass ``stats`` (a list) to receive one
-    {batch, groups, total_estimate} dict per absorbed batch."""
+    {batch, groups, total_estimate} dict per absorbed batch, observed
+    on the batch's own sk_v write (no extra job)."""
     if not keys:
         raise ValueError("keys must name at least one group column")
 
@@ -56,18 +59,18 @@ def start_hll_stream(stream: DataFrame, *, path: str, checkpoint: str,
                    reason="change what is being counted")
 
     def _step(batch: DataFrame, v):
+        obs = Observed(stats is not None)
         bsk = group_sketches(batch, list(keys), value_col, lgk=lgk)
-        v.write(merge_sketch_tables(v.prev, bsk, list(keys))
-                if v.prev is not None else bsk)
+        v.write(obs(merge_sketch_tables(v.prev, bsk, list(keys))
+                    if v.prev is not None else bsk,
+                    groups=F.count(F.lit(1)), total_estimate=union_estimate()))
         yield {}
         if stats is not None:
-            tbl = v.reread()
-            tot = estimate(tbl, []).collect()[0]
+            m = obs.get()
             # a first batch that is empty yields an empty sketch table
             # whose total estimate is NULL — report 0, don't TypeError
-            est = tot["estimate"]
-            stats.append({"batch": v.batch_id,
-                          "groups": tbl.count(),
+            est = m["total_estimate"]
+            stats.append({"batch": v.batch_id, "groups": m["groups"],
                           "total_estimate":
                               int(est) if est is not None else 0})
 

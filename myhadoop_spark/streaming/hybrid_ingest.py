@@ -52,6 +52,7 @@ from myhadoop_spark.operators.bm25_index import (
 from myhadoop_spark.operators.chunking import chunk_documents
 from myhadoop_spark.operators.ivf_index import append_to_index, build_index
 from myhadoop_spark.materialize import materialize
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.operators.lsh_index import (
     _dedup_core,
     _write_sigs,
@@ -150,7 +151,9 @@ def start_hybrid_ingest_stream(stream_docs: DataFrame, *, lsh_path: str,
 
     ``stats``: pass a list to receive one dict per processed batch —
     {batch_id, docs_in, survivors, chunks, wall_s} — the flat-cost
-    monitoring face (rehearsed in scripts/hybrid_ingest_study.py)."""
+    monitoring face (rehearsed in scripts/hybrid_ingest_study.py). The
+    counts are observed on the batch's own signature, survivor and
+    chunk checkpoints (no extra job)."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -159,18 +162,23 @@ def start_hybrid_ingest_stream(stream_docs: DataFrame, *, lsh_path: str,
 
         t0 = _time.time()
         spark = batch.sparkSession
+        obs = Observed(stats is not None)
         append_id = f"b{batch_id}"
+        # docs_in fires on the signature checkpoint, the first and
+        # full read of the batch inside _dedup_core
         survivors, rows = _dedup_core(
-            batch.select("doc_id", "text"), lsh_path,
+            obs.rows(batch.select("doc_id", "text"), "docs_in"), lsh_path,
             append_id=append_id, threshold=threshold, text_col="text",
             max_bucket=max_bucket)
-        # materialize once: the chunker consumes it AND the stats face
-        # counts it — without this, counting survivors re-runs the
-        # dedup probe, and counting chunks instead undercounts
-        # zero-chunk survivors (empty/whitespace-only docs)
-        survivors = survivors.transform(materialize)
-        chunks = _chunk_with_ids(survivors, chunk_tokens=chunk_tokens,
-                                 overlap=overlap).transform(materialize)
+        # materialize once: the chunker and the index appends consume
+        # it; its checkpoint job also fires the survivors observation
+        # (counting chunks instead would undercount zero-chunk
+        # survivors — empty/whitespace-only docs)
+        survivors = obs.rows(survivors, "survivors").transform(materialize)
+        chunks = obs.rows(_chunk_with_ids(survivors,
+                                          chunk_tokens=chunk_tokens,
+                                          overlap=overlap),
+                          "chunks").transform(materialize)
         # 1. emit FIRST (overwritten per-batch dir: replay rewrites)
         (chunks.write.mode("overwrite")
          .parquet(f"{chunks_path}/batch_id={batch_id}"))
@@ -194,11 +202,7 @@ def start_hybrid_ingest_stream(stream_docs: DataFrame, *, lsh_path: str,
             compact_bm25_index(spark, bm25_path)
             compact_index(spark, ivf_path)
         if stats is not None:
-            # both counts read CHECKPOINTED frames — no recompute
-            stats.append({"batch_id": batch_id,
-                          "docs_in": batch.count(),
-                          "survivors": survivors.count(),
-                          "chunks": chunks.count(),
+            stats.append({"batch_id": batch_id, **obs.get(),
                           "wall_s": round(_time.time() - t0, 3)})
 
     return (stream_docs.writeStream

@@ -47,6 +47,7 @@ from myhadoop_spark.operators.line_dedup import (
     dedup_against,
     line_occurrences,
 )
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.streaming.versioned_state import VersionedState
 
 _state = partial(VersionedState, prefix="seen_v", name="line-dedup state")
@@ -64,7 +65,8 @@ def start_line_dedup_stream(doc_stream: DataFrame, *, path: str,
     under ``{path}/clean/batch_id=N``. ``lines_col_name`` names an
     array<string> column the caller derived on the stream
     (split_lines / word_lines). Pass ``stats`` (a list) to receive one
-    {batch, docs_in, docs_kept, seen} dict per absorbed batch.
+    {batch, docs_in, docs_kept, seen} dict per absorbed batch, observed
+    on the batch's own clean/ and seen_v writes (no extra job).
 
     Assumes each document arrives in exactly ONE batch (the ingest
     contract everywhere in this package)."""
@@ -76,26 +78,28 @@ def start_line_dedup_stream(doc_stream: DataFrame, *, path: str,
                    reason="change the dedup key")
 
     def _step(batch: DataFrame, v):
+        obs = Observed(stats is not None)
         clean = dedup_against(batch, v.prev,
                               lines_col=lines_col_name, id_col=id_col,
                               normalize=normalize,
                               min_kept_lines=min_kept_lines)
         clean_path = f"{path}/clean/batch_id={v.batch_id}"
-        clean.write.mode("overwrite").parquet(clean_path)
+        obs.rows(clean, "docs_kept").write.mode("overwrite").parquet(
+            clean_path)
+        # dedup_against reads the batch twice (occurrences, join back);
+        # the state branch reads it once, so docs_in is observed here
         batch_keys = (line_occurrences(
-            batch.withColumn("_lines", F.col(lines_col_name)),
+            obs.rows(batch, "docs_in")
+            .withColumn("_lines", F.col(lines_col_name)),
             id_col=id_col, normalize=normalize)
             .select(F.col("_key").alias("key")).distinct())
-        v.write(v.prev.unionByName(batch_keys).distinct()
-                if v.prev is not None else batch_keys)
+        v.write(obs.rows(v.prev.unionByName(batch_keys).distinct()
+                         if v.prev is not None else batch_keys, "seen"))
         yield {}
         if stats is not None:
-            stats.append({
-                "batch": v.batch_id,
-                "docs_in": batch.count(),
-                "docs_kept": v.spark.read.parquet(clean_path).count(),
-                "seen": v.reread().count(),
-            })
+            m = obs.get()
+            stats.append({"batch": v.batch_id, "docs_in": m["docs_in"],
+                          "docs_kept": m["docs_kept"], "seen": m["seen"]})
 
     return state.start(doc_stream, checkpoint, _step)
 

@@ -44,6 +44,7 @@ from myhadoop_spark.operators.simhash_join import (
     hamming_pairs,
     hamming_probe,
 )
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.streaming.versioned_state import VersionedState
 
 _state = partial(VersionedState, prefix="seen_v",
@@ -59,7 +60,8 @@ def start_simhash_dedup_stream(doc_stream: DataFrame, *, path: str,
     """Suppress near-duplicates at ingest (availableNow-friendly);
     the stream carries (doc_id, simhash, ...). Survivors land under
     ``{path}/clean/batch_id=N``. Pass ``stats`` (a list) to receive
-    one {batch, docs_in, docs_kept, seen} dict per batch."""
+    one {batch, docs_in, docs_kept, seen} dict per batch, observed on
+    the batch's own clean/ and seen_v writes (no extra job)."""
     if not 1 <= int(max_hamming) < int(bits):
         raise ValueError(f"max_hamming must be in [1, bits), got "
                          f"{max_hamming}")
@@ -69,6 +71,7 @@ def start_simhash_dedup_stream(doc_stream: DataFrame, *, path: str,
                    reason="change what counts as a near-duplicate")
 
     def _step(batch: DataFrame, v):
+        obs = Observed(stats is not None)
         # 1. within-batch: cluster and keep each cluster's min id
         pairs = hamming_pairs(batch, bits=bits,
                               max_hamming=max_hamming, id_col=id_col,
@@ -76,7 +79,8 @@ def start_simhash_dedup_stream(doc_stream: DataFrame, *, path: str,
         edges = pairs.select(F.col("id_a").alias("src"),
                              F.col("id_b").alias("dst"))
         if edges.isEmpty():
-            reps = batch
+            def within(docs):
+                return docs
         else:
             cc = connected_components(edges)
             losers = (cc.groupBy("component")
@@ -84,31 +88,29 @@ def start_simhash_dedup_stream(doc_stream: DataFrame, *, path: str,
                       .join(cc, "component")
                       .filter(F.col("id") != F.col("_keep"))
                       .select(F.col("id").alias(id_col)))
-            reps = batch.join(losers, id_col, "left_anti")
+
+            def within(docs):
+                return docs.join(losers, id_col, "left_anti")
+        # docs_in rides the survivors' own left side — the only place
+        # the batch is read exactly once (the probe reads it again)
+        survivors = within(obs.rows(batch, "docs_in"))
         # 2. cross-corpus probe against accepted fingerprints
         seen = v.prev
         if seen is not None:
-            hits = hamming_probe(reps, seen, bits=bits,
+            hits = hamming_probe(within(batch), seen, bits=bits,
                                  max_hamming=max_hamming,
                                  id_col=id_col, sim_col=sim_col)
-            survivors = reps.join(hits, id_col, "left_anti")
-        else:
-            survivors = reps
+            survivors = survivors.join(hits, id_col, "left_anti")
         clean_path = f"{path}/clean/batch_id={v.batch_id}"
-        survivors.write.mode("overwrite").parquet(clean_path)
-        kept = v.spark.read.parquet(clean_path)
-        new_seen = kept.select(id_col, sim_col)
+        obs.rows(survivors, "docs_kept").write.mode("overwrite").parquet(
+            clean_path)
+        new_seen = v.spark.read.parquet(clean_path).select(id_col, sim_col)
         if seen is not None:
             new_seen = seen.select(id_col, sim_col).unionByName(new_seen)
-        v.write(new_seen)
+        v.write(obs.rows(new_seen, "seen"))
         yield {}
         if stats is not None:
-            stats.append({
-                "batch": v.batch_id,
-                "docs_in": batch.count(),
-                "docs_kept": kept.count(),
-                "seen": v.reread().count(),
-            })
+            stats.append({"batch": v.batch_id, **obs.get()})
 
     return state.start(doc_stream, checkpoint, _step)
 

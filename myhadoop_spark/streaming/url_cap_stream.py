@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.operators.url_dedup import domain_cap
+from myhadoop_spark.streaming.observed import Observed
 from myhadoop_spark.streaming.versioned_state import VersionedState
 
 _state = partial(VersionedState, prefix="counts_v",
@@ -53,11 +54,13 @@ def start_domain_cap_stream(doc_stream: DataFrame, *, path: str,
     """Maintain per-domain kept-budgets per micro-batch
     (availableNow-friendly); kept documents land under
     ``{path}/kept/batch_id=N``. Pass ``stats`` (a list) to receive
-    one {batch, kept, domains} dict per absorbed batch."""
+    one {batch, kept, domains} dict per absorbed batch, observed on
+    the batch's own counts_v write (no extra job)."""
     state = _state(path, params={"cap": cap},
                    reason="change already-spent budgets")
 
     def _step(batch: DataFrame, v):
+        obs = Observed(stats is not None)
         prev = v.prev
         if prev is not None:
             remaining = prev.select(
@@ -74,17 +77,16 @@ def start_domain_cap_stream(doc_stream: DataFrame, *, path: str,
         batch_counts = (v.spark.read.parquet(kept_path)
                         .groupBy(domain_col)
                         .agg(F.count(F.lit(1)).alias("kept")))
-        v.write(batch_counts if prev is None
-                else prev.unionByName(batch_counts)
-                .groupBy(domain_col)
-                .agg(F.sum("kept").cast("long").alias("kept")))
+        v.write(obs(batch_counts if prev is None
+                    else prev.unionByName(batch_counts)
+                    .groupBy(domain_col)
+                    .agg(F.sum("kept").cast("long").alias("kept")),
+                    kept=F.sum("kept"), domains=F.count(F.lit(1))))
         yield {}
         if stats is not None:
-            agg = v.reread().agg(
-                F.sum("kept").alias("k"),
-                F.count(F.lit(1)).alias("d")).collect()[0]
-            stats.append({"batch": v.batch_id, "kept": int(agg["k"] or 0),
-                          "domains": int(agg["d"])})
+            m = obs.get()
+            stats.append({"batch": v.batch_id, "kept": int(m["kept"] or 0),
+                          "domains": m["domains"]})
 
     return state.start(doc_stream, checkpoint, _step)
 

@@ -21,8 +21,10 @@ A step is a generator ``step(batch, v)``: it derives v_N from
 writes its outputs (overwrite per batch id, never append) and the new
 version through ``v.write``, then yields its extra meta fields. The
 yield is the commit point; code after it runs once the batch is
-committed (stats). A step that returns before yielding absorbs
-nothing.
+committed and only reads the stats the writes observed
+(streaming/observed.py) — it issues no Spark job. A step that returns
+before yielding absorbs nothing. A replayed batch that the protocol
+skips runs no step, so it reports no stats.
 
 Crash/replay: v_N and the outputs are pure functions of (v_{N-1},
 batch_N), and nothing reads version N until meta.json names it. A
@@ -68,7 +70,7 @@ def read_meta(spark: SparkSession, path: str) -> dict | None:
 class Version:
     """Batch N's view of the state: ``prev`` is v_{N-1} (None before
     the first commit), ``meta`` its commit record; ``write`` persists
-    v_N and ``reread`` reads it back (once per batch)."""
+    v_N and ``reread`` reads it back."""
 
     def __init__(self, state: VersionedState, spark: SparkSession,
                  batch_id: int, meta: dict | None):
@@ -79,7 +81,6 @@ class Version:
                      else None)
         self._path = f"{state.path}/{state.prefix}{batch_id}"
         self._coalesce = state.coalesce
-        self._back: DataFrame | None = None
 
     def write(self, df: DataFrame) -> None:
         if self._coalesce:
@@ -87,9 +88,7 @@ class Version:
         df.write.mode("overwrite").parquet(self._path)
 
     def reread(self) -> DataFrame:
-        if self._back is None:
-            self._back = self.spark.read.parquet(self._path)
-        return self._back
+        return self.spark.read.parquet(self._path)
 
 
 Step = Callable[[DataFrame, Version], Iterator[dict]]

@@ -99,14 +99,13 @@ def main() -> None:
     # (~50-100 ms × 32), which would otherwise inflate the 1× rows only
     warm = _hashed_token_sets(spark, "", docs=synthetic_docs(spark, 1_000),
                               wide=True)
-    minhash_pairs(spark, warm.localCheckpoint()).count()
+    minhash_pairs(spark, warm).count()
 
     for n in counts:
         docs = synthetic_docs(spark, n, zipf)
 
         def _minhash():
-            sets = _hashed_token_sets(spark, "", docs=docs,
-                                      wide=True).localCheckpoint()
+            sets = _hashed_token_sets(spark, "", docs=docs, wide=True)
             pairs = minhash_pairs(spark, sets).localCheckpoint()
             return pairs, pairs.count()
 

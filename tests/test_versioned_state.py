@@ -10,13 +10,15 @@ Boundaries, in commit order:
     mid_prune  inside the sweep, before its first delete
 
 line_dedup (the benchmarked face) runs all four; every other face
-runs the after-version-write case."""
+runs the after-version-write case. line_dedup's stats list is also
+pinned across a crash: the replayed batch reports once, a skipped
+replay reports nothing."""
 
 from __future__ import annotations
 
 import json
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from pathlib import Path
 from typing import Callable
 
@@ -229,3 +231,37 @@ def test_restart_after_crash_equals_uninterrupted(spark, runs, tmp_path,
         assert left == [f"{prefix}{i}" for i in range(at + 1)]
     _run(spark, face, src, path, ckpt)
     assert _snapshot(spark, path) == want
+
+
+def _line_dedup_into(stats: list) -> Face:
+    return replace(FACES["line_dedup"], start=lambda s, p, c:
+                   start_line_dedup_stream(
+                       s.withColumn("_l", split_lines("text", r"\n")),
+                       path=p, checkpoint=c, lines_col_name="_l",
+                       stats=stats))
+
+
+@pytest.mark.parametrize("boundary", ["version", "meta"])
+def test_stats_across_crash_replay(spark, runs, tmp_path, boundary):
+    """Stats are observed on the writes of the step that commits: a
+    batch replayed after a crash before its meta commit reports once,
+    exactly as uninterrupted; a batch whose replay the protocol skips
+    (crash after the commit) reports nothing."""
+    src, _ = runs("line_dedup")
+    want: list = []
+    _run(spark, _line_dedup_into(want), src, str(tmp_path / "ref"),
+         str(tmp_path / "ref_ck"))
+    at = FACES["line_dedup"].crash_batch
+    path, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
+    before: list = []
+    with pytest.MonkeyPatch.context() as mp:
+        _inject(mp, boundary, at)
+        with pytest.raises(Exception, match="injected crash"):
+            _run(spark, _line_dedup_into(before), src, path, ckpt)
+    after: list = []
+    _run(spark, _line_dedup_into(after), src, path, ckpt)
+    assert [s["batch"] for s in want] == list(range(len(FACES[
+        "line_dedup"].batches)))
+    assert before == want[:at]
+    assert after == (want[at:] if boundary == "version"
+                     else want[at + 1:])
