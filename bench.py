@@ -1,5 +1,5 @@
 """Benchmark harness — the engine analog of the reference's
-run_client_times.py (/root/reference/run_client_times.py:4-17) and
+run_client_times.py (a fixed 5 reps per configuration) and
 export_record.py, re-expressed for the declared query set.
 
 Runs every registered query at $SPARK_GRAFT_SF_DIR (default
@@ -7,34 +7,13 @@ Runs every registered query at $SPARK_GRAFT_SF_DIR (default
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Methodology (r2+): $SPARK_GRAFT_BENCH_REPS warm repetitions per query
-(default 3) with the per-query MEDIAN reported — this machine's
-run-to-run variance is ±2× (BENCH_NOTES.md), so single-rep deltas are
-noise. r6: queries whose 3-rep median lands under
-$SPARK_GRAFT_BENCH_SUBSEC get 2 extra reps (median of 5) — the
-short-query class is where Spark's ~0.2-0.7 s per-job floor makes
-3-rep medians swing ±2-4× round-to-round (the r5 pivot_status
-adjudication); heavier queries amortize the floor and keep 3 reps.
-r8 widens the threshold from 1.0 to 2.0 s: r7's sort_full (~1.25 s
-median, zero code change) moved 1.79× round-over-round on 3 noisy
-reps — the ~1-2 s band still doesn't amortize warm-up (its rep
-sequences descend), so it gets the 5-rep median too. r9 triggers the
-widening on the MIN rep instead of the median: a warm-up descent like
-(2.85, 2.59, 0.93) — r9 range_join_hist — has its floor under the bar
-while its 3-rep median sits above it, the same artifact one band
-higher. r10 adds the heavy-class tripwire: a 3-rep median >1.5× away
-(either direction) from the last committed BENCH_r*.json median also
-widens to 5 reps and is named in bench_shuffle.json "drift_widened"
-for mandatory BENCH_NOTES adjudication — the hole through which
-dedup_minhash's 1.78× r/r drift shipped unadjudicated in r9. r11
-anchors each query to a PINNED level besides the r/r move — the min
-of its last-3-committed-round medians ("anchor_widened") — closing
-the sub-threshold ratchet that took dedup_clusters 3.92 → 7.18 s over
-five rounds with zero path diff; any ≥2 s query whose 3-rep max/min
-spread exceeds 1.5× is widened too ("spread_widened"); and the
-committed-round list comes from `git ls-files` with NUMERIC round
-parsing, so an uncommitted in-progress artifact can't make the
-tripwire compare a re-bench against itself (ADVICE r10).
+Statistic: every query runs $SPARK_GRAFT_BENCH_REPS warm repetitions
+(default 5) after one uncounted session warm-up, and the reported time
+is the plain median of those reps. No rep is added or dropped on the
+evidence of the reps themselves or of earlier runs' artifacts: the run
+reads only its own measurements. Five, as in the reference, because
+each query's first rep is its cold one and a median of three is pulled
+toward it (BENCH_NOTES.md, "Reading protocol").
 Per-query shuffle/spill/peak-memory telemetry is scraped from
 the Spark UI REST API (the observability the reference exposes through
 its per-phase timing messages, /root/reference/datanode.py:346-370) and
@@ -212,54 +191,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_UI", "1")  # enables REST metrics
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.removeprefix("sf")) if "sf" in Path(sf_dir).name else 0.0
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    subsec = float(os.environ.get("SPARK_GRAFT_BENCH_SUBSEC", "2.0"))
-    # r10 drift tripwire (VERDICT r9 #3): the min<2s widening never
-    # reaches heavy queries, so dedup_minhash shipped a 1.78× r/r
-    # median move on 3 noisy reps with zero path diff and no
-    # adjudication. Any query whose in-flight 3-rep median moves >1.5×
-    # in EITHER direction vs the last committed round's median is
-    # widened to the 5-rep median and named in bench_shuffle.json
-    # ("drift_widened") so BENCH_NOTES must adjudicate it.
-    #
-    # r11 closes the RATCHET the r/r-only rule leaves open (VERDICT r10
-    # #1: dedup_clusters crept 3.92 → 7.18 s over five rounds, every
-    # step under the strict >1.5× r/r bar): each query is ALSO anchored
-    # to a pinned level — the MIN of its medians over the last 3
-    # COMMITTED rounds — and a median >1.5× the anchor widens + is
-    # named ("anchor_widened") even when the r/r move is quiet.
-    # Committed rounds come from `git ls-files` parsed NUMERICALLY, so
-    # an uncommitted in-progress BENCH_rN.json can no longer make the
-    # tripwire compare a re-bench against itself, and r100 sorts after
-    # r11 (ADVICE r10, bench.py:206).
-    prior_meds: dict[str, float] = {}
-    anchor_meds: dict[str, float] = {}
-    try:
-        import re as _re
-        import subprocess as _sp
-        _ls = _sp.run(["git", "ls-files", "BENCH_r*.json"],
-                      capture_output=True, text=True, timeout=10,
-                      cwd=str(Path(__file__).resolve().parent))
-        _rounds = sorted(
-            (int(m.group(1)), p)
-            for p in _ls.stdout.split()
-            if (m := _re.search(r"BENCH_r(\d+)\.json$", p)))
-        _med_hist: list[dict[str, float]] = []
-        for _n, _p in _rounds[-3:]:
-            with open(_p) as _f:
-                _pj = json.load(_f)
-            # the driver's BENCH_r{N}.json wraps bench stdout under
-            # "parsed"; a raw bench line has "queries" at top level
-            _med_hist.append(_pj.get("queries")
-                             or _pj.get("parsed", {}).get("queries") or {})
-        if _med_hist:
-            prior_meds = _med_hist[-1]
-            for _m in _med_hist:
-                for _q, _t in _m.items():
-                    if _t and (_q not in anchor_meds or _t < anchor_meds[_q]):
-                        anchor_meds[_q] = _t
-    except Exception as exc:  # noqa: BLE001 — tripwire, never a blocker
-        print(f"bench: prior-median load failed: {exc}", file=sys.stderr)
+    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
     spark = get_spark("bench")
     # default: the 50 gated queries (the driver/baseline contract).
     # SPARK_GRAFT_BENCH_ONLY=a,b,c benches just those names, drawing
@@ -304,19 +236,13 @@ def main() -> None:
     cores = spark.sparkContext.defaultParallelism
     errors: dict[str, str] = {}
     phases: dict[str, dict[str, float]] = {}
-    drift_widened: dict[str, float] = {}  # name -> prior-round median
-    anchor_widened: dict[str, float] = {}  # name -> pinned anchor level
-    spread_widened: dict[str, float] = {}  # name -> 3-rep max/min spread
-    trimmed: dict[str, int] = {}  # name -> reps dropped by the 2×-floor trim
     for name, fn in qs.items():
         # per-query isolation: one broken query costs one row, never the
         # whole artifact (round 2 lost its entire bench run to a single
         # AnalysisException aborting this loop)
         rep_times = []
         try:
-            n_reps = reps
-            i = 0
-            while i < n_reps:
+            for i in range(reps):
                 rep_times.append(round(run_query(spark, fn, sf_dir), 4))
                 if i == 0:
                     # telemetry + phase slice from the first rep only
@@ -329,40 +255,6 @@ def main() -> None:
                 else:
                     meter.delta()
                     meter.new_stages()
-                i += 1
-                # sub-second medians are job-floor-bound and noisy:
-                # widen to 5 reps for a stable median (r5 item 7).
-                # r9: trigger on MIN, not median — a warm-up descent
-                # like (2.85, 2.59, 0.93) has its floor under the bar
-                # but its 3-rep median above it, exactly the r7
-                # sort_full artifact re-materializing one band higher
-                # (r9 range_join_hist); min < bar ⇒ floor class.
-                if i == reps and n_reps == reps:
-                    med3 = statistics.median(rep_times)
-                    prior = prior_meds.get(name)
-                    drifted = (prior is not None and prior > 0
-                               and (med3 > prior * 1.5
-                                    or med3 < prior / 1.5))
-                    # r11 pinned-anchor ratchet guard (upward only —
-                    # beating the anchor is improvement, not drift)
-                    anchor = anchor_meds.get(name)
-                    ratcheted = (anchor is not None and anchor > 0
-                                 and med3 > anchor * 1.5)
-                    # r11 spread guard: a >2 s query whose 3 reps span
-                    # >1.5× max/min is too noisy for a 3-rep median
-                    # (the r10 dedup_clusters capture: 5.81/7.18/9.46)
-                    spread = (max(rep_times) / min(rep_times)
-                              if min(rep_times) > 0 else float("inf"))
-                    noisy = med3 >= subsec and spread > 1.5
-                    if (min(rep_times) < subsec or drifted
-                            or ratcheted or noisy):
-                        n_reps = reps + 2
-                        if drifted:
-                            drift_widened[name] = round(prior, 4)
-                        if ratcheted:
-                            anchor_widened[name] = round(anchor, 4)
-                        if noisy:
-                            spread_widened[name] = round(spread, 4)
         except Exception as exc:  # noqa: BLE001 — record and continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"bench: query {name!r} failed: {errors[name]}",
@@ -371,21 +263,7 @@ def main() -> None:
             meter.new_stages()
             continue
         all_reps[name] = rep_times
-        # r13 (VERDICT r12 #1): on WIDENED queries the all-rep median
-        # can commit a warm-up/contention descent as the level — the
-        # r12 terminal capture's simsearch_ivf drew 44.3/45.3/28.5/
-        # 7.7/4.7 and committed 28.5 while its own last reps sat at
-        # the warm band. Widening exists to find the level, so the
-        # statistic must be level-shaped: drop reps > 2× the rep
-        # minimum (the floor class) before taking the median. A
-        # non-widened query keeps the plain median.
-        if len(rep_times) > reps and min(rep_times) > 0:
-            floor_reps = [t for t in rep_times
-                          if t <= 2.0 * min(rep_times)]
-            trimmed[name] = len(rep_times) - len(floor_reps)
-            times[name] = round(statistics.median(floor_reps), 4)
-        else:
-            times[name] = round(statistics.median(rep_times), 4)
+        times[name] = round(statistics.median(rep_times), 4)
 
     total = round(sum(times.values()), 4)
 
@@ -397,11 +275,8 @@ def main() -> None:
     # telemetry detail to a side file (stdout stays the one-line
     # driver contract, plus a compact telemetry map)
     with open(f"bench_shuffle{suffix}.json", "w") as f:
-        json.dump({"sf": sf, "reps": all_reps, "queries": telemetry,
-                   "drift_widened": drift_widened,
-                   "anchor_widened": anchor_widened,
-                   "spread_widened": spread_widened,
-                   "trimmed": trimmed}, f, indent=1)
+        json.dump({"sf": sf, "reps": all_reps, "queries": telemetry},
+                  f, indent=1)
 
     # TSV record mirroring the reference's export shape
     # (/root/reference/export_record.py:8-56: one row per run — config

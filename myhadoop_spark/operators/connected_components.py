@@ -7,7 +7,13 @@ module ships two DataFrame algorithms with identical output:
 
   * ``connected_components`` — min-label propagation with pointer
     jumping: label(v) ← min over neighbors, plus adopting the current
-    label-node's label each round (O(log diameter) rounds). Per-round
+    label-node's label each round. Rounds are NOT bounded by
+    log(diameter): a shortcut only jumps along chains of falling ids,
+    so an id-permuted path needs rounds that grow with its length
+    (4-core host, local[4], ``max_iterations=300``: 4/6/8/10 rounds
+    on id-ordered 16/64/256/1024-node chains; 15–48 on permuted
+    64-node chains and 56–80 on permuted 256-node chains, so the
+    default budget of 20 raises on some 64-node chains). Per-round
     shuffle is ∝ |E| every round.
   * ``connected_components_contraction`` — alternating
     large-star / small-star edge contraction (Kiveris et al. 2014,
@@ -16,8 +22,9 @@ module ships two DataFrame algorithms with identical output:
     CONTRACTS toward a star forest — per-round shuffle bytes SHRINK as
     rounds proceed, the property that matters when |E| is the 100 TB
     term (label propagation re-shuffles the full edge set every
-    round). Converges in O(log² n) rounds; the per-round edge curve is
-    recorded by scripts/cc_scaling.py.
+    round). Converges in O(log² n) rounds whatever the node-id order
+    (5/6/7/8 rounds on the same permuted 32/64/128/256-node chains);
+    the per-round edge curve is recorded by scripts/cc_scaling.py.
 
 Both cut lineage every round (localCheckpoint) so the plan doesn't
 grow exponentially — the standard discipline for iterative DataFrame
@@ -92,11 +99,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
             .agg(F.min("component").alias("component"))
         )
         # pointer jumping (shortcutting): also adopt the label of the
-        # current label-node. Each round then roughly squares the
-        # propagation reach, so convergence is O(log diameter) — long
-        # similarity chains (which near-dup graphs DO produce; observed
-        # diameter > 20 on the sf0.1 embedding graph) converge in a few
-        # rounds instead of diameter rounds.
+        # current label-node. This skips ahead only where labels fall
+        # along the path, so it speeds up id-ordered chains but gives
+        # no diameter-independent bound: on an id-permuted chain the
+        # round count still grows with its length (module docstring).
         lbl2 = neighbor_min.select(F.col("id").alias("cid"),
                                    F.col("component").alias("ccomp"))
         shortcut = (

