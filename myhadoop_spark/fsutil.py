@@ -5,9 +5,8 @@ URI, never a Spark job for a byte-sized metadata read.
 Everything here goes through the JVM Hadoop FileSystem bound to the
 session's hadoopConfiguration, so the same code path serves file://,
 hdfs://, s3a://. Used by the table-maintenance operators
-(operators/continuous_agg.py watermark/retention/sweep,
-operators/ivf_index.py compaction) for bounded top-level partition
-listings and single-file metadata reads/writes.
+(e.g. operators/ivf_index.py compaction) for bounded top-level
+partition listings and single-file metadata reads/writes.
 """
 
 from __future__ import annotations

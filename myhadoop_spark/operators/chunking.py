@@ -29,8 +29,7 @@ chunks 2..k dropped reproduces the document's token stream exactly
 differential of the full chunk table).
 
 Reference analog: none — §2.3 extension surface (SURVEY.md §2.3),
-feeding simsearch/semdedup the way packing (operators/packing.py)
-feeds training.
+feeding similarity search and chunk dedup.
 """
 
 from __future__ import annotations

@@ -199,7 +199,7 @@ def connected_components_contraction(edges: DataFrame, src: str = "src",
         # overflow (edge sets are distinct, so nothing self-cancels)
         row = df.agg(F.count(F.lit(1)).alias("n"),
                      F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0))
-                     .alias("h")).collect()[0]
+                     .alias("h")).collect()[0]  # control: stop test
         return row.n, row.h
 
     prev = _sig(e)
@@ -222,11 +222,12 @@ def connected_components_contraction(edges: DataFrame, src: str = "src",
         raise RuntimeError(
             f"contraction did not converge within {max_iterations} rounds")
     # star-forest verification (also catches a signature-collision stop)
+    # control: both counts must be 0 for the result to be returned
     multi = (e.groupBy("a").agg(F.count_distinct("b").alias("k"))
-             .filter(F.col("k") > 1).count())
+             .filter(F.col("k") > 1).count())  # nodes with two roots
     root_as_child = (e.select(F.col("b").alias("x")).distinct()
                      .join(e.select(F.col("a").alias("x")).distinct(),
-                           "x").count())
+                           "x").count())  # roots that are also children
     if multi or root_as_child:
         raise RuntimeError(
             "contraction stopped on a non-star edge set "

@@ -130,14 +130,14 @@ def check_constraints(df: DataFrame,
             # the row a violation (cannot attest uniqueness of an
             # unknown key) — the COUNT(DISTINCT) convention
             distinct = (df.select(*payload).na.drop("any")
-                        .distinct().count())
+                        .distinct().count())  # output: violation count
             results[name] = n_rows - distinct
         elif kind == "fk":
             col, ref, ref_col = payload
             missing = (df.select(F.col(col).alias("_k"))
                        .join(ref.select(F.col(ref_col).alias("_k"))
                              .distinct(), "_k", "left_anti")
-                       .count())
+                       .count())  # output: the fk violation count
             results[name] = missing
     rows = [(name, results[name], n_rows, results[name] == 0)
             for name, _, _ in constraints]

@@ -228,6 +228,7 @@ def save_dsir_model(model: dict, path: str) -> None:
             epoch = 0  # corrupt meta: nothing consistent to preserve
     model["ratios"].write.mode("overwrite").parquet(
         f"{path}/ratios-e{epoch}")
+    # output: the one-row totals go into meta.json beside the ratios
     t_total, r_total = model["totals"].collect()[0]
     write_small_file(spark, f"{path}/meta.json",
                      json.dumps({"buckets": model["buckets"],

@@ -150,7 +150,7 @@ def edit_distance_candidates(df: DataFrame, id_col: str, str_col: str, *,
         F.count(F.when((F.col("len") >= d + 1)
                        & (F.col("len") <= mid_top), 1)).alias("n_mid"),
         F.count(F.when(F.col("len") <= d, 1)).alias("n_tiny"),
-    ).collect()[0]
+    ).collect()[0]  # control: which tier joins get built
     tiers: list[DataFrame] = []
 
     # --- long strings: Ed-Join prefix-gram candidates -----------------

@@ -1,9 +1,8 @@
-"""Time-bucket gap-filling — the dashboard-facing companion of the
-continuous aggregate (operators/continuous_agg.py): a bucketed
-aggregate series has holes wherever a (key, bucket) saw no events, and
-charts/monitors need a DENSE series with the holes made explicit and
-optionally filled (the TimescaleDB ``time_bucket_gapfill`` + ``locf``
-/ ``interpolate`` pattern).
+"""Time-bucket gap-filling for dashboards: a bucketed aggregate series
+has holes wherever a (key, bucket) saw no events, and charts/monitors
+need a DENSE series with the holes made explicit and optionally
+filled (the TimescaleDB ``time_bucket_gapfill`` + ``locf`` /
+``interpolate`` pattern).
 
 Semantics per key, over the key's own [min bucket, max bucket] span:
 
@@ -40,8 +39,8 @@ def time_bucket_gapfill(aggs: DataFrame, *, bucket: str = "1 hour",
                         keys: list[str], bucket_col: str = "bucket",
                         value_col: str = "value") -> DataFrame:
     """(keys…, bucket, value, locf, interp): the dense per-key series.
-    ``aggs`` holds one row per observed (keys…, bucket) — e.g. a
-    query_rollup face or any time-bucketed aggregate."""
+    ``aggs`` holds one row per observed (keys…, bucket) — any
+    time-bucketed aggregate."""
     grid = (aggs.groupBy(*keys)
             .agg(F.min(bucket_col).alias("_lo"),
                  F.max(bucket_col).alias("_hi"))

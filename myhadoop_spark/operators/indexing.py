@@ -32,7 +32,7 @@ row_number rank, which is what the DuckDB differential
 (queries/relational7.py::global_index) pins bitwise.
 
 Reference analog: none — §2.3 extension surface (training-data
-pipeline family, next to operators/packing.py / export.py).
+pipeline family).
 """
 
 from __future__ import annotations
@@ -71,7 +71,7 @@ def assign_global_index(df: DataFrame, order_cols: list[str],
                   .agg(F.count(F.lit(1)).alias("_n"),
                        F.count_distinct(*[F.col(c) for c in order_cols])
                        .alias("_d"))
-                  .collect())
+                  .collect())  # control: dup guard + per-partition offsets
     dups = [r for r in part_stats if r["_n"] != r["_d"]]
     if dups:
         raise ValueError(

@@ -100,11 +100,10 @@ def suggest_width(intervals: DataFrame, *, lo_col: str = "lo",
     the power of two nearest the median length (powers of two keep
     `div` cheap and match the sweep grid).
 
-    Pure driver arithmetic off ONE aggregate row (the lsh_tuning
-    discipline: stats in, configuration out — no corpus data
-    collected). percentile_approx is exact when distinct lengths fit
-    its default accuracy budget and is only a TUNING input here —
-    the join is exact at any width."""
+    Pure driver arithmetic off ONE aggregate row (stats in,
+    configuration out — no corpus data collected). percentile_approx
+    is exact when distinct lengths fit its default accuracy budget and
+    is only a TUNING input here — the join is exact at any width."""
     row = intervals.select(
         F.percentile_approx(
             F.col(hi_col).cast("long") - F.col(lo_col).cast("long"),

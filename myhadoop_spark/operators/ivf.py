@@ -25,23 +25,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _bounded_sample(emb: DataFrame, vec_col: str = "v",
-                    id_col: str = "vec_id",
-                    sample_cap: int = 4096) -> np.ndarray:
-    """The one sanctioned driver-side collect: a bounded, deterministic
-    training sample (the `sample_cap` smallest-id vectors) — shared by
-    IVF centroid training and PQ codebook training."""
-    return np.array(
+def train_centroids(emb: DataFrame, vec_col: str = "v", id_col: str = "vec_id",
+                    k: int = 16, iterations: int = 5,
+                    sample_cap: int = 4096) -> list[list[float]]:
+    """Deterministic sampled k-means (Lloyd): sample = the `sample_cap`
+    smallest ids (bounded, reproducible), init = first k sample vectors,
+    empty clusters keep their previous centroid."""
+    sample = np.array(
         [r[0] for r in
          emb.select(vec_col).orderBy(F.col(id_col).asc())
-         .limit(sample_cap).collect()],
+         .limit(sample_cap).collect()],  # output: the bounded sample
         dtype=np.float64)
-
-
-def _lloyd(sample: np.ndarray, k: int, iterations: int) -> list[list[float]]:
-    """Deterministic Lloyd k-means on an in-memory sample: init = first
-    k vectors, empty clusters keep their previous centroid. Shared by
-    IVF (full-dim) and PQ (per-sub-space) training."""
     cents = sample[:k].copy()
     for _ in range(iterations):
         d2 = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
@@ -51,16 +45,6 @@ def _lloyd(sample: np.ndarray, k: int, iterations: int) -> list[list[float]]:
             if len(members):
                 cents[j] = members.mean(axis=0)
     return [[float(x) for x in c] for c in cents]
-
-
-def train_centroids(emb: DataFrame, vec_col: str = "v", id_col: str = "vec_id",
-                    k: int = 16, iterations: int = 5,
-                    sample_cap: int = 4096) -> list[list[float]]:
-    """Deterministic sampled k-means (Lloyd): sample = the `sample_cap`
-    smallest ids (bounded, reproducible), init = first k sample vectors,
-    empty clusters keep their previous centroid."""
-    return _lloyd(_bounded_sample(emb, vec_col, id_col, sample_cap),
-                  k, iterations)
 
 
 def _centroid_matrix(cents: list[list[float]]) -> Column:

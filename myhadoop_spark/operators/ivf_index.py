@@ -13,9 +13,7 @@ buckets per query, and because bucket is a PARTITION column the search
 filters with ``bucket IN (probed...)`` — static partition pruning at
 the file level, so a K=1024-list index reads ~n_probe/K of the corpus
 bytes per query batch (the scan's PartitionFilters line is asserted in
-tests/test_ivf_index.py). This is file-skipping applied to ANN, the
-same lever as the Z-order layout (operators/layout.py) applied to the
-similarity-search surface.
+tests/test_ivf_index.py). This is file-skipping applied to ANN.
 
 Incremental maintenance: ``append_to_index`` assigns NEW vectors under
 the STORED centroids and appends their partitions — no retrain, no
@@ -98,7 +96,7 @@ def _assign(emb: DataFrame, cents: list[list[float]], vec_col: str,
 
 def load_centroids(spark: SparkSession, path: str) -> list[list[float]]:
     rows = (spark.read.parquet(f"{path}/centroids")
-            .orderBy("bucket").collect())
+            .orderBy("bucket").collect())  # output: K centroid rows
     return [list(r.centroid) for r in rows]
 
 
@@ -144,6 +142,7 @@ def search_index(spark: SparkSession, path: str, queries: DataFrame, *,
     cents = load_centroids(spark, path)
     probed = probe_buckets(queries, cents, n_probe=n_probe)
     buckets = sorted(r.bucket for r in
+                     # control: ≤ K probed bucket ids prune the scan
                      probed.select("bucket").distinct().collect())
     vectors = (spark.read.parquet(f"{path}/vectors")
                .filter(F.col("bucket").isin(buckets)))

@@ -91,6 +91,7 @@ def kcore(edges: DataFrame, k: int, *, src: str = "src",
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     sym = _sym(edges, src, dst).transform(materialize)
+    # control: the peel loop stops when the edge count stops changing
     sym, _, rounds = _peel(sym, sym.count(), k, max_iterations)
     if stats is not None:
         stats["iterations"] = rounds
@@ -114,6 +115,7 @@ def core_numbers(edges: DataFrame, *, src: str = "src",
     {"edges_per_k": [(k, surviving_edge_count), ...],
     "iterations_per_k": [(k, peel_rounds), ...]}."""
     sym = _sym(edges, src, dst).transform(materialize)
+    # control: the first peel round's baseline edge count
     n_edges = sym.count()
     labels = None
     for k in range(1, k_max + 1):

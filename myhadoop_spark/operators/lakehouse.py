@@ -101,6 +101,7 @@ def upsert_table(spark: SparkSession, path: str, source: DataFrame,
             .whenMatchedUpdateAll()
             .whenNotMatchedInsertAll()
             .execute())
+        # output: the committed table version (one history row)
         return int(tgt.history(1).collect()[0]["version"])
 
     root = Path(path)

@@ -117,6 +117,7 @@ def predict_lang(docs: DataFrame, weights: DataFrame, *,
     margin is 0 — maximally unconfident, exactly what a reject
     threshold should see."""
     langs = sorted(r["lang"] for r in
+                   # control: the trained languages fix the score columns
                    weights.select("lang").distinct().collect())
     if not langs:
         raise ValueError("predict_lang: empty weight table")

@@ -64,6 +64,7 @@ def train_bigram_lm(ref_docs: DataFrame, *, text_col: str = "text") -> dict:
         .alias("bg"))
     big = (pairs.select("bg.w1", "bg.w2")
            .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")))
+    # output: vocabulary size V is the add-one smoothing denominator
     v = uni.count()
     if v == 0:
         # fail loudly: with V=0 every smoothed probability divides by

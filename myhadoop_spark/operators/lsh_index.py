@@ -264,7 +264,7 @@ def refresh_hot_sigs(spark: SparkSession, path: str, *,
     # count the (tiny) staged table — counting the aggregate before
     # writing would re-run the full index scan twice
     n = spark.read.schema("band int, band_sig string").parquet(
-        staging).count()
+        staging).count()  # output: the stop-list size it returns
     fs, live = hadoop_fs(spark, f"{path}/hot")
     if fs.exists(live):
         fs.delete(live, True)
@@ -351,6 +351,7 @@ def probe_lsh_index(new_docs: DataFrame, path: str, *,
     # bounded driver-side collect: ≤ n_buckets distinct shard values —
     # the partition-pruning step (ivf_index probed-buckets discipline)
     buckets = sorted(r.sbucket for r in
+                     # control: the shard ids become the pruning filter
                      rows.select("sbucket").distinct().collect())
     hist = _read_sigs(spark, path, buckets)
     if exclude_append_id is not None:

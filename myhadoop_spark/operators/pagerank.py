@@ -65,6 +65,7 @@ def _ordered_scalar_sum(df: DataFrame, key: str, value) -> float:
         .agg(F.reduce(F.array_sort(F.collect_list("_v")), F.lit(0.0),
                       lambda acc, x: acc + x).alias("_s")))
     total = 0.0
+    # output: bounded bucket subtotals folded in a fixed order
     for row in sorted(per_bucket.collect(), key=lambda r: r["_b"]):
         total += row["_s"]
     return total
@@ -85,6 +86,7 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
     nodes = (e.select(F.col("src").alias("id"))
              .union(e.select(F.col("dst").alias("id")))
              .distinct().transform(materialize))
+    # output: N sets the teleport and dangling shares of every rank
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
@@ -110,7 +112,7 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
         else:
             dangling = (ranks.filter(F.col("deg") == 0)
                         .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                        .collect()[0][0])
+                        .collect()[0][0])  # output: dangling mass
         contrib = (e.join(ranks, e.src == ranks.id)
                    .select(F.col("dst"),
                            (F.col("rank") / F.col("deg")).alias("c")))
@@ -138,7 +140,7 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
                 new, "id", F.abs(F.col("rank") - F.col("prev")))
         else:
             l1 = (new.agg(F.sum(F.abs(F.col("rank") - F.col("prev"))))
-                  .collect()[0][0])
+                  .collect()[0][0])  # control: the l1 < tol stop test
         ranks = new.select("id", "deg", "rank")
         curve.append(float(l1))
         if l1 < tol:

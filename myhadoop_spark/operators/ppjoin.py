@@ -161,13 +161,14 @@ def rarest_gram_rarity(grams: DataFrame) -> float:
     every query (the r6 review's overhead finding). Returns 1.0 for an
     empty corpus so the selector degenerates to the cheap size-ratio
     path."""
+    # control: empty corpus short-cut and the sampling decision
     n_docs = grams.count()
     if n_docs == 0:
         return 1.0
     if n_docs >= SAMPLE_FLOOR:
         grams = grams.filter(
             F.pmod(F.xxhash64("doc_id"), F.lit(SAMPLE_MOD)) == 0)
-        n_docs = grams.count()
+        n_docs = grams.count()  # control: the sample's size
         if n_docs == 0:
             return 1.0
     ex = grams.select("doc_id", F.explode("grams").alias("gram"))

@@ -17,7 +17,7 @@ the measured r2 lesson). The projection is a zero-shuffle narrow
 expression.
 
 Reference analog: none — §2.3 extension surface (embedding family,
-beside operators/ivf.py and pq.py).
+beside operators/ivf.py).
 """
 
 from __future__ import annotations

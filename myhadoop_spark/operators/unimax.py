@@ -21,8 +21,8 @@ language does too, and the share stops changing:
           the last r = B' mod k' languages)
 
 so the allocation is ONE window pass over the per-language totals (k
-rows — a single-partition window, bounded by the number of languages,
-the lsh_tuning driver-arithmetic discipline) — no loop, no collect.
+rows — a single-partition window, bounded by the number of languages)
+— no loop, no collect.
 All arithmetic is INTEGER (token counts, floor division): the
 allocation is bitwise across engines and partitionings by
 construction, never within an ulp of a branch.
@@ -51,8 +51,7 @@ parity pin) — the operators/indexing.py bounded-offset idiom, with
 the offset table staying in-plan (broadcast join, no collect).
 
 Reference analog: none — §2.3 extension surface (data-mixing family,
-next to operators/mixture.py's acceptance sampling and
-operators/dsir.py's importance resampling).
+next to operators/dsir.py's importance resampling).
 """
 
 from __future__ import annotations

@@ -229,11 +229,10 @@ def chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate=False,
 )
 def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-level exact dedup — the pipeline2.curate_chunks dedup
-    stage as a standalone differential query: one representative (the
-    min (doc_id, chunk_id)) per distinct chunk text. Overlapping
-    windows make repeated boilerplate collapse at CHUNK granularity
-    even when whole documents differ. One hash shuffle on text; the
+    """Chunk-level exact dedup as a differential query: one
+    representative (the min (doc_id, chunk_id)) per distinct chunk
+    text. Overlapping windows make repeated boilerplate collapse at
+    CHUNK granularity even when whole documents differ. One hash shuffle on text; the
     chunk build itself is the shuffle-free narrow projection."""
     from pyspark.sql import Window
 

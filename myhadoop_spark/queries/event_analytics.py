@@ -143,8 +143,8 @@ def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly event counts per type, made DENSE over each type's own
     span with LOCF and linear-interpolation fills — the TimescaleDB
-    time_bucket_gapfill pattern (operators/gapfill.py), consuming the
-    already-aggregated series the continuous aggregate maintains.
+    time_bucket_gapfill pattern (operators/gapfill.py), consuming an
+    already-aggregated hourly series.
     COUNT (exact bigint) is the series so both engines aggregate
     bitwise; the interpolation arithmetic is mirrored expression for
     expression."""
@@ -202,7 +202,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # rollup anomaly detection — z-score of hourly event counts vs a
-# trailing window (the monitoring face of the continuous aggregate)
+# trailing window (the monitoring face of an hourly rollup)
 # ---------------------------------------------------------------------------
 
 _ANOM_W = 24          # trailing buckets (one day of hours)
@@ -245,10 +245,9 @@ def rollup_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket anomaly flags: hourly event counts whose z-score
     against the TRAILING {W}-bucket window (current bucket excluded —
     an anomaly must not suppress its own detection) exceeds the
-    threshold. The monitoring face of the continuous aggregate: at
-    scale this consumes rollup rows (operators/continuous_agg.py),
-    never raw events — here derived from events directly so the
-    oracle sees identical input.
+    threshold. The monitoring face of an hourly rollup: at scale this
+    consumes rollup rows, never raw events — here derived from events
+    directly so the oracle sees identical input.
 
     Bitwise discipline: mean and variance come from INTEGER window
     sums (Σc, Σc² over longs — exact, association-free), and the

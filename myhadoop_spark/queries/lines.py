@@ -283,10 +283,9 @@ def curate_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the budget aggregate, the band stats, and the banded select.
     Catalyst shares none of that across a lazy chain, so the raw plan
     re-ran the clean+dedup subtree ~6× (the r12 21.7 s scheduler-idle
-    floor). Both frontiers are localCheckpointed (the pipeline2
-    materialization discipline), and the clean→dedup handoff passes
-    the kept-lines ARRAY (clean_lines keep_lines=True) instead of
-    rebuilding and re-splitting clean_text. Output bitwise unchanged
+    floor). Both frontiers are localCheckpointed, and the clean→dedup
+    handoff passes the kept-lines ARRAY (clean_lines keep_lines=True)
+    instead of rebuilding and re-splitting clean_text. Output bitwise unchanged
     (gated; CORRECTNESS_r13)."""
     from myhadoop_spark.operators.budget_select import (budget_select,
                                                         fraction_budget)

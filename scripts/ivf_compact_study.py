@@ -49,8 +49,7 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     n_appends = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     spark = get_spark("ivf_compact_study")
-    from scripts.ivf_index_study import InputMeter
-    from scripts.semdedup_scaling import synthetic_vectors
+    from scripts.ivf_index_study import InputMeter, synthetic_vectors
 
     out = Path("ivf_compact_study.tsv")
     if not out.exists():

@@ -42,6 +42,7 @@ from myhadoop_spark.operators.ivf_index import build_index, search_index
 from myhadoop_spark.session import get_spark
 
 K, N_PROBE, TOP_K, N_Q = 64, 4, 5, 8
+DIM = 32
 
 
 class InputMeter:
@@ -67,11 +68,35 @@ class InputMeter:
         return d
 
 
+def synthetic_vectors(spark, n: int):
+    """Deterministic pseudo-random unit-ish vectors; every 10th vector
+    is its predecessor plus a tiny deterministic perturbation (planted
+    near-dup at cosine ~0.999)."""
+    base = spark.range(n).select(F.col("id").alias("vec_id"))
+    seed = F.when(F.col("vec_id") % 10 == 0,
+                  F.greatest(F.col("vec_id") - 1, F.lit(0))
+                  ).otherwise(F.col("vec_id"))
+    v = F.transform(
+        F.sequence(F.lit(0), F.lit(DIM - 1)),
+        lambda d: (F.pmod(F.hash(seed.cast("string"),
+                                 d.cast("string")), F.lit(1000)).cast("double")
+                   - F.lit(499.5)) / F.lit(500.0))
+    bump = F.transform(
+        F.sequence(F.lit(0), F.lit(DIM - 1)),
+        lambda d: F.when(F.col("vec_id") % 10 == 0,
+                         (F.pmod(F.hash(F.col("vec_id").cast("string"),
+                                        d.cast("string")), F.lit(100))
+                          .cast("double") - F.lit(49.5)) / F.lit(5000.0)
+                         ).otherwise(F.lit(0.0)))
+    return (base.select("vec_id", F.zip_with(v, bump,
+                                             lambda a, b: a + b).alias("v"))
+            .repartition(spark.sparkContext.defaultParallelism))
+
+
 def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_UI", "1")
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     spark = get_spark("ivf_index_study")
-    from scripts.semdedup_scaling import synthetic_vectors
 
     out = Path("ivf_index_study.tsv")
     if not out.exists():

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -144,19 +145,19 @@ def test_rrf_fusion_matches_model(spark):
 
 
 def test_hybrid_retrieval_over_curated_chunks(spark, tmp_path):
-    """The full RAG stack: curate_chunks → stub-embed → persistent IVF
-    index; a query is answered by BOTH lexical BM25 (over chunk text)
-    and the ANN probe, fused with RRF — and the fused top hit carries
-    document lineage back to the planted source."""
+    """The full RAG stack: chunk the fixture documents → stub-embed →
+    persistent IVF index; a query is answered by BOTH lexical BM25
+    (over chunk text) and the ANN probe, fused with RRF — and the fused
+    top hit carries document lineage back to its source window."""
+    from myhadoop_spark.catalog import load
+    from myhadoop_spark.operators.chunking import chunk_documents
     from myhadoop_spark.operators.ivf import _dot
     from myhadoop_spark.operators.ivf_index import build_index, search_index
-    from myhadoop_spark.queries.pipeline2 import curate_chunks
     from tests.conftest import SF_SMOKE
     from tests.test_chunk_index_pipeline import _stub_embedding
 
-    out = str(tmp_path / "chunks")
-    curate_chunks(spark, SF_SMOKE, out)
-    chunks = (spark.read.parquet(out)
+    docs = load(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    chunks = (chunk_documents(docs, chunk_tokens=32, overlap=8)
               .withColumn("vec_id",
                           F.col("doc_id") * 1000 + F.col("chunk_id"))
               .localCheckpoint())
@@ -181,10 +182,14 @@ def test_hybrid_retrieval_over_curated_chunks(spark, tmp_path):
     fused = rrf_fuse([lex, sem], id_col="vec_id", top_k=5).collect()
     assert len(fused) == 5
     winner = min(fused, key=lambda r: r.rn).vec_id
-    # lineage: the fused winner resolves back to a real curated chunk
+    # lineage: the fused winner resolves to one chunk whose text is the
+    # token window its (doc_id, start_token) names in the source doc
     row = chunks.filter(F.col("vec_id") == winner).collect()
     assert len(row) == 1
-    assert row[0].chunk_uid == f"{row[0].doc_id}:{row[0].chunk_id}"
+    src = docs.filter(F.col("doc_id") == row[0].doc_id).collect()
+    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", src[0].text) if t]
+    start = row[0].start_token - 1
+    assert row[0].text == " ".join(toks[start:start + row[0].n_tokens])
 
 
 def test_rankers_are_take_ordered(spark):

@@ -1,7 +1,6 @@
 """Time-bucket gap-filling (operators/gapfill.py): density invariant,
 LOCF/interpolation semantics on hand-built series (leading, interior,
-and trailing holes), and composition with the continuous aggregate's
-query face. The fixture-level DuckDB differential (gapfill_hourly)
+and trailing holes). The fixture-level DuckDB differential (gapfill_hourly)
 runs in tests/test_correctness.py."""
 
 from __future__ import annotations
@@ -92,30 +91,3 @@ def test_gapfill_matches_python_model(spark, points):
             pv, nv = float(points[p]), float(points[n])
             want = pv + ((nv - pv) * (float(h - p) / float(n - p)))
             assert interp == want, (h, interp, want)
-
-
-def test_composes_with_continuous_aggregate(spark, tmp_path):
-    """The intended pipeline: refresh a rollup, read it through
-    query_rollup, gapfill the n_events series — dense output whose
-    observed buckets carry exactly the rollup's counts."""
-    from myhadoop_spark.operators.continuous_agg import (
-        query_rollup,
-        refresh_rollup,
-    )
-
-    rows = [(T0 + dt.timedelta(minutes=m), m % 5, "click", float(m % 7))
-            for m in range(0, 300, 10) if (m // 60) != 2]  # hour 2 empty
-    events = spark.createDataFrame(
-        rows, "ts timestamp, user_id long, event_type string, value double")
-    path = str(tmp_path / "rollup")
-    refresh_rollup(events, path)
-
-    series = query_rollup(spark, events, path).select(
-        "event_type", "bucket", "n_events")
-    dense = time_bucket_gapfill(series, keys=["event_type"],
-                                value_col="n_events")
-    got = {(r.event_type, int((r.bucket - T0).total_seconds() // 3600)):
-           (r.value, r.locf) for r in dense.collect()}
-    assert set(got) == {("click", h) for h in range(5)}
-    assert got[("click", 2)] == (None, 6)  # hole filled from hour 1
-    assert got[("click", 0)] == (6, 6)

@@ -159,29 +159,3 @@ def test_decontam_matches_python_shingle_model(spark, docs):
     got = {(r["corpus_id"], r["bench_id"]): r["n_shared"]
            for r in contamination_pairs(corpus, bench, n=n).collect()}
     assert got == model
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(st.tuples(st.sampled_from(["a", "b", "c"]),
-                          st.integers(1, 500)),
-                min_size=3, max_size=30))
-def test_mixture_plan_matches_python_model(spark, rows):
-    """plan_mixture's rates ≡ the closed-form min_s(T_s/w_s) feasible
-    budget on generated inventories (uniform weights over the sources
-    present)."""
-    from myhadoop_spark.operators.mixture import plan_mixture
-
-    inv: dict[str, int] = {}
-    for s, t in rows:
-        inv[s] = inv.get(s, 0) + t
-    weights = {s: 1.0 for s in inv}
-    df = spark.createDataFrame(
-        [(i, s, t) for i, (s, t) in enumerate(rows)],
-        "doc_id LONG, source STRING, tokens LONG")
-    plan = plan_mixture(df, weights)
-    share = 1.0 / len(inv)
-    budget = min(inv[s] / share for s in inv)
-    for s, p in plan.items():
-        assert p["tokens"] == inv[s]
-        assert abs(p["rate"] - min(1.0, share * budget / inv[s])) < 1e-9

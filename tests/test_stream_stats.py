@@ -2,13 +2,15 @@
 ride the writes the batch makes anyway (streaming/observed.py), so
 passing ``stats=[]`` costs no Spark job, and every field equals a
 count of what the batch wrote. Plus the guard that keeps it so: every
-remaining ``.count()``/``.collect()`` in the streaming package says
-why it is there."""
+remaining ``.count()``/``.collect()`` in the streaming, operator and
+query packages says why it is there."""
 
 from __future__ import annotations
 
-import re
+import ast
+import io
 import time
+import tokenize
 from pathlib import Path
 
 import pytest
@@ -21,20 +23,51 @@ from myhadoop_spark.streaming.line_dedup_stream import \
 from myhadoop_spark.streaming.simhash_stream import \
     start_simhash_dedup_stream
 
-ACTION = re.compile(r"\.(count|collect)\(\)")
+ENGINE = Path(streaming_pkg.__file__).parent.parent
+
+
+def bare_actions(path: Path) -> list[str]:
+    """Argument-less ``.count()``/``.collect()`` calls in ``path`` with
+    no comment on the line of the call or a comment line just above."""
+    src = path.read_text()
+    comments = {}
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            comments[tok.start[0]] = not tok.line[:tok.start[1]].strip()
+    lines = src.splitlines()
+    bare = []
+    for node in ast.walk(ast.parse(src)):
+        if (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("count", "collect")
+                and not node.args and not node.keywords):
+            ln = node.func.end_lineno
+            if ln not in comments and not comments.get(ln - 1):
+                bare.append(f"{path.name}:{ln}: {lines[ln - 1].strip()}")
+    return sorted(bare, key=lambda b: int(b.split(":")[1]))
+
+
+def test_action_scan_reads_calls_not_text(tmp_path):
+    src = ('"""df.count() in a docstring is prose."""\n'
+           "a = df.count()\n"
+           "# the total decides the branch\n"
+           "b = df.count()\n"
+           "c = (df.select('x')\n"
+           "     .collect())  # rows are the output\n"
+           "d = text.count('x')\n")
+    f = tmp_path / "m.py"
+    f.write_text(src)
+    assert bare_actions(f) == ["m.py:2: a = df.count()"]
 
 
 def test_every_streaming_action_carries_its_reason():
-    """A ``.count()`` or ``.collect()`` in streaming/*.py needs a
-    comment on its own line or the line before it."""
-    bare = []
-    for f in sorted(Path(streaming_pkg.__file__).parent.glob("*.py")):
-        lines = f.read_text().splitlines()
-        for i, line in enumerate(lines):
-            if ACTION.search(line.split("#")[0]) and not (
-                    "#" in line
-                    or (i and lines[i - 1].lstrip().startswith("#"))):
-                bare.append(f"{f.name}:{i + 1}: {line.strip()}")
+    """A Spark action (``.count()`` or ``.collect()``) in streaming/,
+    operators/ or queries/ needs a comment on its own line or the line
+    before it, saying what it decides."""
+    bare = [f"{package}/{b}"
+            for package in ("streaming", "operators", "queries")
+            for f in sorted((ENGINE / package).glob("*.py"))
+            for b in bare_actions(f)]
     assert not bare, "actions without a reason comment:\n" + "\n".join(bare)
 
 
