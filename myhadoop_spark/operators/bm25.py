@@ -44,14 +44,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import tokens
+
 K1 = 1.2
 B = 0.75
-
-
-def _tokens(text_col: str):
-    """The repo's reference tokenization (queries/text.py::_tokens)."""
-    return F.filter(F.split(F.col(text_col), r"\s+"),
-                    lambda t: t != F.lit(""))
 
 
 def term_score(i: int, k1: float = K1, b: float = B):
@@ -105,7 +101,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str], *,
 
     base = (docs
             .select(F.col(id_col).alias("_id"),
-                    _tokens(text_col).alias("_toks"))
+                    tokens(text_col).alias("_toks"))
             .select(
                 "_id",
                 F.size("_toks").alias("dl"),

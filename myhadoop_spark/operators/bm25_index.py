@@ -15,7 +15,7 @@ and the other half a 100 TB hybrid-retrieval corpus actually needs:
 
 Why partition-by-term-bucket is the point: a query touches only its
 own terms' buckets, and because the bucket is computed DRIVER-SIDE
-from md5 (the engine-portable hash of queries/sampling.py, mirrored
+from md5 (the engine-portable hash of functions/text.py, mirrored
 here in pure Python — zero Spark jobs to locate a term), the probe
 filters with ``tbucket IN (...)`` — static partition pruning at the
 file level, so a B=256-shard index reads ~|terms|/B of the postings
@@ -62,7 +62,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myhadoop_spark.fsutil import read_small_file, write_small_file
-from myhadoop_spark.operators.bm25 import B, K1, _tokens, fold_scores
+from myhadoop_spark.functions.text import hash_bucket, tokens
+from myhadoop_spark.operators.bm25 import B, K1, fold_scores
 from myhadoop_spark.operators.compaction import compact_partitions
 
 MAX_ROWS_PER_FILE = 1_000_000
@@ -70,7 +71,7 @@ MAX_ROWS_PER_FILE = 1_000_000
 
 def term_bucket_py(term: str, n_buckets: int) -> int:
     """Driver-side term shard: first 8 md5 hex digits mod B — the
-    engine-portable content hash (queries/sampling.py::hash_bucket),
+    engine-portable content hash (functions/text.py::hash_bucket),
     computable without a Spark job."""
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8],
                16) % n_buckets
@@ -78,11 +79,9 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
 
 def term_bucket_col(col, n_buckets: int):
     """The same shard as a JVM-side expression — the CANONICAL
-    engine-portable hash (queries/sampling.py::hash_bucket), not a
+    engine-portable hash (functions/text.py::hash_bucket), not a
     re-implementation, so the driver-side parity (pinned in
     tests/test_bm25_index.py) can't drift."""
-    from myhadoop_spark.queries.sampling import hash_bucket
-
     return hash_bucket(col, n_buckets).cast("int")
 
 
@@ -94,7 +93,7 @@ def _postings(docs: DataFrame, n_buckets: int, id_col: str,
     just bag-of-words scoring; tf stays a separate column so the BM25
     probe's bitwise score parity is untouched."""
     toks = docs.select(F.col(id_col).alias("doc_id"),
-                       _tokens(text_col).alias("_toks"))
+                       tokens(text_col).alias("_toks"))
     return (toks
             .select("doc_id", F.size("_toks").alias("dl"),
                     F.posexplode("_toks").alias("pos", "term"))
@@ -121,7 +120,7 @@ def _batch_stats(docs: DataFrame, append_id: str,
     """One (n_docs, sum_dl, append_id) row — empty documents count in
     n_docs and contribute 0 to sum_dl, matching the one-shot scorer's
     N/avgdl over the full corpus."""
-    return (docs.select(F.size(_tokens(text_col)).alias("dl"))
+    return (docs.select(F.size(tokens(text_col)).alias("dl"))
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"))
             .withColumn("append_id", F.lit(append_id)))

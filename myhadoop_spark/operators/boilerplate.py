@@ -35,10 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _toks(text_col: str):
-    return F.filter(F.split(F.col(text_col), r"\s+"),
-                    lambda t: t != F.lit(""))
+from myhadoop_spark.functions.text import tokens
 
 
 def _shingles(n: int):
@@ -57,7 +54,7 @@ def boilerplate_grams(docs: DataFrame, *, n: int = 2, min_df: int,
                       text_col: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
     """(g, df): the shingles appearing in ≥ min_df distinct docs."""
-    sh = (docs.withColumn("_toks", _toks(text_col))
+    sh = (docs.withColumn("_toks", tokens(text_col))
           .select(F.col(id_col).alias("_id"),
                   F.explode(_shingles(n)).alias("_s"))
           .select("_id", F.col("_s.g").alias("g")))
@@ -74,7 +71,7 @@ def strip_against(docs: DataFrame, grams: DataFrame, *, n: int = 2,
     composable core of ``strip_boilerplate``; the streaming ingest
     face (streaming/boilerplate_stream.py) strips each micro-batch
     against its incrementally-maintained df table through this."""
-    base = docs.withColumn("_toks", _toks(text_col))
+    base = docs.withColumn("_toks", tokens(text_col))
     sh = base.select(F.col(id_col),
                      F.explode(_shingles(n)).alias("_s")) \
         .select(id_col, F.col("_s.pos").alias("pos"),

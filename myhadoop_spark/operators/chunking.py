@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import tokens
+
 
 def chunk_documents(docs: DataFrame, *, chunk_tokens: int = 128,
                     overlap: int = 16, id_col: str = "doc_id",
@@ -46,8 +48,7 @@ def chunk_documents(docs: DataFrame, *, chunk_tokens: int = 128,
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     step = chunk_tokens - overlap
-    toks = F.filter(F.split(F.col(text_col), r"\s+"),
-                    lambda t: t != F.lit(""))
+    toks = tokens(text_col)
     n = F.size("_toks")
     starts = F.filter(
         F.sequence(F.lit(1), F.greatest(n, F.lit(1)), F.lit(step)),

@@ -38,16 +38,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import tokens
+
 SCALE = 1_000_000  # fixed-point rate scale
 
 # function words used for the ratio marker feature (the doc_metrics
 # stopword family, queries/text.py::STOPWORDS)
 MARKER_WORDS = ("the", "a", "of", "and", "to", "in")
-
-
-def tokens(col: str = "text") -> Column:
-    """Corpus tokenization convention (queries/text.py::_tokens)."""
-    return F.filter(F.split(F.col(col), r"\s+"), lambda t: t != F.lit(""))
 
 
 MARKER_BOOST = 8  # marker multiplicity in the bag (see feature_tokens)

@@ -5,8 +5,8 @@ CMS answers "how often is THIS term" for any term, in depth × width
 integers regardless of vocabulary size.
 
 Deterministic by construction: the d row-hashes are engine-portable
-md5 buckets (the sampling.py idiom, salted by row index), so the
-sketch — and therefore every estimate — is bit-identical across
+md5 buckets (functions/text.py::hash_bucket, salted by row index), so
+the sketch — and therefore every estimate — is bit-identical across
 engines, partitionings, and merge orders. The estimate guarantee
 ``est ≥ true`` is absolute (every occurrence lands in exactly one
 bucket per row); the overshoot is bounded by colliding mass and
@@ -28,14 +28,10 @@ from __future__ import annotations
 
 from functools import reduce as _reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _bucket(term: Column, j: int, width: int) -> Column:
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(f"{j}:"), term)), 1, 8),
-               16, 10).cast("long")
-    return h % width
+from myhadoop_spark.functions.text import hash_bucket
 
 
 def cms_table(occurrences: DataFrame, term_col: str, *, depth: int = 4,
@@ -51,7 +47,8 @@ def cms_table(occurrences: DataFrame, term_col: str, *, depth: int = 4,
         c.alias("_c"),
         F.explode(F.array(*[
             F.struct(F.lit(j).alias("j"),
-                     _bucket(t, j, width).alias("bucket"))
+                     hash_bucket(F.concat(F.lit(f"{j}:"), t),
+                                 width).alias("bucket"))
             for j in range(depth)])).alias("_jb"))
     return (rows.groupBy(F.col("_jb.j").alias("j"),
                          F.col("_jb.bucket").alias("bucket"))
@@ -74,7 +71,8 @@ def cms_estimate(cms: DataFrame, terms: DataFrame, term_col: str, *,
         "*",
         F.explode(F.array(*[
             F.struct(F.lit(j).alias("j"),
-                     _bucket(t, j, width).alias("bucket"))
+                     hash_bucket(F.concat(F.lit(f"{j}:"), t),
+                                 width).alias("bucket"))
             for j in range(depth)])).alias("_jb"))
     probes = probes.select(*terms.columns, F.col("_jb.j").alias("j"),
                            F.col("_jb.bucket").alias("bucket"))

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import tokens
+
 DEFAULT_N = 5  # tokens per shingle; 8-13 typical for web corpora,
                # 5 suits the short fixture documents
 
@@ -46,7 +48,7 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str,
     wide op in any caller is the final join."""
     if wide:
         df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit(""))
+    toks = tokens(text_col)
     # materialize the token array in its own projection: it is referenced
     # 2(n-1)+1 times below, which blocks CollapseProject from inlining the
     # regex split into the gram construction (a single-use reference would

@@ -42,8 +42,8 @@ at 1e-6 (the lm_perplexity / corpus_drift precedent); the bitwise
 contract is pinned against the pure-Python model in
 tests/test_dsir.py.
 
-Feature hashing uses the repo's engine-portable md5 bucket (the
-queries/sampling.py idiom) — xxhash64/murmur differ across engines.
+Feature hashing uses the engine-portable md5 bucket
+(functions/text.py::hash_bucket) — xxhash64/murmur differ across engines.
 Unigram/bigram features need no type marker: tokens are
 whitespace-split, so a space-joined bigram can never collide with a
 unigram.
@@ -54,19 +54,13 @@ training-data curation operators).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from myhadoop_spark.operators.bm25 import _tokens
+from myhadoop_spark.functions.text import hash_bucket, tokens
 from myhadoop_spark.materialize import materialize
 
 BUCKETS = 4096
-
-
-def hash_bucket(col: Column, buckets: int) -> Column:
-    """Engine-portable stable bucket: first 8 md5 hex digits mod N."""
-    h = F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-    return h % F.lit(buckets)
 
 
 def hashed_features(docs: DataFrame, *, id_col: str = "doc_id",
@@ -76,7 +70,7 @@ def hashed_features(docs: DataFrame, *, id_col: str = "doc_id",
     the whitespace tokenization, hashed into ``buckets``. Narrow until
     the explode; empty documents contribute nothing."""
     toks = docs.select(F.col(id_col),
-                       _tokens(text_col).alias("_toks"))
+                       tokens(text_col).alias("_toks"))
     toks = toks.filter(F.size("_toks") > 0)
     feats = toks.select(
         F.col(id_col),

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import hash_bucket
 from myhadoop_spark.operators.hof import let
 
 SCALE = 1_000_000
@@ -75,12 +76,6 @@ def char_ngrams(col: Column, n: int = 3) -> Column:
     return let(t0, _grams)
 
 
-def _bucket(gram: Column, buckets: int) -> Column:
-    """Engine-portable md5 feature bucket (the sampling.py idiom)."""
-    h = F.conv(F.substring(F.md5(gram), 1, 8), 16, 10)
-    return (h.cast("long") % buckets).alias("bucket")
-
-
 def train_langid(labeled: DataFrame, *, lang_col: str = "lang",
                  text_col: str = "text", n: int = 3,
                  buckets: int = 4096) -> DataFrame:
@@ -91,7 +86,8 @@ def train_langid(labeled: DataFrame, *, lang_col: str = "lang",
     rows = labeled.select(
         F.coalesce(F.col(lang_col), F.lit("")).alias("lang"),
         F.explode(char_ngrams(F.col(text_col), n)).alias("_g"))
-    feats = rows.select("lang", _bucket(F.col("_g"), buckets))
+    feats = rows.select(
+        "lang", hash_bucket(F.col("_g"), buckets).alias("bucket"))
     counts = (feats.groupBy("lang", "bucket")
               .agg(F.count(F.lit(1)).alias("_c")))
     totals = feats.groupBy("lang").agg(F.count(F.lit(1)).alias("_t"))
@@ -130,7 +126,8 @@ def predict_lang(docs: DataFrame, weights: DataFrame, *,
     feats = docs.select(
         F.col(id_col),
         F.explode(char_ngrams(F.col(text_col), n)).alias("_g"))
-    feats = feats.select(id_col, _bucket(F.col("_g"), buckets))
+    feats = feats.select(
+        id_col, hash_bucket(F.col("_g"), buckets).alias("bucket"))
     scored = (feats.join(F.broadcast(vecs), "bucket", "left")
               .groupBy(id_col)
               .agg(*[F.sum(F.coalesce(F.col(f"_w{i}"), F.lit(0)))

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from myhadoop_spark.operators.bm25 import _tokens
+from myhadoop_spark.functions.text import tokens
 
 ALPHA = 0.4
 
@@ -51,7 +51,7 @@ def train_bigram_lm(ref_docs: DataFrame, *, text_col: str = "text") -> dict:
     V counts distinct tokens (the smoothing denominator's event
     space). The counts stay DataFrames — persist them with .write if
     the LM is reused across jobs."""
-    toks = ref_docs.select(_tokens(text_col).alias("_toks"))
+    toks = ref_docs.select(tokens(text_col).alias("_toks"))
     toks = toks.filter(F.size("_toks") > 0)
     uni = (toks.select(F.explode("_toks").alias("w1"))
            .groupBy("w1").agg(F.count(F.lit(1)).alias("c1")))
@@ -88,7 +88,7 @@ def score_perplexity(docs: DataFrame, lm: dict, *, alpha: float = ALPHA,
     v = float(lm["vocab_size"])
 
     toks = docs.select(F.col(id_col).alias("_id"),
-                       _tokens(text_col).alias("_toks"))
+                       tokens(text_col).alias("_toks"))
     pairs = (toks.filter(F.size("_toks") >= 2)
              .select("_id", F.size("_toks").alias("_n"),
                      F.posexplode(

@@ -20,7 +20,7 @@ Layout (mirrors the BM25/IVF index discipline):
     (doc_id, band, band_sig, sig[16], append_id) written
     ``partitionBy("sbucket")`` where ``sbucket = md5(band:band_sig)
     % B`` (the canonical engine-portable hash,
-    queries/sampling.py::hash_bucket); rows band_sig-sorted within
+    functions/text.py::hash_bucket); rows band_sig-sorted within
     files so row-group min/max stats stay tight;
   * ``<path>/meta.json``: {n_buckets, n_hashes, band_rows, format}
     (crash-safe write_small_file; guards probes against layout drift).
@@ -88,14 +88,14 @@ from myhadoop_spark.fsutil import (
     read_small_file,
     write_small_file,
 )
-from myhadoop_spark.operators.compaction import compact_partitions
-from myhadoop_spark.queries.dedup import (
+from myhadoop_spark.functions.text import (
     MINHASH_BAND_ROWS,
     MINHASH_FAM,
-    MINHASH_P,
-    _hashed_token_sets,
+    hash_bucket,
+    hashed_token_set,
+    minhash_fold,
 )
-from myhadoop_spark.queries.sampling import hash_bucket
+from myhadoop_spark.operators.compaction import compact_partitions
 from myhadoop_spark.materialize import materialize
 
 N_BUCKETS = 32
@@ -122,20 +122,14 @@ def signature_rows(docs: DataFrame, *, id_col: str = "doc_id",
     subexpression evaluated once per row by codegen CSE — never
     re-folded per band (the r4 recompute-trap family,
     queries/dedup.py::minhash_signatures)."""
-    sets = _hashed_token_sets(docs.sparkSession, "", docs=docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")))
+    sets = docs.select(F.col(id_col).alias("doc_id"),
+                       hashed_token_set(text_col).alias("toks"))
     sets = sets.filter(F.size("toks") > 0)
-
-    def _fold(i: int):
-        _, a, b = MINHASH_FAM[i]
-        return F.aggregate(
-            F.col("toks"), F.lit(MINHASH_P).cast("long"),
-            lambda acc, th: F.least(acc, (F.lit(a) * th + F.lit(b))
-                                    % MINHASH_P))
 
     n_bands = len(MINHASH_FAM) // MINHASH_BAND_ROWS
     with_sig = sets.select(
-        "doc_id", F.array(*[_fold(i) for i in range(len(MINHASH_FAM))])
+        "doc_id", F.array(*[minhash_fold(F.col("toks"), i)
+                              for i in range(len(MINHASH_FAM))])
         .alias("sig"))
     band_sigs = F.array(*[
         F.array_join(

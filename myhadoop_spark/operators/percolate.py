@@ -50,15 +50,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from myhadoop_spark.operators.bm25 import _tokens
+from myhadoop_spark.functions.text import tokens
 
 
-def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _doctokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # the repo's ONE tokenization convention (operators/bm25.py) — a
     # local copy would silently desynchronize percolation verdicts
     # from the indexes built over the same corpus
     return docs.select(F.col(id_col).alias("doc_id"),
-                       F.explode(F.array_distinct(_tokens(text_col)))
+                       F.explode(F.array_distinct(tokens(text_col)))
                        .alias("term"))
 
 
@@ -85,7 +85,7 @@ def percolate_docs(docs: DataFrame, queries: DataFrame, *,
     q_terms = (queries.select(
         "query_id", msm.alias("min_should_match"),
         F.explode(F.array_distinct("terms")).alias("term")))
-    hits = (_doc_tokens(docs, id_col, text_col)
+    hits = (_doctokens(docs, id_col, text_col)
             .join(F.broadcast(q_terms), "term")
             .groupBy("doc_id", "query_id", "min_should_match")
             .agg(F.count(F.lit(1)).alias("n_matched")))
@@ -155,7 +155,7 @@ def percolate_phrases(docs: DataFrame, queries: DataFrame, *,
         q = queries.select("query_id", "phrase",
                            F.element_at("phrase", 1).alias("anchor"))
     cand = (docs.select(F.col(id_col).alias("doc_id"),
-                        _tokens(text_col).alias("_toks"))
+                        tokens(text_col).alias("_toks"))
             .select("doc_id", "_toks",
                     F.explode(F.array_distinct("_toks")).alias("term"))
             .join(F.broadcast(q.withColumnRenamed("anchor", "term")),

@@ -40,31 +40,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import hash_bucket, tokens
 from myhadoop_spark.materialize import materialize
 
 # Horner rolling-hash constants. Token hashes are first reduced mod M
-# (31-bit) so the accumulator stays < M and acc*B + t < 2^31 * 1e6 + 2^31
-# ~ 2.1e15 << 2^63: no interim overflow, and list_reduce/F.aggregate
-# agree bitwise across engines.
+# (31-bit, hash_bucket) so the accumulator stays < M and acc*B + t <
+# 2^31 * 1e6 + 2^31 ~ 2.1e15 << 2^63: no interim overflow, and the
+# oracle's no-initializer list_reduce (whose first step is the bare
+# first element) and the zero-init F.aggregate agree bitwise.
 K_WINDOW = 8  # tokens per window
 HASH_B = 1_000_003
 HASH_M = 2_147_483_647
 MIN_OVERLAP = 20  # tokens; a surviving run is >= this long
-
-
-def tokens(col: str = "text") -> Column:
-    """Whitespace tokens, empty-dropped — the corpus-wide convention
-    (queries/dedup.py, queries/text.py)."""
-    return F.filter(F.split(F.col(col), r"\s+"), lambda t: t != F.lit(""))
-
-
-def token_hash_mod(tok: Column, hash_m: int = HASH_M) -> Column:
-    """md5-derived 32-bit token hash reduced mod M (so the Horner fold
-    never overflows and the oracle's no-initializer list_reduce — whose
-    first step is the bare first element — matches the zero-init Horner
-    first step exactly)."""
-    return (F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
-            % F.lit(hash_m))
 
 
 def token_hash_mod2(tok: Column, hash_m: int = HASH_M) -> Column:
@@ -97,7 +84,7 @@ def window_hash_rows(docs: DataFrame, k: int = K_WINDOW, *,
     k-1 LEAD()s over the per-document window — one window pass, one
     shuffle on doc_id (bounded rows per doc), all codegen."""
     cols = ["doc_id", (F.col("pos0") + 1).alias("pos"),
-            token_hash_mod(F.col("tok"), hash_m).alias("th")]
+            hash_bucket(F.col("tok"), hash_m).alias("th")]
     if wide:
         cols.append(token_hash_mod2(F.col("tok"), hash_m).alias("th2"))
     tok_rows = docs.select(

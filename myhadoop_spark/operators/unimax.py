@@ -56,18 +56,13 @@ next to operators/dsir.py's importance resampling).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from myhadoop_spark.functions.text import hash_bucket, tokens
 
 
 _HASH_BUCKETS = 1_000_000
-
-
-def _rank_hash(col: Column, buckets: int = _HASH_BUCKETS) -> Column:
-    """queries/sampling.py's engine-portable md5 bucket (inlined here:
-    operators must not import the queries package — circular)."""
-    h = F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-    return h.cast("long") % buckets
 
 
 def doc_token_counts(docs: DataFrame, *, id_col: str = "doc_id",
@@ -78,7 +73,7 @@ def doc_token_counts(docs: DataFrame, *, id_col: str = "doc_id",
     NULL languages are kept as the empty-string language so every row
     participates (the dsir.py NULL-lang lesson: a bare equality would
     silently drop them from one engine and not the other)."""
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
+    toks = tokens(text_col)
     return docs.select(
         F.coalesce(F.col(lang_col), F.lit("")).alias("lang"),
         F.col(id_col).alias("doc_id"),
@@ -200,7 +195,7 @@ def unimax_select_window(doc_tokens: DataFrame,
     production path and for the DuckDB oracle, which expresses
     exactly this window. Do not call on corpus-scale data."""
     w = (Window.partitionBy("lang")
-         .orderBy(_rank_hash(F.col("doc_id")), "doc_id")
+         .orderBy(hash_bucket(F.col("doc_id"), _HASH_BUCKETS), "doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     ranked = doc_tokens.withColumn(
         "_before",
@@ -244,7 +239,7 @@ def unimax_select(doc_tokens: DataFrame, alloc: DataFrame,
     if bands < 1:
         raise ValueError("bands must be >= 1")
     width = (_HASH_BUCKETS + bands - 1) // bands
-    h = _rank_hash(F.col("doc_id"))
+    h = hash_bucket(F.col("doc_id"), _HASH_BUCKETS)
     dt = doc_tokens.withColumn("_h", h).withColumn(
         "_band", F.expr(f"_h div {width}"))
     # bounded: ≤ (#languages × bands) rows; the window below runs over

@@ -52,17 +52,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import hash_bucket
+
 _HASH_BUCKETS = 1_000_000
 # userinfo@ is stripped before the host; port / path / query / frag end it
 _HOST_RE = r"^(?:[a-z][a-z0-9+.\-]*://)?(?:[^/@?#]*@)?([^/:?#]+)"
 # '=' optional so a VALUELESS tracking param (bare `gclid`, bare
 # `utm_source`) is stripped too (ADVICE r10); `$` anchors the bare form
 _TRACKING_RE = r"^(utm_[a-z0-9_]*|gclid|fbclid)(=|$)"
-
-
-def _rank_hash(col: Column) -> Column:
-    h = F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-    return h.cast("long") % _HASH_BUCKETS
 
 
 def host_of(url: Column) -> Column:
@@ -245,8 +242,9 @@ def url_dedup(docs: DataFrame, *, url_col: str = "url",
     canon = canonical_url(F.col(url_col))
     keyed = docs.withColumn("_canon", canon)
     winners = (keyed.groupBy("_canon")
-               .agg(F.min(F.struct(_rank_hash(F.col(id_col)).alias("_r"),
-                                   F.col(id_col).alias("_id")))
+               .agg(F.min(F.struct(
+                   hash_bucket(F.col(id_col), _HASH_BUCKETS).alias("_r"),
+                   F.col(id_col).alias("_id")))
                     .alias("_w"))
                .select(F.col("_w._id").alias(id_col)))
     return (keyed.join(winners, id_col, "left_semi")
@@ -274,7 +272,7 @@ def domain_cap(docs: DataFrame, *, domain_col: str = "domain",
     if cap < 0 or bands < 1:
         raise ValueError("cap must be >= 0 and bands >= 1")
     width = (_HASH_BUCKETS + bands - 1) // bands
-    d = (docs.withColumn("_h", _rank_hash(F.col(id_col)))
+    d = (docs.withColumn("_h", hash_bucket(F.col(id_col), _HASH_BUCKETS))
          .withColumn("_band", F.expr(f"_h div {width}")))
     wb = (Window.partitionBy(domain_col).orderBy("_band")
           .rowsBetween(Window.unboundedPreceding, -1))
@@ -313,6 +311,6 @@ def domain_cap_window(docs: DataFrame, *, domain_col: str = "domain",
     bitwise parity pin for ``domain_cap`` and the shape the DuckDB
     oracle expresses. Do not call on corpus-scale data."""
     w = (Window.partitionBy(domain_col)
-         .orderBy(_rank_hash(F.col(id_col)), id_col))
+         .orderBy(hash_bucket(F.col(id_col), _HASH_BUCKETS), id_col))
     return (docs.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= cap).drop("_rn"))

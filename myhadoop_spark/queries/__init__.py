@@ -4,10 +4,12 @@ Importing this package registers every query into
 ``myhadoop_spark.registry``. Each module pairs the Spark DataFrame plan
 with its DuckDB oracle SQL so the two stay in lock-step.
 
-The registry is deliberately capped at 50 declared queries (the
-driver's correctness-gate window): redundant battery queries are
-genuinely consolidated (one tagged battery per operator family), not
-dropped — every operator the r1 registry exercised is still exercised.
+Only the 50 queries registered with ``gate=True`` form the correctness
+gate (``registry.all_queries()``, checked bitwise against DuckDB by
+``scripts/check.py``); the others are ungated but keep their oracles,
+which the tests check (``registry.all_queries(include_ungated=True)``).
+Redundant battery queries are consolidated (one tagged battery per
+operator family), not dropped.
 """
 
 from myhadoop_spark.queries import (  # noqa: F401

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark import registry as _registry
+from myhadoop_spark.functions.text import hash_bucket, sql_hash_bucket
 from myhadoop_spark.operators.connected_components import connected_components
 from myhadoop_spark.queries import simsearch  # registers embed_neardup
 from myhadoop_spark.registry import register
@@ -60,7 +61,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row-level split cannot prevent). Split = deterministic hash of the
 # cluster REPRESENTATIVE, so every member inherits the same side;
 # isolated vectors are their own cluster. Composes the CC operator
-# with the sampling module's engine-portable hash — and the oracle
+# with functions/text.py's engine-portable hash — and the oracle
 # composes the recursive-CTE closure with the same md5 bucket.
 # ---------------------------------------------------------------------------
 
@@ -70,8 +71,7 @@ all_ids AS (SELECT vec_id FROM embeddings),
 lab AS (SELECT vec_id, coalesce(cc.component, vec_id) AS component
         FROM all_ids LEFT JOIN cc ON all_ids.vec_id = cc.id),
 b AS (SELECT vec_id, component,
-             CAST(concat('0x', substr(md5(CAST(component AS VARCHAR)),
-                                      1, 8)) AS BIGINT) % 100 AS bkt
+             {sql_hash_bucket('component', 100)} AS bkt
       FROM lab)
 SELECT vec_id, component,
        CASE WHEN bkt < 80 THEN 'train'
@@ -89,7 +89,6 @@ def cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair ever straddles a split boundary (asserted in
     tests/test_connected_components.py)."""
     from myhadoop_spark.catalog import load
-    from myhadoop_spark.queries.sampling import hash_bucket
 
     edges = simsearch.embed_neardup(spark, sf_dir).select(
         F.col("id1").alias("src"), F.col("id2").alias("dst"))

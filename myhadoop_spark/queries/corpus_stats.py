@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
-from myhadoop_spark.queries.text import _sql_tokens, _tokens
+from myhadoop_spark.functions.text import sql_hash_bucket, sql_tokens, tokens
 from myhadoop_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -20,7 +20,7 @@ from myhadoop_spark.registry import register
 @register(
     "ngram_stats",
     oracle=rf"""
-    WITH t AS (SELECT unnest({_sql_tokens('text')}) AS word FROM documents),
+    WITH t AS (SELECT unnest({sql_tokens('text')}) AS word FROM documents),
     c AS (SELECT word, COUNT(*) AS freq FROM t GROUP BY word),
     tot AS (SELECT SUM(freq) AS n FROM c),
     r AS (SELECT word, freq,
@@ -28,7 +28,7 @@ from myhadoop_spark.registry import register
                  SUM(freq) OVER (ORDER BY freq DESC, word ASC
                                  ROWS UNBOUNDED PRECEDING) AS cum
           FROM c),
-    toks AS (SELECT doc_id, {_sql_tokens('text')} AS t FROM documents),
+    toks AS (SELECT doc_id, {sql_tokens('text')} AS t FROM documents),
     b AS (SELECT unnest(list_transform(
                      generate_series(1, len(t) - 1),
                      i -> concat(t[i], ' ', t[i + 1]))) AS bigram
@@ -78,7 +78,7 @@ def ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     null_rank = F.lit(None).cast("bigint")
     null_cov = F.lit(None).cast("double")
     # unigrams + coverage
-    words = docs.select(F.explode(_tokens()).alias("word"))
+    words = docs.select(F.explode(tokens()).alias("word"))
     counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     total = counts.agg(F.sum("freq").alias("n"))
     w = Window.orderBy(F.col("freq").desc(), F.col("word").asc())
@@ -95,7 +95,7 @@ def ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cum_coverage"))
     )
     # bigrams
-    toks = docs.select(_tokens().alias("t")).filter(F.size("t") >= 2)
+    toks = docs.select(tokens().alias("t")).filter(F.size("t") >= 2)
     bi = (
         toks.select(F.explode(F.expr(
             "transform(sequence(1, size(t) - 1),"
@@ -108,7 +108,7 @@ def ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # opening-position tokens (posexplode)
     pos = (
-        docs.select(F.posexplode(F.slice(_tokens(), 1, 3)).alias("pos", "gram"))
+        docs.select(F.posexplode(F.slice(tokens(), 1, 3)).alias("pos", "gram"))
         .groupBy("pos", "gram").agg(F.count(F.lit(1)).alias("freq"))
         .select(F.lit("pos").alias("kind"), "gram", "freq",
                 F.col("pos").cast("bigint").alias("rank"),
@@ -126,7 +126,7 @@ def ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tfidf_top_terms",
     oracle=rf"""
-    WITH toks AS (SELECT doc_id, unnest({_sql_tokens('text')}) AS term
+    WITH toks AS (SELECT doc_id, unnest({sql_tokens('text')}) AS term
                   FROM documents),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks
            GROUP BY doc_id, term),
@@ -150,7 +150,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf so every score is a ratio of exact integers (bit-identical
     across engines, unlike log-idf whose libm rounding differs)."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(_tokens()).alias("term"))
+    toks = docs.select("doc_id", F.explode(tokens()).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     # lazy corpus size — an eager .count() here would run an extra scan
@@ -189,13 +189,13 @@ _BM25_K1, _BM25_B = 1.2, 0.75
     "bm25_search",
     oracle=rf"""
     WITH dl AS (SELECT doc_id,
-                       CAST(len({_sql_tokens('text')}) AS BIGINT) AS dl
+                       CAST(len({sql_tokens('text')}) AS BIGINT) AS dl
                 FROM documents),
     stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
                      CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
                        AS avgdl
               FROM dl),
-    toks AS (SELECT doc_id, unnest({_sql_tokens('text')}) AS term
+    toks AS (SELECT doc_id, unnest({sql_tokens('text')}) AS term
              FROM documents),
     tf AS (SELECT doc_id, term, CAST(COUNT(*) AS DOUBLE) AS tf
            FROM toks WHERE term IN ('window', 'merge', 'scan')
@@ -263,15 +263,16 @@ _CMS_D = 4
 _CMS_W = 8
 
 
-def _sql_cms_bucket(j: int, term: str) -> str:
-    return (f"CAST(concat('0x', substr(md5(concat('{j}:', {term})), 1, 8)) "
-            f"AS BIGINT) % {_CMS_W}")
+def _sql_cms_bucket(j: int | str, term: str) -> str:
+    """The oracle twin of operators/cms.py's row bucket: hash_bucket
+    of '<j>:' || term, ``j`` a row number or a SQL expression."""
+    return sql_hash_bucket(f"concat({j}, ':', {term})", _CMS_W)
 
 
 @register(
     "cms_freq",
     oracle=f"""
-    WITH occ AS (SELECT unnest({_sql_tokens('text')}) AS term
+    WITH occ AS (SELECT unnest({sql_tokens('text')}) AS term
                  FROM documents),
     exact AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS exact_c
               FROM occ GROUP BY term),
@@ -281,8 +282,7 @@ def _sql_cms_bucket(j: int, term: str) -> str:
                   f" 1 AS c FROM occ" for j in range(_CMS_D))})
             GROUP BY j, bucket),
     probe AS (SELECT term, exact_c, j.j AS j,
-                     {_sql_cms_bucket("j.j", 'term')
-                      .replace("'j.j:'", "concat(j.j, ':')")} AS bucket
+                     {_sql_cms_bucket('j.j', 'term')} AS bucket
               FROM exact CROSS JOIN
                    (SELECT unnest(generate_series(0, {_CMS_D - 1})) AS j) j),
     est AS (SELECT term, exact_c,
@@ -303,7 +303,7 @@ def cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from myhadoop_spark.operators.cms import cms_estimate, cms_table
 
     docs = load(spark, sf_dir, "documents")
-    occ = docs.select(F.explode(_tokens()).alias("term"))
+    occ = docs.select(F.explode(tokens()).alias("term"))
     exact = occ.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_c"))
     cms = cms_table(occ, "term", depth=_CMS_D, width=_CMS_W)
@@ -332,6 +332,6 @@ def sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from myhadoop_spark.operators.cms import cms_verified_topk
 
     docs = load(spark, sf_dir, "documents")
-    occ = docs.select(F.explode(_tokens()).alias("term"))
+    occ = docs.select(F.explode(tokens()).alias("term"))
     return cms_verified_topk(occ, "term", k=20, capacity=64,
                              depth=_CMS_D, width=64)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import sql_tokens
 from myhadoop_spark.operators.decontam import contamination_pairs
 from myhadoop_spark.operators.scrub import (
     DEFAULT_RULES,
@@ -50,7 +51,7 @@ _GATE_N = 4
 _DECONTAM_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tk
+         {sql_tokens()} AS tk
   FROM documents
 ),
 sh AS (

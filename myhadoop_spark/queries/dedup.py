@@ -22,25 +22,29 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import (
+    JACCARD_THRESHOLD,
+    MINHASH_BAND_ROWS,
+    MINHASH_FAM,
+    SQL_MINHASH_CTES,
+    hashed_token_set,
+    minhash_fold,
+    sql_hash32,
+    sql_tokens,
+)
 from myhadoop_spark.registry import register
 from myhadoop_spark.materialize import materialize
 
-# fixed affine hash family h_i(x) = (a_i * x + b_i) mod P over md5-derived
-# 32-bit token hashes; 16 functions = 4 bands × 4 rows
-MINHASH_P = 2_147_483_647
-_A = (3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43, 47, 53, 59)
-_B = (7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43, 47, 53, 59, 61, 67)
-MINHASH_FAM = [(i, _A[i], _B[i]) for i in range(16)]
-MINHASH_BAND_ROWS = 4
-JACCARD_THRESHOLD = 0.5
-
-_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
 _DOUBLED = "(SELECT * FROM documents UNION ALL SELECT * FROM documents)"
 
 
-def _token_sets(spark: SparkSession, sf_dir: str,
-                wide: bool = False, docs: DataFrame | None = None) -> DataFrame:
-    """doc_id → distinct token array (sorted for determinism).
+def _hashed_token_sets(spark: SparkSession, sf_dir: str,
+                       wide: bool = False,
+                       docs: DataFrame | None = None) -> DataFrame:
+    """(doc_id, toks): each document's hashed token set
+    (functions/text.py::hashed_token_set). The Jaccard verify runs over
+    these int sets instead of string arrays: the 6M-pair verify join
+    shuffles ~5× fewer bytes and intersects primitive ints.
 
     wide=True repartitions the scan to the default parallelism BEFORE
     the per-row tokenize/hash work. The fixture is one small parquet
@@ -58,26 +62,7 @@ def _token_sets(spark: SparkSession, sf_dir: str,
         docs = load(spark, sf_dir, "documents")
     if wide:
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
-    return docs.select(
-        "doc_id", F.array_sort(F.array_distinct(toks)).alias("toks"))
-
-
-def _hashed_token_sets(spark: SparkSession, sf_dir: str,
-                       wide: bool = False,
-                       docs: DataFrame | None = None) -> DataFrame:
-    """doc_id → sorted distinct md5-derived 32-bit token hashes. The
-    Jaccard verify runs over these int sets instead of string arrays:
-    the 6M-pair verify join shuffles ~5× fewer bytes and intersects
-    primitive ints. Hash collisions are deterministic and mirrored in
-    the oracle, so results stay engine-identical."""
-    sets = _token_sets(spark, sf_dir, wide=wide, docs=docs)
-    return sets.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(F.transform(
-            "toks",
-            lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"),
-        ))).alias("toks"))
+    return docs.select("doc_id", hashed_token_set("text").alias("toks"))
 
 
 # ---------------------------------------------------------------------------
@@ -159,18 +144,11 @@ def minhash_signatures(spark: SparkSession, sf_dir: str,
     # 16-fold signature computation re-evaluated once PER BAND (4x the
     # minhash work; the r4 recompute-trap family, see
     # operators/substring.py::window_hash_rows)
-    def _mh_fold(i: int):
-        _, a, b = MINHASH_FAM[i]
-        return F.aggregate(
-            F.col("toks"),
-            F.lit(MINHASH_P).cast("long"),
-            lambda acc, th: F.least(
-                acc, (F.lit(a) * th + F.lit(b)) % MINHASH_P))
-
     n_bands = len(MINHASH_FAM) // MINHASH_BAND_ROWS
     band_sigs = F.array(*[
         F.array_join(
-            F.array(*[_mh_fold(b * MINHASH_BAND_ROWS + r).cast("string")
+            F.array(*[minhash_fold(F.col("toks"), b * MINHASH_BAND_ROWS + r)
+                      .cast("string")
                       for r in range(MINHASH_BAND_ROWS)]),
             ",")
         for b in range(n_bands)])
@@ -181,17 +159,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str,
 @register(
     "dedup_minhash",
     oracle=f"""
-    WITH sets AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    th AS (SELECT doc_id, CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) AS th
-           FROM (SELECT doc_id, unnest(list_distinct(toks)) AS tok FROM sets)),
-    fam AS (SELECT * FROM (VALUES {', '.join(f'({i}, {a}, {b})' for i, a, b in MINHASH_FAM)})
-            AS f(i, a, b)),
-    sig AS (SELECT doc_id, i, i // {MINHASH_BAND_ROWS} AS band,
-                   MIN((a * th + b) % {MINHASH_P}) AS mh
-            FROM th CROSS JOIN fam GROUP BY doc_id, i),
-    bsig AS (SELECT doc_id, band,
-                    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS band_sig
-             FROM sig GROUP BY doc_id, band),
+    WITH {SQL_MINHASH_CTES},
     cand AS (SELECT DISTINCT x.doc_id AS doc1, y.doc_id AS doc2
              FROM bsig x JOIN bsig y
                ON x.band = y.band AND x.band_sig = y.band_sig
@@ -215,7 +183,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify. No cross join anywhere: candidates come from the band-bucket
     self-join, verification touches candidates only.
 
-    The hashed token sets are built WIDE (see _token_sets) and
+    The hashed token sets are built WIDE (see _hashed_token_sets) and
     materialized once (inside minhash_pairs) because both the signature
     branch and the verify branch need them — Catalyst has no common
     subtree sharing across joins, so without the checkpoint the
@@ -297,8 +265,8 @@ def minhash_pairs(spark: SparkSession, sets: DataFrame) -> DataFrame:
     "simhash",
     oracle=f"""
     WITH th AS (SELECT DISTINCT doc_id,
-                       CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) AS th
-                FROM (SELECT doc_id, unnest(list_distinct({_TOKS})) AS tok
+                       {sql_hash32('tok')} AS th
+                FROM (SELECT doc_id, unnest(list_distinct({sql_tokens()})) AS tok
                       FROM documents)),
     bits AS (SELECT doc_id, j,
                     SUM(CASE WHEN (th >> j) & 1 = 1 THEN 1 ELSE -1 END) AS vote

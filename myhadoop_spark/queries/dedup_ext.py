@@ -18,6 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import (
+    MINHASH_FAM,
+    SQL_MINHASH_CTES,
+    sql_hash_bucket,
+    sql_tokens,
+)
 from myhadoop_spark.operators.bloom import (
     K_HASHES,
     M_BITS,
@@ -34,8 +40,6 @@ from myhadoop_spark.operators.substring import (
 from myhadoop_spark.registry import register
 from myhadoop_spark.materialize import materialize
 
-_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
-
 
 # ---------------------------------------------------------------------------
 # exact-substring dedup (operators/substring.py) — suffix-array-dedup
@@ -49,11 +53,10 @@ _MIN_RUN = MIN_OVERLAP - K_WINDOW + 1
 @register(
     "substring_dedup",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     th AS (SELECT doc_id,
-             list_transform(toks, tok ->
-               CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)
-                 % {HASH_M}) AS thm
+             list_transform(toks, tok -> {sql_hash_bucket('tok', HASH_M)})
+               AS thm
            FROM t),
     w AS (SELECT doc_id,
             unnest(list_transform(
@@ -178,7 +181,7 @@ _CHUNK_C, _CHUNK_V = 32, 8
 _CHUNK_STEP = _CHUNK_C - _CHUNK_V
 
 _CHUNK_CTE = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     s AS (SELECT doc_id, toks, len(toks) AS n,
                  unnest(list_filter(
                      range(1, greatest(len(toks), 1) + 1, {_CHUNK_STEP}),
@@ -250,31 +253,11 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # persistent-LSH-index one-shot twin — operators/lsh_index.py
 # ---------------------------------------------------------------------------
 
-from myhadoop_spark.queries.dedup import (  # noqa: E402
-    MINHASH_BAND_ROWS,
-    MINHASH_FAM,
-    MINHASH_P,
-)
-
 
 @register(
     "signature_neardup",
     oracle=f"""
-    WITH sets AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    th AS (SELECT DISTINCT doc_id,
-                  CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) AS th
-           FROM (SELECT doc_id, unnest(list_distinct(toks)) AS tok
-                 FROM sets)),
-    fam AS (SELECT * FROM (VALUES {', '.join(f'({i}, {a}, {b})'
-                                             for i, a, b in MINHASH_FAM)})
-            AS f(i, a, b)),
-    sig AS (SELECT doc_id, i, i // {MINHASH_BAND_ROWS} AS band,
-                   MIN((a * th + b) % {MINHASH_P}) AS mh
-            FROM th CROSS JOIN fam GROUP BY doc_id, i),
-    bsig AS (SELECT doc_id, band,
-                    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)
-                        AS band_sig
-             FROM sig GROUP BY doc_id, band),
+    WITH {SQL_MINHASH_CTES},
     cand AS (SELECT DISTINCT x.doc_id AS doc1, y.doc_id AS doc2
              FROM bsig x JOIN bsig y
                ON x.band = y.band AND x.band_sig = y.band_sig
@@ -334,9 +317,7 @@ PERCOLATE_QUERIES = [
     qt AS (SELECT query_id, min_should_match,
                   unnest(list_distinct(terms)) AS term FROM q),
     dt AS (SELECT doc_id,
-                  unnest(list_distinct(list_filter(
-                      string_split_regex(text, '\\s+'), t -> t <> '')))
-                      AS term
+                  unnest(list_distinct({sql_tokens()})) AS term
            FROM documents),
     hits AS (SELECT dt.doc_id, qt.query_id, qt.min_should_match,
                     COUNT(*) AS n_matched

@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
-from myhadoop_spark.operators.bm25 import _tokens
-from myhadoop_spark.queries.sampling import _SQL_TOKS as _TOKS
+from myhadoop_spark.functions.text import sql_tokens, tokens
 from myhadoop_spark.registry import register
 _TOP = 10
 
@@ -34,7 +33,7 @@ _TOP = 10
     "corpus_drift",
     oracle=f"""
     WITH t AS (SELECT doc_id % 20 = 0 AS is_ref,
-                      unnest({_TOKS}) AS term FROM documents),
+                      unnest({sql_tokens()}) AS term FROM documents),
     c AS (SELECT term,
                  SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS ref_cnt,
                  SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS cand_cnt
@@ -68,7 +67,7 @@ def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rest, by floored per-term JS contribution."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     t = docs.select((F.col("doc_id") % 20 == 0).alias("is_ref"),
-                    F.explode(_tokens("text")).alias("term"))
+                    F.explode(tokens("text")).alias("term"))
     c = t.groupBy("term").agg(
         F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("ref_cnt"),
         F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("cand_cnt"))

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load_wide
+from myhadoop_spark.functions.text import sql_hash_bucket, sql_tokens
 from myhadoop_spark.operators.dsir import (
     bucket_log_ratios,
     doc_bucket_counts,
@@ -26,15 +27,12 @@ from myhadoop_spark.materialize import materialize
 _B = 4096
 _K = 100
 
-_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
-_SQL_BUCKET = ("CAST(concat('0x', substr(md5({col}), 1, 8)) AS BIGINT) "
-               f"% {_B}")
 
 
 @register(
     "dsir_select",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents),
     f AS (SELECT doc_id,
                  (coalesce(lang, '') = 'en' AND doc_id % 10 = 0) AS is_t,
                  list_concat(toks,
@@ -43,7 +41,7 @@ _SQL_BUCKET = ("CAST(concat('0x', substr(md5({col}), 1, 8)) AS BIGINT) "
                    AS feats
           FROM t WHERE len(toks) > 0),
     occ AS (SELECT doc_id, is_t,
-                   {_SQL_BUCKET.format(col='ft')} AS b
+                   {sql_hash_bucket('ft', _B)} AS b
             FROM (SELECT doc_id, is_t, unnest(feats) AS ft FROM f)),
     pc AS (SELECT doc_id, is_t, b, COUNT(*) AS c
            FROM occ GROUP BY doc_id, is_t, b),

@@ -35,15 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
-from myhadoop_spark.queries.dedup import (
-    _TOKS,
+from myhadoop_spark.functions.text import (
     JACCARD_THRESHOLD,
-    MINHASH_BAND_ROWS,
-    MINHASH_FAM,
-    MINHASH_P,
-    _hashed_token_sets,
-    minhash_signatures,
+    SQL_MINHASH_CTES,
+    hashed_token_set,
 )
+from myhadoop_spark.queries.dedup import minhash_signatures
 from myhadoop_spark.registry import register
 from myhadoop_spark.materialize import materialize
 
@@ -54,8 +51,8 @@ def fuzzy_contaminated(spark: SparkSession, corpus_sets: DataFrame,
                        broadcast_bench: bool = True) -> DataFrame:
     """(doc_id, bench_id, jaccard): every (corpus doc, bench doc)
     candidate pair whose exact token-set Jaccard >= threshold.
-    ``*_sets`` are hashed-token-set frames (doc_id, toks) from
-    queries.dedup._hashed_token_sets."""
+    ``*_sets`` are (doc_id, toks) frames of hashed token sets
+    (functions/text.py::hashed_token_set)."""
     maybe_b = F.broadcast if broadcast_bench else (lambda d: d)
     sig_c = minhash_signatures(spark, "", sets=corpus_sets)
     sig_b = minhash_signatures(spark, "", sets=bench_sets)
@@ -86,8 +83,8 @@ def fuzzy_decontam(spark: SparkSession, corpus: DataFrame,
                    broadcast_bench: bool = True) -> DataFrame:
     """The drop face: ``corpus`` rows whose text is NOT a near-dup of
     any ``bench`` row (both are (doc_id, text, ...) frames)."""
-    cs = _hashed_token_sets(spark, "", docs=corpus)
-    bs = _hashed_token_sets(spark, "", docs=bench)
+    cs = corpus.select("doc_id", hashed_token_set("text").alias("toks"))
+    bs = bench.select("doc_id", hashed_token_set("text").alias("toks"))
     hits = (fuzzy_contaminated(spark, cs, bs, threshold=threshold,
                                broadcast_bench=broadcast_bench)
             .select("doc_id").distinct())
@@ -100,22 +97,7 @@ _BENCH = "doc_id % 17 = 3"
 @register(
     "fuzzy_decontam",
     oracle=rf"""
-    WITH sets AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    th AS (SELECT doc_id,
-                  CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)
-                    AS th
-           FROM (SELECT doc_id, unnest(list_distinct(toks)) AS tok
-                 FROM sets)),
-    fam AS (SELECT * FROM (VALUES
-            {', '.join(f'({i}, {a}, {b})' for i, a, b in MINHASH_FAM)})
-            AS f(i, a, b)),
-    sig AS (SELECT doc_id, i, i // {MINHASH_BAND_ROWS} AS band,
-                   MIN((a * th + b) % {MINHASH_P}) AS mh
-            FROM th CROSS JOIN fam GROUP BY doc_id, i),
-    bsig AS (SELECT doc_id, band,
-                    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)
-                      AS band_sig
-             FROM sig GROUP BY doc_id, band),
+    WITH {SQL_MINHASH_CTES},
     cand AS (SELECT DISTINCT c.doc_id, b.doc_id AS bench_id
              FROM bsig c JOIN bsig b
                ON c.band = b.band AND c.band_sig = b.band_sig
@@ -145,9 +127,10 @@ def fuzzy_decontam_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(~(F.col("doc_id") % 17 == 3))
     bench = docs.filter(F.col("doc_id") % 17 == 3)
-    cs = _hashed_token_sets(spark, "", docs=corpus,
-                            wide=True).transform(materialize)
-    bs = _hashed_token_sets(spark, "", docs=bench)
+    cs = (corpus.repartition(spark.sparkContext.defaultParallelism)
+          .select("doc_id", hashed_token_set("text").alias("toks"))
+          .transform(materialize))
+    bs = bench.select("doc_id", hashed_token_set("text").alias("toks"))
     hits = fuzzy_contaminated(spark, cs, bs)
     return (hits.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_hits"),

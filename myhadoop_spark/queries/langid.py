@@ -23,13 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load_wide
+from myhadoop_spark.functions.text import sql_hash_bucket
 from myhadoop_spark.operators.langid import predict_lang, train_langid
 from myhadoop_spark.registry import register
 
 _SQL_GRAMS = ("list_transform(generate_series(1, length(t) - 2), "
               "i -> substring(t, i, 3))")
-_SQL_BUCKET = ("CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) "
-               "% 4096")
 
 
 @register(
@@ -38,7 +37,7 @@ _SQL_BUCKET = ("CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) "
     WITH docs AS (SELECT doc_id, coalesce(lang, '') AS lang,
                          lower(coalesce(text, '')) AS t
                   FROM documents),
-    tr AS (SELECT lang, {_SQL_BUCKET} AS bucket
+    tr AS (SELECT lang, {sql_hash_bucket('g', 4096)} AS bucket
            FROM (SELECT lang, unnest({_SQL_GRAMS}) AS g
                  FROM docs WHERE doc_id % 5 <> 0)),
     wt AS (SELECT lang, bucket,
@@ -46,7 +45,7 @@ _SQL_BUCKET = ("CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) "
                        // SUM(COUNT(*)) OVER (PARTITION BY lang)
                        AS BIGINT) AS w
            FROM tr GROUP BY lang, bucket),
-    hf AS (SELECT doc_id, {_SQL_BUCKET} AS bucket
+    hf AS (SELECT doc_id, {sql_hash_bucket('g', 4096)} AS bucket
            FROM (SELECT doc_id, unnest({_SQL_GRAMS}) AS g
                  FROM docs WHERE doc_id % 5 = 0)),
     sums AS (SELECT doc_id, lang, CAST(SUM(w) AS BIGINT) AS s

@@ -19,10 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load_wide
+from myhadoop_spark.functions.text import sql_tokens
 from myhadoop_spark.registry import register
 from myhadoop_spark.materialize import materialize
-
-_SQL_TOKS = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
 
 
 def _sql_lines(k: int) -> str:
@@ -31,11 +30,8 @@ def _sql_lines(k: int) -> str:
             f"i -> array_to_string(toks[((i-1)*{k}+1):((i-1)*{k}+{k})], ' '))")
 
 
-_SQL_WC = r"len(list_filter(string_split_regex({x}, '\s+'), t -> t <> ''))"
-
-
 def _sql_keep(min_words: int, drop_subs: tuple[str, ...]) -> str:
-    conds = [_SQL_WC.format(x="x") + f" >= {min_words}"]
+    conds = [f"len({sql_tokens('x')}) >= {min_words}"]
     conds += [f"NOT contains(lower(x), '{s}')" for s in drop_subs]
     return "list_filter(lines, x -> " + " AND ".join(conds) + ")"
 
@@ -43,7 +39,7 @@ def _sql_keep(min_words: int, drop_subs: tuple[str, ...]) -> str:
 @register(
     "c4_clean",
     oracle=rf"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     l AS (SELECT doc_id, {_sql_lines(7)} AS lines FROM t),
     k AS (SELECT doc_id, lines,
                  {_sql_keep(5, ('customer',))} AS kept
@@ -52,9 +48,9 @@ def _sql_keep(min_words: int, drop_subs: tuple[str, ...]) -> str:
                  CAST(len(lines) AS BIGINT) AS n_lines,
                  CAST(len(kept) AS BIGINT) AS n_kept,
                  coalesce(list_sum(list_transform(lines,
-                     x -> {_SQL_WC.format(x='x')})), 0) AS w_all,
+                     x -> len({sql_tokens('x')}))), 0) AS w_all,
                  coalesce(list_sum(list_transform(kept,
-                     x -> {_SQL_WC.format(x='x')})), 0) AS w_kept
+                     x -> len({sql_tokens('x')}))), 0) AS w_kept
           FROM k)
     SELECT doc_id, n_lines, n_kept,
            array_to_string(kept, chr(10)) AS clean_text
@@ -93,7 +89,7 @@ def c4_clean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "line_dedup",
     oracle=rf"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     l AS (SELECT doc_id, {_sql_lines(3)} AS lines FROM t),
     p AS (SELECT doc_id, i AS pos, lines[i] AS line
           FROM l, unnest(generate_series(1, len(lines))) AS u(i)),
@@ -132,16 +128,16 @@ def line_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "line_curate",
     oracle=rf"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     l AS (SELECT doc_id, {_sql_lines(3)} AS lines FROM t),
     k AS (SELECT doc_id, lines,
                  {_sql_keep(3, ('customer',))} AS kept
           FROM l),
     w AS (SELECT doc_id, kept,
                  coalesce(list_sum(list_transform(lines,
-                     x -> {_SQL_WC.format(x='x')})), 0) AS w_all,
+                     x -> len({sql_tokens('x')}))), 0) AS w_all,
                  coalesce(list_sum(list_transform(kept,
-                     x -> {_SQL_WC.format(x='x')})), 0) AS w_kept
+                     x -> len({sql_tokens('x')}))), 0) AS w_kept
           FROM k
           WHERE len(kept) >= 5
             AND NOT contains(lower(array_to_string(lines, chr(10))),
@@ -214,7 +210,7 @@ def _curate_lines_oracle() -> str:
     from myhadoop_spark.queries.quality_checks import _qf_oracle
 
     return rf"""
-    WITH ct0 AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH ct0 AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     cl0 AS (SELECT doc_id, {_sql_lines(3).replace('toks', 'toks')} AS lines
           FROM ct0),
     ck0 AS (SELECT doc_id, lines,
@@ -222,9 +218,9 @@ def _curate_lines_oracle() -> str:
           FROM cl0),
     cw0 AS (SELECT doc_id, kept,
                  coalesce(list_sum(list_transform(lines,
-                     x -> {_SQL_WC.format(x='x')})), 0) AS w_all,
+                     x -> len({sql_tokens('x')}))), 0) AS w_all,
                  coalesce(list_sum(list_transform(kept,
-                     x -> {_SQL_WC.format(x='x')})), 0) AS w_kept
+                     x -> len({sql_tokens('x')}))), 0) AS w_kept
           FROM ck0
           WHERE len(kept) >= 5
             AND NOT contains(lower(array_to_string(lines, chr(10))),
@@ -245,7 +241,7 @@ def _curate_lines_oracle() -> str:
     dc AS (SELECT doc_id, clean_text AS text FROM crb0
            WHERE n_kept >= 2),
     qf AS ({_qf_oracle('dc')}),
-    tk AS (SELECT doc_id, CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens
+    tk AS (SELECT doc_id, CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens
            FROM dc),
     j AS (SELECT qf.doc_id, qf.score, tk.n_tokens
           FROM qf JOIN tk ON qf.doc_id = tk.doc_id),
@@ -329,7 +325,7 @@ def curate_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "within_doc_dedup",
     oracle=rf"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     l AS (SELECT doc_id, {_sql_lines(2)} AS lines FROM t),
     d AS (SELECT doc_id, lines,
                  list_filter(lines, (x, i) ->

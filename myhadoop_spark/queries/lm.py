@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import sql_tokens
 from myhadoop_spark.operators.lm_filter import (
     ALPHA,
     score_perplexity,
@@ -37,12 +38,11 @@ from myhadoop_spark.operators.lm_filter import (
 from myhadoop_spark.registry import register
 from myhadoop_spark.materialize import materialize
 
-_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
 
 # shared CTE chain: documents → add-α bigram LM on the doc_id%20==0
 # reference split → per-candidate floored perplexity in `scored`
 _PPL_CTES = f"""
-    t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
+    t AS (SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents),
     ref AS (SELECT toks FROM t WHERE doc_id % 20 = 0 AND len(toks) > 0),
     uni AS (SELECT w1, count(*) AS c1
             FROM (SELECT unnest(toks) AS w1 FROM ref) GROUP BY w1),

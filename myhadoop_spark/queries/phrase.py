@@ -17,8 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
-from myhadoop_spark.operators.bm25 import _tokens
-from myhadoop_spark.queries.sampling import _SQL_TOKS as _TOKS
+from myhadoop_spark.functions.text import sql_tokens, tokens
 from myhadoop_spark.registry import register
 
 PHRASE = ["part", "filter"]
@@ -49,7 +48,7 @@ def count_phrase_col(toks: Column, phrase: list[str]) -> Column:
 @register(
     "phrase_search",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     c AS (SELECT doc_id,
                  len(list_filter(
                    generate_series(1, greatest(len(toks) - 1, 0)),
@@ -65,7 +64,7 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_occurrences) of the fixture phrase — exact integer
     counts, bitwise cross-engine."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", _tokens("text").alias("_toks"))
+    toks = docs.select("doc_id", tokens("text").alias("_toks"))
     return (toks.select(
         "doc_id",
         count_phrase_col(F.col("_toks"), PHRASE).alias("n_occurrences"))
@@ -94,7 +93,7 @@ def _phrase_block(qid: str, phrase: list[str]) -> str:
 
 @register(
     "phrase_percolate",
-    oracle="WITH t AS (SELECT doc_id, " + _TOKS + " AS toks FROM documents), "
+    oracle="WITH t AS (SELECT doc_id, " + sql_tokens() + " AS toks FROM documents), "
            "u AS (" + " UNION ALL ".join(
                _phrase_block(qid, ph)
                for qid, ph in STANDING_PHRASES.items()) + ") "

@@ -11,7 +11,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
-from myhadoop_spark.queries.text import STOPWORDS, _hits, _sql_hits, _sql_tokens, _tokens
+from myhadoop_spark.functions.text import sql_tokens, tokens
+from myhadoop_spark.queries.text import STOPWORDS, _hits, _sql_hits
 from myhadoop_spark.registry import register
 
 MIN_TOKENS = 30
@@ -32,7 +33,7 @@ MIN_QUALITY = 0.5
       FROM norm
     ),
     toks AS (
-      SELECT doc_id, lang, text, {_sql_tokens('text')} AS t
+      SELECT doc_id, lang, text, {sql_tokens('text')} AS t
       FROM dedup WHERE rn = 1
     ),
     stats AS (
@@ -70,7 +71,7 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
-    toks = _tokens("text")
+    toks = tokens("text")
     n_tokens = F.size(toks).cast("bigint")
     n_distinct = F.size(F.array_distinct(toks)).cast("double")
     stop_hits = _hits(toks, STOPWORDS).cast("double")

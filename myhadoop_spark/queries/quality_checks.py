@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401 (parity with peers)
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import sql_hash_bucket, sql_tokens
 from myhadoop_spark.registry import register
 from myhadoop_spark.materialize import materialize
 
@@ -97,19 +98,18 @@ def data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _QF_THRESHOLD = 0.78
 _QF_STOP = "('the','a','of','and','to','in')"
-_QF_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
-_QF_MARKERS = (f"'#len:' || CAST(len({_QF_TOKS}) // 8 AS VARCHAR), "
-               f"'#stop:' || CAST((16 * len(list_filter({_QF_TOKS}, "
+_QF_MARKERS = (f"'#len:' || CAST(len({sql_tokens()}) // 8 AS VARCHAR), "
+               f"'#stop:' || CAST((16 * len(list_filter({sql_tokens()}, "
                f"x -> x IN {_QF_STOP}))) "
-               f"// greatest(len({_QF_TOKS}), 1) AS VARCHAR), "
-               f"'#div:' || CAST((16 * len(list_distinct({_QF_TOKS}))) "
-               f"// greatest(len({_QF_TOKS}), 1) AS VARCHAR)")
+               f"// greatest(len({sql_tokens()}), 1) AS VARCHAR), "
+               f"'#div:' || CAST((16 * len(list_distinct({sql_tokens()}))) "
+               f"// greatest(len({sql_tokens()}), 1) AS VARCHAR)")
 
 
 def _qf_feats() -> str:
     from myhadoop_spark.operators.classifier import MARKER_BOOST
 
-    return (f"list_concat({_QF_TOKS}, "
+    return (f"list_concat({sql_tokens()}, "
             f"[{', '.join([_QF_MARKERS] * MARKER_BOOST)}])")
 
 
@@ -119,7 +119,7 @@ def _qf_oracle(source: str = "documents") -> str:
     curate_lines composition feeds the line-cleaned corpus through
     the identical SQL."""
     return f"""
-    WITH t AS (SELECT doc_id, text, {_QF_TOKS} AS toks FROM {source}),
+    WITH t AS (SELECT doc_id, text, {sql_tokens()} AS toks FROM {source}),
     lab AS (SELECT doc_id, text,
               (0.4 * least(1.0, CAST(len(toks) AS DOUBLE)/50.0)
              + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
@@ -219,7 +219,7 @@ def _quality_budget_oracle() -> str:
 
     return rf"""
     WITH qf AS ({_registry.get('quality_filter').oracle}),
-    tk AS (SELECT doc_id, CAST(len({_QF_TOKS}) AS BIGINT) AS n_tokens
+    tk AS (SELECT doc_id, CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens
            FROM documents),
     j AS (SELECT qf.doc_id, qf.score, tk.n_tokens
           FROM qf JOIN tk ON qf.doc_id = tk.doc_id),
@@ -317,7 +317,7 @@ def length_band(docs: DataFrame, *, group_col: str = "source",
     "length_trim",
     oracle=f"""
     WITH t AS (SELECT doc_id, source,
-                      CAST(len({_QF_TOKS}) AS BIGINT) AS n_tokens
+                      CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens
                FROM documents),
     q AS (SELECT source,
                  quantile_cont(CAST(n_tokens AS DOUBLE), {_LT_LO}) AS lo,
@@ -358,11 +358,10 @@ _QB_Q = 50_000  # ~15 quality levels over the fixture's score range
 
 
 def _quantized_budget_oracle() -> str:
-    rk = ("CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), "
-          "1, 8)) AS BIGINT) % 1000000")
+    rk = sql_hash_bucket("doc_id", 1000000)
     return rf"""
     WITH qf AS ({_qf_oracle()}),
-    tk AS (SELECT doc_id, CAST(len({_QF_TOKS}) AS BIGINT) AS n_tokens
+    tk AS (SELECT doc_id, CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens
            FROM documents),
     j AS (SELECT qf.doc_id, qf.score, tk.n_tokens
           FROM qf JOIN tk ON qf.doc_id = tk.doc_id),

@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load_wide
-from myhadoop_spark.queries.text import _sql_tokens, _tokens
+from myhadoop_spark.functions.text import sql_tokens, tokens
 from myhadoop_spark.registry import register
 
 TOP_NS = (2, 3, 4)
@@ -122,7 +122,7 @@ def _dup_fold(sorted_grams: Column) -> Column:
 
 def _oracle() -> str:
     ctes = [
-        f"t AS (SELECT doc_id, text, {_sql_tokens('text')} AS toks"
+        f"t AS (SELECT doc_id, text, {sql_tokens('text')} AS toks"
         f" FROM documents)",
         "b AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,"
         " CAST(len(toks) AS BIGINT) AS n_tokens, toks FROM t)",
@@ -178,7 +178,7 @@ def _oracle() -> str:
 def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Gopher repetition signals — see module docstring."""
     docs = load_wide(spark, sf_dir, "documents")
-    docs = docs.withColumn("_toks", _tokens())
+    docs = docs.withColumn("_toks", tokens())
     toks = F.col("_toks")
     for n in TOP_NS:
         docs = docs.withColumn(

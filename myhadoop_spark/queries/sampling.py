@@ -6,7 +6,7 @@ layouts. Pipelines that must be auditable sample by CONTENT HASH:
 hash(id) mod N < k selects a stable pseudo-random k/N fraction that any
 engine reproduces bit-for-bit, survives repartitioning, and composes
 (the same doc lands in the same split everywhere). md5-derived hashes
-keep it engine-portable (same trick as dedup.py).
+keep it engine-portable (functions/text.py::hash_bucket).
 
 All four sampling strategies are declared as ONE tagged battery query
 (`sampling`) so the driver gate checks every method in a single row:
@@ -22,28 +22,24 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import (
+    hash_bucket,
+    sql_hash_bucket,
+    sql_tokens,
+    tokens,
+)
 from myhadoop_spark.registry import register
 
 
-def hash_bucket(col: Column, buckets: int = 100) -> Column:
-    """Stable pseudo-random bucket in [0, buckets) from a column value."""
-    h = F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
-    return h % buckets
-
-
-_SQL_BUCKET = ("CAST(concat('0x', substr(md5(CAST({col} AS VARCHAR)), 1, 8)) "
-               "AS BIGINT) % {n}")
-
-_SQL_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
 
 
 @register(
     "sampling",
     oracle=f"""
     WITH b AS (SELECT doc_id, lang,
-                      {_SQL_BUCKET.format(col='doc_id', n=100)} AS bucket
+                      {sql_hash_bucket('doc_id', 100)} AS bucket
                FROM documents),
-    t AS (SELECT doc_id, lang, {_SQL_TOKS} AS toks FROM documents),
+    t AS (SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents),
     q AS (SELECT doc_id, lang,
                  0.5 * least(1.0, CAST(len(toks) AS DOUBLE) / 50.0)
                    + 0.5 * (CAST(len(list_distinct(toks)) AS DOUBLE)
@@ -52,7 +48,7 @@ _SQL_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
     r AS (SELECT doc_id, lang,
                  ROW_NUMBER() OVER (
                    PARTITION BY lang
-                   ORDER BY {_SQL_BUCKET.format(col='doc_id', n=1000000)}
+                   ORDER BY {sql_hash_bucket('doc_id', 1000000)}
                             ASC, doc_id ASC) AS rn
           FROM documents)
     SELECT 'hash20' AS method, doc_id, lang FROM b WHERE bucket < 20
@@ -64,7 +60,7 @@ _SQL_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
     SELECT 'strat20', doc_id, lang FROM r WHERE rn <= 20
     UNION ALL
     SELECT 'qweighted', doc_id, lang FROM q
-    WHERE CAST({_SQL_BUCKET.format(col='doc_id', n=1000)} AS DOUBLE) / 1000.0
+    WHERE CAST({sql_hash_bucket('doc_id', 1000)} AS DOUBLE) / 1000.0
           < quality * 0.5
     """,
     tags=("sampling", "extension"),
@@ -100,7 +96,7 @@ def sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 20)
         .select(F.lit("strat20").alias("method"), "doc_id", "lang")
     )
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = tokens()
     n_tokens = F.size(toks).cast("double")
     n_distinct = F.size(F.array_distinct(toks)).cast("double")
     quality = (F.lit(0.5) * F.least(F.lit(1.0), n_tokens / F.lit(50.0))
@@ -141,9 +137,9 @@ def weighted_sample_keys(id_col: Column, weight_col: Column) -> Column:
 @register(
     "weighted_sample",
     oracle=f"""
-    WITH t AS (SELECT doc_id, len({_SQL_TOKS}) AS w FROM documents),
+    WITH t AS (SELECT doc_id, len({sql_tokens()}) AS w FROM documents),
     k AS (SELECT doc_id, w,
-                 power((CAST({_SQL_BUCKET.format(col='doc_id', n=1000000)}
+                 power((CAST({sql_hash_bucket('doc_id', 1000000)}
                         AS DOUBLE) + 1.0) / 1000002.0,
                        1.0 / CAST(w AS DOUBLE)) AS key
           FROM t WHERE w > 0)
@@ -164,7 +160,7 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide single-partition window); ranks attach to the N
     survivors afterwards."""
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = tokens()
     t = (docs.select("doc_id", F.size(toks).alias("w"))
          .filter(F.col("w") > 0))
     keyed = t.withColumn(

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load_wide
+from myhadoop_spark.functions.text import sql_tokens, tokens
 from myhadoop_spark.registry import register
 
 # stopword / marker lists (tiny, deterministic; shared with the SQL oracles)
@@ -29,21 +30,6 @@ LANG_MARKERS = {
     "fr": ("le", "la", "les", "et", "est", "un"),
     "es": ("el", "la", "los", "y", "es", "un"),
 }
-
-
-def _tokens(col: str = "text") -> Column:
-    """Reference tokenization (str.split() semantics,
-    /root/reference/datanode.py:600-602) as an array column.
-
-    Parity caveat: Java/DuckDB regex \\s is ASCII whitespace while
-    Python str.split() also splits on Unicode whitespace (NBSP, em
-    space, …) — parity with the reference holds for ASCII-whitespace
-    corpora, which covers both the reference corpus and the fixtures."""
-    return F.filter(F.split(F.col(col), r"\s+"), lambda t: t != F.lit(""))
-
-
-def _sql_tokens(col: str = "text") -> str:
-    return rf"list_filter(string_split_regex({col}, '\s+'), t -> t <> '')"
 
 
 def _hits(tokens: Column, words: tuple[str, ...]) -> Column:
@@ -159,7 +145,7 @@ def _max_run(arr: Column) -> Column:
     "doc_metrics",
     oracle=rf"""
     WITH t AS (SELECT doc_id, lang, source, text,
-                      {_sql_tokens('text')} AS toks
+                      {sql_tokens('text')} AS toks
                FROM documents),
     h AS (SELECT *,
                  CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -211,8 +197,7 @@ def _max_run(arr: Column) -> Column:
            CAST(ceil(length(text) / 4.0) AS BIGINT) AS est_bpe_tokens,
            md5(lower(trim(text))) AS fp_md5,
            md5(array_to_string(list_sort(list_distinct(
-               list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                           x -> x <> ''))), ' ')) AS fp_shingle,
+               {sql_tokens('lower(trim(text))')})), ' ')) AS fp_shingle,
            COALESCE(tw.top_word_count, 0) AS top_word_count,
            CAST(COALESCE(tw.top_word_count, 0) AS DOUBLE)
              / CAST(n_tokens AS DOUBLE) AS top_word_frac,
@@ -267,7 +252,7 @@ def doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                      lambda c: c != F.lit("")), F.ascii))
         .withColumn("_kh", _kgram_hashes(F.col("_codes")))
         .withColumn("_winnow", _window_mins(F.col("_kh"))))
-    toks = _tokens()
+    toks = tokens()
     n_tokens = F.size(toks).cast("bigint")
     n_distinct = F.size(F.array_distinct(toks)).cast("bigint")
     stop_hits = _hits(toks, STOPWORDS)
@@ -292,7 +277,7 @@ def doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_word = _max_run(F.array_sort(toks))
     winnow = F.col("_winnow")
     norm = F.lower(F.trim(F.col("text")))
-    norm_toks = F.filter(F.split(norm, r"\s+"), lambda t: t != F.lit(""))
+    norm_toks = tokens(norm)
     return docs.select(
         "doc_id",
         "lang",
@@ -339,11 +324,8 @@ def doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "strip_boilerplate",
-    oracle=r"""
-    WITH t AS (SELECT doc_id,
-                      list_filter(string_split_regex(text, '\s+'),
-                                  x -> x <> '') AS toks
-               FROM documents),
+    oracle=f"""
+    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
     sh AS (SELECT doc_id, i, array_to_string(toks[i:i+1], ' ') AS g
            FROM t, unnest(generate_series(1, len(toks) - 1)) AS u(i)),
     bp AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df

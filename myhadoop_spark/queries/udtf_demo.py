@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import sql_tokens
 from myhadoop_spark.registry import register
 
 
@@ -33,10 +34,8 @@ class TokenizeUdtf:
 
 @register(
     "udtf_tokens",
-    oracle=r"""
-    WITH t AS (SELECT doc_id,
-                      unnest(list_filter(string_split_regex(text, '\s+'),
-                                         x -> x <> '')) AS token
+    oracle=f"""
+    WITH t AS (SELECT doc_id, unnest({sql_tokens()}) AS token
                FROM documents)
     SELECT doc_id,
            COUNT(*) AS n_tokens,

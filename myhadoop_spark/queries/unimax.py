@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from myhadoop_spark.catalog import load_wide
+from myhadoop_spark.functions.text import sql_hash_bucket, sql_tokens
 from myhadoop_spark.operators.unimax import (
     doc_token_counts,
     unimax_allocate,
@@ -24,16 +25,13 @@ from myhadoop_spark.operators.unimax import (
 )
 from myhadoop_spark.registry import register
 
-_SQL_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
-_SQL_HASH = ("CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) "
-             "AS BIGINT) % 1000000")
 
 
 @register(
     "unimax_select",
     oracle=f"""
     WITH dt AS (SELECT coalesce(lang, '') AS lang, doc_id,
-                       CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens
+                       CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens
                 FROM documents),
     sz AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS cap
            FROM dt GROUP BY lang),
@@ -64,7 +62,7 @@ _SQL_HASH = ("CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) "
     r AS (SELECT lang, doc_id, n_tokens,
                  CAST(COALESCE(SUM(n_tokens) OVER (
                         PARTITION BY lang
-                        ORDER BY {_SQL_HASH} ASC, doc_id ASC
+                        ORDER BY {sql_hash_bucket('doc_id', 1000000)} ASC, doc_id ASC
                         ROWS BETWEEN UNBOUNDED PRECEDING
                              AND 1 PRECEDING), 0) AS BIGINT) AS bfr
           FROM dt)
@@ -97,7 +95,7 @@ def unimax_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "temperature_select",
     oracle=f"""
     WITH dt AS (SELECT coalesce(lang, '') AS lang, doc_id,
-                       CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens
+                       CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens
                 FROM documents),
     sz AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS sz
            FROM dt GROUP BY lang),
@@ -117,7 +115,7 @@ def unimax_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     r AS (SELECT lang, doc_id, n_tokens,
                  CAST(COALESCE(SUM(n_tokens) OVER (
                         PARTITION BY lang
-                        ORDER BY {_SQL_HASH} ASC, doc_id ASC
+                        ORDER BY {sql_hash_bucket('doc_id', 1000000)} ASC, doc_id ASC
                         ROWS BETWEEN UNBOUNDED PRECEDING
                              AND 1 PRECEDING), 0) AS BIGINT) AS bfr
           FROM dt)

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load_wide
+from myhadoop_spark.functions.text import sql_hash_bucket, sql_tokens, tokens
 from myhadoop_spark.operators.url_dedup import (
     canonical_url,
     domain_cap,
@@ -46,10 +47,6 @@ _SQL_SCORE = ("CAST(CASE WHEN strpos(canon_url, '/a/') > 0 "
               "THEN 2 ELSE 0 END "
               "+ CASE WHEN strpos(canon_url, '?id=') > 0 "
               "THEN 1 ELSE 0 END AS BIGINT)")
-_SQL_DTOKS = (r"list_filter(string_split_regex(d.text, '\s+'), "
-              r"t -> t <> '')")
-_SQL_RANK = ("CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) "
-             "AS BIGINT) % 1000000")
 
 
 def _url_expr() -> F.Column:
@@ -81,7 +78,7 @@ def _with_urls(docs: DataFrame) -> DataFrame:
                       doc_id % 4 AS v,
                       CAST(doc_id // 2 AS VARCHAR) AS pid,
                       CAST(doc_id % 7 AS VARCHAR) AS qid,
-                      {_SQL_RANK} AS r
+                      {sql_hash_bucket('doc_id', 1000000)} AS r
                FROM documents),
     parts AS (SELECT doc_id, r, b AS domain,
                      CASE v
@@ -176,7 +173,7 @@ def url_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                       doc_id % 4 AS v,
                       CAST(doc_id // 2 AS VARCHAR) AS pid,
                       CAST(doc_id % 7 AS VARCHAR) AS qid,
-                      {_SQL_RANK} AS r
+                      {sql_hash_bucket('doc_id', 1000000)} AS r
                FROM documents),
     parts AS (SELECT doc_id, r, b AS domain,
                      CASE v
@@ -197,7 +194,7 @@ def url_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                  FROM dedup WHERE drn = 1)
                WHERE crn <= {_CAP}),
     dt AS (SELECT coalesce(d.lang, '') AS lang, d.doc_id,
-                  CAST(len({_SQL_DTOKS}) AS BIGINT) AS n_tokens
+                  CAST(len({sql_tokens('d.text')}) AS BIGINT) AS n_tokens
            FROM documents d JOIN capped USING (doc_id)),
     sz AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS cap
            FROM dt GROUP BY lang),
@@ -228,7 +225,7 @@ def url_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sel AS (SELECT lang, doc_id, n_tokens,
                    CAST(COALESCE(SUM(n_tokens) OVER (
                           PARTITION BY lang
-                          ORDER BY {_SQL_RANK} ASC, doc_id ASC
+                          ORDER BY {sql_hash_bucket('doc_id', 1000000)} ASC, doc_id ASC
                           ROWS BETWEEN UNBOUNDED PRECEDING
                                AND 1 PRECEDING), 0) AS BIGINT) AS bfr
             FROM dt)
@@ -280,8 +277,8 @@ def curate_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured a modest ~10%; at scale they shuffle, and this is the
     # §8 discipline). Same tokenizer expression, same rows → dt is
     # bitwise unchanged (symdiff 0 at sf0.1).
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
-    narrow = (filtered.withColumn("n_tokens", F.size(toks).cast("long"))
+    narrow = (filtered.withColumn("n_tokens",
+                                  F.size(tokens()).cast("long"))
               .drop("text"))
     deduped = url_dedup(narrow, url_col="url", id_col="doc_id")
     capped = domain_cap(deduped, domain_col="domain", cap=_CAP)

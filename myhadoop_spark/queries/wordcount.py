@@ -22,15 +22,9 @@ from myhadoop_spark.registry import register
 
 
 def wordcount_df(text_df: DataFrame, column: str = "text") -> DataFrame:
-    """word → count over a string column, reference tokenization.
-
-    Parity caveat: the Java-regex \\s class is ASCII whitespace, while
-    the reference's Python str.split() also breaks on Unicode whitespace
-    (NBSP, em space, …). Reference parity therefore holds for
-    ASCII-whitespace corpora — which includes the reference's own corpus
-    (verified byte-level in tests/test_wordcount_parity.py) and the
-    fixtures. A (?U)-flagged Spark split would diverge from the RE2-based
-    oracle instead, so ASCII semantics are the deliberate common ground."""
+    """word → count over a string column, reference tokenization: the
+    tokens of functions/text.py (see its ASCII-whitespace parity
+    caveat), in the explode-then-filter form."""
     words = text_df.select(
         F.explode(F.split(F.col(column), r"\s+")).alias("word")
     ).filter(F.col("word") != "")

@@ -45,9 +45,9 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import tokens
 from myhadoop_spark.operators.boilerplate import (
     _shingles,
-    _toks,
     strip_against,
 )
 from myhadoop_spark.streaming.observed import Observed
@@ -61,7 +61,7 @@ def _batch_df_counts(batch: DataFrame, *, n: int, text_col: str,
     """(g, df) over ONE batch — df counts the batch's distinct docs,
     exactly operators/boilerplate.py::boilerplate_grams without the
     threshold filter (the stream thresholds AFTER the merge)."""
-    sh = (batch.withColumn("_toks", _toks(text_col))
+    sh = (batch.withColumn("_toks", tokens(text_col))
           .select(F.col(id_col).alias("_id"),
                   F.explode(_shingles(n)).alias("_s"))
           .select("_id", F.col("_s.g").alias("g")))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myhadoop_spark.queries.dedup import JACCARD_THRESHOLD, _hashed_token_sets
+from myhadoop_spark.functions.text import JACCARD_THRESHOLD, hashed_token_set
 from myhadoop_spark.queries.fuzzy_decontam import fuzzy_contaminated
 from myhadoop_spark.materialize import materialize
 from myhadoop_spark.streaming.observed import Observed
@@ -48,9 +48,10 @@ def start_fuzzy_decontam_stream(doc_stream: DataFrame,
             return
         obs = Observed(stats is not None)
         if "bs" not in cache:
-            cache["bs"] = _hashed_token_sets(
-                spark, "", docs=bench_docs).transform(materialize)
-        cs = _hashed_token_sets(spark, "", docs=batch)
+            cache["bs"] = bench_docs.select(
+                "doc_id", hashed_token_set("text").alias("toks")
+            ).transform(materialize)
+        cs = batch.select("doc_id", hashed_token_set("text").alias("toks"))
         hits = (fuzzy_contaminated(spark, cs, cache["bs"],
                                    threshold=threshold)
                 .select("doc_id").distinct())

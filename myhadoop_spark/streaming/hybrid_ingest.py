@@ -45,6 +45,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import tokens
 from myhadoop_spark.operators.bm25_index import (
     append_to_bm25_index,
     build_bm25_index,
@@ -75,8 +76,7 @@ def hashed_bow(dim: int = 16) -> Callable[[str], Column]:
     scale with no model dependency."""
 
     def _embed(text_col: str) -> Column:
-        toks = F.filter(F.split(F.col(text_col), r"\s+"),
-                        lambda t: t != F.lit(""))
+        toks = tokens(text_col)
         # ONE fold over the tokens building the whole vector — `toks`
         # appears once in the expression tree, so the split+filter
         # evaluates once per row (the HOF recompute trap named in

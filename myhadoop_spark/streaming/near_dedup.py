@@ -5,7 +5,7 @@ pipeline instead wants to DROP incoming documents that near-duplicate
 something already seen. Exact-dup streaming uses dropDuplicates on a
 content hash; near-dup streaming needs a canonical sketch that equal
 near-duplicates collide on. The 16-minhash signature (zero-shuffle
-narrow fold, shared with the batch operator) is that sketch: documents
+narrow fold, functions/text.py's MinHash family) is that sketch: documents
 whose full signatures are identical are near-duplicates with very high
 probability, and signature equality is a plain equality — so streaming
 dropDuplicates machinery applies unchanged, with watermark-bounded state.
@@ -20,8 +20,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from myhadoop_spark.functions.text import (
+    MINHASH_BAND_ROWS,
+    MINHASH_FAM,
+    hash32,
+    minhash_fold,
+    tokens,
+)
 from myhadoop_spark.operators.hof import let
-from myhadoop_spark.queries.dedup import MINHASH_FAM, MINHASH_P
 
 
 def minhash_signature_col(text_col: str = "text") -> Column:
@@ -36,27 +42,12 @@ def minhash_signature_col(text_col: str = "text") -> Column:
     return let(
         _hashed_tokens_col(text_col),
         lambda hashed: F.array_join(
-            F.array(*[_mh_fold(hashed, i).cast("string")
+            F.array(*[minhash_fold(hashed, i).cast("string")
                       for i in range(len(MINHASH_FAM))]), ","))
 
 
 def _hashed_tokens_col(text_col: str) -> Column:
-    toks = F.array_distinct(
-        F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")))
-    return F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"))
-
-
-def _mh_fold(hashed: Column, i: int) -> Column:
-    """One minhash fold over an already let-bound hashed token
-    array (`minhash_signature_col` binds it; HOF projections evaluate
-    interpreted, so only a lambda-variable reference is free — the r4
-    recompute-trap family, operators/substring.py)."""
-    _, a, b = MINHASH_FAM[i]
-    return F.aggregate(
-        hashed,
-        F.lit(MINHASH_P).cast("long"),
-        lambda acc, th: F.least(acc, (F.lit(a) * th + F.lit(b)) % MINHASH_P))
+    return F.transform(F.array_distinct(tokens(text_col)), hash32)
 
 
 def near_dedup_stream(docs: DataFrame, ts_col: str = "ts",
@@ -81,8 +72,6 @@ def near_dedup_stream(docs: DataFrame, ts_col: str = "ts",
 # was seen before (the same OR-matching the batch LSH uses).
 # ---------------------------------------------------------------------------
 
-BAND_ROWS = 4  # bands of 4 minhashes each, matching dedup.py
-
 
 def band_keys_col(text_col: str = "text") -> Column:
     """Array of 4 band keys ('band_index:sig') for a text column —
@@ -91,16 +80,16 @@ def band_keys_col(text_col: str = "text") -> Column:
     would tokenize+md5 16x per row — interpreted HOF projections have
     no subexpression elimination), not by re-parsing the full
     signature string per band."""
-    n_bands = len(MINHASH_FAM) // BAND_ROWS
+    n_bands = len(MINHASH_FAM) // MINHASH_BAND_ROWS
     return let(
         _hashed_tokens_col(text_col),
         lambda hashed: F.array(*[
             F.concat(
                 F.lit(f"{b}:"),
                 F.array_join(
-                    F.array(*[_mh_fold(hashed, b * BAND_ROWS + r)
+                    F.array(*[minhash_fold(hashed, b * MINHASH_BAND_ROWS + r)
                               .cast("string")
-                              for r in range(BAND_ROWS)]), ","))
+                              for r in range(MINHASH_BAND_ROWS)]), ","))
             for b in range(n_bands)]))
 
 

@@ -37,7 +37,8 @@ os.environ.setdefault("SPARK_GRAFT_UI", "1")
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
-from myhadoop_spark.operators.bm25 import _tokens, bm25_rank
+from myhadoop_spark.functions.text import tokens
+from myhadoop_spark.operators.bm25 import bm25_rank
 from myhadoop_spark.operators.bm25_index import (
     append_to_bm25_index,
     build_bm25_index,
@@ -66,7 +67,7 @@ def main() -> None:
     n_docs = docs.count()
 
     # deterministic query terms at three frequency ranks
-    freq = (docs.select(F.explode(_tokens("text")).alias("term"))
+    freq = (docs.select(F.explode(tokens("text")).alias("term"))
             .groupBy("term").count()
             .orderBy(F.col("count").desc(), F.col("term").asc())
             .collect())

@@ -106,9 +106,9 @@ def main() -> None:
     # prunes past-budget bands before the sort. Rows record the max
     # single-sort size (rows_out = the largest window partition a task
     # must sort for the head language) plus wall clock for each path.
+    from myhadoop_spark.functions.text import hash_bucket
     from myhadoop_spark.operators.unimax import (
         _HASH_BUCKETS,
-        _rank_hash,
         unimax_select_window,
     )
 
@@ -126,7 +126,7 @@ def main() -> None:
 
     bands = 32
     width = (_HASH_BUCKETS + bands - 1) // bands
-    sizes = (dt.withColumn("_h", _rank_hash(F.col("doc_id")))
+    sizes = (dt.withColumn("_h", hash_bucket(F.col("doc_id"), _HASH_BUCKETS))
              .withColumn("_band", F.expr(f"_h div {width}"))
              .groupBy("lang", "_band").count()
              .groupBy("lang").agg(F.max("count").alias("mx"),

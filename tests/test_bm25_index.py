@@ -184,7 +184,7 @@ def test_phrase_search_index_equals_direct_count(spark, tmp_path):
     from-text count (which itself carries the DuckDB oracle) — on the
     driver fixture and on crafted repeat/overlap cases."""
     from myhadoop_spark.catalog import load
-    from myhadoop_spark.operators.bm25 import _tokens
+    from myhadoop_spark.functions.text import tokens
     from myhadoop_spark.operators.bm25_index import phrase_search_index
     from myhadoop_spark.queries.phrase import PHRASE, count_phrase_col
     from tests.conftest import SF_SMOKE
@@ -194,7 +194,7 @@ def test_phrase_search_index_equals_direct_count(spark, tmp_path):
     build_bm25_index(docs, path, n_buckets=16)
     want = {(r.doc_id, r.n_occurrences) for r in
             docs.select("doc_id", count_phrase_col(
-                _tokens("text"), PHRASE).alias("n_occurrences"))
+                tokens("text"), PHRASE).alias("n_occurrences"))
             .filter(F.col("n_occurrences") > 0).collect()}
     got = {(r.doc_id, r.n_occurrences) for r in
            phrase_search_index(spark, path, PHRASE).collect()}
@@ -215,7 +215,7 @@ def test_phrase_search_index_equals_direct_count(spark, tmp_path):
                              (["zz", "a"], {})]:
         direct = {r.doc_id: r.n_occurrences for r in
                   crafted.select("doc_id", count_phrase_col(
-                      _tokens("text"), phrase).alias("n_occurrences"))
+                      tokens("text"), phrase).alias("n_occurrences"))
                   .filter(F.col("n_occurrences") > 0).collect()}
         assert direct == want_map, (phrase, direct)
         via_index = {r.doc_id: r.n_occurrences for r in

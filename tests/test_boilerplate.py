@@ -100,14 +100,14 @@ def test_rebuild_matches_r10_array_contains_path(spark):
     rows += [(900, ""), (901, "x"), (902, "nav home about contact")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
+    from myhadoop_spark.functions.text import tokens
     from myhadoop_spark.operators.boilerplate import (
         _shingles,
-        _toks,
         boilerplate_grams,
     )
 
     def r10_strip(docs, n, min_df):
-        base = docs.withColumn("_toks", _toks("text"))
+        base = docs.withColumn("_toks", tokens("text"))
         sh = base.select(F.col("doc_id"),
                          F.explode(_shingles(n)).alias("_s")) \
             .select("doc_id", F.col("_s.pos").alias("pos"),

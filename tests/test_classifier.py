@@ -11,11 +11,11 @@ import duckdb
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
+from myhadoop_spark.functions.text import tokens
 from myhadoop_spark.operators.classifier import (
     MARKER_BOOST,
     SCALE,
     score_documents,
-    tokens,
     train_token_weights,
 )
 from tests.conftest import SF_SMOKE

@@ -151,9 +151,9 @@ def test_phrase_rarest_anchor_same_output(spark):
         [("p1", ["part", "filter"]), ("p2", ["table", "key", "scan"])],
         "query_id string, phrase array<string>")
     # df table from the corpus itself (the BM25-index shape)
-    from myhadoop_spark.operators.bm25 import _tokens
+    from myhadoop_spark.functions.text import tokens
 
-    term_df = (docs.select(F.explode(F.array_distinct(_tokens("text")))
+    term_df = (docs.select(F.explode(F.array_distinct(tokens("text")))
                            .alias("term"))
                .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
                .localCheckpoint())

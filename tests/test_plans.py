@@ -225,7 +225,7 @@ def test_sampling_is_narrow(spark):
     from pyspark.sql import functions as F
 
     from myhadoop_spark.catalog import load
-    from myhadoop_spark.queries.sampling import hash_bucket
+    from myhadoop_spark.functions.text import hash_bucket
 
     docs = load(spark, SF_SMOKE, "documents")
     b = hash_bucket(F.col("doc_id"))

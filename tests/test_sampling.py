@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from myhadoop_spark import registry
 from myhadoop_spark.catalog import load
-from myhadoop_spark.queries.sampling import hash_bucket
+from myhadoop_spark.functions.text import hash_bucket
 from tests.conftest import SF_SMOKE
 
 

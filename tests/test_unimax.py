@@ -195,7 +195,8 @@ def test_banded_select_band_pruning(spark):
     a strict subset of the corpus (the 'work ∝ kept prefix' claim)."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from myhadoop_spark.operators.unimax import _HASH_BUCKETS, _rank_hash
+    from myhadoop_spark.functions.text import hash_bucket
+    from myhadoop_spark.operators.unimax import _HASH_BUCKETS
 
     dt = _tok_df(spark)
     total = sum(n for _, _, n in DOCS)
@@ -206,7 +207,7 @@ def test_banded_select_band_pruning(spark):
     wb = __import__("pyspark.sql", fromlist=["Window"]).Window \
         .partitionBy("lang").orderBy("_band") \
         .rowsBetween(-(1 << 30), -1)
-    banded = dt.withColumn("_h", _rank_hash(F.col("doc_id"))) \
+    banded = dt.withColumn("_h", hash_bucket(F.col("doc_id"), _HASH_BUCKETS)) \
         .withColumn("_band", F.expr(f"_h div {width}"))
     offs = (banded.groupBy("lang", "_band")
             .agg(F.sum("n_tokens").alias("_bsum"))

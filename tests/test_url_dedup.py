@@ -119,16 +119,14 @@ def test_domain_cap_branch_coverage(spark):
     """All three band labels fire: with 4000 hot docs, 64 bands and
     cap 1500, some bands are wholly kept (cum+n <= cap), some wholly
     dropped (cum >= cap), and exactly one is the boundary."""
-    from myhadoop_spark.operators.url_dedup import (
-        _HASH_BUCKETS,
-        _rank_hash,
-    )
+    from myhadoop_spark.functions.text import hash_bucket
+    from myhadoop_spark.operators.url_dedup import _HASH_BUCKETS
     from pyspark.sql import Window
 
     df, cap, bands = _skewed(spark), 1500, 64
     width = (_HASH_BUCKETS + bands - 1) // bands
     d = (df.filter(F.col("domain") == "hot.com")
-         .withColumn("_h", _rank_hash(F.col("doc_id")))
+         .withColumn("_h", hash_bucket(F.col("doc_id"), _HASH_BUCKETS))
          .withColumn("_band", F.expr(f"_h div {width}")))
     wb = (Window.partitionBy("domain").orderBy("_band")
           .rowsBetween(Window.unboundedPreceding, -1))
