@@ -19,7 +19,8 @@ continuous-agg HLL discipline); merging sketches is integer addition
 on the same bounded key space, so per-split sketches union exactly
 (CMS(A ∪ B) = CMS(A) + CMS(B), bitwise — test-pinned), which is what
 makes the sketch maintainable per micro-batch or per partition-era
-without rescanning history. Estimation broadcasts the query terms.
+without rescanning history. Estimation broadcasts the sketch: its
+depth × width rows are bounded whatever the corpus or the query set.
 
 Reference analog: none — §2.3 extension surface (sketch family).
 """
@@ -64,8 +65,9 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
 def cms_estimate(cms: DataFrame, terms: DataFrame, term_col: str, *,
                  depth: int = 4, width: int = 1024) -> DataFrame:
     """(term_col…, est): min over rows of the term's bucket count.
-    ``terms`` is broadcast (a query set, not a corpus); a bucket no
-    occurrence ever hit estimates 0."""
+    The sketch is broadcast to the probes (the left side of a left
+    join, which Spark cannot build); a bucket no occurrence ever hit
+    estimates 0."""
     t = F.col(term_col)
     probes = terms.select(
         "*",
@@ -76,8 +78,7 @@ def cms_estimate(cms: DataFrame, terms: DataFrame, term_col: str, *,
             for j in range(depth)])).alias("_jb"))
     probes = probes.select(*terms.columns, F.col("_jb.j").alias("j"),
                            F.col("_jb.bucket").alias("bucket"))
-    joined = (F.broadcast(probes)
-              .join(cms, ["j", "bucket"], "left")
+    joined = (probes.join(F.broadcast(cms), ["j", "bucket"], "left")
               .withColumn("_c", F.coalesce("c", F.lit(0).cast("long"))))
     return (joined.groupBy(*terms.columns)
             .agg(F.min("_c").alias("est")))
@@ -100,7 +101,7 @@ def cms_verified_topk(df: DataFrame, term_col: str = "term", *,
     certified bracket, pinned against exact counts in
     tests/test_cms.py. Scale shape: both sketches are one bounded-
     state pass each (partitions × capacity; depth × width); the probe
-    broadcasts k rows."""
+    broadcasts the depth × width sketch."""
     from myhadoop_spark.operators.heavy_hitters import heavy_hitters_topk
 
     cands = (heavy_hitters_topk(df, term_col, k=k, capacity=capacity)

@@ -10,11 +10,10 @@ Algorithm (the standard peeling fixpoint, distributed): repeatedly
 drop every vertex whose CURRENT degree is < k until none changes.
 Each round is one degree aggregation (partial-aggregable count) + one
 semi-join edge restriction — no windows, no driver state beyond the
-per-round change count (the connected_components loop discipline:
-ONE action per round, localCheckpoint between rounds, loud
-non-convergence). Rounds are bounded by the peeling depth, in
-practice a handful; the loop raises rather than returning a
-non-fixpoint subgraph.
+per-round change count (ONE action per round, localCheckpoint
+between rounds, loud non-convergence). Rounds are bounded by the
+peeling depth, in practice a handful; the loop raises rather than
+returning a non-fixpoint subgraph.
 
 ``core_numbers`` runs the peel at increasing k and records the last
 k at which each vertex survived — exact core numbers. Each k peels

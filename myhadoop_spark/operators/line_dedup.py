@@ -34,6 +34,8 @@ queries/dedup.py exact/minhash and operators/substring.py).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -64,7 +66,9 @@ def dedup_against(docs: DataFrame, seen: DataFrame | None, *,
                   id_col: str = "doc_id",
                   normalize: bool = False,
                   min_kept_lines: int = 1,
-                  carry_base: bool = True) -> DataFrame:
+                  carry_base: bool = True,
+                  observe_docs: Callable[[DataFrame], DataFrame]
+                  | None = None) -> DataFrame:
     """The composable core: keep-first line dedup WITHIN ``docs``,
     after first discarding every line whose key appears in ``seen``
     (a one-column ``key`` DataFrame — the already-ingested corpus).
@@ -78,6 +82,10 @@ def dedup_against(docs: DataFrame, seen: DataFrame | None, *,
     but docs' other columns (n_lines, original text) — a composition
     that doesn't read them saves one shuffle join and one recompute
     of the docs subtree (r13 stage fusion).
+
+    ``observe_docs`` (with ``carry_base``) wraps the rebuild join while
+    it still holds one row per doc of ``docs``, before the
+    ``min_kept_lines`` filter: the place to observe the input's size.
     """
     if int(min_kept_lines) < 1:
         # a doc with zero survivors is always dropped (CCNet drops
@@ -120,11 +128,14 @@ def dedup_against(docs: DataFrame, seen: DataFrame | None, *,
         return (rebuilt
                 .filter(F.col("n_kept") >= F.lit(int(min_kept_lines)))
                 .withColumnRenamed("_id", id_col))
-    out = (base.join(rebuilt,
-                     base[id_col] == rebuilt["_id"], "inner")
-           .filter(F.col("n_kept") >= F.lit(int(min_kept_lines)))
-           .drop("_id", "_lines"))
-    return out
+    # a left join the filter below turns back into the inner one; an
+    # observation between them keeps it outer, so it still sees every
+    # doc when no line survives and AQE prunes the empty rebuild
+    out = base.join(rebuilt, base[id_col] == rebuilt["_id"], "left")
+    if observe_docs is not None:
+        out = observe_docs(out)
+    return (out.filter(F.col("n_kept") >= F.lit(int(min_kept_lines)))
+            .drop("_id", "_lines"))
 
 
 def line_dedup(docs: DataFrame, *, lines_col: str | Column,

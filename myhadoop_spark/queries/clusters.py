@@ -1,6 +1,6 @@
 """dedup_clusters — near-duplicate clusters from pairwise edges.
 
-Iterative on the engine side (pointer-jumping min-label propagation,
+Iterative on the engine side (large-star/small-star edge contraction,
 operators/connected_components.py — no single-statement Spark SQL can
 express a fixpoint), but DuckDB CAN express the fixpoint as a recursive
 CTE, so since r2 this query is fully oracle-checked: the oracle inlines
@@ -8,9 +8,8 @@ the embed_neardup pair oracle, symmetrizes the edges, walks the
 transitive closure with WITH RECURSIVE, and takes MIN(reachable id) per
 node — exactly the engine's (id, component) contract. The closure is
 quadratic in component size, fine at oracle scale (sf0.01); the engine
-side costs O(edges) per round and is the form that scales (its round
-count is not log(diameter) in general — see
-operators/connected_components.py).
+side costs O(edges) per round and is the form that scales (O(log² n)
+rounds whatever the id order — see operators/connected_components.py).
 """
 
 from __future__ import annotations

@@ -211,7 +211,7 @@ def _curate_lines_oracle() -> str:
 
     return rf"""
     WITH ct0 AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
-    cl0 AS (SELECT doc_id, {_sql_lines(3).replace('toks', 'toks')} AS lines
+    cl0 AS (SELECT doc_id, {_sql_lines(3)} AS lines
           FROM ct0),
     ck0 AS (SELECT doc_id, lines,
                  {_sql_keep(3, ('customer',))} AS kept

@@ -345,8 +345,8 @@ def media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure with WITH RECURSIVE over the media_neardup pair oracle).
     sf_dir unused — planted grids (see media_neardup).
 
-    Scale: pairs are the banded Hamming join; CC is the audited
-    pointer-jumping loop (iteration-bound, flat 1000× curve)."""
+    Scale: pairs are the banded Hamming join; CC is the round-bounded
+    edge contraction of operators/connected_components.py."""
     from myhadoop_spark.operators.connected_components import (
         connected_components,
     )

@@ -82,15 +82,14 @@ def start_line_dedup_stream(doc_stream: DataFrame, *, path: str,
         clean = dedup_against(batch, v.prev,
                               lines_col=lines_col_name, id_col=id_col,
                               normalize=normalize,
-                              min_kept_lines=min_kept_lines)
+                              min_kept_lines=min_kept_lines,
+                              observe_docs=lambda df: obs.rows(df,
+                                                               "docs_in"))
         clean_path = f"{path}/clean/batch_id={v.batch_id}"
         obs.rows(clean, "docs_kept").write.mode("overwrite").parquet(
             clean_path)
-        # dedup_against reads the batch twice (occurrences, join back);
-        # the state branch reads it once, so docs_in is observed here
         batch_keys = (line_occurrences(
-            obs.rows(batch, "docs_in")
-            .withColumn("_lines", F.col(lines_col_name)),
+            batch.withColumn("_lines", F.col(lines_col_name)),
             id_col=id_col, normalize=normalize)
             .select(F.col("_key").alias("key")).distinct())
         v.write(obs.rows(v.prev.unionByName(batch_keys).distinct()

@@ -7,8 +7,10 @@ An ``Observation`` reports the FIRST action that runs its frame and
 fires once, so a face creates one ``Observed`` per batch and observes
 each frame where it appears exactly once in an action that consumes
 it in full (a write, an eager checkpoint) — never under an
-``isEmpty``/``head`` probe, which stops early. ``get`` blocks until
-that action has run; code after a step's commit point only reads.
+``isEmpty``/``head`` probe, which stops early — and never under a
+shuffle whose input can be empty: AQE then drops the subtree, the
+observation with it, and ``get`` fails. ``get`` blocks until that
+action has run; code after a step's commit point only reads.
 """
 
 from __future__ import annotations

@@ -9,9 +9,9 @@ appends rows to cc_scaling.tsv:
     engine  scale  n_edges  n_nodes  n_components  iterations  wall_s
 
 Graph shape mirrors a real near-dup graph: many 10-node clusters (the
-common case) plus a few 100-node chains (the worst case for label
-propagation — pointer jumping is what keeps those cheap). Deterministic
-generation (id arithmetic, no RNG) so runs are comparable.
+common case) plus a few 100-node chains (the longest paths, whose
+edge set does not shrink under contraction). Deterministic generation
+(id arithmetic, no RNG) so runs are comparable.
 
 Run: python scripts/cc_scaling.py [scales...]   (default: 1 10 100)
 """

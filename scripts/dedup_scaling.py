@@ -13,8 +13,8 @@ What the curve must show (and why it holds by construction):
   * minhash — signatures are a zero-shuffle narrow fold; the only wide
     ops are the band-bucket join and the candidate-pinned verify, so
     shuffle bytes grow ∝ docs + candidates, never docs².
-  * clusters — pointer-jumping CC: iterations ∝ log(diameter), flat in
-    row count (cc_scaling.tsv proved 3k→3M edges flat at 7).
+  * clusters — edge-contraction CC: O(log² n) rounds whatever the id
+    order, the edge set shrinking toward one star per component.
   * decontam — the bench side broadcasts; the corpus streams narrow, so
     shuffle bytes stay ~flat while docs grow 10×.
 

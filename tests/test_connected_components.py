@@ -2,18 +2,17 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import random
 
 from myhadoop_spark import registry
 from myhadoop_spark.operators.connected_components import connected_components
 from tests.conftest import SF_SMOKE
 
 
-def _cc(spark, edges):
+def _cc(spark, edges, stats=None):
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
     return {r["id"]: r["component"]
-            for r in connected_components(df).collect()}
+            for r in connected_components(df, stats=stats).collect()}
 
 
 def test_chain_collapses_to_min(spark):
@@ -37,6 +36,7 @@ def test_star_and_cycle(spark):
 def test_self_edge_isolated_node(spark):
     got = _cc(spark, [(9, 9)])
     assert got == {9: 9}
+    assert _cc(spark, []) == {}
 
 
 def test_dedup_clusters_query(spark):
@@ -54,59 +54,58 @@ def test_dedup_clusters_query(spark):
         assert clusters[comp] == comp  # representative labels itself
 
 
-# --- contraction variant (large-star/small-star, Kiveris et al.) ---
-
-from myhadoop_spark.operators.connected_components import (  # noqa: E402
-    connected_components_contraction,
-)
-
-
-def _ccc(spark, edges, stats=None):
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    return {r["id"]: r["component"]
-            for r in connected_components_contraction(df, stats=stats).collect()}
-
-
-def test_contraction_crafted_graphs(spark):
-    assert _ccc(spark, [(i, i + 1) for i in range(4)]) == \
-        {i: 0 for i in range(5)}
-    assert _ccc(spark, [(0, 1), (1, 2), (10, 11), (20, 21), (21, 22)]) == \
-        {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-    got = _ccc(spark, [(5, i) for i in (6, 7, 8)]
-               + [(100, 101), (101, 102), (102, 100)])
-    assert {got[5], got[6], got[7], got[8]} == {5}
-    assert {got[100], got[101], got[102]} == {100}
-    assert _ccc(spark, [(9, 9)]) == {9: 9}
+def test_permuted_chains_label_to_min_within_budget(spark):
+    """A chain whose ids are shuffled along its length: min-label
+    propagation's rounds grow with its length here (27 and 80 on these
+    two), contraction's stay logarithmic."""
+    for n, seed in [(64, 1), (256, 5)]:
+        perm = list(range(n))
+        random.Random(seed).shuffle(perm)
+        stats: dict = {}
+        got = _cc(spark, list(zip(perm, perm[1:])), stats=stats)
+        assert got == {i: 0 for i in range(n)}, (n, seed)
+        assert stats["iterations"] <= 10, stats
 
 
 def test_contraction_edge_set_contracts(spark):
-    """On a long chain the maintained edge set must SHRINK round over
-    round toward the star forest — the property label propagation
-    lacks (it re-shuffles the full edge set every round)."""
+    """Each round rewires edges toward component minima, so a dense
+    component shrinks to its star: one edge per non-root node."""
     stats: dict = {}
-    got = _ccc(spark, [(i, i + 1) for i in range(63)], stats=stats)
+    clique = [(i, j) for i in range(16) for j in range(i + 1, 16)]
+    assert _cc(spark, clique, stats=stats) == {i: 0 for i in range(16)}
+    assert stats["edge_curve"][0] == 15 < len(clique)
+    stats = {}
+    got = _cc(spark, [(i, i + 1) for i in range(63)], stats=stats)
     assert got == {i: 0 for i in range(64)}
-    curve = stats["edge_curve"]
-    assert curve[-1] == 63          # final star: one edge per non-root
+    assert stats["edge_curve"][-1] == 63
     assert stats["iterations"] >= 2
 
 
-def test_contraction_equals_propagation_random(spark):
-    """Deterministic pseudo-random graphs (id arithmetic, no RNG):
-    both algorithms must produce the identical labeling."""
-    from myhadoop_spark.operators.connected_components import (
-        connected_components,
-    )
+def _components(nodes, edges) -> dict:
+    """Pure-Python union-find: node → smallest id of its component."""
+    parent = {d: d for d in nodes}
 
-    for n, m, salt in [(40, 30, 1), (60, 80, 2), (25, 12, 3)]:
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        a, b = find(a), find(b)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return {d: find(d) for d in parent}
+
+
+def test_random_graphs_match_union_find(spark):
+    """Deterministic pseudo-random graphs (id arithmetic, no RNG)."""
+    for n, m, salt in [(40, 30, 1), (60, 80, 2), (25, 12, 3),
+                       (500, 700, 4)]:
         edges = [(((i * 2654435761 + salt) % n),
                   ((i * 40503 + salt * 7) % n)) for i in range(m)]
-        df = spark.createDataFrame(edges, "src LONG, dst LONG")
-        want = {r["id"]: r["component"]
-                for r in connected_components(df).collect()}
-        got = {r["id"]: r["component"]
-               for r in connected_components_contraction(df).collect()}
-        assert got == want, (n, m, salt)
+        nodes = {x for e in edges for x in e}
+        assert _cc(spark, edges) == _components(nodes, edges), (n, m, salt)
 
 
 def test_cluster_split_is_leakage_safe(spark):
@@ -139,22 +138,11 @@ def test_cluster_keep_best_invariants(spark):
               for r in registry.get("quality_filter").fn(spark, SF_SMOKE)
               .select("doc_id", "score").collect()}
     pairs = registry.get("dedup_minhash").fn(spark, SF_SMOKE).collect()
-    # rebuild the member sets from the pair graph (union-find)
-    parent = {d: d for d in scores}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for p in pairs:
-        a, b = find(p["doc1"]), find(p["doc2"])
-        if a != b:
-            parent[max(a, b)] = min(a, b)
+    # rebuild the member sets from the pair graph
     members: dict[int, list[int]] = {}
-    for d in scores:
-        members.setdefault(find(d), []).append(d)
+    for d, root in _components(
+            scores, [(p["doc1"], p["doc2"]) for p in pairs]).items():
+        members.setdefault(root, []).append(d)
     assert sum(r["n_members"] for r in rows) == len(scores)
     by_comp = {r["component"]: r for r in rows}
     assert set(by_comp) == set(members)

@@ -74,6 +74,9 @@ def test_every_streaming_action_carries_its_reason():
 LINE_BATCHES = [
     [(1, "footer\nalpha"), (2, "footer\nbeta\nalpha"), (3, "")],
     [(4, "footer\ngamma"), (5, "beta")],
+    # no non-blank line: AQE prunes whatever sits under the empty
+    # occurrences' shuffle, so docs_in must be observed elsewhere
+    [(9, ""), (10, "  \n ")],
     [(6, "delta\nfooter"), (7, "delta"), (8, "epsilon\nzeta")],
 ]
 SIM_BATCHES = [
