@@ -85,8 +85,8 @@ def bm25_scores(docs: DataFrame, query_terms: list[str], *,
                 text_col: str = "text") -> DataFrame:
     """(id, score): rational-idf BM25 of every document that matches at
     least one query term. Arithmetic is fully parenthesized and
-    mirrored in the bm25_search oracle — do not "simplify" the
-    expression shapes, bitwise parity depends on them."""
+    mirrored by the Python model in tests/test_bm25.py — do not
+    "simplify" the expression shapes, bitwise parity depends on them."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     # materialize the token array in its own projection: it is

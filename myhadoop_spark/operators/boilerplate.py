@@ -23,11 +23,11 @@ equi-join of the shingle stream against the boilerplate set (B is a
 df-threshold survivor set: high-frequency grams are FEW — but it is
 data-dependent, so it joins hash-partitioned rather than assuming
 broadcast), one per-doc covered-position collect_set (bounded by the
-doc's own length — per-document state, the doc_metrics discipline),
+doc's own length — per-document state),
 one narrow rebuild projection. No windows, no UDFs, no driver state.
 
 Reference analog: none — §2.3 extension surface (text-curation
-family, beside operators/scrub.py and queries/repetition.py).
+family, beside operators/scrub.py).
 """
 
 from __future__ import annotations

@@ -42,8 +42,8 @@ from myhadoop_spark.functions.text import tokens
 
 SCALE = 1_000_000  # fixed-point rate scale
 
-# function words used for the ratio marker feature (the doc_metrics
-# stopword family, queries/text.py::STOPWORDS)
+# function words used for the ratio marker feature (the stopword
+# family, queries/text.py::STOPWORDS)
 MARKER_WORDS = ("the", "a", "of", "and", "to", "in")
 
 

@@ -100,27 +100,3 @@ def contamination_pairs(corpus: DataFrame, bench: DataFrame,
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-
-
-def contaminated_docs(corpus: DataFrame, bench: DataFrame,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      n: int = DEFAULT_N, min_shared: int = 1,
-                      broadcast_bench: bool = True) -> DataFrame:
-    """The actionable drop list: one row per contaminated corpus document
-    with its worst-offending benchmark doc and total evidence —
-    (corpus_id, n_bench_docs, total_shared, top_bench_id). Deterministic:
-    ties on n_shared break toward the smallest bench_id."""
-    pairs = contamination_pairs(corpus, bench, id_col, text_col, n,
-                                min_shared, broadcast_bench)
-    # min_by on (-n_shared, bench_id): most shared shingles, ties toward
-    # the smallest bench_id — a deterministic single-pass aggregate.
-    # Only n_shared (a count, always numeric) is negated, so bench_id may
-    # be any orderable type including the string doc ids common in
-    # corpus tables.
-    return pairs.groupBy("corpus_id").agg(
-        F.count(F.lit(1)).alias("n_bench_docs"),
-        F.sum("n_shared").alias("total_shared"),
-        F.min_by("bench_id",
-                 F.struct((-F.col("n_shared")).alias("neg"),
-                          F.col("bench_id"))).alias("top_bench_id"),
-    )

@@ -31,14 +31,14 @@ per partition), never a global sort. Identical plan at 500 docs and
 100 TB; B (default 4096; the paper uses 10k) bounds every broadcast
 and the collect.
 
-Float-determinism discipline (the lm_filter.py contract): a per-doc
+Float-determinism discipline: a per-doc
 SUM over shuffled join output has no addition order, so the c·lr
 terms are re-assembled sorted by bucket id — a TOTAL order, buckets
 are distinct within a doc — and reduced with a left fold:
 bitwise-reproducible on any partitioning, and order-matched by the
 DuckDB oracle's ``list_reduce(list(c*lr ORDER BY b))``. ln() itself
 is last-ulp-unsafe across engines, so the compared weight is floored
-at 1e-6 (the lm_perplexity / corpus_drift precedent); the bitwise
+at 1e-6; the bitwise
 contract is pinned against the pure-Python model in
 tests/test_dsir.py.
 

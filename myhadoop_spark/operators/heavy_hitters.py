@@ -1,7 +1,7 @@
 """Heavy hitters — mergeable Misra-Gries summaries for approximate top-k.
 
 The sketch family the engine didn't yet cover: exact per-term counting
-(ngram_stats) shuffles every distinct term; at 100 TB vocabulary scale a
+shuffles every distinct term; at 100 TB vocabulary scale a
 bounded-memory summary answers "the top-k terms and their approximate
 counts" with a provable error bound and NO full aggregation.
 

@@ -11,7 +11,7 @@ a read of a keys-sized sketch table.
 Exactness domain (probed, tests/test_hll_index.py): DataSketches HLL
 at lgK=12 is EXACT below ~500 distinct items per sketch (coupon-list
 mode) and carries rsd ≈ 1.04/√2¹² ≈ 1.6 % beyond; the differential
-follows the approx_distinct/approx_quantiles convention — exact
+follows the approx_distinct convention — exact
 counts are the cross-engine contract, the sketch is oracle-verified
 as a BOUND (flag column), and the merge algebra (union of per-group
 sketches ≡ sketch of the union) is pinned by tests at both regimes.
@@ -41,7 +41,7 @@ beside operators/cms.py and the approx_distinct HLL++ gate query).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_LGK = 12
@@ -89,10 +89,6 @@ def build_index(df: DataFrame, keys: list[str], value_col: str,
     row counts) as parquet."""
     group_sketches(df, keys, value_col, lgk=lgk).write.mode(
         "overwrite").parquet(path)
-
-
-def read_index(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def merge_sketch_tables(a: DataFrame, b: DataFrame,

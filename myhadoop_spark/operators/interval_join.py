@@ -87,68 +87,3 @@ def interval_overlap_join(left: DataFrame, right: DataFrame, *,
     return pairs.select(
         *keys, "a_id", "b_id", "a_lo", "a_hi", "b_lo", "b_hi",
         ov_lo.alias("ov_lo"), F.least("a_hi", "b_hi").alias("ov_hi"))
-
-
-def suggest_width(intervals: DataFrame, *, lo_col: str = "lo",
-                  hi_col: str = "hi") -> int:
-    """Bucket-width suggestion so the 100 TB operator isn't
-    hand-parameterized: the module-docstring rule (and the
-    interval_join_study.tsv sweep, whose candidate-volume minimum sat
-    at 8192 for median-~7.6k-second intervals) puts the optimum near
-    the MEDIAN interval length — too narrow explodes intervals into
-    many buckets, too wide degrades toward per-key all-pairs. Returns
-    the power of two nearest the median length (powers of two keep
-    `div` cheap and match the sweep grid).
-
-    Pure driver arithmetic off ONE aggregate row (stats in,
-    configuration out — no corpus data collected). percentile_approx
-    is exact when distinct lengths fit its default accuracy budget and
-    is only a TUNING input here — the join is exact at any width."""
-    row = intervals.select(
-        F.percentile_approx(
-            F.col(hi_col).cast("long") - F.col(lo_col).cast("long"),
-            0.5).cast("long").alias("m")).first()
-    m = int(row["m"] or 0)
-    if m < 1:
-        return 1
-    lower = 1 << (m.bit_length() - 1)  # largest power of two <= m
-    return lower if m - lower <= 2 * lower - m else 2 * lower
-
-
-def interval_overlap_join_ts(left: DataFrame, right: DataFrame, *,
-                             keys: Sequence[str] = (),
-                             id_col: str = "id",
-                             lo_col: str = "lo_ts",
-                             hi_col: str = "hi_ts",
-                             bucket_width: int = 512,
-                             antisymmetric: bool = False,
-                             closed: bool = False) -> DataFrame:
-    """Timestamp-column convenience over ``interval_overlap_join``:
-    converts [lo_col, hi_col) TIMESTAMP intervals to epoch-second
-    longs before bucketing, so every caller inherits the cross-engine
-    conversion discipline instead of rediscovering it:
-
-    * Spark's ``unix_timestamp`` TRUNCATES sub-second fractions while
-      DuckDB's ``epoch()`` ROUNDS — an SQL twin of any caller must
-      write ``CAST(floor(epoch(ts)) AS BIGINT)`` (the r9 lesson,
-      previously encoded only in queries/event_analytics.py).
-    * ``closed=True`` treats inputs as CLOSED [lo, hi] intervals —
-      the sessionize output shape, where a single-event session has
-      lo == hi and a half-open reading would silently drop it — by
-      joining on [lo, hi+1): two closed second-granularity intervals
-      overlap iff their half-open +1 forms do.
-
-    Output is the integer form (a_lo … ov_hi in epoch seconds; when
-    ``closed``, the +1 convention — ov_hi-1 is the last shared
-    second)."""
-    def conv(df: DataFrame) -> DataFrame:
-        lo = F.unix_timestamp(F.col(lo_col)).cast("long")
-        hi = F.unix_timestamp(F.col(hi_col)).cast("long")
-        if closed:
-            hi = hi + F.lit(1).cast("long")
-        return df.select(*keys, F.col(id_col).alias("id"),
-                         lo.alias("lo"), hi.alias("hi"))
-
-    return interval_overlap_join(conv(left), conv(right), keys=keys,
-                                 bucket_width=bucket_width,
-                                 antisymmetric=antisymmetric)

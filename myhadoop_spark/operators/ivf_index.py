@@ -196,59 +196,6 @@ def compact_index(spark: SparkSession, path: str, *,
             "files_after": stats["files_after"]}
 
 
-def retrain_index(spark: SparkSession, path: str, *,
-                  k: int | None = None,
-                  iterations: int = 5) -> list[list[float]]:
-    """Re-train the centroids from the index's CURRENT vectors and
-    re-assign every vector — the explicit-retrain half of the FAISS
-    discipline (add() never moves centroids; after enough appends the
-    data distribution drifts from the trained lists and probe recall
-    decays, so a periodic retrain rewrites the index under fresh
-    centroids). Completes the lifecycle: build → append → compact →
-    RETRAIN. ``k`` defaults to the CURRENT list count (a routine
-    retrain must not silently change the index geometry).
-
-    Durability: the rebuild lands in a ``.retrain`` staging directory
-    while the live tables stay untouched (an executor loss mid-build
-    costs nothing — the build re-reads intact files, never a
-    non-durable checkpoint), then swaps in. A crash inside the swap
-    window leaves the completed staging copy on disk next to whatever
-    survived — never the only-copy-deleted state an in-place
-    overwrite risks.
-
-    The retrained index is definitionally identical to
-    ``build_index`` over the stored vectors (same deterministic
-    sampled k-means, same assignment; tested), so search-after-retrain
-    ≡ search over a fresh build; replay duplicates from an
-    at-least-once ingest are carried through unchanged (still
-    collapsed at probe time)."""
-    from myhadoop_spark.fsutil import hadoop_fs
-
-    if k is None:
-        k = len(load_centroids(spark, path))
-    emb = spark.read.parquet(f"{path}/vectors").drop("nrm", "bucket")
-    # carry the stored payload columns through the rebuild — dropping
-    # them would break every filtered search after a routine retrain
-    payload = tuple(c for c in emb.columns if c not in ("vec_id", "v"))
-    staging = f"{path}/.retrain"
-    fs, staging_p = hadoop_fs(spark, staging)
-    if fs.exists(staging_p):
-        fs.delete(staging_p, True)
-    cents = build_index(emb, staging, k=k, iterations=iterations,
-                        payload_cols=payload)
-    jvm = spark._jvm
-    for sub in ("centroids", "vectors"):
-        live = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-        staged = jvm.org.apache.hadoop.fs.Path(f"{staging}/{sub}")
-        if fs.exists(live):
-            fs.delete(live, True)
-        if not fs.rename(staged, live):
-            raise OSError(f"retrain swap failed for {path}/{sub}; "
-                          f"rebuilt copy preserved at {staging}")
-    fs.delete(staging_p, True)
-    return cents
-
-
 def start_index_ingest_stream(stream_emb: DataFrame, *, path: str,
                               checkpoint: str, vec_col: str = "v",
                               id_col: str = "vec_id",

@@ -31,7 +31,6 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from myhadoop_spark.operators.merge import merge_upsert
 
@@ -125,47 +124,3 @@ def upsert_table(spark: SparkSession, path: str, source: DataFrame,
         if old.name.startswith("v") and int(old.name[1:]) < floor:
             shutil.rmtree(old, ignore_errors=True)
     return version
-
-
-def read_table_version(spark: SparkSession, path: str,
-                       version: int) -> DataFrame:
-    """Time travel: read a SPECIFIC retained snapshot version (Delta:
-    versionAsOf; fallback: the versioned snapshot dir). Raises if the
-    version was swept by ``retain_snapshots``."""
-    if delta_available(spark):  # pragma: no cover - no jars in this image
-        return (spark.read.format("delta")
-                .option("versionAsOf", version).load(path))
-    snap = _snapshot_dir(Path(path), version)
-    if not snap.exists():
-        raise FileNotFoundError(
-            f"version {version} of {path} is absent (swept by "
-            "retention or never written)")
-    return spark.read.parquet(str(snap))
-
-
-def diff_snapshots(spark: SparkSession, path: str, v_from: int,
-                   v_to: int, key: str) -> DataFrame:
-    """(key, change ∈ added|removed|changed): what happened to each
-    key between two retained versions — the audit face of the
-    versioned table (CDC between snapshots). Changed-ness is an
-    xxhash64 over all non-key columns in sorted order, so the diff is
-    one full-outer join on the key with no column-by-column
-    comparison; unchanged keys are excluded."""
-    a, b = (read_table_version(spark, path, v) for v in (v_from, v_to))
-    cols = sorted(c for c in a.columns if c != key)
-    if sorted(c for c in b.columns if c != key) != cols:
-        raise ValueError("snapshots have different schemas; diff "
-                         "requires like-for-like columns")
-
-    def hashed(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(F.col(key),
-                         F.xxhash64(*cols).alias(f"_h_{tag}"))
-
-    j = hashed(a, "a").join(hashed(b, "b"), key, "full")
-    return (j.select(
-        key,
-        F.when(F.col("_h_a").isNull(), "added")
-        .when(F.col("_h_b").isNull(), "removed")
-        .when(F.col("_h_a") != F.col("_h_b"), "changed")
-        .alias("change"))
-        .filter(F.col("change").isNotNull()))

@@ -1,7 +1,7 @@
 """Language identification — the CCNet pipeline's fastText-langid
 stage (Wenzek et al. 2020) re-expressed as a deterministic hashed
 char-n-gram scorer, so the multilingual operators (operators/
-unimax.py, operators/dsir.py, queries/lm.py::ccnet_buckets) can
+unimax.py, operators/dsir.py) can
 DERIVE their ``lang`` column instead of consuming a fixture label.
 
 Model — a per-language unigram-rate centroid over hashed character
@@ -152,20 +152,3 @@ def predict_lang(docs: DataFrame, weights: DataFrame, *,
                                F.lit(0).cast("long")).alias("score"),
                     F.coalesce(F.col("margin"),
                                F.lit(0).cast("long")).alias("margin")))
-
-
-def reject_low_confidence(preds: DataFrame, *, min_score: int = 0,
-                          min_margin: int = 0,
-                          lang_col: str = "pred_lang") -> DataFrame:
-    """The CCNet reject path (Wenzek et al. 2020 drop documents whose
-    langid confidence is below threshold): predictions with
-    score < min_score OR margin < min_margin keep their row but get a
-    NULL ``lang_col`` — routing them into the engine's existing
-    NULL-lang machinery (operators/dsir.py, operators/unimax.py treat
-    NULL as the empty-string language; a curation chain that wants
-    them GONE filters ``lang_col IS NOT NULL`` before balancing).
-    Integer comparisons only — composes into bitwise differentials."""
-    ok = ((F.col("score") >= F.lit(int(min_score)))
-          & (F.col("margin") >= F.lit(int(min_margin))))
-    return preds.withColumn(lang_col,
-                            F.when(ok, F.col(lang_col)))

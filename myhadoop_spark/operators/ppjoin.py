@@ -186,30 +186,3 @@ def choose_generator(grams: DataFrame, *,
     affects cost only."""
     return ("ppjoin_prefix" if rarest_gram_rarity(grams) < threshold
             else "size_ratio")
-
-
-def jaccard_pairs(grams: DataFrame, tau: float) -> DataFrame:
-    """(doc1, doc2, jaccard) for all pairs with set-Jaccard ≥ tau,
-    prefix-filtered candidates + exact verify (|A∪B| from sizes).
-
-    r14 (ADVICE r13): grams is materialized once and its stats are
-    threaded into prefix_candidates — it is referenced by the
-    candidate subtree AND both verify sides, and without stats the
-    budget aggregate inside prefix_candidates re-ran the caller's full
-    gram lineage per call."""
-    grams = grams.transform(materialize)
-    s = grams.agg(F.count(F.lit(1)).alias("n"),
-                  F.coalesce(F.sum(F.size("grams")),
-                             F.lit(0)).alias("tot")).head()
-    cand = prefix_candidates(grams, tau, size_stats=(s.n, s.tot))
-    g1 = grams.select(F.col("doc_id").alias("doc1"),
-                      F.col("grams").alias("g1"))
-    g2 = grams.select(F.col("doc_id").alias("doc2"),
-                      F.col("grams").alias("g2"))
-    inter = F.size(F.array_intersect("g1", "g2")).cast("double")
-    tot = (F.size("g1") + F.size("g2")).cast("double")
-    par = grams.sparkSession.sparkContext.defaultParallelism
-    return (cand.repartition(par, "doc1")
-            .join(g1, "doc1").join(g2, "doc2")
-            .select("doc1", "doc2", (inter / (tot - inter)).alias("jaccard"))
-            .filter(F.col("jaccard") >= tau))

@@ -1,15 +1,13 @@
 """PII / pattern scrubbing — curation-time redaction of document text.
 
-The destructive counterpart of doc_metrics' counting: training corpora
-redact emails, URLs, phone-like numbers, and IP addresses before the
+Training corpora redact emails, URLs, phone-like numbers, and IP addresses before the
 text reaches a tokenizer. All narrow `regexp_replace` chains inside
 whole-stage codegen — zero shuffles, no Python; at 100 TB this runs at
 scan speed as part of the prep pipeline.
 
-Pattern discipline: the email/URL patterns are the exact ones
-doc_metrics pinned for Java↔RE2 parity (queries/text.py:74-75), so the
-scrub is oracle-differentiable against DuckDB (tests/test_scrub.py) and
-its counters reconcile with doc_metrics' counts on the same fixture.
+Pattern discipline: the email/URL patterns use ASCII-only character
+classes, so Java (Spark) and RE2 (DuckDB) agree and the scrub is
+oracle-differentiable against DuckDB (tests/test_scrub.py).
 Order matters and is fixed: emails before URLs would leave the scheme
 of mailto-like strings — URLs are replaced first, then emails (an email
 inside a URL's query string is already gone), then IPs, then phones

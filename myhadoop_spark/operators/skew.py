@@ -1,13 +1,12 @@
-"""Skew mitigation: salted aggregation and salted join.
+"""Skew mitigation: salted aggregation.
 
 At 100 TB a handful of hot keys (a viral document, a null-ish default
 user id) can pin a whole stage on one task. Measured reality
 (scripts/skew_bench.py, 20M rows with a 95% hot key):
 
   * **Joins are the real victim**: a hot-key shuffle join takes ~28 s
-    with AQE off vs ~2.7 s with replicated_skew_join (10×); AQE's
-    runtime skew-split lands between (~8 s). The explicit salt remains
-    the strongest remedy where the dimension side is replicable.
+    with AQE off and ~8 s with AQE's runtime skew-split, which the
+    session enables.
   * **Algebraic aggregations do NOT need salting**: Spark's map-side
     partial aggregation already collapses the hot key to one partial
     row per input partition, so salted_sum_count only adds a shuffle
@@ -43,20 +42,3 @@ def salted_sum_count(df: DataFrame, key_cols: list[str], value: Column,
         .agg(F.sum("_psum").alias("sum_value"),
              F.sum("_pcnt").alias("n_rows"))
     )
-
-
-def replicated_skew_join(left: DataFrame, right: DataFrame, key: str,
-                         n_salts: int = 8) -> DataFrame:
-    """Inner equi-join robust to left-side key skew: left rows get a
-    random salt in [0, n_salts); the (small) right side is replicated
-    n_salts times; the join key becomes (key, salt), so one hot key
-    spreads over n_salts reducers. Right-side replication cost ×n_salts
-    — use when right is the dimension side and AQE's runtime splitting
-    is unavailable (e.g. pre-AQE clusters or deterministic plans)."""
-    salted_left = left.withColumn(
-        "_salt", (F.rand(seed=11) * n_salts).cast("int"))
-    replicated_right = right.crossJoin(
-        F.broadcast(
-            right.sparkSession.range(n_salts)
-            .select(F.col("id").cast("int").alias("_salt"))))
-    return salted_left.join(replicated_right, [key, "_salt"]).drop("_salt")

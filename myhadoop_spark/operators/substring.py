@@ -41,7 +41,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from myhadoop_spark.functions.text import hash_bucket, tokens
-from myhadoop_spark.materialize import materialize
 
 # Horner rolling-hash constants. Token hashes are first reduced mod M
 # (31-bit, hash_bucket) so the accumulator stays < M and acc*B + t <
@@ -239,179 +238,3 @@ def substring_pairs(docs: DataFrame, *, k: int = K_WINDOW,
     tb = base.select(F.col("doc_id").alias("doc_b"),
                      F.col("toks").alias("toks_b"))
     return _verified_overlaps(m, ta, tb, k, min_run)
-
-
-def substring_decontam(corpus: DataFrame, bench: DataFrame, *,
-                       k: int = K_WINDOW, min_overlap: int = MIN_OVERLAP,
-                       max_df: int | None = None,
-                       broadcast_bench: bool = True,
-                       hash_m: int = HASH_M,
-                       wide_hash: bool = False) -> DataFrame:
-    """(corpus_id, bench_id, overlap_tokens, n_runs): corpus documents
-    containing a VERBATIM run of >= min_overlap tokens from a benchmark
-    document — the exact-substring decontamination criterion (Lee et
-    al. 2021 run suffix-array ExactSubstr for this; the shingle-count
-    operator operators/decontam.py flags n-gram OVERLAP SETS, this one
-    proves contiguous copying, the stronger evidence).
-
-    Scale shape: the window table of the benchmark side is tiny (eval
-    sets vs a 100 TB corpus) and broadcasts, so the corpus-side window
-    stream joins with NO shuffle of corpus windows in the broadcast
-    regime; `broadcast_bench=False` falls back to a hash join for
-    corpus-vs-corpus audits. max_df prunes boilerplate windows on the
-    CORPUS side before the join. wide_hash doubles the banding key
-    width for the large-corpus posture (see substring_pairs)."""
-    min_run = min_overlap - k + 1
-    m = _bench_matches(corpus, bench, k, max_df, broadcast_bench,
-                       hash_m, wide_hash)
-
-    ta = corpus.select(F.col("doc_id").alias("doc_a"),
-                       tokens().alias("toks_a"))
-    tb = bench.select(F.col("doc_id").alias("doc_b"),
-                      tokens().alias("toks_b"))
-    return (_verified_overlaps(m, ta, tb, k, min_run)
-            .select(F.col("doc_a").alias("corpus_id"),
-                    F.col("doc_b").alias("bench_id"),
-                    "overlap_tokens", "n_runs"))
-
-
-def _bench_matches(corpus: DataFrame, bench: DataFrame, k: int,
-                   max_df: int | None, broadcast_bench: bool,
-                   hash_m: int, wide_hash: bool) -> DataFrame:
-    """Shared corpus-vs-bench window-hash match table:
-    (doc_a=corpus, doc_b=bench, pa, d)."""
-    cw = window_hash_rows(corpus, k, hash_m=hash_m, wide=wide_hash)
-    if max_df is not None:
-        cw = _drop_hot_windows(cw, max_df)
-    bw = window_hash_rows(bench, k, hash_m=hash_m, wide=wide_hash)
-
-    keys = ["wh", "wh2"] if wide_hash else ["wh"]
-    a = cw.select(F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"),
-                  *keys)
-    b = bw.select(F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"),
-                  *keys)
-    if broadcast_bench:
-        b = F.broadcast(b)
-    return (a.join(b, keys)
-            .select("doc_a", "doc_b", "pa",
-                    (F.col("pb") - F.col("pa")).alias("d")))
-
-
-def remove_overlap_spans(corpus: DataFrame, bench: DataFrame, *,
-                         k: int = K_WINDOW, min_overlap: int = MIN_OVERLAP,
-                         max_df: int | None = None,
-                         broadcast_bench: bool = True,
-                         passes: int = 1,
-                         hash_m: int = HASH_M,
-                         wide_hash: bool = False) -> DataFrame:
-    """Span-level decontamination surgery: instead of DROPPING a
-    contaminated document, cut the verbatim benchmark runs out of it
-    (the remedy Lee et al. 2021 apply with their suffix array) —
-    (doc_id, text, n_tokens_removed), every corpus document present.
-    Documents with NOTHING to remove pass through BYTE-IDENTICAL
-    (original whitespace included — the rebuild is restricted to
-    contaminated documents via a semi-join on the flagged positions);
-    contaminated documents are re-assembled from their kept token
-    stream with single spaces (token-stream, not byte, preservation —
-    the tokenizer is the corpus-wide whitespace convention).
-
-    Mechanics: verified runs (the substring_decontam machinery) expand
-    to the exact token positions they cover; contaminated documents
-    re-tokenize to (doc, pos, tok) rows, drop flagged positions with
-    one anti-join, and re-assemble per document with an
-    order-preserving sorted collect. Overlapping spans from several
-    benchmark documents union cleanly (positions are DISTINCT before
-    the anti-join).
-
-    ``passes``: removal can butt two previously-separated fragments
-    against each other, and the SEAM can itself form a new
-    >= min_overlap run with the benchmark. Each pass re-detects on the
-    previous pass's output; n_tokens_removed accumulates. passes=2
-    closes the adversarial seam construction
-    (tests/test_substring.py::test_seam_second_pass_converges);
-    removal shrinks documents monotonically, so the iteration
-    converges in at most len/min_overlap passes in the worst case.
-
-    Scale: positions explode is bounded by (runs x span length) —
-    contaminated text only; the anti-join and rebuild shuffle only the
-    CONTAMINATED documents' tokens on doc_id, a subset of what the
-    window hashing already shuffles."""
-    out = _remove_pass(corpus, bench, k=k, min_overlap=min_overlap,
-                       max_df=max_df, broadcast_bench=broadcast_bench,
-                       hash_m=hash_m, wide_hash=wide_hash)
-    for _ in range(1, passes):
-        # materialize between passes: pass N's detect would otherwise
-        # re-execute every prior pass's join tree
-        prev = out.transform(materialize)
-        # only documents a prior pass CUT can have grown a new seam —
-        # untouched text was already fully processed against this very
-        # benchmark, so later passes re-detect on the (tiny)
-        # contaminated subset only
-        changed = prev.filter(F.col("n_tokens_removed") > 0)
-        nxt = _remove_pass(changed.select("doc_id", "text"), bench, k=k,
-                           min_overlap=min_overlap, max_df=max_df,
-                           broadcast_bench=broadcast_bench,
-                           hash_m=hash_m, wide_hash=wide_hash)
-        out = (nxt.withColumnRenamed("n_tokens_removed", "_new")
-               .join(changed.select("doc_id",
-                                    F.col("n_tokens_removed")
-                                    .alias("_prev")),
-                     "doc_id")
-               .select("doc_id", "text",
-                       (F.col("_new") + F.col("_prev"))
-                       .alias("n_tokens_removed"))
-               .unionByName(prev.filter(F.col("n_tokens_removed") == 0)))
-    return out
-
-
-def _remove_pass(corpus: DataFrame, bench: DataFrame, *, k: int,
-                 min_overlap: int, max_df: int | None,
-                 broadcast_bench: bool, hash_m: int,
-                 wide_hash: bool) -> DataFrame:
-    """One detect+remove pass of remove_overlap_spans."""
-    min_run = min_overlap - k + 1
-    m = _bench_matches(corpus, bench, k, max_df, broadcast_bench,
-                       hash_m, wide_hash)
-    ta = corpus.select(F.col("doc_id").alias("doc_a"),
-                       tokens().alias("toks_a"))
-    tb = bench.select(F.col("doc_id").alias("doc_b"),
-                      tokens().alias("toks_b"))
-    runs = _verified_runs(m, ta, tb, k, min_run)
-
-    drop_pos = (runs.select(
-        F.col("doc_a").alias("doc_id"),
-        F.explode(F.sequence(
-            F.col("pa_start"),
-            F.col("pa_start") + F.col("run_len") + F.lit(k - 2))).alias("pos"))
-        .distinct())
-    affected = drop_pos.select("doc_id").distinct()
-
-    # rebuild ONLY the contaminated documents; everything else passes
-    # through byte-identical below
-    tok_rows = (corpus.join(affected, "doc_id")
-                .select("doc_id", F.posexplode(tokens()).alias("pos0", "tok"))
-                .select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok"))
-    kept = tok_rows.join(drop_pos, ["doc_id", "pos"], "left_anti")
-    rebuilt = (kept.groupBy("doc_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                       lambda s: s["tok"]),
-                   " ").alias("_clean"),
-                   F.count(F.lit(1)).alias("_n_kept")))
-
-    # a fully-excised document has no kept rows → no rebuilt row → the
-    # affected flag (not rebuilt presence) decides between "" and the
-    # original text
-    return (corpus
-            .join(affected.withColumn("_aff", F.lit(True)), "doc_id", "left")
-            .join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.when(F.col("_aff"),
-                           F.coalesce(F.col("_clean"), F.lit("")))
-                    .otherwise(F.col("text")).alias("text"),
-                    F.when(F.col("_aff"),
-                           F.size(tokens())
-                           - F.coalesce(F.col("_n_kept"), F.lit(0)))
-                    .otherwise(F.lit(0))
-                    .cast("bigint").alias("n_tokens_removed")))

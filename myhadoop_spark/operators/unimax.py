@@ -47,8 +47,8 @@ the budget are pruned BEFORE the sort shuffle (at a 10% budget, 90%
 of the head language never enters the window). Integer sums are
 exact, so the banded output is bitwise-identical to the
 single-window spec path (``unimax_select_window``, kept as the
-parity pin) — the operators/indexing.py bounded-offset idiom, with
-the offset table staying in-plan (broadcast join, no collect).
+parity pin) — a bounded-offset prefix sum, with the offset table
+staying in-plan (broadcast join, no collect).
 
 Reference analog: none — §2.3 extension surface (data-mixing family,
 next to operators/dsir.py's importance resampling).

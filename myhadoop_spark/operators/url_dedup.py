@@ -109,103 +109,6 @@ def registrable_domain(host: Column, *, labels: int = 2,
         F.array_join(F.slice(parts, n - k + 1, k), "."))
 
 
-def psl_rules(spark, lines) -> DataFrame:
-    """Parse public-suffix-list lines (publicsuffix.org/list format:
-    ``//`` comments and blanks skipped) into the (key, kind) rule
-    table ``registrable_domain_lookup`` joins against:
-
-        co.uk    → key 'co.uk',  kind 'normal'
-        *.ck     → key '*.ck',   kind 'wildcard'
-        !www.ck  → key 'www.ck', kind 'exception'
-
-    The table is PSL-sized (~10k rows for the full Mozilla list) —
-    broadcast-safe by construction."""
-    rows = []
-    for raw in lines:
-        line = raw.strip()
-        if not line or line.startswith("//"):
-            continue
-        if line.startswith("!"):
-            rows.append((line[1:].lower(), "exception"))
-        elif line.startswith("*."):
-            rows.append((line.lower(), "wildcard"))
-        else:
-            rows.append((line.lower(), "normal"))
-    return spark.createDataFrame(rows, "key string, kind string")
-
-
-def registrable_domain_lookup(df: DataFrame, rules: DataFrame, *,
-                              host_col: str = "host",
-                              out_col: str = "domain") -> DataFrame:
-    """Full-PSL eTLD+1 as a broadcast lookup join — the table path the
-    frozenset expression (``registrable_domain``) cannot express:
-    wildcard rules (``*.ck``: every single label under ck is a public
-    suffix) and exception rules (``!www.ck``: www.ck is registrable
-    despite the wildcard). Implements the publicsuffix.org algorithm:
-
-        * candidate suffixes = every label-suffix of the host
-          (bounded by the host's label count — per-row explode, never
-          corpus-quadratic); each candidate also emits its wildcard
-          form (first label → ``*``) so one equi-join covers both
-          rule shapes
-        * an exception match wins outright: public suffix = the
-          matched labels minus the leftmost
-        * else the LONGEST matching normal/wildcard rule; no match →
-          the implicit ``*`` default (the bare TLD)
-        * registrable domain = public suffix + one more label; a host
-          that IS a public suffix comes back unchanged (the
-          expression path's bare-registry convention)
-
-    Scale shape: rules broadcast (PSL-sized); the suffix explode and
-    groupBy run over DISTINCT hosts (partial-aggregable, hosts ≪
-    rows), candidates ∝ hosts × label-count (narrow per-row explode);
-    the per-host result hash-joins back on the host value — every
-    step deterministic under any partitioning (no row ids). Pinned
-    equal to the expression path on the PSL-lite subset in
-    tests/test_url_dedup.py."""
-    hosts = df.select(F.col(host_col).alias("_h")).distinct()
-    n = F.size(F.split(F.col("_h"), r"\."))
-    cand = (hosts.withColumn("_n", n)
-            .filter(F.col("_n") >= 1)
-            .select("_h", "_n",
-                    F.explode(F.sequence(F.lit(1), F.col("_n")))
-                    .alias("_k"))
-            .withColumn("_suf", F.array_join(
-                F.slice(F.split(F.col("_h"), r"\."),
-                        F.col("_n") - F.col("_k") + 1, F.col("_k")),
-                "."))
-            .withColumn("_wc", F.when(
-                F.col("_k") >= 2,
-                F.regexp_replace(F.col("_suf"), r"^[^.]+", "*"))))
-    r = F.broadcast(rules.select(F.col("key").alias("_key"),
-                                 F.col("kind").alias("_kind")))
-    hits = (cand.join(r, (F.col("_suf") == F.col("_key"))
-                      | (F.col("_wc") == F.col("_key")))
-            # a literal suffix must not satisfy a wildcard key, nor a
-            # wildcard form a literal/exception key
-            .filter(((F.col("_kind") != "wildcard")
-                     & (F.col("_suf") == F.col("_key")))
-                    | ((F.col("_kind") == "wildcard")
-                       & (F.col("_wc") == F.col("_key")))))
-    per = (hits.groupBy("_h")
-           .agg(F.max(F.when(F.col("_kind") == "exception",
-                             F.col("_k"))).alias("_exc_k"),
-                F.max(F.when(F.col("_kind") != "exception",
-                             F.col("_k"))).alias("_rule_k")))
-    ps = F.coalesce(F.col("_exc_k") - 1, F.col("_rule_k"), F.lit(1))
-    resolved = (hosts.join(per, "_h", "left")
-                .withColumn("_ps", ps)
-                .select(F.col("_h"), F.when(
-                    F.size(F.split(F.col("_h"), r"\.")) <= F.col("_ps"),
-                    F.col("_h")).otherwise(F.array_join(
-                        F.slice(F.split(F.col("_h"), r"\."),
-                                F.size(F.split(F.col("_h"), r"\."))
-                                - F.col("_ps"), F.col("_ps") + 1), "."))
-                    .alias(out_col)))
-    return df.join(resolved,
-                   df[host_col] == resolved["_h"], "left").drop("_h")
-
-
 def canonical_url(url: Column) -> Column:
     """The URL-dedup key (see module docstring). Built as
     host ‖ path ‖ ('?' ‖ kept-params if any); scheme/fragment gone,

@@ -8,8 +8,8 @@ Only the 50 queries registered with ``gate=True`` form the correctness
 gate (``registry.all_queries()``, checked bitwise against DuckDB by
 ``scripts/check.py``); the others are ungated but keep their oracles,
 which the tests check (``registry.all_queries(include_ungated=True)``).
-Redundant battery queries are consolidated (one tagged battery per
-operator family), not dropped.
+An ungated query stays registered only while
+``tests/test_correctness.py::UNGATED_KEEPS`` names it with a reason.
 """
 
 from myhadoop_spark.queries import (  # noqa: F401
@@ -19,12 +19,10 @@ from myhadoop_spark.queries import (  # noqa: F401
     curation_gate,
     dedup,
     dedup_ext,
-    drift,
     dsir,
     event_analytics,
     fuzzy,
     fuzzy_decontam,
-    hll_stats,
     langid,
     lines,
     lm,

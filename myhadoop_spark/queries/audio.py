@@ -6,25 +6,20 @@ fingerprint (operators/audio_fp.py, pure JVM integer expressions) →
 Hamming-ball join (operators/simhash_join.py, exact-recall pigeonhole
 blocks).
 
-Two differentials, the media_phash/media_neardup two-layer precedent:
+One differential, THROUGH the decode plumbing:
 
-  audio_fp      — THROUGH the decode plumbing: synthetic payloads
-                  (planted exact duplicates) → decode_audio_grid
-                  (Arrow mapInPandas, fake deterministic energy grid:
-                  byte (i·5 mod 32) of sha256(payload) — SQL-
-                  reproducible) → hk64, bitwise per media id.
-  audio_neardup — the join face: planted single-cell energy
-                  perturbations (≤ 4 fingerprint bits by the
-                  Haitsma–Kalker locality bound; an exact copy at
-                  hamming 0) → hk64 → hamming_pairs vs the
-                  brute-force quadratic oracle.
+  audio_fp      — synthetic payloads (planted exact duplicates) →
+                  decode_audio_grid (Arrow mapInPandas, fake
+                  deterministic energy grid: byte (i·5 mod 32) of
+                  sha256(payload) — SQL-reproducible) → hk64, bitwise
+                  per media id.
 
 The REAL decode path (RIFF/WAVE PCM parse + rfft band energies) is
 pinned in tests/test_audio.py over generated on-disk WAV corpora —
 payload bytes cannot be built in SQL, so the codec parse is
 test-covered rather than oracle-covered (the PPM/BMP/PNG precedent).
-The keep-one and cross-set suppression faces are NOT duplicated here:
-media_dedup / media_probe gate-pin that machinery over the identical
+The Hamming join and keep-one faces are NOT duplicated here:
+media_neardup / media_dedup gate-pin that machinery over the identical
 fingerprint+Hamming shape (hk64 plugs into the same joins).
 """
 
@@ -37,9 +32,6 @@ from myhadoop_spark.registry import register
 from myhadoop_spark.materialize import materialize
 
 N_AFP = 48            # audio_fp: 16 payload groups x 3 exact copies
-N_AND_GROUPS = 16     # audio_neardup: 16 grids x 4 variants
-_AND_V = 4
-
 # DuckDB 1-indexed access into the row-major 9x9 energy grid:
 # E(n, m) with n = j // 8, m = j % 8
 _E_NM = "g.grid[(j // 8) * 9 + (j % 8) + 1]"
@@ -75,7 +67,6 @@ _HK_SQL = f"""CAST(list_sum(list_transform(generate_series(0, 63),
     gate=True,  # promoted r13 — the audio family's gate row: the
     #             Haitsma–Kalker packing AND the Arrow audio decode
     #             plumbing pinned through one differential
-    #             (media_features demoted in exchange — see its note)
     tags=("multimodal", "audio", "dedup", "extension"),
 )
 def audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,15 +77,14 @@ def audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     energy grid is byte (i·5 mod 32) of sha256(payload),
     SQL-reproducible) → hk64 over the 9×9 grid, packed as a signed
     64-bit long by pure JVM integer expressions. sf_dir unused —
-    payloads are self-generated (the media_phash precedent).
+    payloads are self-generated.
 
     Scale: decode is batch-wise in executors; the fingerprint is one
     narrow zero-shuffle projection per media row."""
     from myhadoop_spark.operators.audio_fp import hk64
     from myhadoop_spark.sources.multimodal import decode_audio_grid
 
-    # 8 range splits (the media_phash partition-count note: one Python
-    # worker per split through the Arrow decode; 32 one-row tasks'
+    # 8 range splits (one Python worker per split through the Arrow decode; 32 one-row tasks'
     # spin-up dominates a 48-row fixture)
     mdf = spark.range(0, N_AFP, 1, 8).select(
         F.col("id").alias("media_id"),
@@ -108,85 +98,3 @@ def audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
         hk64(F.col("energies"), frames=9, bands=9).alias("afp"))
         .transform(materialize)
         .orderBy("media_id"))
-
-
-_AND_CELL = "CAST(concat('0x', substr(md5(concat(g, '@', i)), 1, 2)) AS BIGINT)"
-
-
-@register(
-    "audio_neardup",
-    oracle=f"""
-    WITH m AS (SELECT id AS media_id, id // {_AND_V} AS g,
-                      id % {_AND_V} AS v
-               FROM generate_series(0, {N_AND_GROUPS * _AND_V - 1}) t(id)),
-    g AS (SELECT media_id,
-                 list_transform(generate_series(0, 80), i ->
-                     CASE WHEN v IN (1, 2)
-                               AND (5 * v + g) % 81 = i
-                          THEN ({_AND_CELL} + 128) % 256
-                          ELSE {_AND_CELL} END) AS grid
-          FROM m),
-    h AS (SELECT media_id, {_HK_SQL} AS afp FROM g)
-    SELECT a.media_id AS id_a, b.media_id AS id_b,
-           CAST(bit_count(xor(a.afp, b.afp)) AS BIGINT) AS hamming
-    FROM h a JOIN h b ON a.media_id < b.media_id
-    WHERE bit_count(xor(a.afp, b.afp)) <= 4
-    ORDER BY id_a, id_b
-    """,
-    gate=False,
-    tags=("multimodal", "audio", "dedup", "extension", "lsh"),
-)
-def audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id_a, id_b, hamming): audio near-duplicate pairs over planted
-    energy grids — 16 base grids × 4 variants (v0 base, v1/v2
-    single-cell +128 perturbations at distinct offsets ⇒ hk64
-    hamming ≤ 4 to the base by the Haitsma–Kalker locality bound,
-    v3 an exact copy ⇒ hamming 0) → hk64 → the exact-recall
-    pigeonhole Hamming-ball join. The oracle is the brute-force
-    quadratic join the banded plan must reproduce bitwise. sf_dir
-    unused — grids are self-generated so the planted structure is
-    the same on both engines.
-
-    Scale: identical shape to media_neardup — blocks-per-row =
-    max_hamming + 1, one hash equi-join on (block, value),
-    candidate-sized bit_count verify, never all-pairs."""
-    from myhadoop_spark.operators.simhash_join import hamming_pairs
-
-    # checkpoint: hamming_pairs references fp in both join branches (r13)
-    fp = (_planted_afp(spark).select("media_id", "afp")
-          .transform(materialize))
-    return (hamming_pairs(fp, bits=64, max_hamming=4,
-                          id_col="media_id", sim_col="afp")
-            .orderBy("id_a", "id_b"))
-
-
-def _planted_afp(spark: SparkSession) -> DataFrame:
-    """(media_id, v, afp) for the planted energy-grid table — the
-    shared engine side of the audio_neardup family. One transform
-    lambda over sequence(0, 80), not 81 unrolled expressions (the r13
-    plan-size lesson — see media._planted_hashes)."""
-    from myhadoop_spark.operators.audio_fp import hk64
-    from myhadoop_spark.operators.hof import let
-
-    base = spark.range(N_AND_GROUPS * _AND_V).select(
-        F.col("id").alias("media_id"),
-        (F.col("id") / _AND_V).cast("long").alias("g"),
-        (F.col("id") % _AND_V).alias("v"))
-
-    def cell(i):
-        s = F.md5(F.concat_ws(
-            "@", F.col("g").cast("string"), i.cast("string")))
-        e0 = F.conv(F.substring(s, 1, 2), 16, 10).cast("long")
-        hit = (F.col("v").isin(1, 2)
-               & ((F.lit(5) * F.col("v") + F.col("g")) % 81
-                  == i.cast("long")))
-        return let(e0,
-                   lambda e: F.when(hit, (e + 128) % 256).otherwise(e))
-
-    grids = base.select(
-        "media_id", "v",
-        F.transform(F.sequence(F.lit(0), F.lit(80)), cell)
-        .alias("energies"))
-    return grids.select(
-        "media_id", "v",
-        hk64(F.col("energies"), frames=9, bands=9).alias("afp"))

@@ -132,8 +132,7 @@ FROM m GROUP BY id ORDER BY id
 
 
 # r10: promoted into the 50-slot gate (bitwise at both SFs since r9,
-# real scale story — triangle_study.tsv's 213× wedge reduction);
-# event_json rotates out to hold the window (VERDICT r9 item 5)
+# real scale story — triangle_study.tsv's 213× wedge reduction)
 @register("triangle_count", oracle=_TRI_ORACLE,
           tags=("graph", "dedup", "extension"))
 def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,6 @@
 """Driver-gate faces for the round-3 curation operators (VERDICT r3
 item 4): benchmark decontamination and PII scrubbing both have exact
-SQL twins, so they take 50-entry gate slots — replacing two redundant
-battery members (distinct_agg, subsumed by approx_distinct's hashed
-exact column; tpch_q6, subsumed by filter_proj's filter+projection
-family — both stay differentially tested in test_sql_surface.py).
+SQL twins, so they take 50-entry gate slots.
 
 Fixture framing:
 
@@ -12,8 +9,8 @@ decontam      corpus vs benchmark = a deterministic doc_id%20 split of
               reuses sentence templates across docs). Same split and
               same SQL as tests/test_decontam.py, now hash-gated by the
               driver at sf0.01.
-scrub_audit   the fixture corpus is PII-free (doc_metrics' URL/email
-              counters are all-zero at every sf), so the gate query
+scrub_audit   the fixture corpus is PII-free (URL/email counts are
+              zero at every sf), so the gate query
               unions four literal PII-bearing rows onto it — the
               differential then proves BOTH no-false-positives over the
               whole corpus AND every redaction rule firing, on both

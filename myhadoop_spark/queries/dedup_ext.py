@@ -3,13 +3,8 @@ Bloom-filter incremental membership, and (ungated) document chunking —
 §2.3 training-data surface (SURVEY.md §2.3), alongside
 queries/dedup.py's minhash/simhash/jaccard family.
 
-These took two former gate slots (sort_topn, join2) whose operator
-coverage is subsumed elsewhere in the 50-row window: sort_topn's
-TakeOrderedAndProject plan is exercised by topk (and plan-asserted for
-both in tests/test_plans.py), sort_full covers the sort semantics, and
-join2's equi-join+agg shape is tpch_q3/join_multi's; both remain
-implemented, plan-asserted, and oracle-checked in pytest
-(tests/test_correctness.py::test_demoted_queries).
+These took two former gate slots whose top-k and equi-join shapes the
+gated tpch_q3, join_multi and sort_full rows cover.
 """
 
 from __future__ import annotations

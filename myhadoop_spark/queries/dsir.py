@@ -5,7 +5,7 @@ the corpus as the raw pool, keep the top-k.
 
 Ranking for the cross-engine compare uses the FLOORED weight (ties →
 doc_id ascending) on BOTH sides so last-ulp ln() drift cannot reorder
-the cut — the corpus_drift floored-ranking precedent. The production
+the cut. The production
 face (dsir_select in the operator) ranks on the full-precision weight.
 """
 
@@ -73,8 +73,7 @@ _K = 100
     tags=("dsir", "curation", "extension"),
     # r8: gated on arrival — the named data-selection method of the
     # LLM-curation surface, bitwise at both SFs in both local harnesses,
-    # with a real broadcast/shuffle scale story (dsir_scaling.tsv);
-    # unpivot_metrics rotates out to hold the 50-slot window
+    # with a real broadcast/shuffle scale story (dsir_scaling.tsv)
 )
 def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_feats, logw): the {K} raw-pool documents whose

@@ -306,8 +306,7 @@ def _sql_intervals(event_type: str) -> str:
     ORDER BY iv.user_id, a_id, b_id
     """,
     # r10: promoted into the 50-slot gate (bitwise at both SFs since
-    # r9, owner-bucket scale story — interval_join_study.tsv);
-    # scalar_fns rotates out to hold the window (VERDICT r9 item 5)
+    # r9, owner-bucket scale story — interval_join_study.tsv)
     tags=("join", "events", "extension"),
 )
 def interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -75,7 +75,7 @@ def langid_predict_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, pred_lang, score, margin): hashed char-trigram language
     predictions for the held 20% of documents, trained on the rest;
     margin = best − second-best score, the CCNet-style confidence
-    signal behind operators/langid.py::reject_low_confidence."""
+    signal."""
     docs = load_wide(spark, sf_dir, "documents")
     weights = train_langid(docs.filter(F.col("doc_id") % 5 != 0))
     held = docs.filter(F.col("doc_id") % 5 == 0)

@@ -37,56 +37,6 @@ def _sql_keep(min_words: int, drop_subs: tuple[str, ...]) -> str:
 
 
 @register(
-    "c4_clean",
-    oracle=rf"""
-    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
-    l AS (SELECT doc_id, {_sql_lines(7)} AS lines FROM t),
-    k AS (SELECT doc_id, lines,
-                 {_sql_keep(5, ('customer',))} AS kept
-          FROM l),
-    w AS (SELECT doc_id, lines, kept,
-                 CAST(len(lines) AS BIGINT) AS n_lines,
-                 CAST(len(kept) AS BIGINT) AS n_kept,
-                 coalesce(list_sum(list_transform(lines,
-                     x -> len({sql_tokens('x')}))), 0) AS w_all,
-                 coalesce(list_sum(list_transform(kept,
-                     x -> len({sql_tokens('x')}))), 0) AS w_kept
-          FROM k)
-    SELECT doc_id, n_lines, n_kept,
-           array_to_string(kept, chr(10)) AS clean_text
-    FROM w
-    WHERE n_kept >= 3
-      AND NOT contains(lower(array_to_string(lines, chr(10))),
-                       'lorem ipsum')
-      AND NOT contains(lower(array_to_string(lines, chr(10))), '{{')
-      AND (w_all - w_kept) * 2 <= w_all * 1
-    ORDER BY doc_id
-    """,
-    gate=False,
-    tags=("text", "curation", "extension"),
-)
-def c4_clean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_lines, n_kept, clean_text): C4 line-wise cleaning
-    over 7-word chunk lines — lines with < 5 words or containing
-    'customer' drop; docs drop on the C4 page markers, < 3 kept
-    lines, or > 1/2 of words removed (RefinedWeb §3.1, exact
-    rational). Zero-shuffle narrow pass."""
-    from myhadoop_spark.operators.line_filter import clean_lines, word_lines
-
-    docs = load_wide(spark, sf_dir, "documents")
-    return (clean_lines(docs.withColumn("_l", word_lines("text", 7)),
-                        lines_col="_l",
-                        min_words_per_line=5,
-                        require_terminal_punct=False,
-                        line_drop_substrings=("customer",),
-                        doc_drop_substrings=("lorem ipsum", "{"),
-                        min_kept_lines=3,
-                        max_removed_frac=(1, 2))
-            .select("doc_id", "n_lines", "n_kept", "clean_text")
-            .orderBy("doc_id"))
-
-
-@register(
     "line_dedup",
     oracle=rf"""
     WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
@@ -125,82 +75,13 @@ def line_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register(
-    "line_curate",
-    oracle=rf"""
-    WITH t AS (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
-    l AS (SELECT doc_id, {_sql_lines(3)} AS lines FROM t),
-    k AS (SELECT doc_id, lines,
-                 {_sql_keep(3, ('customer',))} AS kept
-          FROM l),
-    w AS (SELECT doc_id, kept,
-                 coalesce(list_sum(list_transform(lines,
-                     x -> len({sql_tokens('x')}))), 0) AS w_all,
-                 coalesce(list_sum(list_transform(kept,
-                     x -> len({sql_tokens('x')}))), 0) AS w_kept
-          FROM k
-          WHERE len(kept) >= 5
-            AND NOT contains(lower(array_to_string(lines, chr(10))),
-                             'lorem ipsum')
-            AND NOT contains(lower(array_to_string(lines, chr(10))),
-                             '{{')),
-    c AS (SELECT doc_id, kept FROM w
-          WHERE (w_all - w_kept) * 3 <= w_all * 2),
-    p AS (SELECT doc_id, i AS pos, kept[i] AS line
-          FROM c, unnest(generate_series(1, len(kept))) AS u(i)),
-    r AS (SELECT doc_id, pos, line,
-                 row_number() OVER (PARTITION BY line
-                                    ORDER BY doc_id, pos) AS rn
-          FROM p),
-    rb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                  string_agg(line, chr(10) ORDER BY pos) AS clean_text
-           FROM r WHERE rn = 1 GROUP BY doc_id)
-    SELECT c.doc_id, CAST(len(c.kept) AS BIGINT) AS n_clean,
-           rb.n_kept, rb.clean_text
-    FROM c JOIN rb ON c.doc_id = rb.doc_id
-    WHERE rb.n_kept >= 2
-    ORDER BY c.doc_id
-    """,
-    gate=False,
-    tags=("text", "dedup", "curation", "extension", "composition"),
-)
-def line_curate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_clean, n_kept, clean_text): line-wise clean THEN
-    corpus-wide line dedup as ONE Spark plan — the within-doc and
-    cross-doc line stages compose (3-word lines, min 3 words/line,
-    'customer' lines dropped, >= 5 kept lines, <= 2/3 words removed;
-    then keep-first dedup, docs need >= 2 surviving lines)."""
-    from myhadoop_spark.operators.line_dedup import line_dedup
-    from myhadoop_spark.operators.line_filter import (clean_lines,
-                                                      split_lines,
-                                                      word_lines)
-
-    docs = load_wide(spark, sf_dir, "documents")
-    cleaned = clean_lines(docs.withColumn("_l", word_lines("text", 3)),
-                          lines_col="_l",
-                          min_words_per_line=3,
-                          require_terminal_punct=False,
-                          line_drop_substrings=("customer",),
-                          doc_drop_substrings=("lorem ipsum", "{"),
-                          min_kept_lines=5,
-                          max_removed_frac=(2, 3))
-    cleaned = (cleaned
-               .withColumnRenamed("n_kept", "n_clean")
-               .drop("n_lines")
-               .withColumn("_l2", split_lines("clean_text", r"\n"))
-               .drop("clean_text"))
-    return (line_dedup(cleaned, lines_col="_l2", min_kept_lines=2)
-            .select("doc_id", "n_clean", "n_kept", "clean_text")
-            .orderBy("doc_id"))
-
-
 # ---------------------------------------------------------------------------
 # curate_lines (r11): the full document-interior curation chain as ONE
 # Spark plan — line-wise clean (C4/RefinedWeb) → corpus-wide line
 # dedup (CCNet) → quality classifier trained AND scored on the
 # CLEANED corpus → budgeted best-tokens selection. Five stages, four
 # operator families; the oracle chains the identical SQL (the
-# quality_filter oracle parameterized onto the cleaned CTE, the
+# quality-filter oracle parameterized onto the cleaned CTE, the
 # budget window as the selection spec). All-integer arithmetic end to
 # end, so the kept set compares bitwise.
 # ---------------------------------------------------------------------------

@@ -284,7 +284,7 @@ def quality_budget_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bottom, concatenation/boilerplate blobs at the top) — thresholds
 # are data-derived percentiles, not hand-tuned constants. The
 # differential runs the EXACT interpolated percentile (bitwise vs
-# DuckDB quantile_cont, the approx_quantiles discipline); at 100 TB
+# DuckDB quantile_cont); at 100 TB
 # the approx_percentile sketch path takes over (length_band(...,
 # exact=False)) — mergeable partial state, shuffle ∝ groups, with
 # the keep-set within the sketch's rank-error band (tested).

@@ -15,14 +15,13 @@ Scale notes are inline per query; the common rules:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
 from myhadoop_spark.functions.money import (
     SQL_REVENUE_TERM,
     davg,
-    dec,
     dsum,
     revenue_term,
     sql_davg,
@@ -32,38 +31,9 @@ from myhadoop_spark.functions.money import (
 from myhadoop_spark.registry import register
 
 # ---------------------------------------------------------------------------
-# 2. sort — global sort w/ deterministic tie-break + limit (reference analog:
-#    the vestigial MergeSort app, /root/reference/app.py:17-43 → R14).
-#    Scale: orderBy+limit compiles to TakeOrderedAndProject — each partition
-#    keeps only its local top-N, no global shuffle of the full table.
+# 2. sort — global sort w/ deterministic tie-break (reference analog: the
+#    reference's vestigial MergeSort app, app.py:17-43 → R14).
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "sort_topn",
-    gate=False,  # demoted from the 50-row driver window in r4: the
-    # TakeOrderedAndProject plan is exercised by topk (both plan-asserted
-    # in tests/test_plans.py) and the sort semantics by sort_full; the
-    # slot went to substring_dedup (queries/dedup_ext.py). Still
-    # oracle-checked via tests/test_correctness.py.
-    oracle="""
-    SELECT l_orderkey, l_linenumber, l_extendedprice, l_shipdate
-    FROM lineitem
-    ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
-    LIMIT 100
-    """,
-    tags=("sort", "limit"),
-)
-def sort_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global sort of lineitem by price with unique (orderkey, linenumber)
-    tie-break so the LIMIT is deterministic across engines."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.select("l_orderkey", "l_linenumber", "l_extendedprice", "l_shipdate")
-        .orderBy(F.col("l_extendedprice").desc(), F.col("l_orderkey").asc(),
-                 F.col("l_linenumber").asc())
-        .limit(100)
-    )
 
 
 @register(
@@ -78,7 +48,7 @@ def sort_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sort_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Totally-ordered FULL output — the exact semantics of the reference's
     MergeSort app (/root/reference/app.py:17-43, R14), which emits the whole
-    sorted dataset, not a top-N. Unlike sort_topn (TakeOrderedAndProject,
+    sorted dataset, not a top-N. Unlike a top-N (TakeOrderedAndProject,
     per-partition pruning), this compiles to sampled RANGE partitioning +
     per-partition sort: every partition holds a disjoint key range and is
     locally sorted, so concatenating partitions in order IS the total order
@@ -90,49 +60,6 @@ def sort_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select("l_orderkey", "l_linenumber", "l_extendedprice", "l_shipdate")
         .orderBy(F.col("l_extendedprice").desc(), F.col("l_orderkey").asc(),
                  F.col("l_linenumber").asc())
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. filter + projection — predicate pushdown & column pruning showcase.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "filter_proj",
-    gate=False,  # demoted in r11 for the seven curation-operator
-    #              promotions (VERDICT r10 #1) — still oracle-checked
-    #              in pytest, the scalar_fns precedent
-    oracle=f"""
-    SELECT l_orderkey, l_linenumber,
-           CAST({SQL_REVENUE_TERM} AS DOUBLE) AS revenue,
-           l_quantity
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount >= 0.05
-      AND l_quantity < 25
-    """,
-    tags=("filter", "projection"),
-)
-def filter_proj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-range + numeric filters with arithmetic projection. The filters
-    and the 4-column read schema push down to the parquet scan (verified
-    via .explain: PushedFilters / ReadSchema)."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_quantity") < 25)
-        )
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            revenue_term().cast("double").alias("revenue"),
-            "l_quantity",
-        )
     )
 
 
@@ -174,44 +101,6 @@ def agg_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("l_quantity", "avg_qty"),
             davg("l_extendedprice", "avg_price"),
             F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. two-table join + aggregation.
-#    Scale: orders⋈customer is a shuffle hash/sort-merge join on custkey at
-#    100 TB (both sides large); AQE picks broadcast automatically when the
-#    dim side fits under the threshold.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "join2",
-    gate=False,  # demoted in r4: equi-join+agg is tpch_q3/join_multi's
-    # shape; the slot went to bloom_dedup (queries/dedup_ext.py). Still
-    # oracle-checked via tests/test_correctness.py.
-    oracle=f"""
-    SELECT c_mktsegment, o_orderstatus,
-           COUNT(*) AS n_orders,
-           {sql_dsum('o_totalprice', 'sum_price')},
-           COUNT(DISTINCT o_custkey) AS n_customers
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_mktsegment, o_orderstatus
-    """,
-    tags=("join", "aggregate"),
-)
-def join2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orders ⋈ customer equi-join + grouped aggregation."""
-    orders = load(spark, sf_dir, "orders")
-    customer = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .groupBy("c_mktsegment", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice", "sum_price"),
-            F.countDistinct("o_custkey").alias("n_customers"),
         )
     )
 
@@ -310,170 +199,8 @@ def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 8. window functions — the full battery (ranking, running frames, RANGE
-#    frames) lives in relational5.window_fns.
+# 11. distinct counting (HLL estimate beside the exact count).
 # ---------------------------------------------------------------------------
-# 9. top-k by aggregate.
-#    Scale: agg shuffles on partkey; the final top-10 is TakeOrdered (no
-#    global sort). part side pruned to 2 columns before the join.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "topk",
-    gate=False,  # demoted in r11 for the seven curation-operator
-    #              promotions (VERDICT r10 #1) — still oracle-checked
-    #              in pytest, the scalar_fns precedent
-    oracle=f"""
-    SELECT p_partkey, p_name,
-           {sql_dsum_raw(SQL_REVENUE_TERM, 'revenue')}
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_partkey, p_name
-    ORDER BY revenue DESC, p_partkey ASC
-    LIMIT 10
-    """,
-    tags=("join", "aggregate", "limit"),
-)
-def topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 parts by discounted revenue, partkey tie-break."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_extendedprice", "l_discount")
-    part = load(spark, sf_dir, "part").select("p_partkey", "p_name")
-    return (
-        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_partkey", "p_name")
-        .agg(F.sum(revenue_term()).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("p_partkey").asc())
-        .limit(10)
-    )
-
-
-# ---------------------------------------------------------------------------
-# 10. set operations — ALL FIVE forms (UNION / INTERSECT / EXCEPT and the
-#     ALL multiset variants) as one tagged battery. The distinct forms run
-#     over customer keys; the ALL forms over lineitem partkey multisets
-#     (where duplicates make ALL genuinely differ from DISTINCT). Result
-#     rows carry the op tag + the multiset multiplicity so one hashable
-#     schema covers both families.
-# ---------------------------------------------------------------------------
-
-_RICH = "SELECT c_custkey AS key FROM customer WHERE c_acctbal > 5000"
-_BIGSPEND = "SELECT o_custkey AS key FROM orders WHERE o_totalprice > 450000"
-_LI_PARTS = ("SELECT l_partkey AS key FROM lineitem WHERE l_quantity >= 45")
-_HEAVY_PARTS = ("SELECT l_partkey AS key FROM lineitem WHERE l_discount >= 0.08")
-
-
-def _rich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 5000)
-        .select(F.col("c_custkey").alias("key"))
-    )
-
-
-def _bigspend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 450000)
-        .select(F.col("o_custkey").alias("key"))
-    )
-
-
-def _li_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return li.filter(F.col("l_quantity") >= 45).select(
-        F.col("l_partkey").alias("key"))
-
-
-def _heavy_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return li.filter(F.col("l_discount") >= 0.08).select(
-        F.col("l_partkey").alias("key"))
-
-
-@register(
-    "set_ops",
-    gate=False,  # demoted in r11 for the seven curation-operator
-    #              promotions (VERDICT r10 #1) — still oracle-checked
-    #              in pytest, the scalar_fns precedent
-    oracle=f"""
-    SELECT 'union' AS op, key, CAST(1 AS BIGINT) AS n
-    FROM ({_RICH} UNION {_BIGSPEND})
-    UNION ALL
-    SELECT 'intersect', key, 1 FROM ({_RICH} INTERSECT {_BIGSPEND})
-    UNION ALL
-    SELECT 'except', key, 1 FROM ({_RICH} EXCEPT {_BIGSPEND})
-    UNION ALL
-    SELECT 'except_all', key, COUNT(*)
-    FROM ({_LI_PARTS} EXCEPT ALL {_HEAVY_PARTS}) GROUP BY key
-    UNION ALL
-    SELECT 'intersect_all', key, COUNT(*)
-    FROM ({_LI_PARTS} INTERSECT ALL {_HEAVY_PARTS}) GROUP BY key
-    """,
-    tags=("setop",),
-)
-def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-operation battery: union().distinct(), intersect(), subtract()
-    (SQL EXCEPT) over customer keys; exceptAll() / intersectAll()
-    multiset semantics over repeated lineitem partkeys (multiplicities
-    reported per key). Every Spark set operator is exercised in one
-    declared query. Scale: each form is one shuffle on the key column;
-    the ALL variants add Spark's internal count-replication, identical
-    in shape to the groupBy the distinct forms run."""
-    one = F.lit(1).cast("bigint")
-    rich, bigspend = _rich(spark, sf_dir), _bigspend(spark, sf_dir)
-    li, heavy = _li_parts(spark, sf_dir), _heavy_parts(spark, sf_dir)
-    parts = [
-        rich.union(bigspend).distinct()
-        .select(F.lit("union").alias("op"), "key", one.alias("n")),
-        rich.intersect(bigspend)
-        .select(F.lit("intersect").alias("op"), "key", one.alias("n")),
-        rich.subtract(bigspend)
-        .select(F.lit("except").alias("op"), "key", one.alias("n")),
-        li.exceptAll(heavy).groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("except_all").alias("op"), "key", "n"),
-        li.intersectAll(heavy).groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("intersect_all").alias("op"), "key", "n"),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# 11. distinct counting (exact; the approximate twin lives in text.py with a
-#     rows-only check since HLL sketches differ across engines).
-# ---------------------------------------------------------------------------
-
-
-def distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact multi-column distinct counts per order status.
-
-    Deregistered from the 50-entry driver gate in round 4 to make room
-    for the decontam gate slot (VERDICT r3 item 4): exact-countDistinct
-    semantics stay oracle-proven through approx_distinct, whose hashed
-    exact_cust column is the same COUNT(DISTINCT o_custkey) per status;
-    this fuller battery remains differentially tested against
-    DISTINCT_AGG_SQL in tests/test_sql_surface.py."""
-    orders = load(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderstatus").agg(
-        F.countDistinct("o_custkey").alias("n_cust"),
-        F.countDistinct("o_orderpriority").alias("n_prio"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-
-
-DISTINCT_AGG_SQL = """
-    SELECT o_orderstatus,
-           COUNT(DISTINCT o_custkey) AS n_cust,
-           COUNT(DISTINCT o_orderpriority) AS n_prio,
-           COUNT(*) AS n_orders
-    FROM orders
-    GROUP BY o_orderstatus
-"""
 
 
 @register(
@@ -572,113 +299,3 @@ def cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY GROUPING SETS ((n_name, o_orderpriority), (n_name),
                                 (o_orderpriority), ())
     """)
-
-
-# ---------------------------------------------------------------------------
-# 13. scalar function battery (math / date / string — the full §2.2 scalar
-#     surface in one single-table, single-codegen-stage pass over orders).
-#     Cross-engine type notes: Spark length() → INT vs DuckDB BIGINT (cast),
-#     Spark floor/ceil → BIGINT vs DuckDB DOUBLE (cast), Spark weekday()
-#     0=Monday == DuckDB isodow-1, Spark date_add returns DATE (cast back
-#     to midnight timestamp); both sides pinned.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "scalar_fns",
-    # r10: rotated OUT of the gate for interval_overlap (VERDICT r9
-    # item 5) — the scalar/temporal expression surface stays oracle-
-    # checked here ungated (pytest differential), alongside its
-    # sibling batteries array_fns / map_struct_fns / null_fns
-    gate=False,
-    oracle="""
-    SELECT o_orderkey,
-           CAST(year(o_orderdate) AS INT)  AS o_year,
-           CAST(month(o_orderdate) AS INT) AS o_month,
-           CAST(day(o_orderdate) AS INT)   AS o_day,
-           CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
-           CAST(date_diff('day', DATE '1992-01-01', o_orderdate) AS INT)
-             AS days_since_92,
-           CAST(o_orderdate + INTERVAL 30 DAY AS TIMESTAMP) AS date_plus_30,
-           CAST(isodow(o_orderdate) - 1 AS INT) AS o_weekday,
-           CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP)
-             AS o_month_end,
-           CAST(quarter(o_orderdate) AS INT) AS o_quarter,
-           CAST(epoch(CAST(o_orderdate AS TIMESTAMP)) AS BIGINT) AS o_epoch,
-           substring(o_orderpriority, 1, 1) AS prio_code,
-           upper(o_orderstatus)  AS status_u,
-           lower(o_orderpriority) AS prio_l,
-           CAST(length(o_orderpriority) AS INT) AS prio_len,
-           concat_ws('-', o_orderstatus, o_orderpriority) AS status_prio,
-           replace(o_orderpriority, '-', '_') AS prio_u,
-           lpad(o_orderpriority, 15, '*') AS prio_lpad,
-           rpad(o_orderstatus, 4, '.') AS status_rpad,
-           translate(o_orderpriority, '-', '_') AS prio_tr,
-           reverse(o_orderpriority) AS prio_rev,
-           repeat(substring(o_orderpriority, 1, 2), 3) AS prio_rep,
-           CAST(strpos(o_orderpriority, '-') AS INT) AS dash_pos,
-           split_part(o_orderpriority, '-', 1) AS prio_head,
-           regexp_replace(o_orderpriority, '[0-9]+', 'N') AS prio_nonum,
-           regexp_extract(o_orderpriority, '([0-9]+)', 1) AS prio_num,
-           left(o_orderpriority, 4) AS prio_left,
-           right(o_orderpriority, 4) AS prio_right,
-           CAST(starts_with(o_orderpriority, '1') AS BOOLEAN) AS is_urgent,
-           CAST(contains(o_orderpriority, '-') AS BOOLEAN) AS has_dash,
-           CAST(floor(o_totalprice) AS BIGINT) AS price_floor,
-           CAST(ceil(o_totalprice)  AS BIGINT) AS price_ceil,
-           abs(o_totalprice - 250000.0) AS price_dev,
-           CAST(o_custkey % 7 AS BIGINT) AS cust_mod,
-           CAST(sqrt(o_totalprice) AS DOUBLE) AS price_sqrt
-    FROM orders
-    """,
-    tags=("scalar", "string", "date"),
-)
-def scalar_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math + temporal + string scalar battery over orders — 35 columns of
-    JVM-side built-ins inside one whole-stage-codegen span (no UDFs, no
-    joins, no shuffle). Consolidates the former scalar/string/date
-    batteries into the one pass a columnar engine would actually run."""
-    o = load(spark, sf_dir, "orders")
-    ts = F.col("o_orderdate")
-    prio = F.col("o_orderpriority")
-    return o.select(
-        "o_orderkey",
-        F.year(ts).alias("o_year"),
-        F.month(ts).alias("o_month"),
-        F.dayofmonth(ts).alias("o_day"),
-        F.date_trunc("month", ts).cast("timestamp_ntz").alias("month_start"),
-        F.datediff(ts.cast("date"), F.lit("1992-01-01").cast("date"))
-        .alias("days_since_92"),
-        F.date_add(ts.cast("date"), 30).cast("timestamp_ntz")
-        .alias("date_plus_30"),
-        F.weekday(ts).alias("o_weekday"),
-        F.last_day(ts.cast("date")).cast("timestamp_ntz").alias("o_month_end"),
-        F.quarter(ts).alias("o_quarter"),
-        F.unix_timestamp(ts).cast("bigint").alias("o_epoch"),
-        F.substring("o_orderpriority", 1, 1).alias("prio_code"),
-        F.upper("o_orderstatus").alias("status_u"),
-        F.lower("o_orderpriority").alias("prio_l"),
-        F.length("o_orderpriority").alias("prio_len"),
-        F.concat_ws("-", "o_orderstatus", "o_orderpriority").alias("status_prio"),
-        F.replace(prio, F.lit("-"), F.lit("_")).alias("prio_u"),
-        F.lpad(prio, 15, "*").alias("prio_lpad"),
-        F.rpad(F.col("o_orderstatus"), 4, ".").alias("status_rpad"),
-        F.translate(prio, "-", "_").alias("prio_tr"),
-        F.reverse(prio).alias("prio_rev"),
-        F.repeat(F.substring("o_orderpriority", 1, 2), 3).alias("prio_rep"),
-        F.instr(prio, "-").alias("dash_pos"),
-        F.split_part(prio, F.lit("-"), F.lit(1)).alias("prio_head"),
-        F.regexp_replace(prio, "[0-9]+", "N").alias("prio_nonum"),
-        F.regexp_extract(prio, "([0-9]+)", 1).alias("prio_num"),
-        F.substring("o_orderpriority", 1, 4).alias("prio_left"),
-        # F.right matches DuckDB right() exactly incl. strings shorter
-        # than 4 chars (substr(length-3, 4) would drop all but the last)
-        F.right(prio, F.lit(4)).alias("prio_right"),
-        F.startswith(prio, F.lit("1")).alias("is_urgent"),
-        F.contains(prio, F.lit("-")).alias("has_dash"),
-        F.floor("o_totalprice").alias("price_floor"),
-        F.ceil("o_totalprice").alias("price_ceil"),
-        F.abs(F.col("o_totalprice") - F.lit(250000.0)).alias("price_dev"),
-        (F.col("o_custkey") % 7).cast("bigint").alias("cust_mod"),
-        F.sqrt("o_totalprice").alias("price_sqrt"),
-    )

@@ -1,133 +1,22 @@
-"""Second relational wave: cube, pivot, grouping sets, correlated
-subquery, as-of join, Pandas-UDF scoring, TPC-H classic shapes —
-completing the SURVEY.md §2.2 engine-surface checklist.
+"""Second relational wave: as-of join, Pandas-UDF scoring and the TPC-H
+Q3 shape — the SURVEY.md §2.2 engine-surface checklist.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from myhadoop_spark.catalog import load
 from myhadoop_spark.functions.money import (
     SQL_REVENUE_TERM,
-    dsum,
     revenue_term,
-    sql_dsum,
     sql_dsum_raw,
 )
 from myhadoop_spark.operators.asof import asof_join
 from myhadoop_spark.registry import register
-
-# ---------------------------------------------------------------------------
-# cube (full grouping-set lattice; complements rollup)
-# ---------------------------------------------------------------------------
-
-
-def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (returnflag, linestatus): all 4 grouping sets.
-
-    Deregistered from the 50-entry driver gate in round 3 to make room for
-    sort_full (R14 full-sort closure): CUBE *semantics* stay oracle-proven
-    through cube_rollup, whose explicit GROUPING SETS select the full cube
-    lattice over its columns; the .cube() DataFrame API itself is
-    equivalence-tested against SQL GROUP BY CUBE in
-    tests/test_sql_surface.py::test_cube_api_matches_sql."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_items"), dsum("l_quantity", "sum_qty"))
-
-
-CUBE_AGG_SQL = """
-    SELECT l_returnflag, l_linestatus,
-           COUNT(*) AS n_items,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    GROUP BY CUBE(l_returnflag, l_linestatus)
-"""
-
-
-# (explicit GROUPING SETS coverage lives in relational.cube_rollup, which
-# selects the rollup lattice plus an extra set by hand)
-
-
-# ---------------------------------------------------------------------------
-# pivot
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "pivot_status",
-    gate=False,  # demoted in r11 for the seven curation-operator
-    #              promotions (VERDICT r10 #1) — still oracle-checked
-    #              in pytest, the scalar_fns precedent
-    oracle="""
-    SELECT c_mktsegment,
-           CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN CAST(o_totalprice AS
-                DECIMAL(18,2)) END) AS DOUBLE) AS price_F,
-           CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN CAST(o_totalprice AS
-                DECIMAL(18,2)) END) AS DOUBLE) AS price_O,
-           CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN CAST(o_totalprice AS
-                DECIMAL(18,2)) END) AS DOUBLE) AS price_P
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_mktsegment
-    """,
-    tags=("pivot", "aggregate"),
-)
-def pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot order status into columns per market segment (explicit value
-    list — required at scale so Spark needn't pre-scan for values)."""
-    orders = load(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus",
-                                                  "o_totalprice")
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    wide = (
-        orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double"))
-    )
-    return wide.select(
-        "c_mktsegment",
-        F.col("F").alias("price_F"),
-        F.col("O").alias("price_O"),
-        F.col("P").alias("price_P"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# correlated subquery
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "correlated_subquery",
-    gate=False,  # demoted in r11 for the seven curation-operator
-    #              promotions (VERDICT r10 #1) — still oracle-checked
-    #              in pytest, the scalar_fns precedent
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders o
-    WHERE o_totalprice > 2 * (SELECT AVG(o2.o_totalprice)
-                              FROM orders o2
-                              WHERE o2.o_custkey = o.o_custkey)
-    """,
-    tags=("subquery",),
-)
-def correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders more than 2× their customer's average order value
-    (correlated scalar subquery — Catalyst decorrelates it into an
-    aggregate + join, which is exactly the scalable plan)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql("""
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM orders o
-        WHERE o_totalprice > 2 * (SELECT AVG(o2.o_totalprice)
-                                  FROM orders o2
-                                  WHERE o2.o_custkey = o.o_custkey)
-    """)
-
 
 # ---------------------------------------------------------------------------
 # as-of join (custom operator; oracle = DuckDB native ASOF JOIN)
@@ -290,42 +179,8 @@ def pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H classic shapes (Q3 / Q6)
+# TPC-H classic shape (Q3)
 # ---------------------------------------------------------------------------
-
-
-def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: tight filter + global aggregate (no groupBy —
-    partial aggregation collapses to a single row exchange).
-
-    Deregistered from the 50-entry driver gate in round 4 to make room
-    for the scrub_audit gate slot (VERDICT r3 item 4): the
-    filter+arithmetic-aggregate shape stays oracle-proven through
-    filter_proj (same predicate/projection family over lineitem); this
-    query remains differentially tested against TPCH_Q6_SQL in
-    tests/test_sql_surface.py."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.04) & (F.col("l_discount") <= 0.06)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(F.sum(revenue_term()).cast("double").alias("revenue"),
-             F.count(F.lit(1)).alias("n_items"))
-    )
-
-
-TPCH_Q6_SQL = f"""
-    SELECT {sql_dsum_raw(SQL_REVENUE_TERM, 'revenue')},
-           COUNT(*) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      AND l_discount BETWEEN 0.04 AND 0.06
-      AND l_quantity < 24
-"""
 
 
 @register(
@@ -367,62 +222,3 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
         .limit(10)
     )
-
-
-@register(
-    "tpch_q5",
-    oracle=f"""
-    SELECT n_name,
-           {sql_dsum_raw(SQL_REVENUE_TERM, 'revenue')}
-    FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey
-                   AND c_nationkey = s_nationkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY n_name
-    ORDER BY revenue DESC, n_name ASC
-    """,
-    tags=("join", "aggregate"),
-    gate=False,
-)
-def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: local-supplier volume — the 6-table join with
-    the customer-and-supplier-same-nation cross condition. The
-    nation⋈region dimension prunes to one region and BROADCASTS into
-    the supplier side; the pruned supplier side is left to AQE's
-    size-based join pick (suppliers scale with the corpus — a forced
-    broadcast would be wrong at 100 TB). The output is ≤ #nations
-    rows, so the final order is a constant-size sort. Exact DECIMAL
-    revenue keeps the differential bitwise (functions/money.py)."""
-    dims = (load(spark, sf_dir, "nation")
-            .join(load(spark, sf_dir, "region")
-                  .filter(F.col("r_name") == "ASIA"),
-                  F.col("n_regionkey") == F.col("r_regionkey"))
-            .select("n_nationkey", "n_name"))
-    supp = (load(spark, sf_dir, "supplier")
-            .join(F.broadcast(dims),
-                  F.col("s_nationkey") == F.col("n_nationkey"))
-            .select("s_suppkey", "s_nationkey", "n_name"))
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate")
-         >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate")
-           < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-    cust = load(spark, sf_dir, "customer").select("c_custkey",
-                                                  "c_nationkey")
-    return (li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-            .join(supp,
-                  (F.col("l_suppkey") == F.col("s_suppkey"))
-                  & (F.col("c_nationkey") == F.col("s_nationkey")))
-            .groupBy("n_name")
-            .agg(F.sum(revenue_term()).cast("double").alias("revenue"))
-            .orderBy(F.col("revenue").desc(), F.col("n_name").asc()))

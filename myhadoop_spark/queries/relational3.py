@@ -1,6 +1,5 @@
-"""Third wave: sessionization, exact median, unpivot, date & array
-function batteries — rounding out the SURVEY.md §2.2 scalar/temporal
-surface with engine-portable semantics.
+"""Third wave: batch sessionization (gaps and islands) with
+engine-portable semantics.
 """
 
 from __future__ import annotations
@@ -70,271 +69,3 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec("value")).cast("double").alias("sum_value"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# exact median via double-row_number (deterministic, unlike interpolating
-# percentile implementations which differ across engines)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "median_price",
-    gate=False,  # demoted in r11 for the seven curation-operator
-    #              promotions (VERDICT r10 #1) — still oracle-checked
-    #              in pytest, the scalar_fns precedent
-    oracle="""
-    WITH r AS (SELECT o_orderpriority, o_totalprice, o_orderkey,
-                      ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                                         ORDER BY o_totalprice ASC,
-                                                  o_orderkey ASC) AS rn,
-                      COUNT(*) OVER (PARTITION BY o_orderpriority) AS cnt
-               FROM orders)
-    SELECT o_orderpriority,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             / COUNT(*) AS median_price,
-           MIN(cnt) AS n_orders
-    FROM r
-    WHERE rn = CAST(floor((cnt + 1) / 2.0) AS BIGINT)
-       OR rn = CAST(floor((cnt + 2) / 2.0) AS BIGINT)
-    GROUP BY o_orderpriority
-    """,
-    tags=("aggregate", "percentile"),
-)
-def median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-group median: the middle element (odd) or the mean of
-    the two middle elements (even), selected by row_number — bit-exact
-    across engines, unlike interpolating percentile_cont variants."""
-    orders = load(spark, sf_dir, "orders")
-    wp = Window.partitionBy("o_orderpriority")
-    wo = wp.orderBy(F.col("o_totalprice").asc(), F.col("o_orderkey").asc())
-    r = orders.select(
-        "o_orderpriority", "o_totalprice",
-        F.row_number().over(wo).alias("rn"),
-        F.count(F.lit(1)).over(wp).alias("cnt"),
-    )
-    mid1 = F.floor((F.col("cnt") + 1) / 2.0).cast("bigint")
-    mid2 = F.floor((F.col("cnt") + 2) / 2.0).cast("bigint")
-    return (
-        r.filter((F.col("rn") == mid1) | (F.col("rn") == mid2))
-        .groupBy("o_orderpriority")
-        .agg(
-            (F.sum(dec("o_totalprice")).cast("double")
-             / F.count(F.lit(1))).alias("median_price"),
-            F.min("cnt").alias("n_orders"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# unpivot (wide → long)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "unpivot_metrics",
-    oracle="""
-    WITH long AS (
-      SELECT 'quantity' AS metric, CAST(l_quantity AS DECIMAL(18,2)) AS v
-      FROM lineitem
-      UNION ALL
-      SELECT 'extendedprice', CAST(l_extendedprice AS DECIMAL(18,2))
-      FROM lineitem
-      UNION ALL
-      SELECT 'discount', CAST(l_discount AS DECIMAL(18,2)) FROM lineitem
-    )
-    SELECT metric, COUNT(*) AS n, CAST(SUM(v) AS DOUBLE) AS total
-    FROM long GROUP BY metric
-    """,
-    tags=("unpivot",),
-    # r8: demoted from the gate window to make room for the promoted
-    # dsir_select — a reshape battery whose melt surface has no extra
-    # shuffle/scale story beyond the still-gated pivot_status inverse;
-    # remains a full ungated DuckDB differential in pytest
-    gate=False,
-)
-def unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """stack() unpivot of three measures into (metric, value) rows +
-    per-metric aggregate. The scan is read once; stack expands rows
-    inside the same codegen stage (no triple scan, unlike the UNION ALL
-    oracle formulation)."""
-    li = load(spark, sf_dir, "lineitem")
-    long = li.selectExpr(
-        "stack(3, 'quantity', CAST(l_quantity AS DECIMAL(18,2)),"
-        " 'extendedprice', CAST(l_extendedprice AS DECIMAL(18,2)),"
-        " 'discount', CAST(l_discount AS DECIMAL(18,2))) AS (metric, v)"
-    )
-    return long.groupBy("metric").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("v").cast("double").alias("total"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# array + higher-order (lambda) function battery.
-# (The temporal battery lives in relational.scalar_fns.)
-#
-# Driver-hashability: raw array columns crash pandas-based row
-# canonicalizers (lists are unhashable), so every array-valued output is
-# serialized to a CSV string of EXACT integers — floats are fixed-pointed
-# with floor(x*1e6) BEFORE serialization, which is bit-identical across
-# engines on identical doubles (string-rendering floats is not).
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "array_fns",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings WHERE vec_id % 10 = 0)
-    SELECT vec_id,
-           CAST(len(embedding) AS INT) AS n_dims,
-           embedding[1] AS first_val,
-           embedding[-1] AS last_val,
-           list_max(embedding) AS vmax,
-           list_min(embedding) AS vmin,
-           CAST(len(list_filter(v, x -> x < 0)) AS INT) AS n_neg,
-           array_to_string(list_transform(list_slice(v, 1, 3),
-               x -> CAST(floor(x * 1e6) AS BIGINT)), ',') AS head3_fp,
-           array_to_string(list_reverse(list_transform(list_slice(v, 1, 3),
-               x -> CAST(floor(x * 1e6) AS BIGINT))), ',') AS head3_rev_fp,
-           CAST(floor(list_sort(list_slice(v, 1, 4))[4] * 1e6) AS BIGINT)
-             AS top_of_4_fp,
-           array_to_string(list_transform(list_slice(v, 1, 4),
-               x -> CAST(floor(x * 2.0 * 1e6) AS BIGINT)), ',') AS doubled4_fp,
-           CAST(len(list_filter(v, x -> x > 0.5)) AS INT) AS n_big,
-           CAST(floor(list_reduce(list_transform(v, x -> x * x),
-                                  (acc, x) -> acc + x) * 1e6) AS BIGINT)
-             AS sumsq_fp,
-           array_to_string(list_transform(generate_series(1, 3),
-               i -> CAST(floor((v[i] + v[i + 1]) * 1e6) AS BIGINT)), ',')
-             AS pairsums_fp,
-           len(list_filter(v, x -> x < -0.5)) > 0 AS has_very_neg
-    FROM e
-    """,
-    tags=("scalar", "array", "higher-order"),
-    # r8: demoted from the gate window to make room for the promoted
-    # dedup queries — a pure expression battery with no shuffle/scale
-    # story, still a full ungated DuckDB differential in pytest
-    gate=False,
-)
-def array_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array + higher-order function battery over the embedding column:
-    size/index/min/max/slice/reverse/sort plus transform / filter /
-    aggregate (fold) / zip_with / exists lambdas — all JVM built-ins.
-    Array outputs are fixed-pointed (floor(x*1e6) → BIGINT) and
-    CSV-serialized so any engine's canonicalizer can hash them.
-    Note DuckDB's list_reduce has no initial accumulator — it folds left
-    from the first element, so the Spark fold seeds with element 1's
-    square and aggregates the tail identically."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 == 0)
-    e = F.col("embedding")
-    v = F.transform(e, lambda x: x.cast("double"))
-
-    def fp(c):  # fixed-point a double for exact cross-engine rendering
-        return F.floor(c * F.lit(1e6)).cast("bigint")
-
-    def fp_csv(arr):  # serialize an array of doubles as exact fixed-points
-        return F.array_join(
-            F.transform(arr, lambda x: fp(x).cast("string")), ",")
-
-    return emb.select(
-        "vec_id",
-        F.size(e).alias("n_dims"),
-        F.element_at(e, 1).alias("first_val"),
-        F.element_at(e, -1).alias("last_val"),
-        F.array_max(e).alias("vmax"),
-        F.array_min(e).alias("vmin"),
-        F.size(F.filter(v, lambda x: x < 0)).alias("n_neg"),
-        fp_csv(F.slice(v, 1, 3)).alias("head3_fp"),
-        F.array_join(
-            F.reverse(F.transform(F.slice(v, 1, 3),
-                                  lambda x: fp(x).cast("string"))), ",")
-        .alias("head3_rev_fp"),
-        fp(F.element_at(F.array_sort(F.slice(v, 1, 4)), 4)).alias("top_of_4_fp"),
-        fp_csv(F.transform(F.slice(v, 1, 4), lambda x: x * 2.0))
-        .alias("doubled4_fp"),
-        F.size(F.filter(v, lambda x: x > 0.5)).alias("n_big"),
-        fp(F.aggregate(
-            F.slice(v, 2, F.size(v) - 1),
-            F.element_at(v, 1) * F.element_at(v, 1),
-            lambda acc, x: acc + x * x)).alias("sumsq_fp"),
-        F.array_join(
-            F.zip_with(F.slice(v, 1, 3), F.slice(v, 2, 3),
-                       lambda a, b: fp(a + b).cast("string")), ",")
-        .alias("pairsums_fp"),
-        F.exists(v, lambda x: x < -0.5).alias("has_very_neg"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# approximate-quantile sketch battery (r6) — the approx_distinct design
-# applied to percentiles: exact values are the cross-engine contract,
-# the sketch is oracle-verified as a BOUND.
-# ---------------------------------------------------------------------------
-
-_QPS = (0.5, 0.9, 0.99)
-_QACC = 1000        # approx_percentile accuracy → rank error ≤ 1/_QACC
-_QEPS = 5.0 / _QACC   # 5x the nominal rank error, the
-#   approx_distinct convention (its HLL flag allows 5x rsd):
-#   measured realized error is ~2-5x 1/accuracy once the
-#   sketch rank and the continuous-interpolation rank
-#   conventions (floor(pN) vs p(N-1)+1) are both counted
-
-
-@register(
-    "approx_quantiles",
-    oracle="""
-    SELECT l_returnflag,
-           floor(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5)
-                 * 1e6) / 1e6 AS p50,
-           floor(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.9)
-                 * 1e6) / 1e6 AS p90,
-           floor(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.99)
-                 * 1e6) / 1e6 AS p99,
-           TRUE AS sketch_in_bound
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-    tags=("aggregate", "approx", "sketch"),
-    gate=False,
-)
-def approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-returnflag price percentiles: exact interpolated values
-    (floored at 1e-6 — Spark and DuckDB interpolate the same rank with
-    different expression trees, the simsearch rounding precedent) plus
-    a boolean asserting the approx_percentile sketch (GK/KLL-family,
-    accuracy=1000) landed inside 5× its nominal rank error:
-    each estimate must lie between the exact quantiles at p ∓ 5/acc
-    (the approx_distinct 5×-margin convention).
-    So the sketch is oracle-verified as a bound, not a bit pattern —
-    exactly approx_distinct's HLL design.
-
-    Scale note: the EXACT side is the oracle-side crutch (Spark's
-    percentile holds each group's values; memory ∝ group size) — at
-    100 TB only the sketch branch runs, and its mergeable partial
-    state shuffles ∝ partitions × groups, never ∝ rows. The two
-    branches are kept as separate aggregations joined on the tiny
-    group key for the same reason approx_distinct splits: a combined
-    agg() would shuffle sketch partials per pre-aggregation row."""
-    price = F.col("l_extendedprice").cast("double")
-    li = load(spark, sf_dir, "lineitem")
-    lo_hi = [q for p in _QPS
-             for q in (max(p - _QEPS, 0.0), min(p + _QEPS, 1.0))]
-    exact = li.groupBy("l_returnflag").agg(
-        F.percentile(price, F.lit(list(_QPS))).alias("_ex"),
-        F.percentile(price, F.lit(lo_hi)).alias("_bounds"))
-    approx = li.groupBy("l_returnflag").agg(
-        F.approx_percentile(price, F.lit(list(_QPS)), _QACC).alias("_ap"))
-    in_bound = None
-    for i in range(len(_QPS)):
-        ok = ((F.col("_ap")[i] >= F.col("_bounds")[2 * i])
-              & (F.col("_ap")[i] <= F.col("_bounds")[2 * i + 1]))
-        in_bound = ok if in_bound is None else (in_bound & ok)
-    return (exact.join(approx, "l_returnflag")
-            .select("l_returnflag",
-                    (F.floor(F.col("_ex")[0] * 1e6) / 1e6).alias("p50"),
-                    (F.floor(F.col("_ex")[1] * 1e6) / 1e6).alias("p90"),
-                    (F.floor(F.col("_ex")[2] * 1e6) / 1e6).alias("p99"),
-                    in_bound.alias("sketch_in_bound")))

@@ -1,5 +1,5 @@
-"""Fifth wave: window-function battery (ranking family + range frames),
-outer joins, and null-handling semantics — §2.2 depth coverage.
+"""Fifth wave: window-function battery (ranking family + range frames)
+and outer joins — §2.2 depth coverage.
 """
 
 from __future__ import annotations
@@ -128,60 +128,4 @@ def outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.join(big, cust.c_custkey == big.o_custkey, "full_outer")
         .select("c_custkey", "c_name", "o_orderkey", "o_totalprice")
-    )
-
-
-# ---------------------------------------------------------------------------
-# null-handling semantics
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "null_fns",
-    oracle="""
-    WITH c AS (SELECT c_custkey,
-                      CASE WHEN c_acctbal < 0 THEN NULL
-                           ELSE c_acctbal END AS bal,
-                      CASE WHEN c_nationkey % 5 = 0 THEN NULL
-                           ELSE c_nationkey END AS nk
-               FROM customer)
-    SELECT c_custkey,
-           coalesce(bal, -1.0) AS bal_or_default,
-           nullif(nk, 3) AS nk_not3,
-           bal IS NULL AS bal_missing,
-           (bal IS NOT DISTINCT FROM NULL) AS nullsafe_eq_null,
-           CASE WHEN bal IS NULL THEN 'missing'
-                WHEN bal > 5000 THEN 'high' ELSE 'low' END AS bal_band,
-           CAST(count(bal) OVER () AS BIGINT) AS n_nonnull_bal,
-           CAST(count(*) OVER () AS BIGINT) AS n_rows
-    FROM c
-    """,
-    tags=("scalar", "null"),
-    # r8: demoted from the gate window to make room for the promoted
-    # dedup queries — a pure expression battery with no shuffle/scale
-    # story, still a full ungated DuckDB differential in pytest
-    gate=False,
-)
-def null_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL semantics battery: coalesce, nullif, IS NULL, null-safe
-    equality (<=> / IS NOT DISTINCT FROM), CASE with NULL branch, and
-    the count(col)-skips-nulls vs count(*) contrast."""
-    c = load(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.when(F.col("c_acctbal") < 0, None).otherwise(F.col("c_acctbal"))
-        .alias("bal"),
-        F.when(F.col("c_nationkey") % 5 == 0, None)
-        .otherwise(F.col("c_nationkey")).alias("nk"),
-    )
-    wall = Window.partitionBy()
-    return c.select(
-        "c_custkey",
-        F.coalesce("bal", F.lit(-1.0)).alias("bal_or_default"),
-        F.nullif("nk", F.lit(3)).alias("nk_not3"),
-        F.col("bal").isNull().alias("bal_missing"),
-        F.col("bal").eqNullSafe(F.lit(None)).alias("nullsafe_eq_null"),
-        F.when(F.col("bal").isNull(), "missing")
-        .when(F.col("bal") > 5000, "high").otherwise("low").alias("bal_band"),
-        F.count("bal").over(wall).cast("bigint").alias("n_nonnull_bal"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("n_rows"),
     )

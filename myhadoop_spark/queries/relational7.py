@@ -1,126 +1,13 @@
-"""Seventh wave: map-type battery, struct battery, null-safe join —
-the last collection/semantics gaps in the §2.2 scalar surface.
+"""Seventh wave: global indexing — contiguous ids and the reproducible
+shuffle over operators/indexing.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
 from myhadoop_spark.registry import register
-
-# ---------------------------------------------------------------------------
-# map functions (outputs flattened to scalars — map literals themselves
-# render differently across engines, their CONTENTS don't)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "map_struct_fns",
-    oracle="""
-    WITH m AS (SELECT o_orderkey,
-                      MAP {'status': o_orderstatus,
-                           'priority': o_orderpriority} AS props,
-                      struct_pack(status := o_orderstatus,
-                                  price := o_totalprice,
-                                  cust := o_custkey) AS info
-               FROM orders WHERE o_orderkey % 500 = 0)
-    SELECT o_orderkey,
-           props['status'][1] AS status_val,
-           props['priority'][1] AS prio_val,
-           CAST(cardinality(props) AS INT) AS n_keys,
-           array_to_string(list_sort(map_keys(props)), ',') AS keys_sorted,
-           list_contains(map_keys(props), 'status') AS has_status,
-           list_contains(map_keys(props), 'missing') AS has_missing,
-           info.status AS s_status,
-           info.price AS s_price,
-           CAST(info.cust AS BIGINT) AS s_cust,
-           info.price > 200000 AS s_big
-    FROM m
-    """,
-    tags=("scalar", "map", "struct"),
-    # r9: rotates out of the 50-slot gate window for unimax_select —
-    # pure expression battery with no scale story, the array_fns /
-    # null_fns / unpivot_metrics precedent; still a full ungated
-    # differential in pytest + both check harnesses
-    gate=False,
-)
-def map_struct_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map + struct battery in one pass over orders: map construction,
-    key lookup, cardinality, key enumeration, membership; struct
-    construction, field access, derived predicate. All outputs flattened
-    to scalars so both engines' collection internals stay out of the
-    comparison."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 500 == 0)
-    props = F.create_map(
-        F.lit("status"), F.col("o_orderstatus"),
-        F.lit("priority"), F.col("o_orderpriority"),
-    )
-    info = F.struct(
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("price"),
-        F.col("o_custkey").alias("cust"),
-    )
-    return o.select(
-        "o_orderkey",
-        F.element_at(props, "status").alias("status_val"),
-        F.element_at(props, "priority").alias("prio_val"),
-        F.size(props).alias("n_keys"),
-        F.array_join(F.array_sort(F.map_keys(props)), ",").alias("keys_sorted"),
-        F.array_contains(F.map_keys(props), "status").alias("has_status"),
-        F.array_contains(F.map_keys(props), "missing").alias("has_missing"),
-        info.getField("status").alias("s_status"),
-        info.getField("price").alias("s_price"),
-        info.getField("cust").alias("s_cust"),
-        (info.getField("price") > 200000).alias("s_big"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# null-safe join (<=> / IS NOT DISTINCT FROM)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "nullsafe_join",
-    gate=False,  # demoted in r11 for the seven curation-operator
-    #              promotions (VERDICT r10 #1) — still oracle-checked
-    #              in pytest, the scalar_fns precedent
-    oracle="""
-    WITH a AS (SELECT c_custkey,
-                      CASE WHEN c_nationkey % 5 = 0 THEN NULL
-                           ELSE c_nationkey END AS nk
-               FROM customer),
-    b AS (SELECT n_nationkey, n_name,
-                 CASE WHEN n_nationkey % 5 = 0 THEN NULL
-                      ELSE n_nationkey END AS nk
-          FROM nation)
-    SELECT a.c_custkey, b.n_name
-    FROM a JOIN b ON a.nk IS NOT DISTINCT FROM b.nk
-    WHERE a.c_custkey % 20 = 0
-    """,
-    tags=("join", "null"),
-)
-def nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equi-join (<=>): NULL keys MATCH each other — a plain
-    equi-join silently drops them. Exercises the NULL-bucket explosion
-    case deliberately (every NULL-keyed customer × every NULL-keyed
-    nation), which at scale is itself a skew hazard worth knowing."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.when(F.col("c_nationkey") % 5 == 0, None)
-        .otherwise(F.col("c_nationkey")).alias("nk"),
-    ).filter(F.col("c_custkey") % 20 == 0)
-    nat = load(spark, sf_dir, "nation").select(
-        "n_name",
-        F.when(F.col("n_nationkey") % 5 == 0, None)
-        .otherwise(F.col("n_nationkey")).alias("nk2"),
-    )
-    return (
-        cust.join(nat, F.col("nk").eqNullSafe(F.col("nk2")))
-        .select("c_custkey", "n_name")
-    )
 
 
 @register(

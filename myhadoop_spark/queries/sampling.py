@@ -18,7 +18,7 @@ All four sampling strategies are declared as ONE tagged battery query
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
@@ -108,68 +108,3 @@ def sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("qweighted").alias("method"), "doc_id", "lang")
     )
     return hash20.unionAll(split).unionAll(strat).unionAll(qweighted)
-
-
-# ---------------------------------------------------------------------------
-# weighted sampling WITHOUT replacement (r6) — Efraimidis & Spirakis
-# 2006: key_i = u_i^(1/w_i) with u_i uniform; the n largest keys are
-# exactly a weight-proportional sample without replacement. One pass,
-# no sequential state — THE distributed algorithm for "sample docs
-# ∝ token count", and with the deterministic id-hash u_i it is
-# reproducible on any engine/partitioning (the module's discipline).
-# pow() is transcendental, but selection flips only if two keys
-# collide within an ulp — with distinct 6-digit u's the margin is
-# astronomically wider (and the differential would fail loudly at dev
-# time, not flake: everything here is deterministic).
-# ---------------------------------------------------------------------------
-
-_WS_N = 50
-
-
-def weighted_sample_keys(id_col: Column, weight_col: Column) -> Column:
-    """The A-ES key u^(1/w): u from the deterministic id-hash
-    (hash_bucket, 1e6 resolution, shifted off 0 and 1)."""
-    u = ((hash_bucket(id_col, 1_000_000).cast("double") + F.lit(1.0))
-         / F.lit(1_000_002.0))
-    return F.pow(u, F.lit(1.0) / weight_col.cast("double"))
-
-
-@register(
-    "weighted_sample",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, len({sql_tokens()}) AS w FROM documents),
-    k AS (SELECT doc_id, w,
-                 power((CAST({sql_hash_bucket('doc_id', 1000000)}
-                        AS DOUBLE) + 1.0) / 1000002.0,
-                       1.0 / CAST(w AS DOUBLE)) AS key
-          FROM t WHERE w > 0)
-    SELECT doc_id, w, rn FROM (
-      SELECT doc_id, w,
-             ROW_NUMBER() OVER (ORDER BY key DESC, doc_id ASC) AS rn
-      FROM k) WHERE rn <= {_WS_N}
-    """,
-    tags=("sampling", "extension"),
-    gate=False,
-)
-def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, w, rn): the top-{N} token-count-weighted sample of the
-    documents table, without replacement — longer documents
-    proportionally more likely, every run and every engine selecting
-    the identical set. The plan is one narrow projection + TakeOrdered
-    (per-partition top-N combined at the merge — no global sort and no
-    corpus-wide single-partition window); ranks attach to the N
-    survivors afterwards."""
-    docs = load(spark, sf_dir, "documents")
-    toks = tokens()
-    t = (docs.select("doc_id", F.size(toks).alias("w"))
-         .filter(F.col("w") > 0))
-    keyed = t.withColumn(
-        "key", weighted_sample_keys(F.col("doc_id"), F.col("w")))
-    # TakeOrdered first (per-partition top-N, no corpus-wide single-
-    # partition window), THEN number the N survivors — the tiny window
-    # runs over _WS_N rows only
-    top = (keyed.orderBy(F.col("key").desc(), F.col("doc_id").asc())
-           .limit(_WS_N))
-    win = Window.orderBy(F.col("key").desc(), F.col("doc_id").asc())
-    return (top.withColumn("rn", F.row_number().over(win))
-            .select("doc_id", "w", "rn"))

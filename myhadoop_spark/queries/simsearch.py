@@ -5,10 +5,6 @@ Paths:
                    correct baseline, broadcast the queries, never the corpus
   simsearch_ivf    IVF (sampled k-means inverted file) ANN — the declared
                    approximate path; recall bound-checked vs exact
-  simsearch_lsh    sign-random-projection LSH bucketing (tests-only since
-                   r2: IVF is the declared ANN default — its recall@5 is
-                   higher; sign-LSH stays as the streaming-friendly variant
-                   exercised in tests/test_approx.py)
   embed_neardup    cosine ≥ τ near-duplicate pairs through sign-LSH
                    candidate buckets + exact-cosine verify
 
@@ -114,116 +110,6 @@ def simsearch_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rn",
-                _trunc6(F.col("cos")).alias("cosine"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# sign-random-projection LSH (streaming-friendly ANN variant; tests-only)
-# ---------------------------------------------------------------------------
-
-# multi-table sign-random-projection LSH: T tables × P planes. Single-table
-# sign-LSH has poor recall on high-dim random vectors (bucket match prob
-# (1-θ/π)^planes); the union over T independent tables restores it while
-# keeping per-table candidate sets small. Hyperplane weight for
-# (table t, plane p, dim d) = sin(1 + (t*P + p)*997 + d) — a fixed closed
-# form, no stored model, identical on every executor (and inlined as
-# double literals so any SQL mirror sees the same bits).
-N_TABLES = 8
-N_PLANES = 4
-
-
-def _plane_weights(t: int, p: int, n_planes: int, dim: int = EMB_DIM) -> list[float]:
-    return [math.sin(1 + (t * n_planes + p) * 997 + d) for d in range(dim)]
-
-
-def _sin_buckets_expr(vcol: str, n_tables: int, n_planes: int) -> Column:
-    """array of n_tables bucket ids from sin-hyperplane sign bits. The
-    weights are precomputed in Python and inlined as literal arrays; the
-    per-plane dot is a fold (compact expression — a fully expanded
-    64-term chain per plane overflows Janino's method limit and falls
-    back to slow interpreted eval, measured 30× slower)."""
-    planes = [
-        F.array(*[F.lit(x) for x in _plane_weights(t, p, n_planes)])
-        for t in range(n_tables) for p in range(n_planes)
-    ]
-    w = F.array(*planes)
-    v = F.col(vcol)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_tables - 1)),
-        lambda t: F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, p: acc + F.when(
-                F.aggregate(
-                    F.zip_with(v, F.element_at(w, t * n_planes + p + 1),
-                               lambda x, ww: x * ww),
-                    F.lit(0.0), lambda a, x: a + x) > 0,
-                F.pow(F.lit(2.0), p.cast("double")).cast("long"),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-    )
-
-
-def simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k via multi-table sign-random-projection LSH: a corpus
-    vector is a candidate for a query iff they share a bucket in ANY of
-    the 8 tables (4 planes each). Candidates are deduped before scoring,
-    so each pair's cosine is computed once. Approximate — recall vs
-    simsearch_exact is bound-checked in tests/test_approx.py. Demoted
-    from the declared registry in r2 (IVF is the declared ANN default,
-    with higher recall@5); kept as the streaming-friendly variant — a
-    bucket id is computable per record with no index state.
-
-    Scale: the corpus is exploded to 8 (table, bucket) rows per vector —
-    a constant blow-up shuffled on (table, bucket); per-bucket candidate
-    lists stay ∝ corpus/2^planes per table. No cross join at any size.
-
-    r14 (optimization, guide §2.4/§3.1 — the r13 edjoin/ppjoin shape,
-    VERDICT r13 #4): a (q_id, vec_id) candidate is emitted once per
-    shared table (≤ N_TABLES× duplication), and the old ``distinct``
-    shuffled that multiset. The query side is already broadcast, so the
-    only change needed is hash-partitioning the stream side by vec_id
-    BEFORE the bucket join: every duplicate of a pair then lives on the
-    stream vector's partition, ``HashPartitioning(vec_id)`` satisfies
-    the dedup aggregate's ``ClusteredDistribution(q_id, vec_id)``, and
-    the distinct plans with no exchange above the join (pinned in
-    tests/test_approx.py). The repartition exchange carries only
-    (vec_id, t, bucket) int rows — never the vectors."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v"))
-    emb = emb.withColumn("nrm", F.sqrt(_dot("v", "v")))
-    emb = emb.withColumn("buckets", _sin_buckets_expr("v", N_TABLES, N_PLANES))
-    tagged = emb.select(
-        "vec_id", "v", "nrm",
-        F.posexplode("buckets").alias("t", "bucket"))
-    q = tagged.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("t").alias("qt"),
-        F.col("bucket").alias("qbucket"))
-    par = spark.sparkContext.defaultParallelism
-    cand_ids = (
-        tagged.select("vec_id", "t", "bucket")
-        .repartition(par, "vec_id")
-        .join(F.broadcast(q),
-              (F.col("t") == F.col("qt")) & (F.col("bucket") == F.col("qbucket")))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-        .distinct()
-    )
-    qvec = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"))
-    scored = (
-        cand_ids.join(emb.select("vec_id", "v", "nrm"), "vec_id")
-        .join(F.broadcast(qvec), "q_id")
-        .select("q_id", "vec_id",
-                (_dot("v", "qv") / (F.col("nrm") * F.col("qnrm"))).alias("cos"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("q_id", F.col("vec_id").alias("neighbor_id"), "rn",
                 _trunc6(F.col("cos")).alias("cosine"))
@@ -516,9 +402,8 @@ def jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle and storage width; distortion scales ~1/√k, so k is
     chosen for the target ε (statistical contract pinned in
     tests/test_random_projection.py). The 16 doubles are serialized
-    as one comma-joined 1e-6 fixed-point string — the array_fns
-    fingerprint convention (the driver canon cannot hash array
-    cells)."""
+    as one comma-joined 1e-6 fixed-point string (the driver canon
+    cannot hash array cells)."""
     from myhadoop_spark.operators.random_projection import project
 
     emb = load(spark, sf_dir, "embeddings")

@@ -84,25 +84,3 @@ def stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return tumbling.unionAll(sliding)
-
-
-@register(
-    "event_json",
-    oracle="""
-    SELECT event_id,
-           CAST(json_extract(props, '$.k') AS BIGINT) AS k
-    FROM events
-    """,
-    # r10: rotated OUT of the gate for triangle_count (VERDICT r9
-    # item 5) — the JSON-extraction surface stays oracle-checked
-    # ungated (pytest differential)
-    gate=False,
-    tags=("streaming", "json"),
-)
-def event_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON field extraction from the props blob (semi-structured path)."""
-    ev = load(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-    )

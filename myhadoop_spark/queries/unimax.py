@@ -74,8 +74,7 @@ from myhadoop_spark.registry import register
     # r9: gated on arrival (the dsir_select precedent) — the round's
     # flagship named method, bitwise at both SFs in both local
     # harnesses, with a real flat-alloc/linear-select scale story
-    # (unimax_study.tsv); map_struct_fns rotates out to hold the
-    # 50-slot window
+    # (unimax_study.tsv)
     tags=("mixing", "curation", "extension"),
 )
 def unimax_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -133,8 +133,7 @@ _VND_PIX = ("CAST(concat('0x', substr(md5(concat(g, '#', f, ':', i)), "
     gate=True,  # promoted r13 — the video family's gate row: the
     #             positional frame-match join (frame_idx in the block
     #             key + min_shared counting) is machinery no other
-    #             gated row runs (ngram_stats demoted in exchange —
-    #             see its note)
+    #             gated row runs
     tags=("multimodal", "video", "dedup", "extension", "lsh"),
 )
 def video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

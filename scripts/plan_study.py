@@ -27,7 +27,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from myhadoop_spark import registry
 from myhadoop_spark.session import get_spark
 
-QUERIES = ["wc", "agg_q1", "join_multi", "topk", "window_fns", "simhash"]
+QUERIES = ["wc", "agg_q1", "join_multi", "tpch_q3", "window_fns",
+           "simhash_neardup"]
 
 CONFIGS = {
     "baseline": {},

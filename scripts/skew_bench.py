@@ -3,14 +3,15 @@
 The driver fixtures are uniform, so this generates its own pathological
 input: N rows where one key owns `hot_frac` of everything (the viral-
 document / default-user-id shape that pins a stage at 100 TB). It then
-times the same sum/count aggregation three ways:
+times the same sum/count aggregation two ways, and a join against a
+small dimension with AQE off and on:
 
-  direct            groupBy(key) with AQE off — the straggler plan
-  salted            two-round salted fold (operators/skew.py), AQE off
-  direct_aqe        groupBy(key) with AQE on (Spark's own remedy)
+  agg_direct        groupBy(key) with AQE off — the straggler plan
+  agg_salted        two-round salted fold (operators/skew.py), AQE off
+  join_direct       shuffle join, AQE off, then on (Spark's own remedy)
 
-All three must return identical results (asserted); the timings show
-the skew remedy working. Writes skew_bench.tsv.
+Both aggregations must return identical results (asserted). Writes
+skew_bench.tsv.
 
 Usage: python scripts/skew_bench.py [n_rows] [reps]
 """
@@ -75,16 +76,6 @@ def main() -> None:
     def join_direct():
         return src.join(dim, "k").select(F.sum(F.length("label")).alias("s"))
 
-    def join_salted():
-        from myhadoop_spark.operators.skew import replicated_skew_join
-
-        return (replicated_skew_join(src, dim, "k", n_salts=32)
-                .select(F.sum(F.length("label")).alias("s")))
-
-    ja = join_direct().collect()[0]["s"]
-    jb = join_salted().collect()[0]["s"]
-    assert ja == jb, "salted join diverged"
-
     rows = []
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     # force the shuffle join path (dim is small enough to broadcast,
@@ -93,7 +84,6 @@ def main() -> None:
     rows.append(("agg_direct_noaqe", timed(agg_direct, reps)))
     rows.append(("agg_salted_noaqe", timed(agg_salted, reps)))
     rows.append(("join_direct_noaqe", timed(join_direct, reps)))
-    rows.append(("join_salted_noaqe", timed(join_salted, reps)))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     rows.append(("join_direct_aqe", timed(join_direct, reps)))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")

@@ -26,8 +26,8 @@ _STOP = ("the", "a", "of", "and", "to", "in")
 
 
 def _labeled(spark, sf_dir):
-    """documents + a heuristic quality label (the doc_metrics formula,
-    queries/text.py — the classifier's bootstrap teacher)."""
+    """documents + a heuristic quality label (the length/diversity/
+    stopword formula qf_scores bootstraps from, queries/quality_checks.py)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     toks = tokens()
     n = F.size(toks).cast("double")

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
 from myhadoop_spark.operators.decontam import (
-    contaminated_docs,
     contamination_pairs,
     shingle_hashes,
 )
@@ -93,23 +92,6 @@ def test_shingle_count_matches_formula(spark, split):
             assert 1 <= r["s"] <= r["t"] - N + 1, r
 
 
-def test_drop_list_consistent_with_pairs(spark, split):
-    corpus, bench = split
-    pairs = contamination_pairs(corpus, bench, n=N).collect()
-    docs = {r["corpus_id"]: r for r in
-            contaminated_docs(corpus, bench, n=N).collect()}
-    by_corpus: dict[int, list] = {}
-    for r in pairs:
-        by_corpus.setdefault(r["corpus_id"], []).append(r)
-    assert set(docs) == set(by_corpus)
-    for cid, rows in by_corpus.items():
-        d = docs[cid]
-        assert d["n_bench_docs"] == len(rows)
-        assert d["total_shared"] == sum(r["n_shared"] for r in rows)
-        best = max(rows, key=lambda r: (r["n_shared"], -r["bench_id"]))
-        assert d["top_bench_id"] == best["bench_id"]
-
-
 def test_threshold_monotone(spark, split):
     corpus, bench = split
     n1 = contamination_pairs(corpus, bench, n=N, min_shared=1).count()
@@ -140,22 +122,3 @@ def test_bench_side_is_broadcast(spark, split):
     plan = buf.getvalue()
     assert "BroadcastExchange" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
-
-
-def test_string_doc_ids_supported(spark, split):
-    """contaminated_docs must work when doc ids are strings (the common
-    corpus shape); tie-break = most shared, then smallest bench_id in
-    string order (r3 advice: the old negation tie-break required numeric
-    ids and failed at analysis time on strings)."""
-    corpus, bench = split
-    c = corpus.withColumn("doc_id", F.concat(F.lit("doc-"), "doc_id"))
-    b = bench.withColumn("doc_id", F.concat(F.lit("doc-"), "doc_id"))
-    pairs = contamination_pairs(c, b, n=N).collect()
-    docs = {r["corpus_id"]: r for r in contaminated_docs(c, b, n=N).collect()}
-    by_corpus: dict[str, list] = {}
-    for r in pairs:
-        by_corpus.setdefault(r["corpus_id"], []).append(r)
-    assert set(docs) == set(by_corpus) and docs
-    for cid, rows in by_corpus.items():
-        best = min(rows, key=lambda r: (-r["n_shared"], r["bench_id"]))
-        assert docs[cid]["top_bench_id"] == best["bench_id"]

@@ -3,8 +3,7 @@ parity (same md5 hashing, same fold order; ln ulp-tolerant), bitwise
 repartition invariance, selection semantics (target-like pool docs
 outrank alien ones), and plan shape (broadcast ratio join, TakeOrdered
 selection, no Python rows). The cross-engine DuckDB differential is
-the registered ungated query ``dsir_select``
-(tests/test_correctness.py)."""
+the gated query ``dsir_select`` (tests/test_correctness.py)."""
 
 from __future__ import annotations
 

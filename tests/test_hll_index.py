@@ -13,7 +13,6 @@ from myhadoop_spark.operators.hll_index import (
     estimate,
     group_sketches,
     merge_sketch_tables,
-    read_index,
 )
 
 
@@ -113,7 +112,7 @@ def test_parquet_round_trip(spark, tmp_path):
     df = _vals(spark, 250, grp=5)
     path = str(tmp_path / "hll")
     build_index(df, ["g"], "v", path)
-    idx = read_index(spark, path)
+    idx = spark.read.parquet(path)
     got = {r["g"]: r["estimate"]
            for r in estimate(idx, ["g"]).collect()}
     assert got == {str(k): 50 for k in range(5)}

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import functions as F
 
 from myhadoop_spark.operators.interval_join import interval_overlap_join
 
@@ -93,87 +92,6 @@ def test_plan_is_equi_join_not_nested_loop(spark):
 # ---------------------------------------------------------------------------
 
 
-def _sessions(spark, sf_dir, event_type, gap_us):
-    """Gaps-and-islands sessions for one event type — the
-    queries/relational3.py::sessionize shape, per type."""
-    from pyspark.sql import Window
-
-    from myhadoop_spark.catalog import load
-
-    ev = (load(spark, sf_dir, "events")
-          .filter(F.col("event_type") == event_type)
-          .select("user_id", "event_id", "ts"))
-    wo = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc())
-    us = F.unix_micros("ts")
-    is_new = F.when(F.lag(us).over(wo).isNull()
-                    | ((us - F.lag(us).over(wo)) > gap_us), 1).otherwise(0)
-    wrun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (ev.withColumn("sid", F.sum(is_new).over(wrun))
-            .groupBy("user_id", "sid")
-            .agg(F.min("ts").alias("lo_ts"), F.max("ts").alias("hi_ts"))
-            .select("user_id",
-                    F.col("sid").cast("long").alias("id"),
-                    "lo_ts", "hi_ts"))
-
-
-def test_ts_wrapper_sessionize_composition(spark):
-    """Overlap-join VIEW sessions against CLICK sessions per user —
-    sessions are CLOSED intervals (single-event sessions have
-    lo == hi), which is exactly what the wrapper's closed=True
-    handles. Verified against a brute-force pairing of the collected
-    sessions."""
-    from myhadoop_spark.operators.interval_join import (
-        interval_overlap_join_ts,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    gap = 5 * 86_400 * 1_000_000  # 5 days: sf0.001 has ~13 events
-    # per (user, type) over 30 days (avg gap ~2 days), so a
-    # sub-day gap makes every session a single instant and no
-    # cross-type overlap exists; 5 days yields multi-day sessions
-    views = _sessions(spark, sf, "view", gap)
-    clicks = _sessions(spark, sf, "click", gap)
-    got = {(r.user_id, r.a_id, r.b_id)
-           for r in interval_overlap_join_ts(
-               views, clicks, keys=("user_id",), bucket_width=4 * 86_400,
-               closed=True).collect()}
-
-    import math
-
-    def ep(ts):  # the wrapper's truncating conversion
-        return math.floor(ts.timestamp())
-
-    vs = [(r.user_id, r.id, ep(r.lo_ts), ep(r.hi_ts))
-          for r in views.collect()]
-    cs = [(r.user_id, r.id, ep(r.lo_ts), ep(r.hi_ts))
-          for r in clicks.collect()]
-    want = {(uv, a, b)
-            for (uv, a, alo, ahi) in vs for (uc, b, blo, bhi) in cs
-            if uv == uc and alo <= bhi and blo <= ahi}  # closed overlap
-    assert got == want and len(want) > 0
-
-
-def test_ts_wrapper_closed_vs_half_open_single_point(spark):
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    mk = lambda rows: spark.createDataFrame(
-        rows, "id long, lo_ts timestamp, hi_ts timestamp")
-    a = mk([(1, t0, t0)])                      # single-instant interval
-    b = mk([(2, t0, t0 + dt.timedelta(hours=1))])
-    from myhadoop_spark.operators.interval_join import (
-        interval_overlap_join_ts,
-    )
-
-    # half-open: [t0, t0) is empty — dropped, no pairs
-    assert interval_overlap_join_ts(a, b, bucket_width=60).count() == 0
-    # closed: [t0, t0] overlaps [t0, t0+1h]
-    rows = interval_overlap_join_ts(a, b, bucket_width=60,
-                                    closed=True).collect()
-    assert [(r.a_id, r.b_id) for r in rows] == [(1, 2)]
-
-
 def test_bucket_width_guard(spark):
     """w <= 0 raises instead of silently returning an empty join
     (ADVICE r10 — the domain_cap/unimax guard convention)."""
@@ -183,23 +101,3 @@ def test_bucket_width_guard(spark):
     for bad in (0, -5):
         with pytest.raises(ValueError):
             interval_overlap_join(df, df, bucket_width=bad)
-
-
-def test_suggest_width_lands_in_study_optimum(spark):
-    """suggest_width on the interval_join_study.tsv generator's
-    distribution (durations 600 + x % 14000, median ~7.6k) must land
-    at 8192 — the sweep's measured candidate-volume minimum
-    (1024 -> 54425, 8192 -> 21361, 65536 -> 52600 candidates)."""
-    from myhadoop_spark.operators.interval_join import suggest_width
-
-    n = 20_000
-    df = spark.range(n).select(F.col("id").alias("rid"))
-    x = F.expr("(rid * 1103515245 + 12345) % 2147483648")
-    lo = (x % F.lit(n * 600)).cast("long")
-    dur = (F.lit(600) + (x % F.lit(14000))).cast("long")
-    iv = df.select(F.col("rid").alias("id"), lo.alias("lo"),
-                   (lo + dur).alias("hi"))
-    assert suggest_width(iv) == 8192
-    # degenerate inputs stay valid widths
-    tiny = spark.createDataFrame([(1, 5, 6)], "id long, lo long, hi long")
-    assert suggest_width(tiny) == 1

@@ -189,24 +189,6 @@ def test_streaming_ingest_matches_batch_append(spark, tmp_path):
     assert got == want
 
 
-def test_retrain_equals_fresh_build(spark, tmp_path):
-    """build(half) → append(half) → retrain must yield exactly the
-    index a one-shot build over the union produces: same centroids,
-    same search results — the FAISS explicit-retrain contract."""
-    from myhadoop_spark.operators.ivf_index import retrain_index
-
-    emb = _emb(spark).localCheckpoint()
-    inc, fresh = str(tmp_path / "inc"), str(tmp_path / "fresh")
-    build_index(emb.filter(F.col("vec_id") % 2 == 0), inc, k=K)
-    append_to_index(emb.filter(F.col("vec_id") % 2 == 1), inc)
-    retrained = retrain_index(spark, inc, k=K)
-    want_cents = build_index(emb, fresh, k=K)
-    assert retrained == want_cents
-    q = _queries(emb)
-    assert _res(search_index(spark, inc, q, top_k=TOP_K)) == \
-        _res(search_index(spark, fresh, q, top_k=TOP_K))
-
-
 def test_filtered_ann_prefilter_semantics(spark, tmp_path):
     """where= is vector-database PRE-filter semantics: each query's
     top-k over an index with payload metadata must equal search over
@@ -279,15 +261,10 @@ def test_filtered_append_carries_payload(spark, tmp_path):
     assert got == want and got
 
 
-def test_retrain_preserves_payload_and_stream_appends_payload(spark,
-                                                              tmp_path):
-    """The lifecycle must not destroy filtered ANN: retrain_index
-    rebuilds with the stored payload columns intact, and the ingest
-    stream threads payload_cols so appended files keep one schema."""
-    from myhadoop_spark.operators.ivf_index import (
-        retrain_index,
-        start_index_ingest_stream,
-    )
+def test_stream_appends_payload(spark, tmp_path):
+    """The ingest stream threads payload_cols, so appended files keep
+    one schema and filtered ANN still answers over them."""
+    from myhadoop_spark.operators.ivf_index import start_index_ingest_stream
 
     emb = (load(spark, SF_SMOKE, "embeddings")
            .select("vec_id",
@@ -299,7 +276,6 @@ def test_retrain_preserves_payload_and_stream_appends_payload(spark,
     build_index(emb.filter("vec_id % 2 = 0"), path, k=K,
                 payload_cols=("shard_tag",))
 
-    # streamed appends carry the payload
     src = str(tmp_path / "src")
     (emb.filter("vec_id % 2 = 1").repartition(3).write.parquet(src))
     stream = (spark.readStream
@@ -311,15 +287,7 @@ def test_retrain_preserves_payload_and_stream_appends_payload(spark,
     q.awaitTermination(120)
     cols = set(spark.read.parquet(f"{path}/vectors").columns)
     assert "shard_tag" in cols
-    qdf = _queries(emb)
-    before = _res(search_index(spark, path, qdf, top_k=TOP_K,
-                               where="shard_tag = 1"))
-    assert before
-
-    # retrain keeps the payload (geometry may change; the FILTER must
-    # still work and respect the predicate)
-    retrain_index(spark, path)
-    after = _res(search_index(spark, path, qdf, top_k=TOP_K,
-                              where="shard_tag = 1"))
-    assert after
-    assert all(nid % 3 == 1 for (_, nid) in after)
+    got = _res(search_index(spark, path, _queries(emb), top_k=TOP_K,
+                            where="shard_tag = 1"))
+    assert got
+    assert all(nid % 3 == 1 for (_, nid) in got)

@@ -64,40 +64,3 @@ def test_delta_native_merge(spark, tmp_path):  # pragma: no cover
     """Runs only where delta-spark + jars exist: same assertions as
     test_upsert_table_merge_semantics against the native MERGE path."""
     assert delta_available(spark)
-
-
-def test_snapshot_diff_and_time_travel(spark, tmp_path):
-    """CDC between retained versions: added/removed/changed keys from
-    one full-outer hash join; identical versions diff empty; swept or
-    unwritten versions raise."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from myhadoop_spark.operators.lakehouse import (
-        diff_snapshots,
-        read_table_version,
-        upsert_table,
-    )
-
-    path = str(tmp_path / "tbl")
-    v0 = upsert_table(spark, path, spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)],
-        "id long, name string, qty long"), "id")
-    v1 = upsert_table(spark, path, spark.createDataFrame(
-        [(2, "b", 99), (4, "d", 40)],
-        "id long, name string, qty long"), "id")
-    assert (v0, v1) == (0, 1)
-
-    got = {r.id: r.change
-           for r in diff_snapshots(spark, path, 0, 1, "id").collect()}
-    assert got == {2: "changed", 4: "added"}
-    # reversed direction: additions become removals
-    rev = {r.id: r.change
-           for r in diff_snapshots(spark, path, 1, 0, "id").collect()}
-    assert rev == {2: "changed", 4: "removed"}
-    assert diff_snapshots(spark, path, 1, 1, "id").count() == 0
-
-    old = read_table_version(spark, path, 0)
-    assert old.filter(F.col("id") == 2).collect()[0].qty == 20
-    with pytest.raises(FileNotFoundError):
-        read_table_version(spark, path, 7)

@@ -169,42 +169,6 @@ def test_margin_semantics(spark):
     assert solo["margin"] == solo["score"] > 0
 
 
-def test_reject_low_confidence_nulls_then_unimax_drops(spark):
-    """The CCNet reject wiring (VERDICT r10 #3): predictions under the
-    margin threshold get a NULL lang; the curation chain filters them
-    out BEFORE UniMax, so the balancer never sees unidentifiable
-    docs."""
-    from myhadoop_spark.operators.langid import reject_low_confidence
-    from myhadoop_spark.operators.unimax import (
-        doc_token_counts,
-        unimax_allocate,
-        unimax_select,
-    )
-
-    rows = _corpus(20) + [(5000, "zz", "aa"), (5001, "", "mm")]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string")
-    w = train_langid(docs.filter(F.col("doc_id") < 5000))
-    preds = reject_low_confidence(predict_lang(docs, w), min_margin=1)
-    # the featureless docs (margin 0) are NULL-ed, everything else kept
-    nulled = {r["doc_id"] for r in
-              preds.filter(F.col("pred_lang").isNull()).collect()}
-    assert nulled == {5000, 5001}
-    relabeled = (docs.drop("lang")
-                 .join(preds.filter(F.col("pred_lang").isNotNull())
-                       .select("doc_id",
-                               F.col("pred_lang").alias("lang")),
-                       "doc_id"))
-    dt = doc_token_counts(relabeled)
-    sel = unimax_select(dt, unimax_allocate(dt, budget_ratio=(1, 2),
-                                            epoch_cap=1))
-    picked = {r["doc_id"] for r in sel.select("doc_id").collect()}
-    assert picked and not picked & {5000, 5001}
-    # and the rejected docs never reached the balancer as a class:
-    assert {r["lang"] for r in sel.select("lang").distinct().collect()} \
-        <= set(_ALPHABETS)
-
-
 def test_scoring_plan_is_broadcast_and_jvm_only(spark):
     import contextlib
     import io

@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 from myhadoop_spark.operators.line_dedup import line_dedup
 from myhadoop_spark.operators.line_filter import (clean_lines, split_lines,
                                                   word_lines)
-from tests.test_plans import plan_of
+from tests.conftest import SF_SMOKE
+from tests.test_plans import _explain, plan_of
 
 
 def _docs(spark, rows):
@@ -187,10 +188,18 @@ def test_dedup_partitioning_invariance(spark):
 # ------------------------------------------------------------ plan pins
 
 def test_c4_clean_plan_is_narrow(spark):
-    """One narrow codegen pass: only the load_wide round-robin widen
-    and the final presentation sort — never a hash shuffle, a window,
-    or a Python eval."""
-    plan = plan_of(spark, "c4_clean")
+    """C4 line-wise cleaning is one narrow codegen pass over the
+    load_wide round-robin widen — never a hash shuffle, a window, or a
+    Python eval."""
+    from myhadoop_spark.catalog import load_wide
+
+    docs = load_wide(spark, SF_SMOKE, "documents")
+    plan = _explain(clean_lines(
+        docs.withColumn("_l", word_lines("text", 7)), lines_col="_l",
+        min_words_per_line=5, require_terminal_punct=False,
+        line_drop_substrings=("customer",),
+        doc_drop_substrings=("lorem ipsum", "{"), min_kept_lines=3,
+        max_removed_frac=(1, 2)))
     assert "hashpartitioning" not in plan.lower(), plan
     assert "Window" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
@@ -200,7 +209,7 @@ def test_line_dedup_plan_no_window_no_cartesian(spark):
     """The survivor is the partial-aggregable min(struct) — a Window
     over raw occurrences would single-task hot lines (the oracle uses
     one as spec; the engine must not)."""
-    for name in ("line_dedup", "line_curate"):
+    for name in ("line_dedup",):
         plan = plan_of(spark, name)
         assert "Window" not in plan, f"{name}:\n{plan}"
         assert "CartesianProduct" not in plan, f"{name}:\n{plan}"

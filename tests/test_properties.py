@@ -11,7 +11,7 @@ from myhadoop_spark import registry
 from myhadoop_spark.oracle import canon_rows
 from tests.conftest import SF_SMOKE
 
-INVARIANT_QUERIES = ["agg_q1", "wc", "join2", "window_fns", "topk"]
+INVARIANT_QUERIES = ["agg_q1", "wc", "join_multi", "window_fns", "tpch_q3"]
 
 
 @pytest.mark.parametrize("name", INVARIANT_QUERIES)

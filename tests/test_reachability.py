@@ -1,4 +1,5 @@
-"""Every engine module is reachable from a product root.
+"""Every engine module, and every public operator and query function, is
+reachable from a product root.
 
 Walks ``import`` statements through the AST, starting from the product
 roots: the query package (importing it registers every query), every
@@ -8,7 +9,17 @@ imports inside functions, and counts an import of ``a.b.c`` as an import
 of the packages ``a`` and ``a.b`` too, as Python executes their
 ``__init__``. A module under ``myhadoop_spark/`` that no root reaches is
 code only its own tests run; this test fails on it, as
-``tests/test_script_refs.py`` does for scripts. No Spark.
+``tests/test_script_refs.py`` does for scripts.
+
+One level down, a public module-level function of ``operators/`` or
+``queries/`` must be named by live product code: an ``ast.Name``, an
+``ast.Attribute`` or an import alias; docstrings and comments do not
+count. Live code is every root file, every statement of a reachable
+module outside function bodies, every function body outside
+``operators/`` and ``queries/``, every registered query, and the body
+of every function live code names, to a fixpoint. Matching is by bare
+name, so it can miss a dead function that shares a live name, never
+flag a used one. No Spark.
 """
 
 from __future__ import annotations
@@ -35,6 +46,68 @@ ALLOWLIST = {
     f"{PACKAGE}.sources.synthetic",
     f"{PACKAGE}.sources.videogen",
 }
+
+
+# Public operator functions no product root calls, kept on purpose, one
+# reason each. "D11" marks the modules whose streaming faces the
+# one-face-per-mechanism pass decides (ROADMAP D11); their read paths
+# and batch forms go or stay with those faces.
+FUNCTION_ALLOWLIST = {f"{PACKAGE}.operators.{name}": reason for name, reason in {
+    # operator-level streaming faces; only their tests start them
+    "bm25_index.start_bm25_ingest_stream": "D11: streaming face",
+    "dsir.start_dsir_scoring_stream": "D11: streaming face",
+    "ivf_index.start_index_ingest_stream": "D11: streaming face",
+    "lsh_index.start_lsh_dedup_stream": "D11: streaming face",
+    # the read paths through which tests check what those faces wrote
+    "bm25_index.search_bm25_index": "D11: read path of the BM25 index",
+    "ivf_index.search_index": "D11: read path of the IVF index",
+    "hll_index.estimate": "D11: estimate over the HLL sketch index",
+    # batch forms in the faces' modules
+    "dsir.dsir_select": "D11: batch selection beside the scoring face",
+    "dsir.save_dsir_model": "D11: model store the scoring face reads",
+    "dsir.load_dsir_model": "D11: model store the scoring face reads",
+    "lsh_index.append_to_lsh_index": "D11: batch append to the LSH index",
+    "lsh_index.dedup_incoming": "D11: batch probe of the LSH index",
+    "cms.cms_verified_topk": "D11: batch top-k of the CMS face's sketch",
+    "heavy_hitters.heavy_hitters_topk": "D11: batch Misra-Gries summary",
+    "bm25.rrf_fuse": "D11: fuses the BM25 and IVF index read paths",
+    # reference implementations the tests pin an operator against
+    "bm25.bm25_rank": "reference: tests/test_bm25_index.py pins the "
+                      "index search bitwise to it",
+    "bm25_index.term_bucket_py": "reference: the Python twin of the "
+                                 "index's term bucket",
+    "budget_select.budget_select_window": "reference: the single-window "
+                                          "spec of budget_select",
+    "unimax.unimax_select_window": "reference: the single-window spec of "
+                                   "unimax_select",
+    "url_dedup.domain_cap_window": "reference: the single-window spec of "
+                                   "domain_cap",
+    # "D10b" marks the functions of the ungated queries whose retirement
+    # is deferred (ROADMAP D10b); each goes with the module or query named
+    "bm25_index.phrase_search_index": "D10b: index-side twin of the "
+                                      "phrase_search count; goes with it",
+    "constraints.matches": "D10b: goes with operators/constraints.py "
+                           "(data_quality)",
+    "indexing.start_indexing_stream": "D10b: streaming face; goes with "
+                                      "operators/indexing.py (global_index)",
+    "kcore.core_numbers": "D10b: goes with operators/kcore.py (graph_kcore)",
+    "kcore.kcore": "D10b: goes with operators/kcore.py (graph_kcore)",
+    "lm_filter.lm_quality_filter": "D10b: goes with operators/lm_filter.py "
+                                   "(lm_perplexity)",
+    "lm_filter.load_lm": "D10b: goes with operators/lm_filter.py "
+                         "(lm_perplexity)",
+    "lm_filter.save_lm": "D10b: goes with operators/lm_filter.py "
+                         "(lm_perplexity)",
+    "lm_filter.start_lm_scoring_stream": "D10b: streaming face; goes with "
+                                         "operators/lm_filter.py",
+    "percolate.start_percolate_stream": "D10b: streaming face; goes with "
+                                        "operators/percolate.py (percolate)",
+    "percolate.start_phrase_percolate_stream": "D10b: streaming face; goes "
+                                               "with operators/percolate.py",
+    "ppjoin.size_ratio_candidates": "D10b: the generator choose_generator "
+                                    "weighs; goes with ngram_jaccard",
+}.items()}
+FUNCTION_PACKAGES = (f"{PACKAGE}.operators.", f"{PACKAGE}.queries.")
 
 
 def engine_modules() -> dict[str, Path]:
@@ -125,3 +198,83 @@ def test_allowlisted_fixtures_are_used_by_tests():
         used |= imported_names(path, None)
     unused = sorted(ALLOWLIST - used)
     assert not unused, f"allowlisted fixture modules no test imports: {unused}"
+
+
+def _is_registered(fn: ast.FunctionDef) -> bool:
+    return any(isinstance(d, ast.Call)
+               and getattr(d.func, "id", getattr(d.func, "attr", None))
+               == "register" for d in fn.decorator_list)
+
+
+def _used_names(nodes) -> set[str]:
+    """Names, attributes and import aliases under ``nodes``."""
+    out = set()
+    for node in nodes:
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                out.add(sub.id)
+            elif isinstance(sub, ast.Attribute):
+                out.add(sub.attr)
+            elif isinstance(sub, ast.alias):
+                out.add(sub.name.rsplit(".", 1)[-1])
+    return out
+
+
+def unused_functions(modules: dict[str, Path], live_modules: set[str],
+                     keep: frozenset[str] = frozenset()) -> set[str]:
+    """Dotted names of public operator/query functions that no live
+    product code names. The bodies of the functions in ``keep`` count
+    as live code."""
+    live: set[str] = set()
+    # candidate functions: (dotted name, bare name, FunctionDef)
+    candidates = []
+    for path in ROOT_FILES:
+        live |= _used_names([ast.parse(path.read_text(), str(path))])
+    for name in sorted(live_modules):
+        tree = ast.parse(modules[name].read_text(), str(modules[name]))
+        checked = name.startswith(FUNCTION_PACKAGES)
+        for node in tree.body:
+            if (checked and isinstance(node, ast.FunctionDef)
+                    and not _is_registered(node)):
+                candidates.append((f"{name}.{node.name}", node.name, node))
+                live |= _used_names(node.decorator_list)
+            else:
+                live |= _used_names([node])
+    pending = candidates
+    while True:
+        woken = [c for c in pending if c[1] in live or c[0] in keep]
+        if not woken:
+            break
+        pending = [c for c in pending if c not in woken]
+        live |= _used_names(node for _, _, node in woken)
+    return {dotted for dotted, bare, _ in pending
+            if not bare.startswith("_")}
+
+
+def test_function_scan_reads_code_not_text(tmp_path):
+    pkg = tmp_path / "m.py"
+    pkg.write_text(
+        'def used():\n    """calls dead() in prose"""\n    return chain()\n'
+        "def chain():\n    return 1\n"
+        "def dead():\n    return dead_helper()\n"
+        "def dead_helper():\n    return 2\n"
+        "@register('q')\ndef query():\n    return used\n"
+        "# dead() named in a comment\n")
+    mods = {f"{PACKAGE}.queries.m": pkg}
+    got = unused_functions(mods, set(mods))
+    assert got == {f"{PACKAGE}.queries.m.dead",
+                   f"{PACKAGE}.queries.m.dead_helper"}
+
+
+def test_every_public_operator_and_query_function_is_named():
+    modules = engine_modules()
+    live = reachable(modules)
+    orphans = sorted(unused_functions(modules, live,
+                                      frozenset(FUNCTION_ALLOWLIST))
+                     - FUNCTION_ALLOWLIST.keys())
+    assert not orphans, ("public functions no product code names:\n"
+                         + "\n".join(orphans))
+    stale = sorted(FUNCTION_ALLOWLIST.keys()
+                   - unused_functions(modules, live))
+    assert not stale, f"allowlisted yet named or gone, drop them: {stale}"
+    assert all(FUNCTION_ALLOWLIST.values()), "allowlist entry without reason"

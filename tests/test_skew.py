@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from myhadoop_spark.catalog import load
 from myhadoop_spark.functions.money import dec
-from myhadoop_spark.operators.skew import replicated_skew_join, salted_sum_count
+from myhadoop_spark.operators.skew import salted_sum_count
 from tests.conftest import SF_SMOKE
 
 
@@ -48,13 +48,3 @@ def test_salting_spreads_a_hot_key(spark):
             .agg(FF.sum("v").alias("s"), FF.count(FF.lit(1)).alias("n"))
             .collect()}
     assert got == want
-
-
-def test_replicated_skew_join_equals_plain(spark):
-    li = load(spark, SF_SMOKE, "lineitem").select(
-        F.col("l_orderkey").alias("k"), "l_quantity")
-    orders = load(spark, SF_SMOKE, "orders").select(
-        F.col("o_orderkey").alias("k"), "o_totalprice")
-    skewed = replicated_skew_join(li, orders, "k").count()
-    plain = li.join(orders, "k").count()
-    assert skewed == plain

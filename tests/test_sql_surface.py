@@ -41,47 +41,3 @@ def test_events_view_has_converted_timestamps(spark):
     row = spark.sql("SELECT ts FROM events LIMIT 1").collect()[0]
     import datetime
     assert isinstance(row["ts"], datetime.datetime)
-
-
-def test_cube_api_matches_sql(spark):
-    """.cube() DataFrame API ≡ SQL GROUP BY CUBE — keeps the cube API
-    oracle-equivalent locally after cube_agg left the 50-entry driver gate
-    (its lattice semantics remain driver-checked via cube_rollup)."""
-    from myhadoop_spark.queries.relational2 import CUBE_AGG_SQL, cube_agg
-
-    register_views(spark, SF_SMOKE)
-    # CUBE subtotal rows contain NULLs; sort with a None-safe key
-    key = lambda t: tuple((v is None, v) for v in t)  # noqa: E731
-    api_rows = sorted(map(tuple, cube_agg(spark, SF_SMOKE).collect()), key=key)
-    sql_rows = sorted(map(tuple, spark.sql(CUBE_AGG_SQL).collect()), key=key)
-    assert api_rows == sql_rows and len(api_rows) > 0
-
-
-def _duckdb_differential(spark, fn, sql):
-    """Local oracle differential at the gate's bar for queries demoted
-    from the 50-entry window (r4: distinct_agg and tpch_q6 gave their
-    slots to decontam/scrub_audit)."""
-    from myhadoop_spark.oracle import duck_connection
-
-    got = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-    con = duck_connection(SF_SMOKE)
-    try:
-        want = sorted(map(tuple, con.execute(sql).fetchall()))
-    finally:
-        con.close()
-    assert got == want and len(got) > 0
-
-
-def test_distinct_agg_matches_duckdb(spark):
-    from myhadoop_spark.queries.relational import (
-        DISTINCT_AGG_SQL,
-        distinct_agg,
-    )
-
-    _duckdb_differential(spark, distinct_agg, DISTINCT_AGG_SQL)
-
-
-def test_tpch_q6_matches_duckdb(spark):
-    from myhadoop_spark.queries.relational2 import TPCH_Q6_SQL, tpch_q6
-
-    _duckdb_differential(spark, tpch_q6, TPCH_Q6_SQL)

@@ -8,10 +8,6 @@ import contextlib
 import io
 import random
 
-from pyspark.sql import functions as F
-
-import pytest
-
 from myhadoop_spark.operators.substring import (
     K_WINDOW,
     MIN_OVERLAP,
@@ -124,59 +120,6 @@ def test_fixture_pairs_reasonable(spark):
     assert all(r.doc_a < r.doc_b for r in rows)
 
 
-def test_decontam_matches_lcs_model(spark):
-    """Two-sided verbatim-overlap decontamination: every (corpus, bench)
-    pair with an LCS >= threshold is reported with the exact length."""
-    from myhadoop_spark.operators.substring import substring_decontam
-
-    rng = random.Random(23)
-    corpus_docs = {i: [f"c{rng.randrange(300)}" for _ in range(50)]
-                   for i in range(12)}
-    bench_docs = {i: [f"b{rng.randrange(300)}" for _ in range(40)]
-                  for i in range(4)}
-    # plant verbatim bench chunks into some corpus docs (one below
-    # threshold)
-    for c, b, run in [(0, 0, 30), (1, 1, MIN_OVERLAP), (2, 2, MIN_OVERLAP - 1),
-                      (3, 0, 25)]:
-        chunk = bench_docs[b][5:5 + run]
-        corpus_docs[c] = corpus_docs[c][:10] + chunk + corpus_docs[c][10:]
-    corpus = spark.createDataFrame(
-        [(i, " ".join(t)) for i, t in corpus_docs.items()],
-        "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(i, " ".join(t)) for i, t in bench_docs.items()],
-        "doc_id long, text string")
-    got = {(r.corpus_id, r.bench_id): r.overlap_tokens
-           for r in substring_decontam(corpus, bench).collect()}
-    for c, ct in corpus_docs.items():
-        for b, bt in bench_docs.items():
-            true_lcs = _lcs_tokens(ct, bt)
-            if true_lcs >= MIN_OVERLAP:
-                assert got.get((c, b)) == true_lcs, (c, b, true_lcs)
-            else:
-                assert (c, b) not in got, (c, b, true_lcs)
-
-
-def test_decontam_plan_broadcasts_bench(spark):
-    import contextlib
-    import io
-
-    from myhadoop_spark.operators.substring import substring_decontam
-
-    corpus = spark.createDataFrame(
-        [(i, " ".join(f"x{i}_{j}" for j in range(30))) for i in range(6)],
-        "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(0, " ".join(f"y{j}" for j in range(30)))],
-        "doc_id long, text string")
-    plan_io = io.StringIO()
-    with contextlib.redirect_stdout(plan_io):
-        substring_decontam(corpus, bench).explain("formatted")
-    plan = plan_io.getvalue()
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_repeated_token_docs(spark):
     """Pathological self-similarity: docs that are one token repeated.
     Every window matches every window, so diagonals blanket the match
@@ -189,185 +132,6 @@ def test_repeated_token_docs(spark):
     got = {(r.doc_a, r.doc_b): r.overlap_tokens
            for r in substring_pairs(df).collect()}
     assert got == {(0, 1): 25}  # min(40, 25); doc 2 is < MIN_OVERLAP
-
-
-def _span_model(ct, bt, L):
-    """Independent model: corpus token positions (0-based) covered by a
-    common contiguous run of >= L tokens with the bench doc, found by
-    walking every diagonal."""
-    drop = set()
-    for d in range(-len(ct), len(bt) + 1):
-        run = 0
-        for i in range(len(ct) + 1):
-            j = i + d
-            if i < len(ct) and 0 <= j < len(bt) and ct[i] == bt[j]:
-                run += 1
-            else:
-                if run >= L:
-                    drop.update(range(i - run, i))
-                run = 0
-    return drop
-
-
-def test_remove_overlap_spans_matches_model(spark):
-    from myhadoop_spark.operators.substring import remove_overlap_spans
-
-    rng = random.Random(31)
-    corpus_docs = {i: [f"c{rng.randrange(400)}" for _ in range(45)]
-                   for i in range(10)}
-    bench_docs = {i: [f"b{rng.randrange(400)}" for _ in range(40)]
-                  for i in range(3)}
-    # plant: mid-doc chunk, chunk at doc start, chunk from TWO bench
-    # docs into one corpus doc, one below threshold, one doc that IS a
-    # bench doc verbatim (fully removed)
-    corpus_docs[0] = corpus_docs[0][:8] + bench_docs[0][3:3 + 28] + corpus_docs[0][8:]
-    corpus_docs[1] = bench_docs[1][:MIN_OVERLAP] + corpus_docs[1]
-    corpus_docs[2] = (corpus_docs[2][:5] + bench_docs[0][0:22]
-                      + corpus_docs[2][5:15] + bench_docs[2][10:34]
-                      + corpus_docs[2][15:])
-    corpus_docs[3] = corpus_docs[3][:20] + bench_docs[2][:MIN_OVERLAP - 1] + corpus_docs[3][20:]
-    corpus_docs[4] = list(bench_docs[0])
-    corpus = spark.createDataFrame(
-        [(i, " ".join(t)) for i, t in corpus_docs.items()],
-        "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(i, " ".join(t)) for i, t in bench_docs.items()],
-        "doc_id long, text string")
-    got = {r.doc_id: r for r in remove_overlap_spans(corpus, bench).collect()}
-    assert set(got) == set(corpus_docs)
-    for c, ct in corpus_docs.items():
-        drop = set()
-        for bt in bench_docs.values():
-            drop |= _span_model(ct, bt, MIN_OVERLAP)
-        want = " ".join(t for i, t in enumerate(ct) if i not in drop)
-        assert got[c].text == want, (c, got[c].text, want)
-        assert got[c].n_tokens_removed == len(drop), c
-    assert got[4].text == "" and got[4].n_tokens_removed == len(corpus_docs[4])
-    assert got[3].n_tokens_removed == 0
-
-
-def test_decontam_matches_duckdb_on_fixture(spark):
-    """Bitwise DuckDB differential for the two-sided face on the real
-    fixture (corpus/bench = the doc_id%20 gate decontam split) — the
-    same CTE machinery as the substring_dedup gate oracle, with the
-    self-join replaced by the corpus-vs-bench join."""
-    import duckdb
-
-    from myhadoop_spark.catalog import load
-    from myhadoop_spark.operators.substring import (
-        HASH_B,
-        HASH_M,
-        K_WINDOW,
-        MIN_OVERLAP,
-        substring_decontam,
-    )
-    from tests.conftest import SF_SMOKE
-
-    k1 = K_WINDOW - 1
-    min_run = MIN_OVERLAP - K_WINDOW + 1
-    toks = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
-    con = duckdb.connect()
-    sql = f"""
-    WITH t AS (SELECT doc_id, {toks} AS toks
-               FROM '{SF_SMOKE}/documents.parquet'),
-    th AS (SELECT doc_id,
-             list_transform(toks, tok ->
-               CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)
-                 % {HASH_M}) AS thm
-           FROM t),
-    w AS (SELECT doc_id,
-            unnest(list_transform(
-              generate_series(1, greatest(len(thm) - {k1}, 0)),
-              i -> struct_pack(pos := i,
-                     wh := list_reduce(
-                       list_slice(thm, CAST(i AS INT), CAST(i + {k1} AS INT)),
-                       (a, b) -> (a * {HASH_B} + b) % {HASH_M})))) AS s
-          FROM th),
-    wf AS (SELECT doc_id, s.pos AS pos, s.wh AS wh FROM w),
-    m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.pos AS pa, b.pos - a.pos AS d
-          FROM wf a JOIN wf b ON a.wh = b.wh
-          WHERE a.doc_id % 20 <> 0 AND b.doc_id % 20 = 0),
-    g AS (SELECT doc_a, doc_b, d, pa,
-                 pa - ROW_NUMBER() OVER (
-                   PARTITION BY doc_a, doc_b, d ORDER BY pa) AS grp
-          FROM m),
-    runs AS (SELECT doc_a, doc_b, d, min(pa) AS pa_start,
-                    count(*) AS run_len
-             FROM g GROUP BY doc_a, doc_b, d, grp
-             HAVING count(*) >= {min_run}),
-    ver AS (SELECT r.doc_a, r.doc_b, r.run_len
-            FROM runs r
-              JOIN t ta ON r.doc_a = ta.doc_id
-              JOIN t tb ON r.doc_b = tb.doc_id
-            WHERE list_slice(ta.toks, CAST(r.pa_start AS INT),
-                             CAST(r.pa_start + r.run_len + {k1} - 1 AS INT))
-                = list_slice(tb.toks, CAST(r.pa_start + r.d AS INT),
-                             CAST(r.pa_start + r.d + r.run_len + {k1} - 1
-                                  AS INT)))
-    SELECT doc_a, doc_b, CAST(max(run_len) + {k1} AS BIGINT), count(*)
-    FROM ver GROUP BY doc_a, doc_b
-    """
-    want = {(r[0], r[1]): (r[2], r[3]) for r in con.execute(sql).fetchall()}
-
-    docs = load(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    got = {(r.corpus_id, r.bench_id): (r.overlap_tokens, r.n_runs)
-           for r in substring_decontam(
-               docs.filter("doc_id % 20 <> 0"),
-               docs.filter("doc_id % 20 = 0")).collect()}
-    assert got == want and got  # non-trivial on the fixture
-
-
-def test_untouched_docs_pass_through_byte_identical(spark):
-    """A document with NO benchmark overlap must come back with its
-    original bytes — newlines, tabs, and space runs included (the r4
-    implementation rebuilt every doc with single spaces); a
-    contaminated doc is rebuilt from its kept token stream."""
-    from myhadoop_spark.operators.substring import remove_overlap_spans
-
-    bench_toks = [f"b{j}" for j in range(30)]
-    messy = "hello\tworld\n\nthis  has   odd\twhitespace\n"
-    contaminated = " ".join(["pre0", "pre1"] + bench_toks + ["post0"])
-    corpus = spark.createDataFrame(
-        [(0, messy), (1, contaminated)], "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(100, " ".join(bench_toks))], "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           remove_overlap_spans(corpus, bench).collect()}
-    assert out[0].text == messy  # byte-identical, not token-normalized
-    assert out[0].n_tokens_removed == 0
-    assert out[1].text == "pre0 pre1 post0"
-    assert out[1].n_tokens_removed == 30
-
-
-@pytest.mark.slow  # r14: heavy parity battery (fast twin stays in the default tier)
-def test_seam_second_pass_converges(spark):
-    """Adversarial seam: removing a middle run butts two fragments
-    (11 + 11 bench tokens, each alone under min_overlap) into a new
-    22-token verbatim run. Pass 1 provably leaves it; pass 2 removes
-    it; pass 3 changes nothing more (convergence)."""
-    from myhadoop_spark.operators.substring import remove_overlap_spans
-
-    b = [f"b{j}" for j in range(100)]
-    bench = spark.createDataFrame(
-        [(100, " ".join(b))], "doc_id long, text string")
-    # doc = b50..b60 | b0..b24 | b61..b71 : the middle 25-token run is
-    # removed in pass 1, leaving b50..b71 = 22 contiguous bench tokens
-    doc = b[50:61] + b[0:25] + b[61:72]
-    corpus = spark.createDataFrame(
-        [(0, " ".join(doc))], "doc_id long, text string")
-
-    one = remove_overlap_spans(corpus, bench, passes=1).collect()[0]
-    assert one.text == " ".join(b[50:61] + b[61:72])  # the seam leak
-    assert one.n_tokens_removed == 25
-
-    two = remove_overlap_spans(corpus, bench, passes=2).collect()[0]
-    assert two.text == ""
-    assert two.n_tokens_removed == len(doc)
-
-    three = remove_overlap_spans(corpus, bench, passes=3).collect()[0]
-    assert (three.text, three.n_tokens_removed) == (two.text,
-                                                    two.n_tokens_removed)
 
 
 def test_degenerate_hash_space_still_exact(spark):

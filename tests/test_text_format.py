@@ -42,7 +42,6 @@ ALLOWED_SLICES = {
     ("queries/dedup_ext.py", (17, 15)): "oracle of Bloom h2",
     ("operators/substring.py", (17, 8)): "second, independent token "
                                          "hash of the wide banding",
-    ("queries/audio.py", (1, 2)): "8-bit synthetic energy draw",
     ("queries/media.py", (1, 2)): "8-bit synthetic pixel draw",
     ("queries/video.py", (1, 2)): "8-bit synthetic pixel draw",
 }

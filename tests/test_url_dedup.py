@@ -187,93 +187,3 @@ def test_registrable_domain_public_suffixes(spark):
     got = [r[0] for r in df.select(
         registrable_domain(F.col("h"))).collect()]
     assert got == list(cases.values()), dict(zip(cases, got))
-
-
-def test_psl_lookup_matches_expression_path_on_pslite(spark):
-    """The broadcast-lookup PSL path (registrable_domain_lookup) and
-    the frozenset expression path must agree wherever the frozenset
-    can express the rules — the PSL-lite set as normal rules, over
-    fixture-style and study hosts (VERDICT r10 missing #3)."""
-    from myhadoop_spark.operators.url_dedup import (
-        PUBLIC_SUFFIXES,
-        psl_rules,
-        registrable_domain_lookup,
-    )
-
-    hosts = [
-        "shop.example.co.uk", "www.example.co.uk", "example.co.uk",
-        "co.uk", "a.b.news.com.au", "deep.sub.example.com",
-        "example.com", "localhost", "cdn.alpha.com", "x.y.z.or.jp",
-        "", "single",
-    ]
-    df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    rules = psl_rules(spark, sorted(PUBLIC_SUFFIXES))
-    via_lookup = {r["host"]: r["domain"] for r in
-                  registrable_domain_lookup(df, rules).collect()}
-    via_expr = {r["host"]: r["d"] for r in df.select(
-        "host",
-        registrable_domain(F.col("host")).alias("d")).collect()}
-    assert via_lookup == via_expr
-
-
-def test_psl_lookup_wildcard_and_exception_rules(spark):
-    """The rule shapes the frozenset CANNOT express, per the
-    publicsuffix.org algorithm: *.ck makes every single label under
-    ck a public suffix; !www.ck carves www.ck back out; an exception
-    beats the wildcard; the longest rule wins."""
-    from myhadoop_spark.operators.url_dedup import (
-        psl_rules,
-        registrable_domain_lookup,
-    )
-
-    lines = [
-        "// comment", "", "com", "co.uk", "*.ck", "!www.ck",
-        "*.kawasaki.jp", "!city.kawasaki.jp", "jp",
-    ]
-    rules = psl_rules(spark, lines)
-    cases = {
-        # wildcard: bar.ck is a public suffix -> foo.bar.ck registers
-        "foo.bar.ck": "foo.bar.ck",
-        "deep.foo.bar.ck": "foo.bar.ck",
-        "bar.ck": "bar.ck",              # itself a public suffix
-        # exception: www.ck is registrable despite *.ck
-        "www.ck": "www.ck",
-        "sub.www.ck": "www.ck",
-        # longest match: *.kawasaki.jp beats jp — b.kawasaki.jp IS
-        # the public suffix, so the whole 4-label host registers
-        "a.b.kawasaki.jp": "a.b.kawasaki.jp",
-        "!city carved out": None,  # placeholder replaced below
-        "city.kawasaki.jp": "city.kawasaki.jp",
-        "x.city.kawasaki.jp": "city.kawasaki.jp",
-        # plain rules still work
-        "shop.example.co.uk": "example.co.uk",
-        "example.com": "example.com",
-        # implicit * default: unknown TLD -> last two labels
-        "a.b.unknowntld": "b.unknowntld",
-    }
-    del cases["!city carved out"]
-    df = spark.createDataFrame([(h,) for h in cases], "host string")
-    got = {r["host"]: r["domain"] for r in
-           registrable_domain_lookup(df, rules).collect()}
-    assert got == cases, got
-
-
-def test_psl_lookup_url_domain_cap_composition(spark):
-    """Swapping the lookup path into the url_domain_cap derivation
-    changes nothing on *.com fixture hosts — the oracle stays valid
-    (the 'full PSL swaps in' claim, now tested)."""
-    from myhadoop_spark.operators.url_dedup import (
-        PUBLIC_SUFFIXES,
-        psl_rules,
-        registrable_domain_lookup,
-    )
-
-    rows = [(i, f"s{i % 5}.com") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, host string")
-    rules = psl_rules(spark, sorted(PUBLIC_SUFFIXES))
-    a = sorted((r["doc_id"], r["domain"]) for r in
-               registrable_domain_lookup(df, rules).collect())
-    b = sorted((r["doc_id"], r["d"]) for r in df.select(
-        "doc_id", registrable_domain(F.col("host")).alias("d"))
-        .collect())
-    assert a == b
