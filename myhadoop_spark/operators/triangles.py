@@ -1,8 +1,8 @@
-"""Triangle counting — the third member of the graph-analytics family
-(operators/connected_components.py, operators/pagerank.py): local
-clustering structure over the near-duplicate / link graph, and the
-classic join-based MapReduce graph benchmark (Suri & Vassilvitskii,
-"Counting Triangles and the Curse of the Last Reducer", WWW 2011).
+"""Triangle counting — the graph-analytics companion of
+operators/connected_components.py: local clustering structure over the
+near-duplicate / link graph, and the classic join-based MapReduce
+graph benchmark (Suri & Vassilvitskii, "Counting Triangles and the
+Curse of the Last Reducer", WWW 2011).
 
 Algorithm — compact-forward via DEGREE ordering: canonicalize to a
 simple undirected graph, then orient every edge from its lower-

@@ -25,7 +25,6 @@ from myhadoop_spark.queries import (  # noqa: F401
     fuzzy_decontam,
     langid,
     lines,
-    lm,
     media,
     merge_query,
     phrase,
@@ -37,7 +36,6 @@ from myhadoop_spark.queries import (  # noqa: F401
     relational3,
     relational4,
     relational5,
-    relational7,
     repetition,
     sampling,
     simsearch,

@@ -107,8 +107,8 @@ def cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # triangle counting (r9): local clustering structure over the same
-# near-dup pair graph — the third graph-analytics face next to the CC
-# clusters and PageRank centrality. The engine orients edges by DEGREE
+# near-dup pair graph — the graph-analytics face next to the CC
+# clusters. The engine orients edges by DEGREE
 # (operators/triangles.py — the compact-forward m^(3/2) bound); the
 # oracle orients by ID (a<b<c) — different orientation strategies MUST
 # produce the identical triangle set, which is exactly what the
@@ -233,23 +233,3 @@ def cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_members")
             .orderBy("component"))
 
-
-@register("graph_kcore", gate=False,
-          tags=("graph", "dedup", "extension", "iterative"))
-def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id, core): exact core numbers over the embedding near-dup
-    pair graph — the dense duplicate families (high cores: template
-    farms, mirror clusters) vs incidental near-dups (core 1). The
-    decomposition has no SQL twin (a recursive CTE cannot express
-    decreasing iteration), so the query is rows-only for the driver;
-    correctness is pinned against the pure-Python peel in
-    tests/test_kcore.py — the pagerank/mmr precedent. r12: runs the
-    h-index fixpoint (one loop for the whole decomposition, pinned
-    label-identical to the per-k peel hierarchy in
-    test_hindex_fixpoint_matches_peeling; kcore_study.tsv: 2 rounds
-    vs 18 total peel rounds on the dedup-shaped generator)."""
-    from myhadoop_spark.operators.kcore import core_numbers_hindex
-
-    edges = simsearch.embed_neardup(spark, sf_dir).select(
-        F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    return core_numbers_hindex(edges).orderBy("id")

@@ -287,92 +287,6 @@ def signature_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# percolation (reverse search) — operators/percolate.py
-# ---------------------------------------------------------------------------
-
-# the standing-query fixture: alert subscriptions over the corpus
-# vocabulary (mirrored verbatim in the oracle VALUES)
-PERCOLATE_QUERIES = [
-    (1, ["scan", "column", "window"], 2),
-    (2, ["join", "merge", "hash", "sort"], 3),
-    (3, ["customer", "order", "part"], 2),
-    (4, ["nonexistent_term_xyzzy", "filter"], 1),
-    (5, ["batch", "row", "value", "key", "line"], 4),
-]
-
-
-@register(
-    "percolate",
-    oracle=f"""
-    WITH q AS (SELECT * FROM (VALUES {', '.join(
-        "(%d, %s, %d)" % (qid, "[" + ", ".join(f"'{t}'" for t in terms)
-                          + "]", msm)
-        for qid, terms, msm in PERCOLATE_QUERIES)})
-               AS q(query_id, terms, min_should_match)),
-    qt AS (SELECT query_id, min_should_match,
-                  unnest(list_distinct(terms)) AS term FROM q),
-    dt AS (SELECT doc_id,
-                  unnest(list_distinct({sql_tokens()})) AS term
-           FROM documents),
-    hits AS (SELECT dt.doc_id, qt.query_id, qt.min_should_match,
-                    COUNT(*) AS n_matched
-             FROM dt JOIN qt USING (term)
-             GROUP BY dt.doc_id, qt.query_id, qt.min_should_match)
-    SELECT doc_id, query_id, n_matched
-    FROM hits WHERE n_matched >= min_should_match
-    """,
-    tags=("percolate", "extension", "streaming"),
-    gate=False,
-)
-def percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reverse search: which standing alert queries does each document
-    trigger (operators/percolate.py — the Elasticsearch percolator
-    shape as a broadcast join; the query table never shuffles the
-    corpus token stream). Integer match counts → bitwise DuckDB
-    differential."""
-    from myhadoop_spark.operators.percolate import percolate_docs
-
-    queries = spark.createDataFrame(
-        PERCOLATE_QUERIES,
-        "query_id int, terms array<string>, min_should_match int")
-    return percolate_docs(load(spark, sf_dir, "documents"), queries)
-
-
-@register(
-    "neardup_pagerank",
-    tags=("dedup", "graph", "extension"),
-    gate=False,
-)
-def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id, rank): PageRank centrality over the near-duplicate graph
-    (operators/pagerank.py; minhash pairs as undirected edges — each
-    pair contributes both directions). Within a duplicate family the
-    highest-rank member is the canonical-representative pick; isolated
-    docs never enter the graph. Deterministic fold mode so the ranks
-    are partitioning-bitwise; rank floored at 1e-6 for display
-    stability. Rows-only (iterative — no one-query ANSI twin); the
-    numpy-model parity and invariant pins live in
-    tests/test_pagerank.py."""
-    from myhadoop_spark.operators.pagerank import pagerank
-    from myhadoop_spark.queries.dedup import (
-        _hashed_token_sets,
-        minhash_pairs,
-    )
-
-    pairs = (minhash_pairs(spark,
-                           _hashed_token_sets(spark, sf_dir, wide=True))
-             .select("doc1", "doc2"))
-    edges = (pairs.select(F.col("doc1").alias("src"),
-                          F.col("doc2").alias("dst"))
-             .union(pairs.select(F.col("doc2").alias("src"),
-                                 F.col("doc1").alias("dst"))))
-    ranks = pagerank(edges, max_iterations=15, deterministic=True)
-    return ranks.select("id",
-                        (F.floor(F.col("rank") * 1e6) / 1e6)
-                        .alias("rank"))
-
-
-# ---------------------------------------------------------------------------
 # SimHash Hamming-ball join (r11): the join face of the simhash
 # family (Manku et al. 2007) — exact-recall pigeonhole block
 # candidates + bit_count verify. Both engines compute the identical

@@ -70,48 +70,3 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_phrase_col(F.col("_toks"), PHRASE).alias("n_occurrences"))
         .filter(F.col("n_occurrences") > 0))
 
-
-# standing phrase alerts for the percolation face — one constant
-# drives BOTH the Spark query table and the DuckDB oracle, so the two
-# sides cannot desynchronize. q3's anchor term never occurs in the
-# fixture (the no-hit path must stay silent, not error).
-STANDING_PHRASES = {
-    "q_part_filter": ["part", "filter"],
-    "q_scan_3": ["table", "key", "scan"],
-    "q_never": ["zebra", "table"],
-}
-
-
-def _phrase_block(qid: str, phrase: list[str]) -> str:
-    k = len(phrase)
-    conds = " AND ".join(f"toks[i + {j}] = '{t}'"
-                         for j, t in enumerate(phrase))
-    return (f"SELECT doc_id, '{qid}' AS query_id, "
-            f"len(list_filter(generate_series(1, greatest(len(toks) - {k - 1}, 0)), "
-            f"i -> {conds})) AS n_occurrences FROM t")
-
-
-@register(
-    "phrase_percolate",
-    oracle="WITH t AS (SELECT doc_id, " + sql_tokens() + " AS toks FROM documents), "
-           "u AS (" + " UNION ALL ".join(
-               _phrase_block(qid, ph)
-               for qid, ph in STANDING_PHRASES.items()) + ") "
-           "SELECT doc_id, query_id, n_occurrences FROM u "
-           "WHERE n_occurrences > 0",
-    tags=("search", "percolate", "extension"),
-    gate=False,
-)
-def phrase_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reverse phrase search (operators/percolate.percolate_phrases):
-    the standing phrase table is broadcast with one anchor term per
-    phrase; the document side stays exchange-free (exploded distinct
-    tokens carrying the token array, broadcast hash join, in-place
-    positional verify). Integer occurrence counts — bitwise
-    cross-engine."""
-    from myhadoop_spark.operators.percolate import percolate_phrases
-
-    queries = spark.createDataFrame(
-        [(qid, ph) for qid, ph in STANDING_PHRASES.items()],
-        "query_id string, phrase array<string>")
-    return percolate_phrases(load(spark, sf_dir, "documents"), queries)

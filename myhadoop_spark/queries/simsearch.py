@@ -311,55 +311,6 @@ def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MMR-diversified retrieval (operators/mmr.py) — retrieve wide, pick k
-# relevant-but-not-redundant results per query. Rows-only (iterative
-# argmax has no one-query ANSI twin); the model-parity and invariant
-# pins live in tests/test_mmr.py.
-# ---------------------------------------------------------------------------
-
-_MMR_POOL = 50   # retriever top-N per query (the bounded MMR input)
-_MMR_K = 10
-_MMR_LAM = 0.7
-
-
-@register(
-    "mmr_diversify",
-    tags=("simsearch", "rag", "extension"),
-    gate=False,
-)
-def mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, rank, doc_id, relevance, mmr_score): exact-cosine
-    top-{pool} candidates per query vector (vec_id < {n}), re-ranked to
-    a diversified top-{k} with λ={lam} MMR. The corpus-sized stage is
-    the retrieval (broadcast queries, per-partition top-k); MMR itself
-    touches only |Q|·{pool} rows, grouped per query across executors.
-    """
-    from myhadoop_spark.operators.mmr import mmr_rerank
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v"))
-    emb = emb.withColumn("nrm", F.sqrt(_dot("v", "v")))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"))
-    pairs = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "v",
-                (_dot("v", "qv")
-                 / (F.col("nrm") * F.col("qnrm"))).alias("cos")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                           F.col("vec_id").asc())
-    cands = (pairs.withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") <= _MMR_POOL))
-    out = mmr_rerank(cands, _MMR_K, lam=_MMR_LAM, query_col="q_id",
-                     id_col="vec_id", vec_col="v", score_col="cos")
-    return out.select("query_id", "rank", "doc_id",
-                      _trunc6(F.col("relevance")).alias("relevance"),
-                      _trunc6(F.col("mmr_score")).alias("mmr_score"))
-
-
-# ---------------------------------------------------------------------------
 # JL random projection (r11): the dimensionality reducer in front of
 # the ANN family (operators/random_projection.py) — deterministic ±1
 # sign matrix (md5 closed form, inlined as double literals on BOTH

@@ -22,7 +22,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None = None  # DuckDB-runnable ANSI SQL; None → rows-only check
+    oracle: str | None = None  # DuckDB-runnable ANSI SQL; every registered
+    #                             query has one (tests/test_correctness.py)
     tags: tuple[str, ...] = field(default_factory=tuple)
     gate: bool = True  # False → registered (tests, bench-able, plan-asserted)
     #                    but outside the driver's 50-row correctness window;

@@ -49,15 +49,6 @@ UNGATED_KEEPS = {
         # class 3: the only root of an operator module
         "data_quality": "only root of operators/constraints.py",
         "gapfill_hourly": "only root of operators/gapfill.py",
-        "global_index": "a root of operators/indexing.py",
-        "shuffle_ids": "a root of operators/indexing.py",
-        "graph_kcore": "only root of operators/kcore.py",
-        "lm_perplexity": "a root of operators/lm_filter.py",
-        "ccnet_buckets": "a root of operators/lm_filter.py",
-        "mmr_diversify": "only root of operators/mmr.py",
-        "neardup_pagerank": "only root of operators/pagerank.py",
-        "percolate": "a root of operators/percolate.py",
-        "phrase_percolate": "a root of operators/percolate.py",
         "jl_project": "only root of operators/random_projection.py",
         # the rest, judged one by one
         "simhash": "to unregister: stage one of gated simhash_neardup",
@@ -93,6 +84,13 @@ def test_ungated_queries_are_the_named_keeps():
     assert all(UNGATED_KEEPS.values())
 
 
+def test_every_registered_query_has_an_oracle():
+    """No rows-only registrations: a query without a DuckDB oracle would
+    be checked only for not raising."""
+    assert registry.names() == sorted(
+        registry.all_oracles(include_ungated=True))
+
+
 @pytest.fixture(scope="module")
 def duck():
     con = duck_connection(SF_SMOKE)
@@ -115,10 +113,3 @@ def test_query_matches_oracle(spark, duck, name):
     # bitwise parity is the actual contract (driver value-hash)
     assert not notes, f"non-bitwise float match: {notes}"
 
-
-@pytest.mark.parametrize(
-    "name", sorted(set(registry.names())
-                   - set(registry.all_oracles(include_ungated=True))))
-def test_rows_only_queries_run(spark, name):
-    df = registry.get(name).fn(spark, SF_SMOKE)
-    assert df.count() >= 0

@@ -1,8 +1,7 @@
 """Property-based tests for the r11 operators: budget_select's banded
 plan ≡ its spec window AND ≡ a pure-Python greedy model on generated
 score/token distributions; line-ops laws on generated corpora
-(word_lines conservation, clean ⊆ input, dedup keep-first model);
-k-core model parity on generated graphs is in tests/test_kcore.py."""
+(word_lines conservation, clean ⊆ input, dedup keep-first model)."""
 
 from __future__ import annotations
 

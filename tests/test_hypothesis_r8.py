@@ -1,6 +1,5 @@
-"""Property-based tests for the r8 operators: global-index rank
-equality on generated unique keys, and DSIR weight equality with the
-hashed-Counter model on generated corpora."""
+"""Property-based tests for the r8 operators: DSIR weight equality with
+the hashed-Counter model on generated corpora."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ from myhadoop_spark.operators.dsir import (
     doc_bucket_counts,
     dsir_weights,
 )
-from myhadoop_spark.operators.indexing import assign_global_index
 
 import pytest
 
@@ -24,26 +22,9 @@ import pytest
 # slow tier; see pytest.ini. Run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
-_key = st.tuples(st.integers(min_value=-1000, max_value=1000),
-                 st.sampled_from(["x", "y", "zz"]))
-
 _B = 64
 _text = st.lists(st.sampled_from(["a", "b", "c", "dd", "eee"]),
                  min_size=0, max_size=12).map(" ".join)
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(_key, min_size=1, max_size=40, unique=True))
-def test_global_index_is_sorted_rank(spark, keys):
-    df = spark.createDataFrame(keys, "k long, s string")
-    got = {(r.k, r.s): r.idx
-           for r in assign_global_index(df, ["s", "k"],
-                                        num_partitions=4).collect()}
-    want = {(k, s): i
-            for i, (k, s) in enumerate(sorted(keys,
-                                              key=lambda t: (t[1], t[0])))}
-    assert got == want
 
 
 def _bucket(feat: str) -> int:

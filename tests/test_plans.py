@@ -279,24 +279,6 @@ def test_udtf_is_arrow(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_ccnet_thresholds_broadcast_no_global_window(spark):
-    """ccnet_buckets applies per-language VALUE thresholds via a
-    broadcast join — never a rank window partitioned by the handful of
-    languages (a near-single-partition sort at scale)."""
-    plan = plan_of(spark, "ccnet_buckets")
-    assert "Window" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_index_queries_have_no_window(spark):
-    """global_index / shuffle_ids compile to the range-partition +
-    Arrow-numbering path, not the oracle's row_number window."""
-    for name in ("global_index", "shuffle_ids"):
-        plan = plan_of(spark, name)
-        assert "Window" not in plan, f"{name}:\n{plan}"
-        assert "BatchEvalPython" not in plan, f"{name}:\n{plan}"
-
-
 def test_unimax_select_plan_shape(spark):
     # the r9 gated query: alloc (k language rows) must BROADCAST into
     # the selection join; no cartesian anywhere; no Python UDFs — the

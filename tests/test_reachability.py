@@ -88,22 +88,6 @@ FUNCTION_ALLOWLIST = {f"{PACKAGE}.operators.{name}": reason for name, reason in 
                                       "phrase_search count; goes with it",
     "constraints.matches": "D10b: goes with operators/constraints.py "
                            "(data_quality)",
-    "indexing.start_indexing_stream": "D10b: streaming face; goes with "
-                                      "operators/indexing.py (global_index)",
-    "kcore.core_numbers": "D10b: goes with operators/kcore.py (graph_kcore)",
-    "kcore.kcore": "D10b: goes with operators/kcore.py (graph_kcore)",
-    "lm_filter.lm_quality_filter": "D10b: goes with operators/lm_filter.py "
-                                   "(lm_perplexity)",
-    "lm_filter.load_lm": "D10b: goes with operators/lm_filter.py "
-                         "(lm_perplexity)",
-    "lm_filter.save_lm": "D10b: goes with operators/lm_filter.py "
-                         "(lm_perplexity)",
-    "lm_filter.start_lm_scoring_stream": "D10b: streaming face; goes with "
-                                         "operators/lm_filter.py",
-    "percolate.start_percolate_stream": "D10b: streaming face; goes with "
-                                        "operators/percolate.py (percolate)",
-    "percolate.start_phrase_percolate_stream": "D10b: streaming face; goes "
-                                               "with operators/percolate.py",
     "ppjoin.size_ratio_candidates": "D10b: the generator choose_generator "
                                     "weighs; goes with ngram_jaccard",
 }.items()}
