@@ -35,14 +35,15 @@ Incremental maintenance: ``append_to_bm25_index`` appends the new
 documents' postings partitions and ONE stats row — no rewrite of
 existing lists; per-term df is derived at probe time from the probed
 postings themselves, so it is always consistent with the appended
-corpus. Append ≡ one-shot build (tested). The streaming face runs the
-same append per micro-batch keyed ``append_id=b{batch_id}``: the
-stats write is dynamic-partition-overwrite (replay-idempotent), and a
-replayed batch's duplicate postings rows are collapsed by the probe's
+corpus. Append ≡ one-shot build (tested). The hybrid ingest
+(streaming/hybrid_ingest.py) runs the same append per micro-batch
+keyed ``append_id=b{batch_id}``: the stats write is
+dynamic-partition-overwrite (replay-idempotent), and a replayed
+batch's duplicate postings rows are collapsed by the probe's
 ``dropDuplicates(term, doc_id)`` over bitwise-identical rows —
-results are replay-stable. ``compact_every=N`` bounds fragmentation
-via the shared selective compaction (operators/compaction.py),
-re-sorting rewritten buckets by term.
+results are replay-stable. ``compact_bm25_index`` bounds
+fragmentation via the shared selective compaction
+(operators/compaction.py), re-sorting rewritten buckets by term.
 
 The index build DOES explode the corpus into (doc, term) pairs — the
 one-time cost any inverted index pays, amortized over every query
@@ -309,30 +310,3 @@ def compact_bm25_index(spark: SparkSession, path: str, *,
     return {"compacted_buckets": stats["compacted_parts"],
             "files_before": stats["files_before"],
             "files_after": stats["files_after"]}
-
-
-def start_bm25_ingest_stream(stream_docs: DataFrame, *, path: str,
-                             checkpoint: str, text_col: str = "text",
-                             compact_every: int | None = None,
-                             max_files_per_bucket: int = 4):
-    """Streaming face: each micro-batch of new documents is inverted
-    and appended under ``append_id=b{batch_id}`` (stats
-    replay-idempotent, postings replay-stable via the probe's
-    dropDuplicates). Requires a built index. ``compact_every=N`` runs
-    the shared compaction after every N batches so a long-running
-    ingest cannot fragment the shards unboundedly."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        append_to_bm25_index(batch, path, append_id=f"b{batch_id}",
-                             text_col=text_col)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_bm25_index(batch.sparkSession, path,
-                               max_files_per_bucket=max_files_per_bucket)
-
-    return (stream_docs.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())

@@ -5,14 +5,14 @@ maintainable table: the near-dup member of the persistent-index family
 BM25 = lexical, operators/bm25_index.py; IVF = semantic,
 operators/ivf_index.py).
 
-Why it exists: the streaming near-dedup faces (streaming/near_dedup.py)
-hold band state IN the streaming state store — bounded by a TTL
-horizon, gone on checkpoint reset, and with no verify step (any band
-collision is a verdict). A 100 TB corpus ingest wants the opposite
-trade: a DURABLE seen-signature table with an unbounded horizon that
-any batch, stream, or ad-hoc probe can check against, plus a
-signature-agreement verify so a single colliding band is a candidate,
-not a verdict.
+Why it exists: near-dedup that holds band state IN the streaming
+state store is bounded by a TTL horizon (the state must be evicted or
+it grows without bound), is gone on a checkpoint reset, and has no
+verify step (any band collision is a verdict). A 100 TB corpus ingest
+wants the opposite trade: a DURABLE seen-signature table with an
+unbounded horizon that any batch, stream, or ad-hoc probe can check
+against, plus a signature-agreement verify so a single colliding band
+is a candidate, not a verdict.
 
 Layout (mirrors the BM25/IVF index discipline):
 
@@ -242,9 +242,9 @@ def refresh_hot_sigs(spark: SparkSession, path: str, *,
     partial agg) and persist the stop-signature list to ``<path>/hot``
     — probes then skip those buckets (``use_hot``). Appends grow
     buckets between refreshes, so pair this with compaction cadence
-    (``compact_lsh_index(refresh_hot_over=...)`` /
-    ``start_lsh_dedup_stream(max_bucket=...)``). Returns
-    {hot_buckets}."""
+    (``compact_lsh_index(refresh_hot_over=...)``, which
+    ``start_hybrid_ingest_stream(max_bucket=...)`` runs every
+    ``compact_every`` batches). Returns {hot_buckets}."""
     rows = spark.read.schema(_SIGS_SCHEMA).parquet(f"{path}/sigs")
     hot = _hot_buckets(rows, max_bucket)
     # staged write → delete → rename (the ivf_index.py retrain-swap
@@ -470,48 +470,3 @@ def compact_lsh_index(spark: SparkSession, path: str, *,
         out.update(refresh_hot_sigs(spark, path,
                                     max_bucket=refresh_hot_over))
     return out
-
-
-def start_lsh_dedup_stream(stream_docs: DataFrame, *, path: str,
-                           out_path: str, checkpoint: str,
-                           threshold: float = THRESHOLD,
-                           text_col: str = "text",
-                           compact_every: int | None = None,
-                           max_files_per_shard: int = 4,
-                           max_bucket: int | None = None):
-    """Streaming face: per micro-batch, drop documents that
-    near-duplicate the durable history (or an earlier doc in the same
-    batch), emit survivors, then index the whole batch. Requires a
-    built index (meta present) — build_lsh_index over an empty
-    DataFrame bootstraps a fresh one.
-
-    Crash/replay discipline (the bloom_ingest idiom, upgraded):
-    survivors land in an OVERWRITTEN per-batch directory
-    (batch_id=<id>) BEFORE the index append, and the probe excludes
-    the current batch's append_id — so replaying a batch whose append
-    already landed recomputes IDENTICAL survivors (exact idempotence,
-    not just convergence) and rewrites the same emit files."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        append_id = f"b{batch_id}"
-        survivors, rows = _dedup_core(batch, path, append_id=append_id,
-                                      threshold=threshold,
-                                      text_col=text_col,
-                                      max_bucket=max_bucket)
-        (survivors.write.mode("overwrite")
-         .parquet(f"{out_path}/batch_id={batch_id}"))
-        _write_sigs(rows, path, append_id, "append")
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            # refresh the stop-signature list at the compaction
-            # cadence when the guard is armed — appends grow buckets
-            compact_lsh_index(batch.sparkSession, path,
-                              max_files_per_shard=max_files_per_shard,
-                              refresh_hot_over=max_bucket)
-
-    return (stream_docs.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())

@@ -3,8 +3,9 @@ join (operators/simhash_join.py): incoming documents are dropped when
 their fingerprint lies within ``max_hamming`` bits of ANYTHING the
 corpus has already accepted. This is the production shape of Manku et
 al. 2007 (near-dup suppression at crawl ingest), with EXACT recall at
-the configured radius — unlike the signature-equality minhash face
-(streaming/near_dedup.py), which trades recall for statelessness.
+the configured radius: any accepted fingerprint within the radius
+drops the document, not only an identical one, and the seen state
+never expires.
 
 Per-batch semantics (deterministic):
 

@@ -56,8 +56,9 @@ def _make_update_user_totals(use_ttl: bool, ttl_ms: int = IDLE_TTL_MS):
         if state.exists:
             n, cents, last_seen = state.get
             # inline expiry: hasTimedOut never fires for keys receiving
-            # data in the expiring batch (see streaming/near_dedup.py) —
-            # a user returning after the idle horizon restarts at zero
+            # data in the expiring batch (Spark calls with the data, not
+            # with a timeout) — a user returning after the idle horizon
+            # restarts at zero
             if use_ttl and state.getCurrentWatermarkMs() > last_seen + ttl_ms:
                 n, cents = 0, 0
         else:

@@ -1,13 +1,12 @@
 """Persistent BM25 inverted index (operators/bm25_index.py): probe ≡
 per-query bm25_rank BITWISE, partition-pruned + pushed-down probe
-scans, append ≡ one-shot build, compaction search-equality, and the
-streaming ingest face."""
+scans, append ≡ one-shot build and compaction search-equality. The
+streamed append is checked in tests/test_hybrid_ingest.py."""
 
 from __future__ import annotations
 
 import contextlib
 import io
-import time
 
 from pyspark.sql import functions as F
 
@@ -17,7 +16,6 @@ from myhadoop_spark.operators.bm25_index import (
     build_bm25_index,
     compact_bm25_index,
     search_bm25_index,
-    start_bm25_ingest_stream,
     term_bucket_col,
     term_bucket_py,
 )
@@ -127,44 +125,6 @@ def test_compaction_preserves_search(spark, tmp_path):
     # idempotent
     assert compact_bm25_index(spark, path,
                               max_files_per_bucket=4)["compacted_buckets"] == 0
-
-
-@pytest.mark.slow  # r14: heavy parity battery (fast twin stays in the default tier)
-def test_stream_ingest_matches_one_shot(spark, tmp_path):
-    """Micro-batched appends through the stream face (with periodic
-    compaction) must leave an index whose probe equals the per-query
-    scorer over the full corpus, with per-shard file counts bounded."""
-    from myhadoop_spark.fsutil import count_data_files, list_partition_dirs
-
-    docs = _corpus(spark, n=80).localCheckpoint()
-    half_a = docs.filter(F.col("doc_id") % 2 == 0)
-    half_b = docs.filter(F.col("doc_id") % 2 == 1).localCheckpoint()
-    path = str(tmp_path / "idx")
-    build_bm25_index(half_a, path, n_buckets=4)
-
-    src = str(tmp_path / "src")
-    half_b.repartition(7).write.parquet(src)
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_bm25_ingest_stream(stream, path=path,
-                                 checkpoint=str(tmp_path / "ckpt"),
-                                 compact_every=3,
-                                 max_files_per_bucket=2)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        time.sleep(0.2)
-
-    per_bucket = [count_data_files(spark, [u]) for _, u in
-                  list_partition_dirs(spark, f"{path}/postings",
-                                      "tbucket")]
-    assert max(per_bucket) <= 5, per_bucket
-
-    for terms in QUERIES:
-        want = _res(bm25_rank(docs, terms, top_k=8))
-        assert _res(search_bm25_index(spark, path, terms,
-                                      top_k=8)) == want
 
 
 def test_error_faces(spark, tmp_path):

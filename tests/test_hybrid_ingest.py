@@ -27,10 +27,6 @@ from tests.test_chunk_index_pipeline import _stub_embedding
 
 import pytest
 
-# r14 (VERDICT r13 item 1): heavy parity/property battery — the
-# slow tier; see pytest.ini. Run with -m "slow or not slow".
-pytestmark = pytest.mark.slow
-
 
 def _corpus(spark):
     """40 seed docs + 3 stream batches of 20, with batch 1 repeating
@@ -136,6 +132,10 @@ def test_stream_maintains_all_three_indexes(spark, tmp_path):
     assert sig_docs == set(range(100))
 
 
+# the replay and recall batteries are slow-tier (pytest.ini); the
+# three-index parity test above is the fast tier's only streaming cover
+# of the LSH gate and the BM25/IVF appends
+@pytest.mark.slow
 def test_replayed_batch_converges(spark, tmp_path):
     """Re-running the last batch's _process (the crash-replay path)
     leaves every surface equal: same emitted chunks, BM25 search
@@ -192,6 +192,8 @@ def test_replayed_batch_converges(spark, tmp_path):
     run_batch(batches[1], 1)  # replay
     assert snapshot() == before
 
+
+@pytest.mark.slow
 def test_hashed_bow_ingest_recall_bound(spark, tmp_path):
     """The r6/r8 embedding rehearsal's bound, pinned: driving the full
     loop with the DETERMINISTIC hashed-BoW embedder (real hash-derived

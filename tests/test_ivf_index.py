@@ -1,13 +1,13 @@
 """Persistent IVF index (operators/ivf_index.py): persisted search ≡
 in-memory ivf_topk, partition-pruned probe scans, incremental append ≡
-one-shot build under the same centroids, and the streaming ingest
-face."""
+one-shot build under the same centroids, compaction search-equality
+and filtered ANN. The streamed append is checked in
+tests/test_hybrid_ingest.py."""
 
 from __future__ import annotations
 
 import contextlib
 import io
-import time
 
 from pyspark.sql import functions as F
 
@@ -18,10 +18,8 @@ from myhadoop_spark.operators.ivf_index import (
     build_index,
     load_centroids,
     search_index,
-    start_index_ingest_stream,
 )
 from tests.conftest import SF_SMOKE
-import pytest
 
 N_Q, K, TOP_K = 5, 8, 5
 
@@ -121,74 +119,6 @@ def test_compaction_preserves_search(spark, tmp_path):
                          max_files_per_bucket=4)["compacted_buckets"] == 0
 
 
-@pytest.mark.slow  # r14: heavy parity battery (fast twin stays in the default tier)
-def test_stream_ingest_auto_compacts(spark, tmp_path):
-    """compact_every=N in the stream face keeps per-bucket file counts
-    bounded across many micro-batches, with search equal to the
-    in-memory reference."""
-    from myhadoop_spark.fsutil import count_data_files, list_partition_dirs
-
-    emb = _emb(spark).localCheckpoint()
-    path = str(tmp_path / "idx")
-    cents = build_index(emb.filter(F.col("vec_id") % 8 == 0), path, k=K)
-
-    rest = emb.filter(F.col("vec_id") % 8 != 0).localCheckpoint()
-    src = str(tmp_path / "src")
-    rest.repartition(7).write.parquet(src)
-    stream = (spark.readStream.schema("vec_id long, v array<double>")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_index_ingest_stream(stream, path=path,
-                                  checkpoint=str(tmp_path / "ckpt"),
-                                  compact_every=3,
-                                  max_files_per_bucket=2)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        time.sleep(0.2)
-
-    per_bucket = [count_data_files(spark, [u]) for _, u in
-                  list_partition_dirs(spark, f"{path}/vectors", "bucket")]
-    # 7 append batches with compaction every 3 → no bucket can be left
-    # holding one file per batch
-    assert max(per_bucket) <= 4, per_bucket
-
-    queries = _queries(emb)
-    want = _res(ivf_topk(emb.withColumn("nrm", F.sqrt(_dot("v", "v"))),
-                         queries, cents, top_k=TOP_K))
-    got = _res(search_index(spark, path, queries, top_k=TOP_K))
-    assert got == want
-
-
-def test_streaming_ingest_matches_batch_append(spark, tmp_path):
-    """Micro-batched appends through the stream face must leave an
-    index whose search equals the batch-appended one."""
-    emb = _emb(spark)
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter(F.col("vec_id") % 2 == 1).localCheckpoint()
-    path = str(tmp_path / "idx")
-    build_index(half_a, path, k=K)
-
-    src = str(tmp_path / "src")
-    half_b.coalesce(2).write.parquet(src)
-    stream = (spark.readStream.schema("vec_id long, v array<double>")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_index_ingest_stream(stream, path=path,
-                                  checkpoint=str(tmp_path / "ckpt"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        time.sleep(0.2)
-
-    cents = load_centroids(spark, path)
-    queries = _queries(emb)
-    want = _res(ivf_topk(emb.withColumn("nrm", F.sqrt(_dot("v", "v"))),
-                         queries, cents, top_k=TOP_K))
-    got = _res(search_index(spark, path, queries, top_k=TOP_K))
-    assert got == want
-
-
 def test_filtered_ann_prefilter_semantics(spark, tmp_path):
     """where= is vector-database PRE-filter semantics: each query's
     top-k over an index with payload metadata must equal search over
@@ -259,35 +189,3 @@ def test_filtered_append_carries_payload(spark, tmp_path):
                          "vec_id"), whole, "overwrite")
     want = _res(search_index(spark, whole, q, top_k=TOP_K))
     assert got == want and got
-
-
-def test_stream_appends_payload(spark, tmp_path):
-    """The ingest stream threads payload_cols, so appended files keep
-    one schema and filtered ANN still answers over them."""
-    from myhadoop_spark.operators.ivf_index import start_index_ingest_stream
-
-    emb = (load(spark, SF_SMOKE, "embeddings")
-           .select("vec_id",
-                   F.transform("embedding", lambda x: x.cast("double"))
-                   .alias("v"),
-                   (F.col("vec_id") % 3).alias("shard_tag"))
-           .localCheckpoint())
-    path = str(tmp_path / "idx")
-    build_index(emb.filter("vec_id % 2 = 0"), path, k=K,
-                payload_cols=("shard_tag",))
-
-    src = str(tmp_path / "src")
-    (emb.filter("vec_id % 2 = 1").repartition(3).write.parquet(src))
-    stream = (spark.readStream
-              .schema("vec_id long, v array<double>, shard_tag long")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_index_ingest_stream(stream, path=path,
-                                  checkpoint=str(tmp_path / "ckpt"),
-                                  payload_cols=("shard_tag",))
-    q.awaitTermination(120)
-    cols = set(spark.read.parquet(f"{path}/vectors").columns)
-    assert "shard_tag" in cols
-    got = _res(search_index(spark, path, _queries(emb), top_k=TOP_K,
-                            where="shard_tag = 1"))
-    assert got
-    assert all(nid % 3 == 1 for (_, nid) in got)

@@ -163,43 +163,6 @@ def test_empty_and_tokenless_docs(spark, tmp_path):
     assert sorted(r.doc_id for r in surv.collect()) == [1, 2, 3]
 
 
-def test_stream_face_matches_batch(spark, docs, tmp_path):
-    """availableNow stream over the corpus in file-batches ≡ the batch
-    faces: survivors on disk equal the one-shot survivor set."""
-    src = str(tmp_path / "src")
-    path = str(tmp_path / "idx")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    batches = _batches(docs)
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.parquet(f"{src}/b{i}")
-    L.build_lsh_index(docs.limit(0), path)
-    stream = (spark.readStream.schema("doc_id bigint, text string")
-              .option("maxFilesPerTrigger", 1).parquet(f"{src}/*"))
-    q = L.start_lsh_dedup_stream(stream, path=path, out_path=out,
-                                 checkpoint=ckpt, compact_every=2)
-    q.awaitTermination(120)
-    got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    pairs = L.signature_pairs(docs).collect()
-    ids = {r.doc_id for r in docs.select("doc_id").collect()}
-    # micro-batch order is the stream's file order, not necessarily id
-    # order — recover each doc's SEEN position from the index itself
-    # (append_id=b<N>), then a doc survives iff no matching doc was
-    # seen before it
-    sig = (spark.read.parquet(f"{path}/sigs")
-           .select("doc_id", "append_id").distinct().collect())
-    order = {r.doc_id: (int(r.append_id[1:]), r.doc_id) for r in sig}
-    matches: dict[int, set[int]] = {}
-    for p in pairs:
-        matches.setdefault(p.doc1, set()).add(p.doc2)
-        matches.setdefault(p.doc2, set()).add(p.doc1)
-    expected = sorted(
-        d for d in ids
-        if d not in order  # token-less: no signature, always survives
-        or not any(order[a] < order[d] for a in matches.get(d, ())))
-    assert got == expected
-
-
 def _hot_corpus(spark, docs):
     """Fixture docs + 300 planted copies of one boilerplate text (a
     degenerate band bucket) with ids in a reserved high range."""
@@ -309,23 +272,3 @@ def test_hot_list_refresh_is_crash_safe(spark, docs, tmp_path):
     assert hot.exists() and not tmp.exists()
     assert sorted(map(tuple,
                       L.load_hot_sigs(spark, path).collect())) == want
-
-
-def test_stream_with_guard_runs(spark, docs, tmp_path):
-    """Stream face with the guard + compaction cadence armed: runs
-    green and leaves a refreshed hot list on disk."""
-    src = str(tmp_path / "src")
-    path = str(tmp_path / "idx")
-    corpus, _ = _hot_corpus(spark, docs)
-    for i, b in enumerate(_batches(corpus, n=2)):
-        b.coalesce(1).write.parquet(f"{src}/b{i}")
-    L.build_lsh_index(corpus.limit(0), path)
-    stream = (spark.readStream.schema("doc_id bigint, text string")
-              .option("maxFilesPerTrigger", 1).parquet(f"{src}/*"))
-    q = L.start_lsh_dedup_stream(
-        stream, path=path, out_path=str(tmp_path / "out"),
-        checkpoint=str(tmp_path / "ckpt"),
-        compact_every=2, max_bucket=50)
-    q.awaitTermination(120)
-    assert L.load_hot_sigs(spark, path) is not None
-    assert spark.read.parquet(str(tmp_path / "out")).count() > 0

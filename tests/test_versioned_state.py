@@ -9,8 +9,9 @@ Boundaries, in commit order:
     meta       after meta.json, before the sweep
     mid_prune  inside the sweep, before its first delete
 
-line_dedup (the benchmarked face) runs all four; every other face
-runs the after-version-write case. line_dedup's stats list is also
+line_dedup (the benchmarked face) and simhash (the kept versioned
+near-dup face) run all four; every other face runs the
+after-version-write case. line_dedup's stats list is also
 pinned across a crash: the replayed batch reports once, a skipped
 replay reports nothing."""
 
@@ -77,9 +78,12 @@ FACES = {
     "simhash": Face(
         "doc_id long, simhash long",
         [[(1, 0b1111), (2, 0b1110), (9, 0b11110000111100001111)],
-         [(3, 0b1011), (7, 0b1110000011)]],
+         [(3, 0b1011), (7, 0b1110000011)],
+         [(4, 0b1111000011110000), (5, 0b1111)],
+         [(6, 0b1111000011110001), (8, 0b101010101010)]],
         lambda s, p, c: start_simhash_dedup_stream(
-            s, path=p, checkpoint=c, stats=[])),
+            s, path=p, checkpoint=c, stats=[]),
+        crash_batch=2),
     "budget": Face(
         "doc_id long, score long, n_tokens long",
         [[(b * 100 + i, (i * 7 + b) % 10, 3 + i % 4) for i in range(6)]
@@ -109,8 +113,13 @@ FACES = {
 # the faces whose own batteries are slow-tier
 SLOW = {"budget", "entity", "heavy_hitters", "url_cap"}
 
+# the all-boundary faces crash at batch 2 of 4: batch 2's sweep is the
+# first to delete a version (mid_prune), and batch 3's sweep removes
+# what a crash after the meta commit left behind
 CASES = ([("line_dedup", b)
           for b in ("outputs", "version", "meta", "mid_prune")]
+         + [pytest.param("simhash", b, marks=pytest.mark.slow)
+            for b in ("outputs", "meta", "mid_prune")]
          + [pytest.param(f, "version",
                          marks=[pytest.mark.slow] if f in SLOW else [])
             for f in FACES if f != "line_dedup"])
