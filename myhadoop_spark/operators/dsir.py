@@ -18,11 +18,15 @@ Model (the paper's unigram-over-hashed-features estimator):
 The constant term is factored out so the per-bucket log-ratio table
 needs only the raw counts — ln of INTEGERS on both engines.
 
+The module holds the three primitives (doc_bucket_counts,
+bucket_log_ratios, dsir_weights); the gated query ``dsir_select``
+(queries/dsir.py) composes them into the whole selection.
+
 Scale shape: feature extraction is one narrow codegen projection
 (split + slice/concat, no UDF) feeding ONE (id, bucket) aggregation
 whose map-side combine compresses the shuffle from occurrences to
-distinct (doc, bucket) pairs; that count table is materialized once
-and read by both the fit and the scoring. The fit's joint bucket
+distinct (doc, bucket) pairs; the caller materializes that count table
+once and both the fit and the scoring read it. The fit's joint bucket
 table is ≤ B rows by construction, so it is collected (bounded) and
 re-broadcast as a local DataFrame — one Spark job, nothing to
 recompute under the broadcast builds. Scoring is a broadcast join +
@@ -58,7 +62,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from myhadoop_spark.functions.text import hash_bucket, tokens
-from myhadoop_spark.materialize import materialize
 
 BUCKETS = 4096
 
@@ -98,7 +101,7 @@ def doc_bucket_counts(docs: DataFrame, *, id_col: str = "doc_id",
     to distinct (doc, bucket) pairs (≤ min(doc_len, B) per doc); both
     the fit and the scoring read THIS table, so the expensive
     tokenize+md5 pipeline runs once when the caller materializes it
-    (dsir_select does)."""
+    (queries/dsir.py::dsir_select does)."""
     occ = hashed_features(docs, id_col=id_col, text_col=text_col,
                           buckets=buckets)
     return occ.groupBy(id_col, "b").agg(F.count(F.lit(1)).alias("c"))
@@ -173,120 +176,3 @@ def dsir_weights(pool_counts: DataFrame, model: dict,
                  * (F.log(F.col("r_total").cast("double") + b)
                     - F.log(F.col("t_total").cast("double") + b)))
                 .alias("logw")))
-
-
-def dsir_select(target_docs: DataFrame, pool_docs: DataFrame, k: int,
-                *, id_col: str = "doc_id", text_col: str = "text",
-                buckets: int = BUCKETS) -> DataFrame:
-    """The whole selection: fit on (target, pool), score the pool,
-    keep the k highest-weight documents (ties broken by id, ascending
-    — deterministic across partitionings). Returns
-    (id, n_feats, logw) with logw UN-floored; gate queries floor it
-    for the cross-engine compare.
-
-    The pool's count table is materialized once (localCheckpoint) —
-    the expensive tokenize+md5 text pass runs exactly ONCE, consumed
-    by the fit's bounded collect and then the scoring join."""
-    t_cnt = doc_bucket_counts(target_docs, id_col=id_col,
-                              text_col=text_col, buckets=buckets)
-    p_cnt = doc_bucket_counts(pool_docs, id_col=id_col,
-                              text_col=text_col,
-                              buckets=buckets).transform(materialize)
-    model = bucket_log_ratios(t_cnt, p_cnt, buckets=buckets)
-    scored = dsir_weights(p_cnt, model, id_col=id_col)
-    return scored.orderBy(F.desc("logw"), F.asc(id_col)).limit(k)
-
-
-def save_dsir_model(model: dict, path: str) -> None:
-    """Persist the fitted importance model as a lakehouse asset so one
-    fit scores many pools/streams. EPOCH discipline, because a plain
-    in-place overwrite is not re-save-crash-safe (new ratios + stale
-    totals would load as a silently inconsistent model): each save
-    writes ratios to a fresh ``ratios-e{N}`` directory and then
-    commits by writing meta.json (tmp+rename, atomic) carrying the
-    epoch — a crash anywhere before the meta commit leaves the
-    previous (epoch, ratios, totals) triple fully consistent. Old
-    epoch directories are swept only AFTER the commit."""
-    import json
-
-    from myhadoop_spark.fsutil import hadoop_fs, read_small_file, \
-        write_small_file
-
-    spark = model["ratios"].sparkSession
-    prev = read_small_file(spark, f"{path}/meta.json")
-    epoch = 0
-    if prev is not None:
-        try:
-            epoch = json.loads(prev).get("epoch", 0) + 1
-        except ValueError:
-            epoch = 0  # corrupt meta: nothing consistent to preserve
-    model["ratios"].write.mode("overwrite").parquet(
-        f"{path}/ratios-e{epoch}")
-    # output: the one-row totals go into meta.json beside the ratios
-    t_total, r_total = model["totals"].collect()[0]
-    write_small_file(spark, f"{path}/meta.json",
-                     json.dumps({"buckets": model["buckets"],
-                                 "t_total": int(t_total),
-                                 "r_total": int(r_total),
-                                 "epoch": epoch}))
-    fs, root = hadoop_fs(spark, path)
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if (name.startswith("ratios-e") and name != f"ratios-e{epoch}") \
-                or name == "ratios":  # legacy pre-epoch layout
-            fs.delete(status.getPath(), True)
-
-
-def load_dsir_model(spark, path: str) -> dict:
-    """Reload a persisted model; scoring under it is bitwise-identical
-    to scoring under the in-memory original (tested — the log-ratio
-    DOUBLES round-trip exactly through parquet, the totals are
-    integers)."""
-    import json
-
-    from myhadoop_spark.fsutil import read_small_file
-
-    raw = read_small_file(spark, f"{path}/meta.json")
-    if raw is None:
-        raise FileNotFoundError(f"no DSIR model at {path}")
-    meta = json.loads(raw)
-    totals = spark.createDataFrame(
-        [(meta["t_total"], meta["r_total"])],
-        "t_total long, r_total long")
-    # the meta's epoch names the ratios directory it was committed
-    # with ("ratios" = legacy pre-epoch layout)
-    ratios_dir = (f"{path}/ratios-e{meta['epoch']}"
-                  if "epoch" in meta else f"{path}/ratios")
-    return {"ratios": spark.read.parquet(ratios_dir),
-            "totals": totals, "buckets": meta["buckets"]}
-
-
-def start_dsir_scoring_stream(doc_stream: DataFrame, model: dict, *,
-                              out_path: str, checkpoint: str,
-                              id_col: str = "doc_id",
-                              text_col: str = "text"):
-    """Streaming face: weigh each micro-batch of arriving documents
-    under a STATIC fitted model (fit once — usually reloaded via
-    load_dsir_model — like the reference LM in start_lm_scoring_stream)
-    and land (id, n_feats, logw) per batch. foreachBatch because the
-    per-doc fold is a batch-shaped aggregation; no streaming state —
-    per-batch cost ∝ batch tokens, independent of history. Batches
-    land as OVERWRITTEN ``batch_id=<id>`` directories so a crash
-    replay cannot double-emit (the bloom_ingest discipline; replay is
-    tested)."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        cnt = doc_bucket_counts(batch, id_col=id_col,
-                                text_col=text_col,
-                                buckets=model["buckets"])
-        (dsir_weights(cnt, model, id_col=id_col)
-         .write.mode("overwrite")
-         .parquet(f"{out_path}/batch_id={batch_id}"))
-
-    return (doc_stream.writeStream
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())

@@ -5,8 +5,8 @@ the corpus as the raw pool, keep the top-k.
 
 Ranking for the cross-engine compare uses the FLOORED weight (ties →
 doc_id ascending) on BOTH sides so last-ulp ln() drift cannot reorder
-the cut. The production
-face (dsir_select in the operator) ranks on the full-precision weight.
+the cut. This query is the engine's one DSIR selection: it composes
+the operator's three primitives itself.
 """
 
 from __future__ import annotations

@@ -2,8 +2,9 @@
 parity (same md5 hashing, same fold order; ln ulp-tolerant), bitwise
 repartition invariance, selection semantics (target-like pool docs
 outrank alien ones), and plan shape (broadcast ratio join, TakeOrdered
-selection, no Python rows). The cross-engine DuckDB differential is
-the gated query ``dsir_select`` (tests/test_correctness.py)."""
+selection, no Python rows) of the three primitives composed as the
+gated query ``dsir_select`` composes them. Its cross-engine DuckDB
+differential is in tests/test_correctness.py."""
 
 from __future__ import annotations
 
@@ -15,9 +16,9 @@ from math import log
 
 from pyspark.sql import functions as F
 
+from myhadoop_spark.materialize import materialize
 from myhadoop_spark.operators.dsir import (
     bucket_log_ratios,
-    dsir_select,
     dsir_weights,
     doc_bucket_counts,
 )
@@ -79,6 +80,18 @@ def _dfs(spark):
     return t, p
 
 
+def _select(target, pool, k):
+    """The whole selection as the gated query composes it: fit on
+    (target, pool) with the pool's count table materialized once,
+    score the pool, keep the k highest-weight documents (ties by id),
+    logw unfloored."""
+    t_cnt = doc_bucket_counts(target, buckets=B)
+    p_cnt = doc_bucket_counts(pool, buckets=B).transform(materialize)
+    model = bucket_log_ratios(t_cnt, p_cnt, buckets=B)
+    scored = dsir_weights(p_cnt, model)
+    return scored.orderBy(F.desc("logw"), F.asc("doc_id")).limit(k)
+
+
 def test_python_model_parity(spark):
     t, p = _dfs(spark)
     t_cnt = doc_bucket_counts(t, buckets=B)
@@ -96,7 +109,7 @@ def test_python_model_parity(spark):
 def test_target_like_docs_outrank_alien(spark):
     t, p = _dfs(spark)
     ranked = [r["doc_id"]
-              for r in dsir_select(t, p, k=4, buckets=B).collect()]
+              for r in _select(t, p, k=4).collect()]
     # both target-like docs strictly above the alien-vocab doc
     assert ranked.index(10) < ranked.index(12)
     assert ranked.index(11) < ranked.index(12)
@@ -120,7 +133,7 @@ def test_repartition_invariance(spark):
 
 def test_plan_shape(spark):
     t, p = _dfs(spark)
-    df = dsir_select(t, p, k=3, buckets=B)
+    df = _select(t, p, k=3)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -129,106 +142,3 @@ def test_plan_shape(spark):
     assert "BroadcastHashJoin" in plan, plan           # ratio join
     assert "BatchEvalPython" not in plan, plan         # no Python rows
     assert "CartesianProduct" not in plan, plan        # totals broadcast
-
-
-def test_model_roundtrip_bitwise(spark, tmp_path):
-    from myhadoop_spark.operators.dsir import (
-        load_dsir_model,
-        save_dsir_model,
-    )
-
-    t, p = _dfs(spark)
-    t_cnt = doc_bucket_counts(t, buckets=B)
-    p_cnt = doc_bucket_counts(p, buckets=B).localCheckpoint()
-    model = bucket_log_ratios(t_cnt, p_cnt, buckets=B)
-    before = sorted(map(tuple, dsir_weights(p_cnt, model).collect()))
-    save_dsir_model(model, str(tmp_path / "m"))
-    loaded = load_dsir_model(spark, str(tmp_path / "m"))
-    after = sorted(map(tuple, dsir_weights(p_cnt, loaded).collect()))
-    assert after == before  # exact: doubles round-trip through parquet
-
-
-def test_streaming_scoring_matches_batch(spark, tmp_path):
-    """Micro-batched weighing through the stream face ≡ batch weighing
-    of the same documents, bitwise; replay from a fresh checkpoint
-    cannot double-emit."""
-    import time
-
-    from myhadoop_spark.operators.dsir import start_dsir_scoring_stream
-
-    t, p = _dfs(spark)
-    t_cnt = doc_bucket_counts(t, buckets=B)
-    p_cnt = doc_bucket_counts(p, buckets=B).localCheckpoint()
-    model = bucket_log_ratios(t_cnt, p_cnt, buckets=B)
-    model["ratios"] = model["ratios"].localCheckpoint()
-    model["totals"] = model["totals"].localCheckpoint()
-
-    src = str(tmp_path / "src")
-    p.repartition(3).write.parquet(src)
-    out = str(tmp_path / "scored")
-
-    def run(ckpt):
-        stream = (spark.readStream.schema("doc_id long, text string")
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        q = start_dsir_scoring_stream(stream, model, out_path=out,
-                                      checkpoint=str(tmp_path / ckpt))
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            time.sleep(0.2)
-
-    run("ckpt1")
-    got = sorted((r.doc_id, r.n_feats, r.logw)
-                 for r in spark.read.parquet(out)
-                 .select("doc_id", "n_feats", "logw").collect())
-    want = sorted(map(tuple, dsir_weights(p_cnt, model).collect()))
-    assert got == want  # BITWISE
-
-    run("ckpt2")  # fresh checkpoint => batch 0 REPLAYED, not appended
-    again = sorted((r.doc_id, r.n_feats, r.logw)
-                   for r in spark.read.parquet(out)
-                   .select("doc_id", "n_feats", "logw").collect())
-    assert again == got
-
-
-def test_resave_crash_window_serves_previous_model(spark, tmp_path):
-    """A re-save that crashes after writing the new ratios directory
-    but BEFORE the meta commit must leave the previous model fully
-    consistent (the epoch discipline), and a completed re-save must
-    sweep the superseded epoch directory."""
-    import os
-
-    from myhadoop_spark.operators.dsir import (
-        load_dsir_model,
-        save_dsir_model,
-    )
-
-    t, p = _dfs(spark)
-    p_cnt = doc_bucket_counts(p, buckets=B).localCheckpoint()
-    m1 = bucket_log_ratios(doc_bucket_counts(t, buckets=B), p_cnt,
-                           buckets=B)
-    path = str(tmp_path / "m")
-    save_dsir_model(m1, path)
-    want = sorted(map(tuple, dsir_weights(
-        p_cnt, load_dsir_model(spark, path)).collect()))
-
-    # crash-sim: a refit wrote its new ratios dir (epoch 1) and died
-    # before the meta commit — fabricate it with DIFFERENT content
-    m2 = bucket_log_ratios(doc_bucket_counts(p, buckets=B),
-                           doc_bucket_counts(t, buckets=B), buckets=B)
-    m2["ratios"].write.mode("overwrite").parquet(f"{path}/ratios-e1")
-    got = sorted(map(tuple, dsir_weights(
-        p_cnt, load_dsir_model(spark, path)).collect()))
-    assert got == want  # still the epoch-0 model, bit for bit
-
-    # a COMPLETED re-save commits epoch 2 (epoch 1 dir exists but was
-    # never committed; the counter comes from the committed meta) ...
-    save_dsir_model(m2, path)
-    reloaded = load_dsir_model(spark, path)
-    assert reloaded["buckets"] == B
-    got2 = sorted(map(tuple, dsir_weights(p_cnt, reloaded).collect()))
-    assert got2 != want  # the refit genuinely took effect
-    # ... and sweeps every superseded ratios directory
-    dirs = [d for d in os.listdir(path) if d.startswith("ratios")]
-    assert len(dirs) == 1, dirs

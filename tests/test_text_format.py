@@ -6,8 +6,8 @@ hex-slice hashes live in that one module. This test scans the engine
 source (not the tests, whose independent models copy the format on
 purpose) and fails on a copy anywhere else, unless the allowlist below
 names it as a different format. It also keeps the format below both
-packages: no ``operators/`` module may import ``myhadoop_spark.queries``.
-No Spark.
+packages: no ``operators/`` or ``streaming/`` module may import
+``myhadoop_spark.queries``. No Spark.
 """
 
 from __future__ import annotations
@@ -108,9 +108,10 @@ def test_md5_hash_lives_in_one_module():
     assert set(ALLOWED_SLICES) <= seen, "stale ALLOWED_SLICES entry"
 
 
-def test_operators_do_not_import_queries():
+def test_operators_and_streaming_do_not_import_queries():
     bad = []
-    for path in sorted((ENGINE / "operators").glob("*.py")):
+    for path in sorted([*(ENGINE / "operators").glob("*.py"),
+                        *(ENGINE / "streaming").glob("*.py")]):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.ImportFrom):
                 names = [("." * node.level) + (node.module or "")]
@@ -118,6 +119,7 @@ def test_operators_do_not_import_queries():
                 names = [a.name for a in node.names]
             else:
                 continue
-            bad += [f"{path.name}: {n}" for n in names
+            bad += [f"{path.parent.name}/{path.name}:{node.lineno}: {n}"
+                    for n in names
                     if n.startswith(("myhadoop_spark.queries", "..queries"))]
     assert bad == []
